@@ -2,39 +2,36 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** SparkSession factory with the engine's standard configuration.
+/** The one SparkSession factory: every main, the test suites and the
+  * benchmark take their session from here, so they all run the same engine.
   *
   * Mirrors the operational posture of the reference warehouse
   * (`/root/reference/bi-airflow-prod/dags/pipeline/fullload/dag_fullload_pipeline.py:43-80`):
-  * UTC session time, adaptive execution, dynamic partition overwrite for the
-  * incremental DELETE+INSERT pattern
+  * UTC session time and dynamic partition overwrite for the incremental
+  * DELETE+INSERT pattern
   * (`Datawarehouse-ETL/30_segment_events/01_track_events_incremental.sql:206-212`).
   *
   * Scale notes (designed for a 1000-executor cluster, tested on local[32]):
-  *   - AQE handles skew-join splitting and partition coalescing at runtime.
+  *   - AQE (on by default in Spark 4) handles skew-join splitting and
+  *     partition coalescing at runtime.
   *   - `partitionOverwriteMode=dynamic` makes date-partition reloads atomic
   *     per partition and idempotent on rerun.
-  *   - shuffle partitions default small for local mode; a cluster deploy
-  *     overrides via `--conf` (AQE coalescing makes the initial number less
-  *     critical).
+  *   - `local[SPARK_GRAFT_CPUS]` (default 4) with twice as many shuffle
+  *     partitions; a cluster deploy overrides via `--conf` (AQE coalescing
+  *     makes the initial number less critical). Other deployment settings
+  *     (e.g. `spark.sql.warehouse.dir`) arrive as `spark.*` system
+  *     properties, which SparkConf picks up.
   */
 object Engine {
 
-  def session(
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
-      shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt * 2,
-      appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(master)
+  def session(appName: String = "graft"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", (cpus * 2).toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.sql.parquet.compression.codec", "snappy")
       // Spark rejects TIMESTAMP(NANOS) parquet outright; read the raw int64
       // and let Tables.read convert footer-declared nanos columns (at µs
       // engine precision) — see [[Tables.read]].

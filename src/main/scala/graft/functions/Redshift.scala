@@ -185,9 +185,6 @@ object Redshift {
   def convertTimezone(sourceTz: String, targetTz: String, ts: Column): Column =
     from_utc_timestamp(to_utc_timestamp(ts, sourceTz), targetTz)
 
-  /** Redshift TRUNC(timestamp) → date (377 files use this idiom). */
-  def truncDate(ts: Column): Column = ts.cast("date")
-
   // ---------------------------------------------------------------- string
 
   /** SPLIT_PART(s, delim, n) — 1-based, '' when out of range (85 files,
@@ -251,9 +248,6 @@ object Redshift {
     */
   def isValidJson(json: Column): Column =
     try_parse_json(json).isNotNull
-
-  /** JSON_ARRAY_LENGTH (31 files). */
-  def jsonArrayLength(json: Column): Column = json_array_length(json)
 
   /** Single-parse payload decoding — the replacement for the reference's
     * hottest JSON idiom: 30–50 `JSON_EXTRACT_PATH_TEXT(payload, …)` calls

@@ -45,18 +45,6 @@ object Text {
   def wordShingles(text: Column, n: Int): Column =
     call_function("graft_word_shingles", text, lit(n))
 
-  /** Character n-gram shingles. */
-  def charShingles(text: Column, n: Int): Column = {
-    val s = normalizeForDedup(text)
-    val count = length(s) - (n - 1)
-    when(count > 0,
-      transform(sequence(lit(0), count - 1), i => s.substr(lit(1) + i, lit(n))))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** Stable 64-bit hash of a column (xxhash64 — codegen'd, seed fixed). */
-  def hash64(c: Column): Column = xxhash64(c)
-
   /** MinHash signature: for each of `numHashes` permutations
     * h_i(x) = (a_i * (xxhash64(x) mod p) + b_i) mod p, the minimum over the
     * shingle set. Deterministic (fixed LCG-derived coefficients). Evaluated

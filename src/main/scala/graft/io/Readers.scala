@@ -36,13 +36,6 @@ object Readers {
     r.csv(path)
   }
 
-  /** JSON-lines load (the Firehose drop format,
-    * `business_logic/segment/parquet_rewriter.py:57-97`). Schema explicit —
-    * inference over a data lake is a full extra pass.
-    */
-  def jsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
   /** JDBC incremental extract predicate — the reference's watermark
     * pattern (uid + timestamp columns, `api_production_hourly_load.py:37-61`):
     * read only rows past the stored high-water mark. Usage:

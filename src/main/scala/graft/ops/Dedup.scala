@@ -33,16 +33,6 @@ object Dedup {
       .drop("__fp", "__rn")
   }
 
-  /** Groups of exact duplicates (for auditing): fingerprint → ids, sizes. */
-  def exactDupGroups(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .groupBy(Text.documentFingerprint(col(textCol)).as("fingerprint"))
-      .agg(
-        count(lit(1)).as("n_dups"),
-        min(col(idCol)).as("keep_id"),
-        array_sort(collect_list(col(idCol))).as("dup_ids"))
-      .filter(col("n_dups") > 1)
-
   /** MinHash-LSH near-duplicate candidate pairs.
     *
     * numHashes signature values split into `bands` bands of `rowsPerBand`;

@@ -153,44 +153,6 @@ object Ops {
         rCols.map(c => col("__match").getField(c).as(c))): _*)
   }
 
-  /** Range (interval) join: left rows matched to right rows where
-    * `point BETWEEN lo AND hi` (campaign validity / date-spine joins,
-    * SURVEY §2.3 J6; `4_dwh_catman/contentful_campaigns.sql:114,144`).
-    *
-    * When `right` is small (a spine or campaign table) Catalyst broadcasts
-    * it and the theta-join is a broadcast nested loop — the correct plan.
-    * For two large sides, pre-bucket both on a coarsened range key first.
-    */
-  def rangeJoin(
-      left: DataFrame,
-      right: DataFrame,
-      point: Column,
-      lo: Column,
-      hi: Column,
-      extraCond: Option[Column] = None,
-      joinType: String = "inner"): DataFrame = {
-    val cond0 = point >= lo && point <= hi
-    left.join(right, extraCond.fold(cond0)(cond0 && _), joinType)
-  }
-
-  /** Day-granularity range join via interval explosion: each right row
-    * `[lo, hi]` is exploded to one row per covered day, then equi-joined on
-    * the day. Turns the broadcast-nested-loop theta-join into a plain hash
-    * join — the scale path when intervals are short (days-per-interval ×
-    * rows ≪ all-pairs). Use [[rangeJoin]] for long/unbounded intervals with
-    * a small side.
-    */
-  def rangeJoinExplode(
-      left: DataFrame,
-      right: DataFrame,
-      point: Column,
-      lo: Column,
-      hi: Column,
-      joinType: String = "inner"): DataFrame = {
-    val exploded = right.withColumn("__day", explode(sequence(lo.cast("date"), hi.cast("date"))))
-    left.join(exploded, point.cast("date") === col("__day"), joinType).drop("__day")
-  }
-
   /** Date spine: one row per day in [start, end] (inclusive) — replaces the
     * reference's recursive-CTE numbers table
     * (`bi-airflow-prod/dags/dim_dates/sql/dim_dates.sql:3-13`).

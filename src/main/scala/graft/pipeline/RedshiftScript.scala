@@ -2250,10 +2250,6 @@ object RedshiftScript {
       }
       hits.find { m =>
         val sel = scopeSelect(s, m.start)
-        if (sys.env.contains("GRAFT_SG_DEBUG"))
-          System.err.println(s"SGDBG hit@${m.start} sel=$sel head=" +
-            (if (sel >= 0) s.substring(sel, math.min(s.length, sel + 40))
-              .replaceAll("\\s+", " ") else ""))
         sel >= 0 && {
           val head = s.substring(sel + 6, math.min(s.length, sel + 80))
             .replaceAll("(?s)/\\*.*?\\*/", " ").trim
@@ -3178,13 +3174,6 @@ object RedshiftScript {
       // before returning (execution uses the already-analyzed plan).
       var lateralOff = false
       var lateralsInlined = false
-      def dumpStuck(msg: String, cur: String): Unit = {
-        val dir = java.nio.file.Paths.get("/tmp/graft_repair")
-        java.nio.file.Files.createDirectories(dir)
-        java.nio.file.Files.write(
-          dir.resolve(s"stuck-${java.lang.System.nanoTime()}.txt"),
-          (msg + "\n----\n" + cur).getBytes("UTF-8"))
-      }
       val LateralConf = "spark.sql.lateralColumnAlias.enableImplicitResolution"
       try {
       while (out == null) {
@@ -3195,13 +3184,6 @@ object RedshiftScript {
           // rewriter's own corruption and would mask it
           case e: org.apache.spark.sql.catalyst.parser.ParseException
               if tries > 0 && first != null =>
-            if (sys.env.contains("GRAFT_REPAIR_DUMP")) {
-              val dir = java.nio.file.Paths.get("/tmp/graft_repair")
-              java.nio.file.Files.createDirectories(dir)
-              java.nio.file.Files.write(
-                dir.resolve(s"corrupt-${java.lang.System.nanoTime()}.txt"),
-                (String.valueOf(e.getMessage) + "\n----\n" + cur).getBytes("UTF-8"))
-            }
             first.addSuppressed(e)
             throw first
           // cap high enough for one-alias-per-pass chains: a view with
@@ -3276,13 +3258,6 @@ object RedshiftScript {
                       // identifier: UNRESOLVED ("with name `x`"),
                       // AMBIGUOUS ("Reference `x` is ambiguous"), …
                       val pm = Option(pe.getMessage).getOrElse("")
-                      if (sys.env.contains("GRAFT_REPAIR_DUMP")) {
-                        val dir = java.nio.file.Paths.get("/tmp/graft_repair")
-                        java.nio.file.Files.createDirectories(dir)
-                        java.nio.file.Files.write(
-                          dir.resolve(s"probe-${java.lang.System.nanoTime()}.txt"),
-                          (pm + "\n----\n" + cur).getBytes("UTF-8"))
-                      }
                       "(?:with name|Reference) `([^`]+)`".r
                         .findFirstMatchIn(pm)
                         .orElse("`([\\w.]+)`".r.findFirstMatchIn(pm))
@@ -3397,23 +3372,9 @@ object RedshiftScript {
               val inlined = aliasNames.foldLeft(cur)(
                 (acc, a) => RedshiftScript.inlineLateralAlias(acc, a))
               if (inlined != cur) next = inlined
-              else {
-                if (sys.env.contains("GRAFT_REPAIR_DUMP")) dumpStuck(msg, cur)
-                throw e
-              }
+              else throw e
             }
-            else if (next == cur) {
-              if (sys.env.contains("GRAFT_REPAIR_DUMP")) dumpStuck(msg, cur)
-              throw e
-            }
-            if (sys.env.contains("GRAFT_REPAIR_DUMP")) {
-              val dir = java.nio.file.Paths.get("/tmp/graft_repair")
-              java.nio.file.Files.createDirectories(dir)
-              val n = java.lang.System.nanoTime()
-              java.nio.file.Files.writeString(dir.resolve(s"$n-err.txt"), msg)
-              java.nio.file.Files.writeString(dir.resolve(s"$n-from.sql"), cur)
-              java.nio.file.Files.writeString(dir.resolve(s"$n-to.sql"), next)
-            }
+            else if (next == cur) throw e
             cur = next
         }
       }
@@ -3677,17 +3638,10 @@ object RedshiftScript {
               tempReadPaths(t.name.toLowerCase) = (rawId, fresh)
               fresh
           }
-          val reads = readRoots.exists(roots)
-          if (reads) {
-            val df = spark.table(s"`${t.name}`")
-            if (sys.env.contains("GRAFT_HARNESS_TRACE"))
-              Console.err.println(s"[runner] pin temp view ${t.name} before swap of ${roots.mkString(",")}")
-            df.localCheckpoint(true).createOrReplaceTempView(t.name)
-          }
-        } catch { case e: Exception =>
-          if (sys.env.contains("GRAFT_HARNESS_TRACE"))
-            Console.err.println(s"[runner] pin of temp ${t.name} failed: ${e.getMessage}")
-        }
+          if (readRoots.exists(roots))
+            spark.table(s"`${t.name}`").localCheckpoint(true)
+              .createOrReplaceTempView(t.name)
+        } catch { case _: Exception => () }
       }
     }
 

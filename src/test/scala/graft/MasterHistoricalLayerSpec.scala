@@ -157,6 +157,7 @@ class MasterHistoricalLayerSpec extends SparkSpec {
   }
 
   test("the whole 5_master_historical layer runs verbatim and re-runs idempotently") {
+    assume(Files.exists(layerDir))
     val mains = listSql(layerDir)
     val onFailure = listSql(layerDir.resolve("on_failure"))
     val plans = (mains ++ onFailure).map(plan)

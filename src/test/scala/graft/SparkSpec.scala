@@ -6,6 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark's
   * getOrCreate makes this safe across suites and keeps the test run fast).
+  * It is the engine's own session, so the specs test the configuration
+  * users get.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -14,18 +16,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a deployment setting, passed the way build.sbt passes spark.* ones
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString
+    val s = Engine.session(appName = "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

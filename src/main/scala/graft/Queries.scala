@@ -243,6 +243,8 @@ object Queries {
     val daily = t(spark, dir, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("month"))
       .agg(moneySum(col("o_totalprice")).as("revenue"))
+    // single-partition window, bounded: it runs after the aggregate, over
+    // one row per month (12 rows a year of orders), never the fact table
     val w = Window.orderBy(col("month"))
     daily
       .withColumn("prev_revenue", lag(col("revenue"), 1).over(w))

@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.StructType
   * (hourly rewriter, Glue partition handler, incremental DELETE+INSERT):
   * file/Kafka source → parse → watermark dedup → foreachBatch dynamic
   * partition overwrite. `Trigger.AvailableNow` gives the reference's
-  * cron-cadence semantics with streaming exactly-once bookkeeping.
+  * cron-cadence semantics with streaming exactly-once bookkeeping. Like the
+  * rewriter, the sink compacts: every hour partition it touches ends up as
+  * one parquet file (see [[mergeBatchIntoPartitions]]).
   */
 object Ingest {
 
@@ -62,9 +64,23 @@ object Ingest {
     * replay (the dedup absorbs re-delivered rows) and still atomic per
     * partition via the overwrite commit.
     *
+    * Layout: the merged rows are hash-clustered by (date, hour) before the
+    * write, so each touched hour directory is rewritten as exactly one
+    * parquet file — the reference rewriter's output shape, one file per
+    * hour partition. The dedup runs inside that same shuffle: `date` and
+    * `hour` are functions of the event time, which is in the dedup key, so
+    * widening the key by them keeps the same rows, and the clustering
+    * satisfies the aggregate's distribution (one exchange, not two). A
+    * plain repartition, not a rebalance: AQE may split a skewed rebalance
+    * partition, which would break the co-location the dedup relies on.
+    *
     * Scale: a batch touches O(lateness/hour) partitions; the merge re-reads
-    * and rewrites only those, never the table. The `collect()` is over the
-    * distinct touched (date, hour) pairs — bounded and tiny by design.
+    * and rewrites only those, never the table, with one writer task per
+    * hour partition — the reference's own unit of work (one 10 GiB / 4 vCPU
+    * rewriter task per hour,
+    * `data-airflow-prod/dags/segment/parquet_rewriter.py:14-20`). The
+    * `collect()` is over the distinct touched (date, hour) pairs — bounded
+    * and tiny by design.
     */
   private[graft] def mergeBatchIntoPartitions(
       batch: DataFrame,
@@ -97,7 +113,8 @@ object Ingest {
               spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], b.schema)
           }
         b.unionByName(existing)
-          .dropDuplicates(dedupKey)
+          .repartition(col("date"), col("hour"))
+          .dropDuplicates(Seq("date", "hour") ++ dedupKey)
           .write
           .mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")

@@ -52,6 +52,9 @@ class KafkaMlSpec extends SparkSpec {
     val out = spark.read.parquet(tgt)
     assert(out.filter(col("hour") === 10).count() === 3) // a, b, c all present
     assert(out.count() === 4)
+    // one file per hour partition
+    assert(StreamingMultimodalSpec.parquetFilesPerHourDir(tgt) ===
+      Map("date=2024-01-01/hour=10" -> 1, "date=2024-01-01/hour=11" -> 1))
   }
 
   test("churn scoring: features -> fit -> score -> writeback (M7 loop)") {

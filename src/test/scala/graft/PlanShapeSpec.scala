@@ -1,5 +1,8 @@
 package graft
 
+import graft.ops.Ops
+import org.apache.spark.sql.functions.col
+
 /** Physical-plan regression guards (the 100 TB review loop, pinned): a
   * future refactor that silently loses filter pushdown, broadcasts a big
   * side, or reintroduces a join explosion fails here, not at scale.
@@ -108,6 +111,22 @@ class PlanShapeSpec extends SparkSpec {
     // to_json form), leaving a plain whole-stage-codegen projection
     assert(!p.contains("from_json"), p)
     assert(!p.contains("StructsToJsonEvaluator"), p)
+  }
+
+  test("fullOuterUsing: one null-safe full outer sort-merge join, 4 exchanges") {
+    // the pre-rewrite q12 shape, pinned here since q12 no longer calls it:
+    // each aggregate shuffles by its key, then both sides re-shuffle by the
+    // null-safe key shape hash(coalesce(k, 0), isnull(k)) for the join
+    val orders = Tables.read(spark, dir, "orders")
+    def byStatus(s: String, n: String) = orders
+      .filter(col("o_orderstatus") === s)
+      .groupBy(col("o_custkey").as("custkey"))
+      .count().withColumnRenamed("count", n)
+    val p = Ops.fullOuterUsing(byStatus("F", "n_f"), byStatus("O", "n_o"), Seq("custkey"))
+      .queryExecution.executedPlan.toString
+    assert(p.contains("SortMergeJoin") && p.contains("FullOuter"), p)
+    assert("Exchange hashpartitioning".r.findAllIn(p).size === 4, p)
+    assert(!p.contains("Broadcast"), p)
   }
 
   test("q56: corpus-clean chain shuffles only for the dedup key") {

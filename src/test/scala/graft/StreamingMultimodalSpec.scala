@@ -3,8 +3,13 @@ package graft
 import graft.multimodal.Multimodal
 import graft.streaming.Ingest
 import java.nio.file.Files
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 class StreamingMultimodalSpec extends SparkSpec {
 
@@ -59,6 +64,62 @@ class StreamingMultimodalSpec extends SparkSpec {
     assert(out.filter(col("hour") === 10).select("id").collect().map(_.getString(0)).sorted.toSeq
       === Seq("a", "b", "c"))
     assert(out.count() === 4)
+    // the merge rewrites each touched hour as one file, like the rewriter
+    assert(StreamingMultimodalSpec.parquetFilesPerHourDir(tgt) ===
+      Map("date=2024-01-01/hour=10" -> 1, "date=2024-01-01/hour=11" -> 1))
+  }
+
+  test("merge sink: batch replay is idempotent, one file per hour, one shuffle") {
+    import sqlImplicits._
+    // three hours over two days, with an in-batch duplicate and two rows
+    // sharing an id at different event times (both kept: ts is in the key)
+    val batch = Seq(
+      ("a", "2024-01-01 10:00:00", 1), ("b", "2024-01-01 10:30:00", 2),
+      ("a", "2024-01-01 10:00:00", 1), ("c", "2024-01-01 11:05:00", 3),
+      ("c", "2024-01-02 00:15:00", 4), ("d", "2024-01-02 00:45:00", 5))
+      .toDF("id", "ts", "v")
+      .withColumn("ts", to_timestamp(col("ts")))
+      .withColumn("date", to_date(col("ts")))
+      .withColumn("hour", hour(col("ts")))
+    val shuffles = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val helper = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan
+        if (helper.collect(plan) { case w: DataWritingCommandExec => w }.nonEmpty)
+          shuffles.add(helper.collect(plan) { case e: ShuffleExchangeExec => e }.size)
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqeWas = spark.conf.get(aqeKey)
+    spark.listenerManager.register(listener)
+    // a stream's micro-batches run with AQE off (Structured Streaming
+    // disables it), a direct caller's with it on: neither may change the
+    // layout or add a shuffle
+    try for (aqe <- Seq("false", "true")) {
+      spark.conf.set(aqeKey, aqe)
+      shuffles.clear()
+      val tgt = Files.createTempDirectory("graft-merge-replay").toString + "/tgt"
+      def rows() = spark.read.parquet(tgt).orderBy("id", "ts").collect().map(_.toString).toSeq
+      Ingest.mergeBatchIntoPartitions(batch, tgt, Seq("id", "ts"))
+      val first = rows()
+      assert(first.size === 5, first)
+      Ingest.mergeBatchIntoPartitions(batch, tgt, Seq("id", "ts"))
+      assert(rows() === first, s"AQE $aqe")
+      // the listener bus is asynchronous: wait for both writes' plans
+      val deadline = System.currentTimeMillis() + 30000
+      while (shuffles.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      // into an empty target and into existing partitions alike, the
+      // clustering shuffle is the only one: the dedup adds no exchange
+      assert(shuffles.toArray.toSeq === Seq(1, 1), s"AQE $aqe")
+      assert(StreamingMultimodalSpec.parquetFilesPerHourDir(tgt) === Map(
+        "date=2024-01-01/hour=10" -> 1, "date=2024-01-01/hour=11" -> 1,
+        "date=2024-01-02/hour=0" -> 1), s"AQE $aqe")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set(aqeKey, aqeWas)
+    }
   }
 
   test("null-timestamp rows land in the null partition and survive later merges") {
@@ -155,5 +216,19 @@ class StreamingMultimodalSpec extends SparkSpec {
     val idxs = frames.filter(col("media_id") === byVideo.map(_.getLong(0)).max)
       .select("frame_idx").collect().map(_.getLong(0)).sorted.toSeq
     assert(idxs === idxs.indices.map(_ * 5L))
+  }
+}
+
+object StreamingMultimodalSpec {
+
+  /** Parquet data files in each `date=…/hour=…` directory of a target. */
+  def parquetFilesPerHourDir(target: String): Map[String, Int] = {
+    def dirs(f: java.io.File, prefix: String) =
+      f.listFiles().toSeq.filter(d => d.isDirectory && d.getName.startsWith(prefix))
+    (for {
+      d <- dirs(new java.io.File(target), "date=")
+      h <- dirs(d, "hour=")
+    } yield s"${d.getName}/${h.getName}" ->
+      h.listFiles().count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))).toMap
   }
 }

@@ -1354,6 +1354,243 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(rw.lastSelect.get.count() === 2)
   }
 
+  // Redshift lateral aliases, each shape pinned at the Runner against the
+  // same query nested by hand. `la_src` has source columns named like some
+  // of the aliases (`v`, `created_at`), `la_hist` feeds the correlated
+  // subqueries and `la_profile` has the rebuild mart's input columns.
+  private def lateralFixtures(): Unit = {
+    spark.sql(
+      """SELECT * FROM VALUES
+        |  (1, 'a', 5, TIMESTAMP '2024-06-03 10:00:00'),
+        |  (2, 'a', 9, TIMESTAMP '2024-06-05 11:00:00'),
+        |  (3, 'b', 2, TIMESTAMP '2024-06-10 09:00:00'),
+        |  (4, 'b', 7, TIMESTAMP '2024-06-12 12:00:00'),
+        |  (5, 'c', 4, TIMESTAMP '2024-06-04 08:00:00'),
+        |  (6, 'a', 1, TIMESTAMP '2024-06-11 07:00:00')
+        |  AS t(k, g, v, created_at)""".stripMargin).createOrReplaceTempView("la_src")
+    spark.sql("SELECT * FROM VALUES (1, 3), (1, 6), (2, 8), (3, 1), (4, 10), (4, 2) AS t(k, w)")
+      .createOrReplaceTempView("la_hist")
+    spark.sql(
+      """SELECT * FROM VALUES
+        |  (1, 4L, 10.5D, TIMESTAMP '2024-06-14 10:00:00', 2L),
+        |  (2, 2L, 3.25D, TIMESTAMP '2024-06-14 11:00:00', 2L),
+        |  (3, 5L, 20.0D, TIMESTAMP '2024-06-13 09:00:00', 1L),
+        |  (4, 1L, 7.0D, TIMESTAMP '2024-06-14 08:00:00', 1L)
+        |  AS t(user_id, lifetime_events, lifetime_value, last_seen, last_day_events)""".stripMargin)
+      .createOrReplaceTempView("la_profile")
+  }
+
+  /** Runs `script` and asserts its last SELECT equals `nested`, the same
+    * query with every lateral alias nested into a derived table by hand.
+    */
+  private def assertSameAsNested(script: String, nested: String, ordered: Boolean = false): Unit = {
+    lateralFixtures()
+    val r = new RedshiftScript.Runner(spark, root()).run(script)
+    assert(r.ok, r.reports.filterNot(_.ok).mkString("; "))
+    val got = r.lastSelect.get
+    val want = spark.sql(RedshiftScript.translate(nested))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val s = df.collect().toSeq.map(_.toSeq.mkString("|"))
+      if (ordered) s else s.sorted
+    }
+    assert(got.columns.toSeq === want.columns.toSeq)
+    assert(rows(got) === rows(want))
+  }
+
+  test("lateral alias inside a window: plain, and as the PARTITION BY key") {
+    assertSameAsNested(
+      """SELECT k, v * 2 AS dd,
+        |  SUM(dd) OVER (PARTITION BY g ORDER BY k) AS run,
+        |  ROW_NUMBER() OVER (PARTITION BY dd ORDER BY k) AS rn
+        |FROM la_src;""".stripMargin,
+      """SELECT k, dd,
+        |  SUM(dd) OVER (PARTITION BY g ORDER BY k) AS run,
+        |  ROW_NUMBER() OVER (PARTITION BY dd ORDER BY k) AS rn
+        |FROM (SELECT k, g, v * 2 AS dd FROM la_src) x""".stripMargin)
+  }
+
+  test("lateral alias inside a window: grouped, ordered by an aggregate alias") {
+    assertSameAsNested(
+      "SELECT g, SUM(v) AS total, RANK() OVER (ORDER BY total DESC) AS rk FROM la_src GROUP BY g;",
+      """SELECT g, total, RANK() OVER (ORDER BY total DESC) AS rk
+        |FROM (SELECT g, SUM(v) AS total FROM la_src GROUP BY g) x""".stripMargin)
+  }
+
+  test("lateral alias inside a window: grouped, partitioned by a grouping alias") {
+    assertSameAsNested(
+      """SELECT UPPER(g) AS gu, k % 2 AS par, COUNT(*) AS n,
+        |  SUM(COUNT(*)) OVER (PARTITION BY gu) AS gn
+        |FROM la_src GROUP BY UPPER(g), k % 2;""".stripMargin,
+      """SELECT gu, par, n, SUM(n) OVER (PARTITION BY gu) AS gn
+        |FROM (SELECT UPPER(g) AS gu, k % 2 AS par, COUNT(*) AS n
+        |  FROM la_src GROUP BY UPPER(g), k % 2) x""".stripMargin)
+    // the grouped window over select aliases behind MISSING_AGGREGATION
+    // (`dm_marketing.v_product_sku_vs_paid_orders.sql:26-28`)
+    assertSameAsNested(
+      """SELECT g AS sku, k > 3 AS late, COUNT(*) AS n,
+        |  ROW_NUMBER() OVER (PARTITION BY sku ORDER BY late) AS rn
+        |FROM la_src GROUP BY 1, 2;""".stripMargin,
+      """SELECT sku, late, n, ROW_NUMBER() OVER (PARTITION BY sku ORDER BY late) AS rn
+        |FROM (SELECT g AS sku, k > 3 AS late, COUNT(*) AS n FROM la_src GROUP BY 1, 2) x""".stripMargin)
+  }
+
+  test("lateral alias inside a window: a two-step alias chain inlines fully") {
+    assertSameAsNested(
+      """SELECT k, g, v + 1 AS a1, a1 * 10 AS a2,
+        |  MAX(a2) OVER (PARTITION BY g) AS mx
+        |FROM la_src;""".stripMargin,
+      """SELECT k, g, a1, a2, MAX(a2) OVER (PARTITION BY g) AS mx
+        |FROM (SELECT k, g, a1, a1 * 10 AS a2
+        |  FROM (SELECT k, g, v + 1 AS a1 FROM la_src) x) y""".stripMargin)
+  }
+
+  test("lateral alias inside a window: a self-shadowed alias reads the source column") {
+    // `date_trunc('week',created_at) AS created_at` (`9_SPV/Pricing_V2/
+    // 05_pricing_1.sql:53-55`): in an expression Redshift reads the SOURCE
+    // column; the rows fall in two weeks but on six distinct timestamps
+    assertSameAsNested(
+      """SELECT k, date_trunc('week', created_at) AS created_at, v * 2 AS dv,
+        |  SUM(dv) OVER (PARTITION BY created_at) AS s,
+        |  ROW_NUMBER() OVER (PARTITION BY created_at ORDER BY k) AS rn
+        |FROM la_src;""".stripMargin,
+      """SELECT k, date_trunc('week', created_at) AS created_at, v * 2 AS dv,
+        |  SUM(v * 2) OVER (PARTITION BY la_src.created_at) AS s,
+        |  ROW_NUMBER() OVER (PARTITION BY la_src.created_at ORDER BY k) AS rn
+        |FROM la_src""".stripMargin)
+  }
+
+  test("lateral alias in WHERE and inside windows of the same select (q62's shape)") {
+    assertSameAsNested(
+      """SELECT k, g, v * 3 AS net,
+        |  SUM(net) OVER (PARTITION BY g) AS gnet,
+        |  ROW_NUMBER() OVER (PARTITION BY g ORDER BY net DESC, k) AS rk
+        |FROM la_src
+        |WHERE net > 5;""".stripMargin,
+      """SELECT k, g, net,
+        |  SUM(net) OVER (PARTITION BY g) AS gnet,
+        |  ROW_NUMBER() OVER (PARTITION BY g ORDER BY net DESC, k) AS rk
+        |FROM (SELECT k, g, v * 3 AS net FROM la_src) x
+        |WHERE net > 5""".stripMargin)
+  }
+
+  test("lateral aliases of the rebuild mart CTAS, its body inside a CTE") {
+    assertSameAsNested(
+      """DROP TABLE IF EXISTS la_db.la_mart;
+        |CREATE TABLE la_db.la_mart AS
+        |WITH m AS (
+        |  SELECT user_id, lifetime_events, last_seen, last_day_events,
+        |    CAST(lifetime_value AS DECIMAL(18,2)) AS value_dec,
+        |    value_dec / lifetime_events AS avg_value,
+        |    SUM(value_dec) OVER (PARTITION BY last_day_events) AS cohort_value,
+        |    ROW_NUMBER() OVER (PARTITION BY last_day_events
+        |      ORDER BY value_dec DESC, user_id) AS cohort_rank
+        |  FROM la_profile
+        |)
+        |SELECT * FROM m;
+        |SELECT * FROM la_db.la_mart;""".stripMargin,
+      """SELECT user_id, lifetime_events, last_seen, last_day_events, value_dec,
+        |  value_dec / lifetime_events AS avg_value,
+        |  SUM(value_dec) OVER (PARTITION BY last_day_events) AS cohort_value,
+        |  ROW_NUMBER() OVER (PARTITION BY last_day_events
+        |    ORDER BY value_dec DESC, user_id) AS cohort_rank
+        |FROM (SELECT *, CAST(lifetime_value AS DECIMAL(18,2)) AS value_dec
+        |  FROM la_profile) x""".stripMargin)
+  }
+
+  test("lateral alias in WHERE: a source column of that name wins") {
+    assertSameAsNested(
+      "SELECT k, v * 10 AS v FROM la_src WHERE v > 4;",
+      "SELECT k, v * 10 AS v FROM la_src WHERE la_src.v > 4")
+  }
+
+  test("lateral alias in WHERE: an alias defined by an aggregate is left alone") {
+    // Redshift reads the SOURCE column there
+    // (`11_marketing_reporting/marketing.v_user_price_drop.sql:330`)
+    assertSameAsNested(
+      "SELECT g, MAX(v) AS v FROM la_src WHERE v > 1 GROUP BY g;",
+      "SELECT g, MAX(v) AS v FROM la_src WHERE la_src.v > 1 GROUP BY g")
+    // with no source column the statement fails on that name rather than
+    // growing an aggregate predicate
+    lateralFixtures()
+    val r = new RedshiftScript.Runner(spark, root())
+      .run("SELECT g, SUM(v) AS tot FROM la_src WHERE tot > 1 GROUP BY g;")
+    assert(!r.ok)
+    assert(r.reports.last.error.exists(_.contains("`tot`")), r.reports.mkString("; "))
+  }
+
+  test("lateral alias of the outer select in a correlated subquery's WHERE") {
+    // `1_ods_core/00_allocation.sql:784`
+    assertSameAsNested(
+      """SELECT k, v + 1 AS lim,
+        |  (SELECT MAX(h.w) FROM la_hist h WHERE h.k = la_src.k AND h.w <= lim) AS best
+        |FROM la_src;""".stripMargin,
+      """SELECT k, v + 1 AS lim,
+        |  (SELECT MAX(h.w) FROM la_hist h WHERE h.k = la_src.k AND h.w <= la_src.v + 1) AS best
+        |FROM la_src""".stripMargin)
+    // an inner column of the alias's name wins
+    assertSameAsNested(
+      """SELECT k, v AS w,
+        |  (SELECT MAX(h.w) FROM la_hist h WHERE h.k = la_src.k AND w > 2) AS best
+        |FROM la_src;""".stripMargin,
+      """SELECT k, v AS w,
+        |  (SELECT MAX(h.w) FROM la_hist h WHERE h.k = la_src.k AND h.w > 2) AS best
+        |FROM la_src""".stripMargin)
+  }
+
+  test("lateral aliases in a temp-table body and in a CREATE VIEW body read back") {
+    assertSameAsNested(
+      """CREATE TEMP TABLE la_tmp AS
+        |SELECT k, g, v * 2 AS dd, RANK() OVER (PARTITION BY g ORDER BY dd DESC, k) AS rk
+        |FROM la_src;
+        |SELECT * FROM la_tmp;""".stripMargin,
+      """SELECT k, g, dd, RANK() OVER (PARTITION BY g ORDER BY dd DESC, k) AS rk
+        |FROM (SELECT k, g, v * 2 AS dd FROM la_src) x""".stripMargin)
+    lateralFixtures()
+    Catalog.replaceTable(spark.table("la_src"), "la_db", "src")
+    assertSameAsNested(
+      """CREATE VIEW la_db.la_view AS
+        |SELECT k, g, v * 2 AS dd, SUM(dd) OVER (PARTITION BY g) AS gs
+        |FROM la_db.src
+        |WHERE dd > 3;
+        |SELECT * FROM la_db.la_view;""".stripMargin,
+      """SELECT k, g, dd, SUM(dd) OVER (PARTITION BY g) AS gs
+        |FROM (SELECT k, g, v * 2 AS dd FROM la_src) x
+        |WHERE dd > 3""".stripMargin)
+  }
+
+  test("no lateral alias, a plain select-list one, and an exact duplicated alias line") {
+    assertSameAsNested(
+      "SELECT k, g, v FROM la_src WHERE v > 2;",
+      "SELECT k, g, v FROM la_src WHERE v > 2")
+    assertSameAsNested(
+      "SELECT k, v + 1 AS a, a * 2 AS b FROM la_src;",
+      "SELECT k, v + 1 AS a, (v + 1) * 2 AS b FROM la_src")
+    // a whole line duplicated (`us_debt_collections/sql/last_payment_event
+    // .sql:79-80`) makes the later reference ambiguous in Spark
+    assertSameAsNested(
+      "SELECT k, v + 1 AS a, v + 1 AS a, a * 2 AS b FROM la_src;",
+      "SELECT k, v + 1 AS a, (v + 1) * 2 AS b FROM la_src")
+  }
+
+  test("lateral aliases in WHERE leave qualified names, literals and ORDER BY alone") {
+    spark.sql("SELECT * FROM VALUES ('x', 'b', 2), ('b', 'y', 2), ('b', 'b', 1) AS t(a, b, c)")
+      .createOrReplaceTempView("la_abc")
+    // `la_abc.b` is the source column and 'b' a literal, whatever alias `b` means
+    assertSameAsNested(
+      "SELECT a AS b, c * 2 AS c2 FROM la_abc WHERE la_abc.b = 'b' AND c2 = 4;",
+      "SELECT a AS b, c * 2 AS c2 FROM la_abc WHERE la_abc.b = 'b' AND c * 2 = 4")
+    // ORDER BY still sorts by the output alias
+    assertSameAsNested(
+      """SELECT o.k AS main_id, o2.k AS rel_id
+        |FROM la_src o JOIN la_src o2 ON o.g = o2.g
+        |WHERE main_id != rel_id AND o.v > 1
+        |ORDER BY main_id, rel_id;""".stripMargin,
+      """SELECT o.k AS main_id, o2.k AS rel_id
+        |FROM la_src o JOIN la_src o2 ON o.g = o2.g
+        |WHERE o.k != o2.k AND o.v > 1
+        |ORDER BY main_id, rel_id""".stripMargin)
+  }
+
   test("CTE-prefixed DELETE USING resolves the source from the WITH list") {
     Catalog.replaceTable(Tables.read(spark, sfDir, "orders")
       .select(col("o_orderkey").as("id"), col("o_totalprice").as("v")), "rs_cte", "tgt")

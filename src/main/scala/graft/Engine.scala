@@ -37,6 +37,10 @@ object Engine {
       // engine precision) — see [[Tables.read]].
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
+      // Redshift places no practical bound on WITH RECURSIVE depth; Spark
+      // defaults to 100 levels, which a 365-day date spine already exceeds
+      // (`bi-airflow-prod/dags/dim_dates/sql/dim_dates.sql:3-8`)
+      .config("spark.sql.cteRecursionLevelLimit", "100000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -338,6 +338,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // DAY. Rewriting post-resolution SubtractDates → DateDiff keeps the
     // plan codegen'd and the semantics Redshift's.
     ext.injectResolutionRule(_ => DateMinusDateAsDays)
+    // Redshift lateral aliases in windows and WHERE clauses: marked before
+    // Resolution, resolved once the select's input is (see the rules)
+    ext.injectHintResolutionRule(_ => MarkLateralAliases)
+    ext.injectResolutionRule(_ => ResolveLateralAliases)
   }
 }
 

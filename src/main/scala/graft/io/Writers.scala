@@ -70,17 +70,6 @@ object Writers {
     atomicSwap(spark, tmp, path)
   }
 
-  /** Swap a freshly-written directory into place via rename-aside:
-    * target → backup, tmp → target, drop backup. Compared to
-    * delete-then-rename this (a) shrinks the no-table window from a full
-    * recursive delete to two metadata renames (on HDFS each rename is an
-    * atomic ~ms namenode op), and (b) is crash-safe: at every step the
-    * data exists intact in either target or backup — a crashed swap is
-    * recovered by the next run's leftover-backup cleanup, never lost.
-    * On object stores without atomic rename a manifest/pointer layer
-    * (or a table format) is the real answer; this is the best possible
-    * shape for path-addressed parquet.
-    */
   /** Restore a swap that crashed between rename-aside and rename-in:
     * target absent + backup present ⇒ the backup holds the only copy.
     */
@@ -95,6 +84,17 @@ object Writers {
     }
   }
 
+  /** Swap a freshly-written directory into place via rename-aside:
+    * target → backup, tmp → target, drop backup. Compared to
+    * delete-then-rename this (a) shrinks the no-table window from a full
+    * recursive delete to two metadata renames (on HDFS each rename is an
+    * atomic ~ms namenode op), and (b) is crash-safe: at every step the
+    * data exists intact in either target or backup — a crashed swap is
+    * recovered by the next run's leftover-backup cleanup, never lost.
+    * On object stores without atomic rename a manifest/pointer layer
+    * (or a table format) is the real answer; this is the best possible
+    * shape for path-addressed parquet.
+    */
   private[graft] def atomicSwap(spark: SparkSession, tmpDir: String, path: String): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)

@@ -55,8 +55,8 @@ object Pipeline {
     * as a temp view named by the file stem, so later scripts query earlier
     * ones exactly like the reference's temp-table chaining. A `-- target:`
     * header line materializes the result to that path first.
-    */
-  /** @param scriptLayoutRoot where multi-statement scripts' `db.table`
+    *
+    * @param scriptLayoutRoot where multi-statement scripts' `db.table`
     *                         targets materialize (see [[RedshiftScript]])
     * @param scriptCurrentDate pin `current_date` inside scripts for
     *                         deterministic reruns

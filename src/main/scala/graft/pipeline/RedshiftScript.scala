@@ -1766,35 +1766,14 @@ object RedshiftScript {
       sql.substring(0, selStart) + replacement + sql.substring(predEnd), n + 1)
   }
 
-  /** Redshift lets a WHERE predicate reference the query's own select-list
-    * aliases (`SELECT o.order_id AS main_order_id … WHERE main_order_id !=
-    * related_order_id`, `1_ods_risk/order_manual_review_previous_order_
-    * history.sql:17`) — Spark resolves lateral aliases only inside the
-    * select list. Substitute each referenced alias's expression into the
-    * predicate, Redshift's own effective semantics. Used as a FALLBACK
-    * when analysis fails with an unresolved column: native resolution
-    * stays authoritative for the alias-shadows-a-real-column case.
-    */
   /** Position of the next occurrence of `kw` at or after `from` that sits
-    * outside strings/comments (at word boundaries), plus the innermost
-    * unclosed '(' before it — (-1, -1) when none.
+    * outside strings/comments (at word boundaries) — -1 when none.
     */
-  private def nextKeywordOutside(s: String, kw: String, from: Int): (Int, Int) = {
-    val (pos, stack) = nextKeywordOutsideStack(s, kw, from)
-    (pos, stack.headOption.getOrElse(-1))
-  }
-
-  /** Like [[nextKeywordOutside]] but returns the WHOLE stack of unclosed
-    * '(' positions at the keyword (innermost first) — each is a nesting
-    * scope whose select list may define lateral aliases visible there.
-    */
-  private def nextKeywordOutsideStack(
-      s: String, kw: String, from: Int): (Int, List[Int]) = {
+  private def nextKeywordOutside(s: String, kw: String, from: Int): Int = {
     def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
     val upper = s.toUpperCase
     val kwU = kw.toUpperCase
     var i = 0; var inStr = false; var inLc = false; var inBc = false
-    val openStack = mutable.Stack[Int]()
     while (i < s.length) {
       val c = s.charAt(i)
       val next = if (i + 1 < s.length) s.charAt(i + 1) else ' '
@@ -1805,266 +1784,21 @@ object RedshiftScript {
         case '\'' => inStr = true
         case '-' if next == '-' => inLc = true; i += 1
         case '/' if next == '*' => inBc = true; i += 1
-        case '(' => openStack.push(i)
-        case ')' => if (openStack.nonEmpty) openStack.pop()
         case _ =>
           if (i >= from && upper.startsWith(kwU, i) &&
               (i == 0 || !isWord(s.charAt(i - 1))) &&
               (i + kwU.length >= s.length || !isWord(s.charAt(i + kwU.length))))
-            return (i, openStack.toList)
+            return i
       }
       i += 1
     }
-    (-1, Nil)
-  }
-
-  /** Start of the select whose list contains `pos` — the last
-    * region-depth-0 SELECT before it (region = after the innermost '(' at
-    * `regionStart`) — or -1.
-    */
-  private def enclosingSelectStart(s: String, regionStart: Int, pos: Int): Int = {
-    def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    val upper = s.toUpperCase
-    var selStart = -1
-    var j = regionStart; var d = 0
-    var s2 = false; var lc2 = false; var bc2 = false
-    while (j < pos) {
-      val c = s.charAt(j)
-      val next = if (j + 1 < s.length) s.charAt(j + 1) else ' '
-      if (lc2) { if (c == '\n') lc2 = false }
-      else if (bc2) { if (c == '*' && next == '/') { bc2 = false; j += 1 } }
-      else if (s2) { if (c == '\'') s2 = false }
-      else c match {
-        case '\'' => s2 = true
-        case '-' if next == '-' => lc2 = true; j += 1
-        case '/' if next == '*' => bc2 = true; j += 1
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-          if (d == 0 && upper.startsWith("SELECT", j) &&
-              (j == 0 || !isWord(s.charAt(j - 1))) &&
-              (j + 6 >= s.length || !isWord(s.charAt(j + 6))))
-            selStart = j
-      }
-      j += 1
-    }
-    selStart
+    -1
   }
 
   // the alias may be BACKTICKED — Redshift `as "period"` translates to
   // `` as `period` `` (`91_External/Legal/IntraStat NL/IntraStat_v2
   // .sql:45` reads the quoted alias back in its WHERE)
   private val SelectAliasRe = "(?is)^(.*\\S)\\s+as\\s+`?(\\w+)`?\\s*$".r
-  private val ImplicitAliasRe = "(?is)^(.*[)'\"`\\w])\\s+(\\w+)\\s*$".r
-  private val ImplicitAliasKw = Set("end", "null", "true", "false", "asc",
-    "desc", "nulls", "first", "last", "from", "over", "case", "then", "when",
-    "else", "and", "or", "not", "is", "in", "like", "ilike", "between",
-    "escape", "distinct", "interval", "row", "rows", "range", "unbounded",
-    "preceding", "following", "current", "by", "as")
-
-  /** (alias → expression) pairs from the select list that ENDS at `pos`
-    * (list text truncated there — forward references don't exist in the
-    * lateral-alias dialect this serves). Aliases resolve TRANSITIVELY:
-    * each expression has the earlier aliases already substituted, so a
-    * chain (`a` → `b uses a` → `c uses b`) inlines fully.
-    */
-  private def enclosingSelectAliases(
-      s: String, regionStart: Int, pos: Int): Seq[(String, String)] = {
-    val selStart = enclosingSelectStart(s, regionStart, pos)
-    if (selStart < 0) return Seq.empty
-    val selBody = stripLeadingComments(s.substring(selStart + 6, pos))
-    val listText = splitTopKeyword(
-      if (selBody.toUpperCase.startsWith("DISTINCT") &&
-          (selBody.length == 8 || !Character.isLetterOrDigit(selBody.charAt(8)) &&
-            selBody.charAt(8) != '_')) selBody.substring(8)
-      else selBody,
-      "FROM")._1
-    val raw = splitTop(listText).map(it => stripComments(it).trim).flatMap {
-      case SelectAliasRe(e, a) => Some(a -> e)
-      // implicit alias (`JSON_EXTRACT_PATH_text(payload,'order_number')
-      // order_number`, `1_ods_core/01_order.sql:28`) — the trailing
-      // identifier must not be a SQL keyword or a bare number
-      case ImplicitAliasRe(e, a)
-        if !ImplicitAliasKw(a.toLowerCase) && !a.charAt(0).isDigit => Some(a -> e)
-      case _ => None
-    }
-    raw.foldLeft(Seq.empty[(String, String)]) { case (acc, (a, e)) =>
-      acc :+ (a -> substAliases(e, acc))
-    }
-  }
-
-  /** Substitute alias expressions for bare alias references in `span`
-    * (string-literal aware). SELF-SHADOWED aliases — the expression
-    * references its own output name (`date_trunc('week',created_at) AS
-    * created_at`, `9_SPV/Pricing_V2/05_pricing_1.sql:53`) — are skipped:
-    * substituting regresses infinitely (the replacement re-introduces the
-    * name), and Redshift resolves an expression-context reference to the
-    * SOURCE column anyway, which textual substitution cannot express.
-    * The repair loop handles those by disabling Spark's implicit lateral
-    * alias resolution for the statement instead.
-    */
-  private def substAliases(span: String, aliases: Seq[(String, String)]): String = {
-    // An alias named like a TYPE keyword (`… as date`) must not capture
-    // that keyword's other roles: a cast target (`::date` — the `:`
-    // lookbehind below), a typed literal's prefix (`DATE '2024-06-15'`),
-    // or an EXTRACT unit (`day from` — the `from` lookahead).
-    // `00_inventory_store_variant_availability.sql`'s
-    // `current_date::date-2` WHERE was corrupted by all three. The
-    // literal prefix needs a MASK rather than a lookahead: the
-    // substitution runs segment-wise between string literals, so `DATE `
-    // sits at a segment END and a quote lookahead can never see the
-    // literal that follows.
-    val masked = span.replaceAll("(?i)\\b(date|timestamp|time|interval)(?=\\s*')", "$1")
-    val out = aliases.foldLeft(masked) { case (acc, (a, e)) =>
-      val q = java.util.regex.Pattern.quote(a)
-      // bare references only — `tbl.alias` is a different column; a
-      // BACKTICKED bare reference (`` `period` `` from Redshift
-      // `"period"`) substitutes too, but `` `tbl`.`alias` `` does not
-      // (the opening backtick is dot-preceded)
-      val bareRef = s"(?i)(?:(?<![.\\w:`\"\\u0001])$q(?![\\w`\"])(?!\\s+from\\b)" +
-        s"|(?<![.\\w`\"])`$q`(?!\\s+from\\b))"
-      // the self-reference test must ignore string literals:
-      // `JSON_EXTRACT_PATH_text(payload,'uuid') AS uuid` is NOT
-      // self-shadowed (the only 'uuid' is the path literal)
-      val eOutsideStrings = e.replaceAll("'[^']*'", "''")
-      if (bareRef.r.findFirstIn(eOutsideStrings).isDefined) acc
-      else rewriteOutsideStrings(acc, bareRef,
-        java.util.regex.Matcher.quoteReplacement(s"($e)"))
-    }
-    out.replace("", "")
-  }
-
-  /** `outerNames`: lowercase column names the analyzer reported
-    * UNRESOLVED — for those (and ONLY those), alias definitions from
-    * ENCLOSING select scopes are also consulted, innermost shadowing
-    * outward. Redshift resolves a lateral alias inside a correlated
-    * subquery's WHERE (`1_ods_core/00_allocation.sql:784`: `greatest_at
-    * >= ah.createddate` inside the asset-history LIMIT-1 lookup, with
-    * `greatest_at` defined in the OUTER select list); restricting outer
-    * lookup to reported-unresolved names keeps a real inner column with
-    * the same name authoritative.
-    */
-  private[graft] def substituteAliasesInWhere(
-      sql: String, outerNames: Set[String] = Set.empty): String = {
-    def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    val stops = Seq("GROUP", "ORDER", "LIMIT", "UNION", "INTERSECT", "EXCEPT",
-      "MINUS", "QUALIFY", "HAVING", "WINDOW")
-    val out = new StringBuilder(sql)
-    var searchFrom = 0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val s = out.toString
-      val upper = s.toUpperCase
-      val (wPos, wStack) = nextKeywordOutsideStack(s, "WHERE", searchFrom)
-      if (wPos < 0) return out.toString
-      val wOpen = wStack.headOption.getOrElse(-1)
-      val regionStart = wOpen + 1
-      // predicate end: first depth-0 stop keyword / closing paren / EOT
-      var predEnd = s.length
-      locally {
-        var j = wPos + 5; var d = 0
-        var s2 = false; var lc2 = false; var bc2 = false
-        var done = false
-        while (j < s.length && !done) {
-          val c = s.charAt(j)
-          val next = if (j + 1 < s.length) s.charAt(j + 1) else ' '
-          if (lc2) { if (c == '\n') lc2 = false }
-          else if (bc2) { if (c == '*' && next == '/') { bc2 = false; j += 1 } }
-          else if (s2) { if (c == '\'') s2 = false }
-          else c match {
-            case '\'' => s2 = true
-            case '-' if next == '-' => lc2 = true; j += 1
-            case '/' if next == '*' => bc2 = true; j += 1
-            case '(' => d += 1
-            case ')' => if (d == 0) { predEnd = j; done = true } else d -= 1
-            case _ =>
-              if (d == 0 && stops.exists(k => upper.startsWith(k, j) &&
-                  (j == 0 || !isWord(s.charAt(j - 1))) &&
-                  (j + k.length >= s.length || !isWord(s.charAt(j + k.length))))) {
-                predEnd = j; done = true
-              }
-          }
-          j += 1
-        }
-      }
-      val inner = enclosingSelectAliases(s, regionStart, wPos)
-      val innerNames = inner.map(_._1.toLowerCase).toSet
-      // this WHERE's own enclosing derived-table alias (`… WHERE …) pv`):
-      // an OUTER alias whose definition references `pv.…` resolves
-      // THROUGH this subquery — substituting it into the subquery's own
-      // WHERE is circular and corrupts the statement
-      // (`4_dwh_risk/v_manual_review_time.sql:79-83`, `pending_value`)
-      val selfAlias: Option[String] =
-        if (wOpen < 0) None
-        else {
-          var j = wOpen + 1; var d = 1; var inS = false
-          while (j < s.length && d > 0) {
-            val c = s.charAt(j)
-            if (inS) { if (c == '\'') inS = false }
-            else c match {
-              case '\'' => inS = true
-              case '(' => d += 1
-              case ')' => d -= 1
-              case _ => ()
-            }
-            j += 1
-          }
-          while (j < s.length && s.charAt(j).isWhitespace) j += 1
-          if (upper.startsWith("AS", j) && j + 2 < s.length &&
-              !isWord(s.charAt(j + 2))) {
-            j += 2
-            while (j < s.length && s.charAt(j).isWhitespace) j += 1
-          }
-          val a0 = j
-          while (j < s.length && isWord(s.charAt(j))) j += 1
-          Some(s.substring(a0, j).toLowerCase).filter(_.nonEmpty)
-        }
-      // outer scopes, nearest first; only reported-unresolved names and
-      // only where an inner alias doesn't already shadow them
-      val outer =
-        if (outerNames.isEmpty) Seq.empty
-        else (wStack.drop(1).map(_ + 1) :+ 0).foldLeft(
-          Seq.empty[(String, String)]) { (acc, rs) =>
-          val have = innerNames ++ acc.map(_._1.toLowerCase)
-          acc ++ enclosingSelectAliases(s, rs, wPos).filter { case (a, e) =>
-            outerNames(a.toLowerCase) && !have(a.toLowerCase) &&
-              !selfAlias.exists(sa =>
-                ("(?i)(?<![.\\w])" + java.util.regex.Pattern.quote(sa) +
-                  "\\s*\\.").r.findFirstIn(
-                    e.replaceAll("'[^']*'", "''")).isDefined)
-          }
-        }
-      // an alias whose definition aggregates (or windows) can never be
-      // valid in WHERE — Redshift resolves such a name to the SOURCE
-      // column instead (`11_marketing_reporting/marketing.v_user_price_
-      // drop.sql:330` `WHERE variant_id IS NOT NULL` beside item 313
-      // `MAX(nullif(wl.variant_id,'')) AS variant_id`); substituting it
-      // would fabricate an aggregate predicate and mask the real
-      // unresolved-column diagnosis
-      val AggRe = ("(?i)\\b(sum|min|max|avg|count|median|listagg|" +
-        "percentile_cont|percentile_disc|stddev(?:_samp|_pop)?|" +
-        "var(?:iance|_samp|_pop)|bool_or|bool_and|approximate)\\s*\\(|" +
-        "(?i)\\bover\\s*\\(").r
-      val aliases = (inner ++ outer).filterNot { case (_, e) =>
-        AggRe.findFirstIn(e.replaceAll("'[^']*'", "''")).isDefined
-      }
-      if (aliases.nonEmpty) {
-        val pred = substAliases(s.substring(wPos + 5, predEnd), aliases)
-        out.replace(wPos + 5, predEnd, pred)
-        searchFrom = wPos + 5 + pred.length
-      } else searchFrom = predEnd
-    }
-    out.toString
-  }
-
-  /** Redshift also resolves lateral aliases inside WINDOW specifications
-    * (`ROW_NUMBER() OVER (PARTITION BY customer_id, billing_address …)`
-    * where billing_address is defined in the same select list —
-    * `8_monitoring/gdpr/gdpr_personal_info.sql:23`). Spark raises
-    * LATERAL_COLUMN_ALIAS_IN_WINDOW; substitute the alias expressions
-    * into each OVER(...) span, same contract as [[substituteAliasesInWhere]].
-    */
   /** Wrap select-list scalar subqueries of GROUPED queries in first(…):
     * Redshift accepts a correlated scalar subquery in the select list of
     * a query grouped by its correlation key; Spark demands the subquery
@@ -2170,7 +1904,7 @@ object RedshiftScript {
     val GroupOrd = "(?i)\\bgroup\\s+by\\s+\\d+(?:\\s*,\\s*\\d+)*".r
     // the SELECT owning `pos`: the latest SELECT seen at pos's own paren
     // depth with no depth dip in between (CTE bodies sit at depth ≥ 1,
-    // which enclosingSelectStart's depth-0 walk never reaches)
+    // which a depth-0 walk never reaches)
     def scopeSelect(s: String, pos: Int): Int = {
       val upper = s.toUpperCase
       def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
@@ -2292,7 +2026,7 @@ object RedshiftScript {
     while (guard < 256) {
       guard += 1
       val s = out.toString
-      val (selPos, _) = nextKeywordOutside(s, "SELECT", searchFrom)
+      val selPos = nextKeywordOutside(s, "SELECT", searchFrom)
       if (selPos < 0) return out.toString
       var listStart = selPos + 6
       val afterSel = s.substring(listStart)
@@ -2353,7 +2087,7 @@ object RedshiftScript {
     var guard = 0
     while (guard < 64) {
       guard += 1
-      val (selIdx, _) = nextKeywordOutsideStack(sql, "SELECT", search)
+      val selIdx = nextKeywordOutside(sql, "SELECT", search)
       if (selIdx < 0) {
         if (!changed) return sql
         sb.append(sql.substring(last)); return sb.toString
@@ -2525,76 +2259,6 @@ object RedshiftScript {
     out.toString
   }
 
-  private[graft] def substituteAliasesInWindows(sql: String): String = {
-    def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    val out = new StringBuilder(sql)
-    var searchFrom = 0
-    var guard = 0
-    while (guard < 256) {
-      guard += 1
-      val s = out.toString
-      val upper = s.toUpperCase
-      val (oPos, oOpen) = nextKeywordOutside(s, "OVER", searchFrom)
-      if (oPos < 0) return out.toString
-      val selStart = enclosingSelectStart(s, oOpen + 1, oPos)
-      if (selStart < 0) { searchFrom = oPos + 4 }
-      else {
-        // span of the select-list ITEM containing the OVER: depth-0 commas
-        // delimit items; the list ends at the top-level FROM (or the
-        // region's closing paren / end of text)
-        var itemStart = selStart + 6
-        var itemEnd = s.length
-        locally {
-          var j = selStart + 6; var d = 0
-          var s2 = false; var lc2 = false; var bc2 = false
-          var done = false
-          while (j < s.length && !done) {
-            val c = s.charAt(j)
-            val next = if (j + 1 < s.length) s.charAt(j + 1) else ' '
-            if (lc2) { if (c == '\n') lc2 = false }
-            else if (bc2) { if (c == '*' && next == '/') { bc2 = false; j += 1 } }
-            else if (s2) { if (c == '\'') s2 = false }
-            else c match {
-              case '\'' => s2 = true
-              case '-' if next == '-' => lc2 = true; j += 1
-              case '/' if next == '*' => bc2 = true; j += 1
-              case '(' => d += 1
-              case ')' =>
-                if (d == 0) { itemEnd = j; done = true } else d -= 1
-              case ',' if d == 0 =>
-                if (j < oPos) itemStart = j + 1
-                else { itemEnd = j; done = true }
-              case _ =>
-                if (d == 0 && upper.startsWith("FROM", j) && j > oPos &&
-                    (j == 0 || !isWord(s.charAt(j - 1))) &&
-                    (j + 4 >= s.length || !isWord(s.charAt(j + 4)))) {
-                  itemEnd = j; done = true
-                }
-            }
-            j += 1
-          }
-        }
-        // aliases defined BEFORE this item (forward references only), the
-        // item's own alias excluded by construction
-        val aliases = enclosingSelectAliases(s, oOpen + 1, itemStart)
-        if (aliases.nonEmpty) {
-          val item = substAliases(s.substring(itemStart, itemEnd), aliases)
-          out.replace(itemStart, itemEnd, item)
-          searchFrom = itemStart + item.length
-        } else searchFrom = itemEnd
-      }
-    }
-    out.toString
-  }
-
-  /** Redshift resolves `ORDER BY s.date` after `SELECT DISTINCT …
-    * s.date::date AS date` to the OUTPUT column `date`; Spark cannot add
-    * missing input attributes below a Distinct, so the qualified form
-    * fails analysis (`4_dwh_core/monthly_reporting_historical.sql:43`).
-    * Strip the qualifier from the failing reference inside the top-level
-    * ORDER BY clause — resolution then lands on the select-list alias,
-    * which is the column Redshift sorted by.
-    */
   /** `SELECT DISTINCT … GROUP BY … ORDER BY count(distinct user_id)`:
     * Redshift resolves the ORDER BY aggregate against the pre-DISTINCT
     * aggregate output; Spark cannot add attributes below a Distinct. A
@@ -2692,6 +2356,14 @@ object RedshiftScript {
     out
   }
 
+  /** Redshift resolves `ORDER BY s.date` after `SELECT DISTINCT …
+    * s.date::date AS date` to the OUTPUT column `date`; Spark cannot add
+    * missing input attributes below a Distinct, so the qualified form
+    * fails analysis (`4_dwh_core/monthly_reporting_historical.sql:43`).
+    * Strip the qualifier from the failing reference inside the top-level
+    * ORDER BY clause — resolution then lands on the select-list alias,
+    * which is the column Redshift sorted by.
+    */
   private[graft] def stripSortQualifier(sql: String, qual: String, col: String): String = {
     val Ref = ("(?i)\\b" + java.util.regex.Pattern.quote(qual) +
       "\\s*\\.\\s*[\"`]?" + java.util.regex.Pattern.quote(col) + "[\"`]?\\b").r
@@ -3116,13 +2788,6 @@ object RedshiftScript {
       copyPaths: Map[String, String] = Map.empty,
       remapPath: String => String = identity) {
 
-    // Redshift places no practical bound on WITH RECURSIVE depth; Spark
-    // defaults to 100 levels, which a 365-day date spine already exceeds
-    // (`bi-airflow-prod/dags/dim_dates/sql/dim_dates.sql:3-8`). Raise it
-    // for every session this runner drives (runtime conf, scoped fine).
-    try spark.conf.set("spark.sql.cteRecursionLevelLimit", "100000")
-    catch { case _: Exception => () }
-
     // transaction-local new state per mutated table
     private val overlay = mutable.LinkedHashMap[String, DataFrame]()
     private var inTxn = false
@@ -3132,24 +2797,20 @@ object RedshiftScript {
     private def tr(sql: String): String = resolveOverlays(translate(sql, currentDate))
 
     /** Translate + analyze a bare query body through the same repair
-      * chain the verbs use (alias-in-WHERE substitution, correlated
-      * LIMIT-1, …) — for callers that need a body's DataFrame outside a
-      * full script run (the test harness derives pre-existing INSERT
-      * targets from their body's schema).
+      * chain the verbs use (correlated LIMIT-1, varchar `+`, …) — for
+      * callers that need a body's DataFrame outside a full script run
+      * (the test harness derives pre-existing INSERT targets from their
+      * body's schema).
       */
     def queryDf(body: String): DataFrame = sqlBody(tr(body))
 
-    /** `spark.sql` with the Redshift alias-in-WHERE fallback: when
-      * analysis fails on an unresolved column, retry with the select-list
-      * aliases substituted into the WHERE predicates (native resolution
-      * first — an alias shadowing a real column keeps Spark's answer).
-      */
     /** Analysis-failure fallback LOOP: each pass applies the rewrite the
-      * error calls for (lateral aliases, correlated LIMIT 1, varchar `+`)
-      * and retries — a statement may need several, e.g. a window over a
-      * lateral alias AND a string `+` further down (`01_order.sql`).
-      * Native resolution stays authoritative: rewrites only run after
-      * Spark rejects the text, and an unproductive pass rethrows.
+      * error calls for (a duplicated alias line, correlated LIMIT 1,
+      * varchar `+`) and retries — a statement may need several. Native
+      * resolution stays authoritative: rewrites only run after Spark
+      * rejects the text, and an unproductive pass rethrows. Lateral
+      * aliases inside windows and WHERE clauses take no pass: the
+      * analyzer resolves them ([[graft.expressions.MarkLateralAliases]]).
       */
     private def sqlBody(translated: String): DataFrame = repaired(translated)._1
 
@@ -3164,18 +2825,8 @@ object RedshiftScript {
       var tries = 0
       var first: Throwable = null
       var out: DataFrame = null
-      // self-shadowed lateral alias (`date_trunc('week',created_at) AS
-      // created_at` referenced in a window — `9_SPV/Pricing_V2/
-      // 05_pricing_1.sql:53-55`): textual substitution regresses
-      // infinitely, but Redshift resolves the EXPRESSION-context
-      // reference to the source column — which is exactly what Spark
-      // does once implicit lateral alias resolution is off. Statement-
-      // scoped: analysis happens inside this call, the conf is restored
-      // before returning (execution uses the already-analyzed plan).
-      var lateralOff = false
       var lateralsInlined = false
       val LateralConf = "spark.sql.lateralColumnAlias.enableImplicitResolution"
-      try {
       while (out == null) {
         try out = spark.sql(cur)
         catch {
@@ -3197,7 +2848,6 @@ object RedshiftScript {
             val msg = Option(e.getMessage).getOrElse("")
             var next =
               if (msg.contains("UNRESOLVED_COLUMN") ||
-                msg.contains("LATERAL_COLUMN_ALIAS_IN_WINDOW") ||
                 msg.contains("AMBIGUOUS_LATERAL_COLUMN_ALIAS")) {
                 val unresolved = "with name `([^`]+)`".r
                   .findAllMatchIn(msg).map(_.group(1).toLowerCase).toSet
@@ -3230,9 +2880,7 @@ object RedshiftScript {
                 if (named != cur) named
                 else if (sorted != cur) sorted
                 else if (unsorted != cur) unsorted
-                else RedshiftScript.substituteAliasesInWindows(
-                  RedshiftScript.substituteAliasesInWhere(
-                    RedshiftScript.dedupeSelectItems(cur), unresolved))
+                else RedshiftScript.dedupeSelectItems(cur)
               }
               else if (msg.contains("LATERAL_COLUMN_ALIAS_IN_GROUP_BY") ||
                   msg.contains("LATERAL_COLUMN_ALIAS_IN_AGGREGATE_FUNC")) {
@@ -3269,20 +2917,12 @@ object RedshiftScript {
                   .getOrElse(cur)
               }
               else if (msg.contains("MISSING_AGGREGATION")) {
-                // Two Redshift-resolvable shapes behind one error class:
-                //  (a) a window PARTITION/ORDER BY over select-list
-                //      aliases in a grouped query (`dm_marketing
-                //      .v_product_sku_vs_paid_orders.sql:26-28`) —
-                //      substituting the alias expressions into the OVER
-                //      clauses makes them grouping expressions;
-                //  (b) a lateral alias OVER AGGREGATES (`count(…) AS
-                //      stock_on_hand, …, stock_on_hand + reserved_count
-                //      AS available_count`, `4_dwh_catman/
-                //      contentful_campaigns.sql:646-656`) — inline the
-                //      named alias's defining aggregate.
-                val viaWindows = RedshiftScript.substituteAliasesInWindows(cur)
-                if (viaWindows != cur) viaWindows
-                else "non-aggregating expression \"(\\w+)\"".r
+                // a lateral alias OVER AGGREGATES (`count(…) AS
+                // stock_on_hand, …, stock_on_hand + reserved_count AS
+                // available_count`, `4_dwh_catman/contentful_campaigns
+                // .sql:646-656`) — inline the named alias's defining
+                // aggregate
+                "non-aggregating expression \"(\\w+)\"".r
                   .findFirstMatchIn(msg)
                   .map(am => RedshiftScript.inlineLateralAlias(cur, am.group(1)))
                   .getOrElse(cur)
@@ -3349,13 +2989,7 @@ object RedshiftScript {
                 else cur
               }
               else throw e
-            if (next == cur && !lateralOff &&
-                (msg.contains("LATERAL_COLUMN_ALIAS_IN_WINDOW") ||
-                  msg.contains("AMBIGUOUS_LATERAL_COLUMN_ALIAS"))) {
-              lateralOff = true
-              spark.conf.set(LateralConf, "false")
-            }
-            else if (next == cur && !lateralsInlined &&
+            if (next == cur && !lateralsInlined &&
                 msg.contains("UNRESOLVED_COLUMN")) {
               // stuck on an unresolved column the textual repairs can't
               // reach: lateral-alias references inside later select items
@@ -3379,7 +3013,6 @@ object RedshiftScript {
         }
       }
       (out, cur)
-      } finally if (lateralOff) spark.conf.set(LateralConf, "true")
     }
 
     /** Read-your-writes for raw SQL: rewrite references to overlaid
@@ -3532,6 +3165,12 @@ object RedshiftScript {
       }
     }
 
+    private def deletePath(path: String): Unit = {
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    }
+
     /** Materialize every overlaid table in TWO phases: first write every
       * overlay to its staging dir — all writes therefore read the
       * PRE-commit state of every table (a later overlay's plan may scan a
@@ -3542,12 +3181,6 @@ object RedshiftScript {
       * format with a shared log (out of parquet's reach — the reference's
       * Redshift COMMIT is the analogue of the swap phase here).
       */
-    private def deletePath(path: String): Unit = {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    }
-
     private def commit(): Unit = {
       // phase 1 may fail mid-way (e.g. a deferred MERGE raise_error
       // firing at materialization — note the failure then attributes to

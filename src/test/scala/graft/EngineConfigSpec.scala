@@ -13,6 +13,7 @@ class EngineConfigSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode").equalsIgnoreCase("dynamic"))
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === (cpus * 2).toString)
+    assert(spark.conf.get("spark.sql.cteRecursionLevelLimit") === "100000")
     assert(spark.sql("SELECT graft_word_shingles('a b c', 2)").head().getSeq[String](0) ===
       Seq("a b", "b c"))
   }
@@ -33,5 +34,14 @@ class EngineConfigSpec extends SparkSpec {
     val mains = scalaSources(Paths.get("src/test"))
       .collect { case (p, text) if """\bdef\s+main\b""".r.findFirstIn(text).isDefined => p.toString }
     assert(mains.isEmpty, mains)
+  }
+
+  test("session settings are made in Engine.session, not at run time") {
+    // the one runtime toggle is the interpreter's GROUP BY lateral-alias
+    // probe, which sets a conf and restores it
+    val sets = scalaSources(Paths.get("src/main")).flatMap { case (p, text) =>
+      """spark\.conf\.set\(""".r.findAllIn(text).map(_ => p.getFileName.toString)
+    }
+    assert(sets === Seq("RedshiftScript.scala", "RedshiftScript.scala"))
   }
 }

@@ -1326,27 +1326,18 @@ class RedshiftScriptSpec extends SparkSpec {
   }
 
   test("alias-in-WHERE substitution: Redshift lateral aliases resolve in predicates") {
-    val s = RedshiftScript.substituteAliasesInWhere(
-      "SELECT o.id AS main_id, o2.id AS rel_id FROM t o JOIN t o2 ON o.k = o2.k " +
-        "WHERE main_id != rel_id AND o.x > 1 ORDER BY main_id")
-    assert(s.contains("WHERE (o.id) != (o2.id) AND o.x > 1"))
-    assert(s.contains("ORDER BY main_id")) // only the predicate is rewritten
-    // qualified refs and string literals stay; no-alias queries untouched
-    val u = "SELECT a AS b FROM t WHERE t.b = 'b' AND c = 2"
-    assert(RedshiftScript.substituteAliasesInWhere(u)
-      === "SELECT a AS b FROM t WHERE t.b = 'b' AND c = 2")
-    // executes through the Runner (analysis-failure fallback path)
+    // qualified names, literals and ORDER BY are pinned in the `la_` cases below
     spark.sql("SELECT * FROM VALUES (1, 5), (2, 9) AS t(k, v)")
       .createOrReplaceTempView("aw_src")
+    // the analyzer resolves the alias: one spark.sql, no repair pass
+    assert(spark.sql("SELECT v * 2 AS doubled FROM aw_src WHERE doubled > 10")
+      .collect().map(_.getInt(0)).toSeq === Seq(18))
     val r = new RedshiftScript.Runner(spark,
       java.nio.file.Files.createTempDirectory("graft-aw").toString)
       .run("SELECT v * 2 AS doubled FROM aw_src WHERE doubled > 10;")
     assert(r.ok, r.reports.mkString("; "))
     assert(r.lastSelect.get.collect().map(_.getInt(0)).toSeq === Seq(18))
-    // …and inside a window spec (LATERAL_COLUMN_ALIAS_IN_WINDOW fallback)
-    val w = RedshiftScript.substituteAliasesInWindows(
-      "SELECT k, v * 2 AS dd, ROW_NUMBER() OVER (PARTITION BY dd ORDER BY k) AS rn FROM t")
-    assert(w.contains("PARTITION BY (v * 2)"), w)
+    // …and inside a window spec
     val rw = new RedshiftScript.Runner(spark,
       java.nio.file.Files.createTempDirectory("graft-aw2").toString)
       .run("SELECT k, v * 2 AS dd, ROW_NUMBER() OVER (PARTITION BY dd ORDER BY k) AS rn FROM aw_src;")
@@ -1387,14 +1378,57 @@ class RedshiftScriptSpec extends SparkSpec {
     lateralFixtures()
     val r = new RedshiftScript.Runner(spark, root()).run(script)
     assert(r.ok, r.reports.filterNot(_.ok).mkString("; "))
-    val got = r.lastSelect.get
-    val want = spark.sql(RedshiftScript.translate(nested))
+    assertSameRows(r.lastSelect.get, spark.sql(RedshiftScript.translate(nested)), ordered)
+  }
+
+  private def assertSameRows(
+      got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame,
+      ordered: Boolean = false): Unit = {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
       val s = df.collect().toSeq.map(_.toSeq.mkString("|"))
       if (ordered) s else s.sorted
     }
     assert(got.columns.toSeq === want.columns.toSeq)
     assert(rows(got) === rows(want))
+  }
+
+  test("q62's and the rebuild mart's lateral aliases analyze in a single spark.sql") {
+    lateralFixtures()
+    Tables.read(spark, sfDir, "lineitem").createOrReplaceTempView("q62_lineitem")
+    val netPrice = """CAST(l_extendedprice AS DECIMAL(18,2)) *
+                     |  (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))""".stripMargin
+    val q62 = spark.sql(
+      s"""SELECT l_orderkey, l_linenumber,
+         |  $netPrice AS net_price,
+         |  SUM(net_price) OVER (PARTITION BY l_orderkey) AS order_net,
+         |  ROW_NUMBER() OVER (PARTITION BY l_orderkey
+         |    ORDER BY net_price DESC, l_linenumber) AS price_rank
+         |FROM q62_lineitem
+         |WHERE net_price > 900""".stripMargin)
+    assertSameRows(q62, spark.sql(
+      s"""SELECT l_orderkey, l_linenumber, net_price,
+         |  SUM(net_price) OVER (PARTITION BY l_orderkey) AS order_net,
+         |  ROW_NUMBER() OVER (PARTITION BY l_orderkey
+         |    ORDER BY net_price DESC, l_linenumber) AS price_rank
+         |FROM (SELECT l_orderkey, l_linenumber, $netPrice AS net_price FROM q62_lineitem) x
+         |WHERE net_price > 900""".stripMargin))
+    assert(q62.count() > 0)
+    val mart = spark.sql(
+      """SELECT user_id, lifetime_events, last_seen, last_day_events,
+        |  CAST(lifetime_value AS DECIMAL(18,2)) AS value_dec,
+        |  value_dec / lifetime_events AS avg_value,
+        |  SUM(value_dec) OVER (PARTITION BY last_day_events) AS cohort_value,
+        |  ROW_NUMBER() OVER (PARTITION BY last_day_events
+        |    ORDER BY value_dec DESC, user_id) AS cohort_rank
+        |FROM la_profile""".stripMargin)
+    assertSameRows(mart, spark.sql(
+      """SELECT user_id, lifetime_events, last_seen, last_day_events, value_dec,
+        |  value_dec / lifetime_events AS avg_value,
+        |  SUM(value_dec) OVER (PARTITION BY last_day_events) AS cohort_value,
+        |  ROW_NUMBER() OVER (PARTITION BY last_day_events
+        |    ORDER BY value_dec DESC, user_id) AS cohort_rank
+        |FROM (SELECT *, CAST(lifetime_value AS DECIMAL(18,2)) AS value_dec
+        |  FROM la_profile) x""".stripMargin))
   }
 
   test("lateral alias inside a window: plain, and as the PARTITION BY key") {
@@ -1527,6 +1561,14 @@ class RedshiftScriptSpec extends SparkSpec {
       """SELECT k, v + 1 AS lim,
         |  (SELECT MAX(h.w) FROM la_hist h WHERE h.k = la_src.k AND h.w <= la_src.v + 1) AS best
         |FROM la_src""".stripMargin)
+    // an outer source column of the alias's name wins
+    assertSameAsNested(
+      """SELECT k, v * 2 AS v,
+        |  (SELECT MAX(h.w) FROM la_hist h WHERE h.k = la_src.k AND h.w > v) AS best
+        |FROM la_src;""".stripMargin,
+      """SELECT k, v * 2 AS v,
+        |  (SELECT MAX(h.w) FROM la_hist h WHERE h.k = la_src.k AND h.w > la_src.v) AS best
+        |FROM la_src""".stripMargin)
     // an inner column of the alias's name wins
     assertSameAsNested(
       """SELECT k, v AS w,
@@ -1588,7 +1630,8 @@ class RedshiftScriptSpec extends SparkSpec {
       """SELECT o.k AS main_id, o2.k AS rel_id
         |FROM la_src o JOIN la_src o2 ON o.g = o2.g
         |WHERE o.k != o2.k AND o.v > 1
-        |ORDER BY main_id, rel_id""".stripMargin)
+        |ORDER BY main_id, rel_id""".stripMargin,
+      ordered = true)
   }
 
   test("CTE-prefixed DELETE USING resolves the source from the WITH list") {

@@ -80,6 +80,7 @@ object Scoring {
     val model = fitChurnModel(features.join(labels, "user_id"))
     val scores = score(model, features)
     graft.io.Writers.fullRefresh(scores, outputPath)
-    scores.sparkSession.read.parquet(outputPath)
+    // the schema just written: reading it back starts no inference job
+    scores.sparkSession.read.schema(scores.schema).parquet(outputPath)
   }
 }

@@ -477,8 +477,12 @@ object Ops {
     // physical RDD at build time (both consumers share it, so the range
     // exchange and its sampled boundaries execute once regardless); an
     // eager count() here only adds a standalone materialization job per
-    // call (q53 chains three). The first consuming job — the offsets
-    // broadcast build — computes and persists the partitions instead.
+    // call (q53 chains three). Taking the RDD is not free, though: under
+    // AQE it runs every query stage below the checkpoint at build time —
+    // the range partitioner's sampling job, the range exchange's map
+    // stage, and any shuffle stage under `df` (q17 builds with 3 jobs).
+    // The first consuming job — the offsets broadcast build — runs only
+    // the sort after the exchange and persists the partitions.
     //
     // sortWithinPartitions runs BEFORE the checkpoint so the materialized
     // partitions are already in rank order — the sort the old

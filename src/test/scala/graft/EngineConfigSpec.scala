@@ -14,6 +14,7 @@ class EngineConfigSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === (cpus * 2).toString)
     assert(spark.conf.get("spark.sql.cteRecursionLevelLimit") === "100000")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "2000")
     assert(spark.sql("SELECT graft_word_shingles('a b c', 2)").head().getSeq[String](0) ===
       Seq("a b", "b c"))
   }

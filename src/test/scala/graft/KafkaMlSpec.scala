@@ -73,6 +73,7 @@ class KafkaMlSpec extends SparkSpec {
     assert(scores.count() === 15)
     assert(scores.columns.toSeq ===
       Seq("user_id", "churn_probability", "churn_predicted"))
+    assert(scores.schema === spark.read.parquet(out).schema)
     // probabilities are valid and the model separates the planted signal:
     // mean probability among labeled churners exceeds non-churners
     val joined = scores.join(labels, "user_id")

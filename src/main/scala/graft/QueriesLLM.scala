@@ -583,15 +583,25 @@ object QueriesLLM {
     * window-function ARGUMENTS (`1_ods_risk/order_manual_review_previous_
     * order_history.sql:17`, `00_pricing_live_feed.sql` chains) — Spark
     * resolves lateral aliases only in plain select items, so both uses
-    * ride the Runner's analysis-failure substitution fallback; this puts
-    * that chain under the driver hash gate (money in DECIMAL so the
-    * partition SUM is order-independent and DuckDB-exact).
+    * ride the analyzer rules of `expressions/LateralAliases.scala` (each
+    * statement analyzes on its first attempt); this puts that chain under
+    * the driver hash gate (money in DECIMAL so the partition SUM is
+    * order-independent and DuckDB-exact).
     */
   def q62_lateral_window(spark: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.RedshiftScript
     t(spark, dir, "lineitem").createOrReplaceTempView("q62_lineitem")
-    val script =
-      """DROP TABLE IF EXISTS q62_net_ranks;
+    val res = new RedshiftScript.Runner(spark,
+      java.nio.file.Files.createTempDirectory("graft-q62").toString).run(Q62Script)
+    require(res.ok, res.reports.filterNot(_.ok).mkString("; "))
+    // a TEMP table stays a lazy view — the caller's sink forces ONE
+    // execution instead of a CTAS parquet write plus a re-read
+    spark.table("q62_net_ranks")
+  }
+
+  /** q62's script over the `q62_lineitem` view. */
+  private[graft] val Q62Script: String =
+    """DROP TABLE IF EXISTS q62_net_ranks;
         |CREATE TEMP TABLE q62_net_ranks AS
         |SELECT l_orderkey, l_linenumber,
         |  CAST(net_price AS DOUBLE PRECISION) AS net_price,
@@ -607,13 +617,6 @@ object QueriesLLM {
         |  FROM q62_lineitem
         |  WHERE net_price > 900
         |) x;""".stripMargin
-    val res = new RedshiftScript.Runner(spark,
-      java.nio.file.Files.createTempDirectory("graft-q62").toString).run(script)
-    require(res.ok, res.reports.filterNot(_.ok).mkString("; "))
-    // a TEMP table stays a lazy view — the caller's sink forces ONE
-    // execution instead of a CTAS parquet write plus a re-read
-    spark.table("q62_net_ranks")
-  }
 
   /** §2.8 TO_NUMBER EU-locale money parse round-trip
     * (`1_ods_grover_card/01_grover_card_transactions.sql:30`).

@@ -47,12 +47,19 @@ import scala.collection.mutable
   */
 object RedshiftScript {
 
+  /** One statement's outcome. `repairs` names the error class of each
+    * failed analysis the Runner's repair loop answered with a rewrite and a
+    * retry; `attempts` counts the analyses of the statement's SQL, so it is
+    * 1 when no repair fired (and for verbs with no query body).
+    */
   final case class StatementReport(
       verb: String,
       target: Option[String],
       ok: Boolean,
       seconds: Double,
-      error: Option[String])
+      error: Option[String],
+      attempts: Int = 1,
+      repairs: Seq[String] = Nil)
 
   final case class ScriptResult(
       reports: Seq[StatementReport],
@@ -2793,6 +2800,8 @@ object RedshiftScript {
     private var inTxn = false
     private var txnAborted = false
     private var lastSelect: Option[DataFrame] = None
+    // error classes the repair loop retried on, for the running statement
+    private val repairs = mutable.ListBuffer.empty[String]
 
     private def tr(sql: String): String = resolveOverlays(translate(sql, currentDate))
 
@@ -2818,9 +2827,10 @@ object RedshiftScript {
       * text — CREATE [MATERIALIZED] VIEW stores the *text*, so its body
       * must take the same repair chain as CTAS/INSERT bodies
       * (`4_dwh_core/v_weekly_cs_reporting.sql`'s `s.min` default column
-      * name, lateral aliases, …).
+      * name, lateral aliases, …). `sortIsVoid` is false for a SELECT whose
+      * rows the script returns: its top-level ORDER BY is never dropped.
       */
-    private def repaired(translated: String): (DataFrame, String) = {
+    private def repaired(translated: String, sortIsVoid: Boolean = true): (DataFrame, String) = {
       var cur = translated
       var tries = 0
       var first: Throwable = null
@@ -2868,11 +2878,13 @@ object RedshiftScript {
                         .stripSortQualifier(cur, m.group(1), m.group(2)))
                       .getOrElse(cur)
                   else cur
-                // a void top-level ORDER BY referencing a pre-DISTINCT
-                // aggregate input — drop it
+                // a void top-level ORDER BY (CTAS/INSERT/VIEW body)
+                // referencing a pre-DISTINCT aggregate input — drop it
                 val unsorted =
                   if (named == cur && sorted == cur && msg.contains("'Sort")) {
-                    val top = RedshiftScript.dropUnresolvableTopSort(cur, unresolved)
+                    val top =
+                      if (sortIsVoid) RedshiftScript.dropUnresolvableTopSort(cur, unresolved)
+                      else cur
                     if (top != cur) top
                     else RedshiftScript.dropUnresolvableInnerSort(cur, unresolved)
                   }
@@ -3009,6 +3021,7 @@ object RedshiftScript {
               else throw e
             }
             else if (next == cur) throw e
+            repairs += Option(e.getCondition).fold("AnalysisException")(_.takeWhile(_ != '.'))
             cur = next
         }
       }
@@ -3403,8 +3416,10 @@ object RedshiftScript {
       val stmt = RedshiftScript.rewriteOutsideStrings(
         stripLeadingComments(raw.trim), "(?i)\\b(\\w+)\\.\\1\\.(\\w+)", "$1.$2")
       val t0 = System.nanoTime()
+      repairs.clear()
       def report(verb: String, target: Option[String] = None) =
-        StatementReport(verb, target, ok = true, (System.nanoTime() - t0) / 1e9, None)
+        StatementReport(verb, target, ok = true, (System.nanoTime() - t0) / 1e9, None,
+          1 + repairs.size, repairs.toList)
       try {
         val upper = stmt.toUpperCase.replaceAll("\\s+", " ")
         // Redshift abort semantics: after a failed statement inside a
@@ -3767,7 +3782,7 @@ object RedshiftScript {
             report("CREATE TABLE (DDL)", Some(name))
           case _ if upper.startsWith("SELECT") || upper.startsWith("WITH") ||
               upper.startsWith("(") =>
-            lastSelect = Some(sqlBody(tr(stmt)))
+            lastSelect = Some(repaired(tr(stmt), sortIsVoid = false)._1)
             report("SELECT")
           case other =>
             throw new IllegalArgumentException(
@@ -3782,7 +3797,8 @@ object RedshiftScript {
             // a null/blank message (e.g. a bare MatchError) leaves the
             // failure unclassifiable downstream — fall back to toString
             Some(Option(e.getMessage).filter(_.trim.nonEmpty)
-              .getOrElse(e.toString)))
+              .getOrElse(e.toString)),
+            1 + repairs.size, repairs.toList)
       }
     }
 

@@ -1374,12 +1374,18 @@ class RedshiftScriptSpec extends SparkSpec {
   /** Runs `script` and asserts its last SELECT equals `nested`, the same
     * query with every lateral alias nested into a derived table by hand.
     */
-  private def assertSameAsNested(script: String, nested: String, ordered: Boolean = false): Unit = {
+  private def assertSameAsNested(
+      script: String, nested: String, ordered: Boolean = false): RedshiftScript.ScriptResult = {
     lateralFixtures()
     val r = new RedshiftScript.Runner(spark, root()).run(script)
     assert(r.ok, r.reports.filterNot(_.ok).mkString("; "))
     assertSameRows(r.lastSelect.get, spark.sql(RedshiftScript.translate(nested)), ordered)
+    r
   }
+
+  /** Every statement analyzed on its first attempt: no repair fired. */
+  private def assertNoRepairs(r: RedshiftScript.ScriptResult): Unit =
+    r.reports.foreach(s => assert((s.attempts, s.repairs) === ((1, Nil)), s))
 
   private def assertSameRows(
       got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame,
@@ -1413,6 +1419,9 @@ class RedshiftScriptSpec extends SparkSpec {
          |FROM (SELECT l_orderkey, l_linenumber, $netPrice AS net_price FROM q62_lineitem) x
          |WHERE net_price > 900""".stripMargin))
     assert(q62.count() > 0)
+    val q62Run = new RedshiftScript.Runner(spark, root()).run(QueriesLLM.Q62Script)
+    assert(q62Run.ok && q62Run.reports.size === 2, q62Run.reports)
+    assertNoRepairs(q62Run)
     val mart = spark.sql(
       """SELECT user_id, lifetime_events, last_seen, last_day_events,
         |  CAST(lifetime_value AS DECIMAL(18,2)) AS value_dec,
@@ -1508,7 +1517,7 @@ class RedshiftScriptSpec extends SparkSpec {
   }
 
   test("lateral aliases of the rebuild mart CTAS, its body inside a CTE") {
-    assertSameAsNested(
+    val r = assertSameAsNested(
       """DROP TABLE IF EXISTS la_db.la_mart;
         |CREATE TABLE la_db.la_mart AS
         |WITH m AS (
@@ -1529,6 +1538,23 @@ class RedshiftScriptSpec extends SparkSpec {
         |    ORDER BY value_dec DESC, user_id) AS cohort_rank
         |FROM (SELECT *, CAST(lifetime_value AS DECIMAL(18,2)) AS value_dec
         |  FROM la_profile) x""".stripMargin)
+    assert(r.reports.map(_.verb) === Seq("DROP", "CREATE TABLE", "SELECT"))
+    assertNoRepairs(r)
+  }
+
+  test("an unresolvable top-level ORDER BY is dropped from a CTAS body, not from a returned SELECT") {
+    spark.sql("SELECT * FROM VALUES (1, 'a'), (1, 'b'), (2, 'a') AS t(k, v)")
+      .createOrReplaceTempView("os_src")
+    val body = "SELECT DISTINCT k FROM os_src GROUP BY k ORDER BY count(DISTINCT v) DESC"
+    // the order of a table's rows is void: the repair drops the clause
+    val ctas = new RedshiftScript.Runner(spark, root()).run(s"CREATE TABLE os_db.os_out AS $body;")
+    assert(ctas.ok, ctas.reports.mkString("; "))
+    assert(ctas.reports.map(r => (r.attempts, r.repairs)) === Seq((2, Seq("UNRESOLVED_COLUMN"))))
+    assert(spark.table("os_db.os_out").count() === 2)
+    // a returned SELECT's order is its result: it fails instead
+    val select = new RedshiftScript.Runner(spark, root()).run(s"$body;")
+    assert(!select.ok)
+    assert(select.reports.head.error.exists(_.contains("UNRESOLVED_COLUMN")), select.reports)
   }
 
   test("lateral alias in WHERE: a source column of that name wins") {

@@ -41,14 +41,81 @@ class RedshiftScriptSpec extends SparkSpec {
   }
 
   test("both-sides-::date subtraction rewrites to integer datediff") {
-    val t = RedshiftScript.translate(
-      "SELECT (s.minimum_cancellation_date::Date - CURRENT_DATE::Date) AS d FROM x s",
-      currentDate = Some("2024-06-15"))
-    assert(t.contains(
-      "datediff(cast(s.minimum_cancellation_date as date), cast("))
+    spark.sql(
+      """SELECT * FROM VALUES
+        |  (1, TIMESTAMP '2024-07-01 10:00:00'),
+        |  (2, TIMESTAMP '2024-06-10 23:30:00'),
+        |  (3, CAST(NULL AS TIMESTAMP))
+        |  AS t(k, minimum_cancellation_date)""".stripMargin).createOrReplaceTempView("dd_src")
+    val r = new RedshiftScript.Runner(spark, root(), currentDate = Some("2024-06-15")).run(
+      """SELECT k, (s.minimum_cancellation_date::Date - CURRENT_DATE::Date) AS d,
+        |  s.minimum_cancellation_date::date - 1 AS prev
+        |FROM dd_src s ORDER BY k;""".stripMargin)
+    assert(r.ok, r.reports.mkString("; "))
+    val df = r.lastSelect.get
+    // Redshift's DATE - DATE is an INT day count
+    assert(df.schema("d").dataType === org.apache.spark.sql.types.IntegerType)
     // one-sided date casts keep Redshift's date ± int arithmetic
-    val keep = RedshiftScript.translate("SELECT a::date - 1 FROM x")
-    assert(keep.contains("::date - 1") || keep.contains("cast"))
+    assert(df.schema("prev").dataType === org.apache.spark.sql.types.DateType)
+    assert(df.collect().toSeq.map(_.mkString("|")) ===
+      Seq("1|16|2024-06-30", "2|-5|2024-06-09", "3|null|null"))
+  }
+
+  // Redshift's implicit coercions, each shape pinned at the Runner with its
+  // rows and result schema. `co_src` holds numeric text (`n1`, `n2`,
+  // `plz`), labels, integers, a 0/1 flag and a boolean, with NULLs in row 3.
+  private def coercionFixture(): Unit =
+    spark.sql(
+      """SELECT * FROM VALUES
+        |  (1, '10', '2.5', 'DE', 'web', 'ABC', 'Acme Partner', 4, 7, 'x', 'y', 'z', '10115', 0, true),
+        |  (2, '3', NULL, 'NL', 'app', 'XY', 'Big Deal Co', 12, 5, 'p', 'q', 'r', '01067', 1, false),
+        |  (3, NULL, '1', 'AT', NULL, 'Q', 'Solo', NULL, 3, 'm', NULL, 'n', NULL, NULL, NULL)
+        |  AS t(k, n1, n2, country, channel, code, name, a, b, s1, s2, s3, plz, flag, is_last)""".stripMargin)
+      .createOrReplaceTempView("co_src")
+
+  /** Runs the one-statement `sql` and asserts the schema and rows of its
+    * result.
+    */
+  private def assertCoercion(sql: String, schema: String, rows: String*): Unit = {
+    coercionFixture()
+    val r = new RedshiftScript.Runner(spark, root()).run(sql + ";")
+    assert(r.ok, r.reports.mkString("; "))
+    val df = r.lastSelect.get
+    assert(df.schema.simpleString === schema)
+    assert(df.collect().toSeq.map(_.mkString("|")) === rows)
+  }
+
+  test("Redshift coercion: `+` of two numeric-text varchar columns adds them") {
+    assertCoercion("SELECT k, n1 + n2 AS total FROM co_src ORDER BY k",
+      "struct<k:int,total:double>", "1|12.5", "2|null", "3|null")
+  }
+
+  test("Redshift coercion: `+` beside a string literal, string function, string cast or || concatenates") {
+    assertCoercion("SELECT k, country + ' - ' + channel AS label FROM co_src ORDER BY k",
+      "struct<k:int,label:string>", "1|DE - web", "2|NL - app", "3|null")
+    assertCoercion(
+      "SELECT k, '%' + code + split_part(name, ' ', 2) + '%' AS pattern FROM co_src ORDER BY k",
+      "struct<k:int,pattern:string>", "1|%ABCPartner%", "2|%XYDeal%", "3|%Q%")
+    assertCoercion("SELECT k, a::varchar + b::varchar AS ab FROM co_src ORDER BY k",
+      "struct<k:int,ab:string>", "1|47", "2|125", "3|null")
+    assertCoercion("SELECT k, s1 || s2 + s3 AS joined FROM co_src ORDER BY k",
+      "struct<k:int,joined:string>", "1|xyz", "2|pqr", "3|null")
+  }
+
+  test("Redshift coercion: a quoted number plus a text cast stays a numeric add") {
+    assertCoercion("SELECT k, '0' + plz::text AS plz_num FROM co_src ORDER BY k",
+      "struct<k:int,plz_num:bigint>", "1|10115", "2|1067", "3|null")
+  }
+
+  test("Redshift coercion: an integer CASE condition tests the value against 0") {
+    assertCoercion(
+      "SELECT k, CASE WHEN flag THEN 'on' ELSE 'off' END AS state FROM co_src ORDER BY k",
+      "struct<k:int,state:string>", "1|off", "2|on", "3|off")
+  }
+
+  test("Redshift coercion: a boolean compared with an integer literal") {
+    assertCoercion("SELECT k FROM co_src WHERE is_last = 1 ORDER BY k", "struct<k:int>", "1")
+    assertCoercion("SELECT k FROM co_src WHERE is_last = 0 ORDER BY k", "struct<k:int>", "2")
   }
 
   test("dropUnresolvableInnerSort removes void CTE sorts, never window ORDER BY") {

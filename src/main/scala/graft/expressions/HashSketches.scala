@@ -332,72 +332,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         WordShingles(children.head, n)
       }))
     RedshiftSqlFunctions.register(ext)
-    // Redshift-dialect date arithmetic: `date - date` is an INTEGER day
-    // count (`1_ods_core/00_allocation.sql:512-516` feeds it into a CASE
-    // whose other branch is `0`), where Spark resolves it to INTERVAL
-    // DAY. Rewriting post-resolution SubtractDates → DateDiff keeps the
-    // plan codegen'd and the semantics Redshift's.
-    ext.injectResolutionRule(_ => DateMinusDateAsDays)
+    // Redshift implicit coercions (see the rule)
+    ext.injectResolutionRule(_ => RedshiftCoercions)
     // Redshift lateral aliases in windows and WHERE clauses: marked before
     // Resolution, resolved once the select's input is (see the rules)
     ext.injectHintResolutionRule(_ => MarkLateralAliases)
     ext.injectResolutionRule(_ => ResolveLateralAliases)
   }
-}
-
-object DateMinusDateAsDays
-    extends org.apache.spark.sql.catalyst.rules.Rule[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{
-    Add, DateDiff, Divide, DivideDTInterval, Multiply, MultiplyDTInterval,
-    Subtract, SubtractDates, SubtractTimestamps, TimestampAdd,
-    TimestampAddInterval,
-    UnaryMinus}
-  import org.apache.spark.sql.types.{ByteType, DataType,
-    DayTimeIntervalType, IntegerType, LongType, ShortType,
-    TimestampNTZType, TimestampType}
-  private def isTs(t: DataType) =
-    t == TimestampType || t == TimestampNTZType
-  private def isIntegral(t: DataType) =
-    t == ByteType || t == ShortType || t == IntegerType || t == LongType
-  override def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    plan.transformAllExpressions {
-      case SubtractDates(end, start, _) => DateDiff(end, start)
-      // Redshift day arithmetic directly on timestamps: `date_trunc(…) - 1`
-      // (`9_SPV/Pricing_V2/03_finco_data.sql:14`), `getdate() - 1` — Spark
-      // only supports it on DATE. Integral operand = days. By the time the
-      // operands resolve, ResolveBinaryArithmetic has already specialised
-      // `-`/`+` to the timestamp forms, so match those with a non-conforming
-      // (integral) second operand.
-      case SubtractTimestamps(l, r, _, _) if l.resolved && r.resolved &&
-          isTs(l.dataType) && isIntegral(r.dataType) =>
-        TimestampAdd("DAY", UnaryMinus(r), l)
-      case Subtract(l, r, _) if l.resolved && r.resolved &&
-          isTs(l.dataType) && isIntegral(r.dataType) =>
-        TimestampAdd("DAY", UnaryMinus(r), l)
-      case Add(l, r, _) if l.resolved && r.resolved &&
-          isTs(l.dataType) && isIntegral(r.dataType) =>
-        TimestampAdd("DAY", r, l)
-      case Add(l, r, _) if l.resolved && r.resolved &&
-          isTs(r.dataType) && isIntegral(l.dataType) =>
-        TimestampAdd("DAY", l, r)
-      // ResolveBinaryArithmetic may have specialised the surrounding
-      // arithmetic to the interval form BEFORE this rule swapped the
-      // subtraction to an INT day count (`(date - date) / 30`,
-      // `9_SPV/Pricing_V2/02_used_asst_price_1.sql:44`) — walk those
-      // back to the numeric operators or the plan can never re-resolve.
-      case DivideDTInterval(l, r) if l.resolved &&
-          !l.dataType.isInstanceOf[DayTimeIntervalType] => Divide(l, r)
-      case MultiplyDTInterval(l, r) if l.resolved &&
-          !l.dataType.isInstanceOf[DayTimeIntervalType] => Multiply(l, r)
-      // ResolveBinaryArithmetic also specialises `n + <interval-expr>` to
-      // TimeAdd while the operand is still interval-typed; once the
-      // walk-backs above turn it numeric, TimeAdd is stranded demanding a
-      // TIMESTAMP first operand (`1 + (date-date)/30*0.03`,
-      // `4_dwh_risk/dm_risk.v_asset_value_written_off_and_lost.sql`)
-      case TimestampAddInterval(l, r, _) if l.resolved && r.resolved &&
-          !isTs(l.dataType) &&
-          !r.dataType.isInstanceOf[DayTimeIntervalType] => Add(l, r)
-    }
 }

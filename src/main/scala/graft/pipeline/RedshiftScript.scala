@@ -948,168 +948,6 @@ object RedshiftScript {
     out
   }
 
-  /** Redshift implicitly coerces varchar operands of `+` to numeric at
-    * RUNTIME; Spark rejects string arithmetic at analysis
-    * (`1_ods_core/01_order.sql:295`: `billing_address1 +
-    * billing_address2`). The analyzer names the operands — cast those
-    * occurrences to double, Redshift's own effective semantics (runtime
-    * cast error on non-numeric text, NULL-safe on NULLs).
-    */
-  private val PlusMismatchRe =
-    """Cannot resolve "\(([\w.]+) \+ ([\w.]+)\)"""".r
-  private[graft] def rewritePlusOperands(sql: String, a: String, b: String): String = {
-    def base(n: String) = n.split("\\.").last
-    val pat = "(?i)((?:\\w+\\.)?" + java.util.regex.Pattern.quote(base(a)) +
-      ")\\s*\\+\\s*((?:\\w+\\.)?" + java.util.regex.Pattern.quote(base(b)) + ")"
-    rewriteOutsideStrings(sql, pat, "CAST($1 AS DOUBLE) + CAST($2 AS DOUBLE)")
-  }
-
-  /** SQL-Server-style string concatenation with `+` (`c.country + ' - '
-    * + c.channel_type` — `4_dwh_core/Weekly_monthly_category_performance
-    * .sql:129`): a `+` whose immediate neighbor is a NON-NUMERIC string
-    * literal can only be intended as concatenation, so that `+` becomes
-    * `||`. Numeric-looking literals keep `+` (Redshift casts them and
-    * adds). Analysis-failure fallback only — text Spark accepts
-    * natively never takes this path.
-    */
-  private[graft] def rewriteStringPlusConcat(sql: String): String = {
-    val n = sql.length
-    val lit = new Array[Boolean](n)
-    val plusPos = mutable.ListBuffer.empty[Int]
-    var i = 0; var inStr = false; var inLc = false; var inBc = false
-    while (i < n) {
-      val c = sql.charAt(i)
-      val next = if (i + 1 < n) sql.charAt(i + 1) else ' '
-      if (inLc) { if (c == '\n') inLc = false }
-      else if (inBc) { if (c == '*' && next == '/') { inBc = false; i += 1 } }
-      else if (inStr) {
-        lit(i) = true
-        if (c == '\'') { if (next == '\'') { i += 1; lit(i) = true } else inStr = false }
-      }
-      else c match {
-        case '\'' => inStr = true; lit(i) = true
-        case '-' if next == '-' => inLc = true; i += 1
-        case '/' if next == '*' => inBc = true; i += 1
-        case '+' => plusPos += i
-        case _ => ()
-      }
-      i += 1
-    }
-    def nonNumericLiteralAt(j: Int): Boolean = {
-      if (j < 0 || j >= n || !lit(j)) return false
-      var s = j; var e = j
-      while (s > 0 && lit(s - 1)) s -= 1
-      while (e < n - 1 && lit(e + 1)) e += 1
-      val content = sql.substring(s + 1, e) // inside the quotes
-      !content.trim.matches("-?\\d+(\\.\\d+)?")
-    }
-    // definitely-string function heads: a `+` touching one of these calls
-    // is concatenation (`'%'+voucher_prefix_code+split_part(pv
-    // .partnership_name,' ',2)+'%'` — `11_marketing_reporting/
-    // dm_marketing.v_partnership_reporting.sql:91`)
-    val StringFns = Set("split_part", "concat", "lower", "upper", "trim",
-      "ltrim", "rtrim", "btrim", "replace", "translate", "substring",
-      "substr", "repeat", "reverse", "initcap", "md5", "regexp_replace",
-      "to_char", "chr", "rpad", "lpad")
-    // string-typed cast targets: `cpro::varchar + cmun::varchar` concatenates
-    // (`4_dwh_risk/credit_bureau_spain.sql:28`), in both the `::type` and
-    // the already-translated `CAST(x AS STRING)` spellings
-    val StringTypes = Set("varchar", "text", "char", "character", "nvarchar",
-      "bpchar", "string")
-    def stringCastInner(open: Int, close: Int): Boolean = {
-      val inner = sql.substring(open + 1, close).toLowerCase
-        .replaceAll("\\s+", " ").trim
-      StringTypes.exists(t => inner.endsWith(" as " + t) ||
-        inner.matches(".*\\bas " + t + " ?\\(\\d+(, ?\\d+)?\\)$"))
-    }
-    // right side: `+ fn(…)` or `+ ident … ||` (the operand continues into
-    // an existing concat chain)
-    def stringyRight(r0: Int): Boolean = {
-      var r = r0
-      var seenIdent = false
-      while (r < n && (sql.charAt(r).isLetterOrDigit ||
-          sql.charAt(r) == '_' || sql.charAt(r) == '.')) { r += 1; seenIdent = true }
-      if (!seenIdent) return false
-      val tok = sql.substring(r0, r).toLowerCase.split("\\.").last
-      var k = r
-      while (k < n && sql.charAt(k).isWhitespace) k += 1
-      if (k < n && sql.charAt(k) == '(' && StringFns(tok)) true
-      else if (k < n && sql.charAt(k) == '(' && tok == "cast") {
-        // `+ CAST(x AS STRING)` — translated string-cast operand
-        var d = 0; var j = k
-        var close = -1
-        while (j < n && close < 0) {
-          sql.charAt(j) match {
-            case '(' => d += 1
-            case ')' => d -= 1; if (d == 0) close = j
-            case _ => ()
-          }
-          j += 1
-        }
-        close > 0 && stringCastInner(k, close)
-      }
-      // `+ cmun::varchar` — a string-cast suffix on the identifier
-      else if (k + 1 < n && sql.charAt(k) == ':' && sql.charAt(k + 1) == ':') {
-        var j = k + 2
-        val s0 = j
-        while (j < n && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
-        StringTypes(sql.substring(s0, j).toLowerCase)
-      }
-      else k + 1 < n && sql.charAt(k) == '|' && sql.charAt(k + 1) == '|'
-    }
-    // left side: `fn(…) +` (match the call head backwards over balanced
-    // parens) or `|| … ident +`
-    def stringyLeft(l0: Int): Boolean = {
-      var l = l0
-      if (l >= 0 && sql.charAt(l) == ')') {
-        var d = 0
-        while (l >= 0) {
-          sql.charAt(l) match {
-            case ')' => d += 1
-            case '(' => d -= 1; if (d == 0) {
-              var e = l - 1
-              while (e >= 0 && sql.charAt(e).isWhitespace) e -= 1
-              var s2 = e
-              while (s2 >= 0 && (sql.charAt(s2).isLetterOrDigit || sql.charAt(s2) == '_')) s2 -= 1
-              val head = sql.substring(s2 + 1, e + 1).toLowerCase
-              // `CAST(x AS STRING) +` — translated string-cast operand
-              return StringFns(head) ||
-                (head == "cast" && stringCastInner(l, l0))
-            }
-            case _ => ()
-          }
-          l -= 1
-        }
-        false
-      } else {
-        // walk back over the identifier operand, then spaces: `|| ident +`
-        var s2 = l
-        var seenIdent = false
-        while (s2 >= 0 && (sql.charAt(s2).isLetterOrDigit ||
-            sql.charAt(s2) == '_' || sql.charAt(s2) == '.')) { s2 -= 1; seenIdent = true }
-        if (!seenIdent) return false
-        // `cpro::varchar +` — a string-cast suffix ends the left operand
-        val tok = sql.substring(s2 + 1, l + 1).toLowerCase.split("\\.").last
-        if (s2 >= 1 && sql.charAt(s2) == ':' && sql.charAt(s2 - 1) == ':' &&
-            StringTypes(tok)) return true
-        while (s2 >= 0 && sql.charAt(s2).isWhitespace) s2 -= 1
-        s2 >= 1 && sql.charAt(s2) == '|' && sql.charAt(s2 - 1) == '|'
-      }
-    }
-    val toConcat = plusPos.filter { p =>
-      var l = p - 1
-      while (l >= 0 && sql.charAt(l).isWhitespace) l -= 1
-      var r = p + 1
-      while (r < n && sql.charAt(r).isWhitespace) r += 1
-      nonNumericLiteralAt(l) || (r < n && nonNumericLiteralAt(r)) ||
-        stringyLeft(l) || (r < n && stringyRight(r))
-    }.toSet
-    if (toConcat.isEmpty) sql
-    else sql.zipWithIndex.map { case (c, j) =>
-      if (toConcat(j)) "||" else c.toString
-    }.mkString
-  }
-
   /** Correlated `(SELECT x FROM … WHERE … ORDER BY k [ASC|DESC] LIMIT 1)`
     * — the reference's as-of idiom (`1_ods_core/00_allocation.sql:251-258`
     * picks the latest warehouse code at-or-before the allocation). Spark
@@ -1421,20 +1259,9 @@ object RedshiftScript {
       .replaceAll(
         "(?i)'now'\\s*::\\s*text\\s*::\\s*(date|timestamp)(\\s+with(?:out)?\\s+time\\s+zone)?",
         "current_$1")
-      // Redshift date subtraction returns INT days; Spark's DATE - DATE
-      // returns INTERVAL DAY, which then fails integer comparisons
-      // downstream (`min(days_until_cancellation) < 0`,
-      // `91_External/Braze/SQL/custom_subscription_attributes.sql:17`).
-      // Rewrite the explicit both-sides-::date idiom to datediff(end,
-      // start) — Spark's 2-arg form is exactly end − start in days.
-      .replaceAll(
-        "(?i)(?<![\\w.:])((?:'[^']*'|\\w+(?:\\.\\w+)*)(?:\\s*\\(\\s*\\))?)" +
-          "\\s*::\\s*date\\s*-\\s*" +
-          "((?:'[^']*'|\\w+(?:\\.\\w+)*)(?:\\s*\\(\\s*\\))?)\\s*::\\s*date(?!\\s*::)",
-        "datediff(cast($1 as date), cast($2 as date))")
-      // Redshift `+` is ALWAYS numeric (never concat) — a quoted numeric
-      // literal operand (`'0' + plz::text`, `1_ods_core/00_customer
-      // .sql:61`) unquotes so Spark's coercion can fire
+      // a quoted number beside `+` is a number (`'0' + plz::text`,
+      // `1_ods_core/00_customer.sql:61`): unquoted, it adds natively
+      // rather than meeting the string `+` of RedshiftCoercions
       .replaceAll("'(\\d+(?:\\.\\d+)?)'\\s*\\+", "$1 +")
       .replaceAll("\\+\\s*'(\\d+(?:\\.\\d+)?)'", "+ $1")
     val preListagg = rewriteSuperPaths(rewriteListaggDistinct(
@@ -2806,7 +2633,7 @@ object RedshiftScript {
     private def tr(sql: String): String = resolveOverlays(translate(sql, currentDate))
 
     /** Translate + analyze a bare query body through the same repair
-      * chain the verbs use (correlated LIMIT-1, varchar `+`, …) — for
+      * chain the verbs use (correlated LIMIT-1, GROUP BY ordinals, …) — for
       * callers that need a body's DataFrame outside a full script run
       * (the test harness derives pre-existing INSERT targets from their
       * body's schema).
@@ -2814,12 +2641,13 @@ object RedshiftScript {
     def queryDf(body: String): DataFrame = sqlBody(tr(body))
 
     /** Analysis-failure fallback LOOP: each pass applies the rewrite the
-      * error calls for (a duplicated alias line, correlated LIMIT 1,
-      * varchar `+`) and retries — a statement may need several. Native
-      * resolution stays authoritative: rewrites only run after Spark
-      * rejects the text, and an unproductive pass rethrows. Lateral
-      * aliases inside windows and WHERE clauses take no pass: the
-      * analyzer resolves them ([[graft.expressions.MarkLateralAliases]]).
+      * error calls for (a duplicated alias line, correlated LIMIT 1) and
+      * retries — a statement may need several. Native resolution stays
+      * authoritative: rewrites only run after Spark rejects the text, and
+      * an unproductive pass rethrows. Lateral aliases inside windows and
+      * WHERE clauses and Redshift's implicit type coercions take no pass:
+      * the analyzer resolves them ([[graft.expressions.MarkLateralAliases]],
+      * [[graft.expressions.RedshiftCoercions]]).
       */
     private def sqlBody(translated: String): DataFrame = repaired(translated)._1
 
@@ -2941,65 +2769,11 @@ object RedshiftScript {
               }
               else if (msg.contains("STAR_GROUP_BY_POS"))
                 RedshiftScript.rewriteStarGroupByOrdinal(cur)
-              else if (msg.contains("UNEXPECTED_INPUT_TYPE") &&
-                  msg.contains("CASE WHEN") && msg.contains("\"BOOLEAN\"")) {
-                // Redshift implicitly coerces an integer CASE condition
-                // to boolean (`WHEN om.customer_id_order THEN …`,
-                // `7_snowplow/2_sessions/Order_Mapping/4_01_session_table
-                // .sql:7`) — rewrite the bare-column conditions the
-                // rendered expression names to the `<> 0` test Redshift
-                // evaluates (null stays null ≡ not matched)
-                val exprTxt = "Cannot resolve \"([^\"]+)\"".r
-                  .findFirstMatchIn(msg).map(_.group(1)).getOrElse("")
-                val bare = "(?i)WHEN\\s+(\\w+)\\s+THEN".r
-                  .findAllMatchIn(exprTxt).map(_.group(1).toLowerCase).toSet
-                  .filterNot(Set("true", "false", "null"))
-                bare.foldLeft(cur) { (acc, nm) =>
-                  RedshiftScript.rewriteOutsideStrings(acc,
-                    "(?i)\\bwhen\\s+((?:\\w+\\.)?" +
-                      java.util.regex.Pattern.quote(nm) + ")\\s+then\\b",
-                    "when ($1) <> 0 then")
-                }
-              }
               else if (msg.contains("SCALAR_SUBQUERY_IS_IN_GROUP_BY"))
                 RedshiftScript.wrapScalarSubqueriesInFirst(cur)
               else if (msg.contains("UNSUPPORTED_SUBQUERY_EXPRESSION") ||
                 msg.contains("must be aggregated"))
                 RedshiftScript.rewriteCorrelatedLimit1(cur)
-              else if (msg.contains("BINARY_OP_DIFF_TYPES") &&
-                  msg.contains("\"BOOLEAN\"") &&
-                  (msg.contains("\"INT\"") || msg.contains("\"BIGINT\""))) {
-                // Redshift coerces integer literals to booleans in
-                // comparisons (`day_is_last_of_month = 1`, dim_dates
-                // consumers) — rewrite the named comparison's int-literal
-                // side to the boolean it denotes
-                val CmpRe = """\(([\w.]+) (=|<>|!=) (\d+)\)""".r
-                CmpRe.findFirstMatchIn(msg) match {
-                  case Some(cm) =>
-                    val col = cm.group(1).split("\\.").last
-                    val op = cm.group(2)
-                    val b = if (cm.group(3) == "0") "false" else "true"
-                    RedshiftScript.rewriteOutsideStrings(cur,
-                      "(?i)\\b((?:\\w+\\.)?" +
-                        java.util.regex.Pattern.quote(col) +
-                        ")\\s*" + java.util.regex.Pattern.quote(op) +
-                        "\\s*" + cm.group(3) + "\\b",
-                      "$1 " + op + " " + b)
-                  case None => cur
-                }
-              }
-              else if (msg.contains("BINARY_OP_WRONG_TYPE") && msg.contains(" + ")) {
-                val viaOperands = RedshiftScript.PlusMismatchRe.findFirstMatchIn(msg)
-                  .map(m => RedshiftScript.rewritePlusOperands(cur, m.group(1), m.group(2)))
-                  .getOrElse(cur)
-                // operand unmatchable (a string literal renders unquoted
-                // in the message): `+` beside a non-numeric literal is
-                // SQL-Server concat — rewrite to `||`
-                if (viaOperands != cur) viaOperands
-                else if (msg.contains("\"STRING\""))
-                  RedshiftScript.rewriteStringPlusConcat(cur)
-                else cur
-              }
               else throw e
             if (next == cur && !lateralsInlined &&
                 msg.contains("UNRESOLVED_COLUMN")) {

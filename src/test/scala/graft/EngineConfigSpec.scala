@@ -45,4 +45,13 @@ class EngineConfigSpec extends SparkSpec {
     }
     assert(sets === Seq("RedshiftScript.scala", "RedshiftScript.scala"))
   }
+
+  test("Redshift type coercions are analyzer rules, not repairs of Spark's error text") {
+    // RedshiftCoercions resolves them; the Runner's retry loop reads no
+    // type-mismatch error class
+    val runner = Files.readString(Paths.get("src/main/scala/graft/pipeline/RedshiftScript.scala"))
+    val arms = Seq("UNEXPECTED_INPUT_TYPE", "BINARY_OP_DIFF_TYPES", "BINARY_OP_WRONG_TYPE")
+      .filter(runner.contains)
+    assert(arms.isEmpty, arms)
+  }
 }

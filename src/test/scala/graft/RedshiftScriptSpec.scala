@@ -59,6 +59,29 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(df.schema("prev").dataType === org.apache.spark.sql.types.DateType)
     assert(df.collect().toSeq.map(_.mkString("|")) ===
       Seq("1|16|2024-06-30", "2|-5|2024-06-09", "3|null|null"))
+    assertNoRepairs(r)
+  }
+
+  test("Redshift date arithmetic: date - date is INT days, timestamp ± int moves whole days") {
+    import org.apache.spark.sql.types.{DateType, DoubleType, IntegerType, TimestampType}
+    val df = spark.sql(
+      """SELECT d1 - d0 AS days,
+        |  ts - 1 AS ts_minus, ts + 2 AS ts_plus, 3 + ts AS plus_ts,
+        |  (d2 - d0) / 30 AS months,
+        |  1 + (d2 - d0) / 30 * 0.03 AS factor,
+        |  d1 - (d1 - d0) AS back
+        |FROM VALUES (DATE '2024-02-01', DATE '2024-03-01', DATE '2024-05-01',
+        |  TIMESTAMP '2024-03-01 10:00:00') AS t(d0, d1, d2, ts)""".stripMargin)
+    assert(df.schema.map(_.dataType) === Seq(IntegerType, TimestampType, TimestampType,
+      TimestampType, DoubleType, DoubleType, DateType))
+    val row = df.head()
+    assert(row.getInt(0) === 29)
+    assert(row.getTimestamp(1).toString === "2024-02-29 10:00:00.0")
+    assert(row.getTimestamp(2).toString === "2024-03-03 10:00:00.0")
+    assert(row.getTimestamp(3).toString === "2024-03-04 10:00:00.0")
+    assert(row.getDouble(4) === 3.0)
+    assert(math.abs(row.getDouble(5) - 1.09) < 1e-12)
+    assert(row.getDate(6).toString === "2024-02-01")
   }
 
   // Redshift's implicit coercions, each shape pinned at the Runner with its
@@ -74,7 +97,8 @@ class RedshiftScriptSpec extends SparkSpec {
       .createOrReplaceTempView("co_src")
 
   /** Runs the one-statement `sql` and asserts the schema and rows of its
-    * result.
+    * result, analyzed on the first attempt: the analyzer applies the
+    * coercion ([[graft.expressions.RedshiftCoercions]]), no repair does.
     */
   private def assertCoercion(sql: String, schema: String, rows: String*): Unit = {
     coercionFixture()
@@ -83,6 +107,7 @@ class RedshiftScriptSpec extends SparkSpec {
     val df = r.lastSelect.get
     assert(df.schema.simpleString === schema)
     assert(df.collect().toSeq.map(_.mkString("|")) === rows)
+    assertNoRepairs(r)
   }
 
   test("Redshift coercion: `+` of two numeric-text varchar columns adds them") {
@@ -115,6 +140,8 @@ class RedshiftScriptSpec extends SparkSpec {
 
   test("Redshift coercion: a boolean compared with an integer literal") {
     assertCoercion("SELECT k FROM co_src WHERE is_last = 1 ORDER BY k", "struct<k:int>", "1")
+    assertCoercion("SELECT k FROM co_src WHERE is_last <> 0 ORDER BY k", "struct<k:int>", "1")
+    assertCoercion("SELECT k FROM co_src WHERE is_last != 0 ORDER BY k", "struct<k:int>", "1")
     assertCoercion("SELECT k FROM co_src WHERE is_last = 0 ORDER BY k", "struct<k:int>", "2")
   }
 

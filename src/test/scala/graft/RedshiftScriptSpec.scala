@@ -1718,6 +1718,15 @@ class RedshiftScriptSpec extends SparkSpec {
       """SELECT k, g, dd, SUM(dd) OVER (PARTITION BY g) AS gs
         |FROM (SELECT k, g, v * 2 AS dd FROM la_src) x
         |WHERE dd > 3""".stripMargin)
+    // stored view text re-analyzes with no session setting: a view over a
+    // temp view fails (INVALID_TEMP_OBJ_REFERENCE), so it reads the table
+    assertSameAsNested(
+      """CREATE VIEW la_db.la_grouped_view AS
+        |SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
+        |FROM la_db.src GROUP BY 1, 2;
+        |SELECT * FROM la_db.la_grouped_view;""".stripMargin,
+      """SELECT country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
+        |FROM (SELECT g AS country FROM la_src) x GROUP BY 1, 2""".stripMargin)
   }
 
   test("no lateral alias, a plain select-list one, and an exact duplicated alias line") {
@@ -1732,6 +1741,110 @@ class RedshiftScriptSpec extends SparkSpec {
     assertSameAsNested(
       "SELECT k, v + 1 AS a, v + 1 AS a, a * 2 AS b FROM la_src;",
       "SELECT k, v + 1 AS a, (v + 1) * 2 AS b FROM la_src")
+    assertSameAsNested(
+      "SELECT g, SUM(v) AS s, SUM(v) AS s, s * 2 AS s2 FROM la_src GROUP BY g;",
+      "SELECT g, s, s * 2 AS s2 FROM (SELECT g, SUM(v) AS s FROM la_src GROUP BY g) x")
+  }
+
+  test("lateral alias in GROUP BY: an ordinal or a name picks an item reading one") {
+    // `11_marketing_reporting/marketing.marketing_daily_asv_targets.sql:28-39`
+    val nested = """SELECT country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
+                   |FROM (SELECT g AS country FROM la_src) x GROUP BY 1, 2""".stripMargin
+    assertSameAsNested(
+      """SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
+        |FROM la_src GROUP BY 1, 2;""".stripMargin, nested)
+    assertSameAsNested(
+      """SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
+        |FROM la_src GROUP BY country, store;""".stripMargin, nested)
+    // a four-alias chain, every item picked by an ordinal
+    assertSameAsNested(
+      """SELECT g AS a1, a1 || 'x' AS a2, a2 || 'y' AS a3, a3 || 'z' AS a4, COUNT(*)
+        |FROM la_src GROUP BY 1, 2, 3, 4;""".stripMargin,
+      """SELECT a1, a2, a3, a3 || 'z' AS a4, COUNT(*)
+        |FROM (SELECT a1, a2, a2 || 'y' AS a3
+        |  FROM (SELECT a1, a1 || 'x' AS a2
+        |    FROM (SELECT g AS a1 FROM la_src) w) x) y
+        |GROUP BY 1, 2, 3, 4""".stripMargin)
+    // each UNION branch with its own aliases
+    assertSameAsNested(
+      """SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
+        |FROM la_src GROUP BY 1, 2
+        |UNION ALL
+        |SELECT g AS region, 'B2C' || ' ' || region AS shop, SUM(v) AS n
+        |FROM la_src GROUP BY 1, 2;""".stripMargin,
+      """SELECT country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
+        |FROM (SELECT g AS country FROM la_src) x GROUP BY 1, 2
+        |UNION ALL
+        |SELECT region, 'B2C' || ' ' || region AS shop, SUM(v) AS n
+        |FROM (SELECT g AS region, v FROM la_src) y GROUP BY 1, 2""".stripMargin)
+  }
+
+  test("lateral alias inside an aggregate function, alone and with a GROUP BY ordinal") {
+    assertSameAsNested(
+      "SELECT g, v * 2 AS dv, MAX(dv) AS mx FROM la_src GROUP BY g, v;",
+      """SELECT g, v * 2 AS dv, MAX(dv2) AS mx
+        |FROM (SELECT g, v, v * 2 AS dv2 FROM la_src) x GROUP BY g, v""".stripMargin)
+    assertSameAsNested(
+      """SELECT g AS grp, grp || '!' AS loud, SUM(LENGTH(loud)) AS n
+        |FROM la_src GROUP BY 1, 2;""".stripMargin,
+      """SELECT grp, loud, SUM(LENGTH(loud)) AS n
+        |FROM (SELECT grp, grp || '!' AS loud FROM (SELECT g AS grp FROM la_src) x) y
+        |GROUP BY 1, 2""".stripMargin)
+  }
+
+  test("lateral alias in a grouped select over a same-named ungrouped source column") {
+    // `count(…) AS stock_on_hand, …, stock_on_hand + reserved_count`
+    // (`4_dwh_catman/contentful_campaigns.sql:646-656`): the alias wins
+    assertSameAsNested(
+      "SELECT g, COUNT(k) AS v, v + 1 AS v1 FROM la_src GROUP BY g;",
+      "SELECT g, v, v + 1 AS v1 FROM (SELECT g, COUNT(k) AS v FROM la_src GROUP BY g) x")
+    assertSameAsNested(
+      """SELECT g, COUNT(k) AS v, CASE WHEN v > 1 THEN 'many' ELSE 'one' END AS v1
+        |FROM la_src GROUP BY g;""".stripMargin,
+      """SELECT g, v, CASE WHEN v > 1 THEN 'many' ELSE 'one' END AS v1
+        |FROM (SELECT g, COUNT(k) AS v FROM la_src GROUP BY g) x""".stripMargin)
+  }
+
+  test("lateral alias in a grouped select: the source column wins where it is valid") {
+    // inside an aggregate function: SUM reads the source `v`
+    assertSameAsNested(
+      "SELECT g, k * 100 AS v, SUM(v) AS sv FROM la_src GROUP BY g, k;",
+      """SELECT g, k * 100 AS v, SUM(src_v) AS sv
+        |FROM (SELECT g, k, v AS src_v FROM la_src) x GROUP BY g, k""".stripMargin)
+    // in an item a GROUP BY ordinal picks: the key is the source `v * 10`
+    assertSameAsNested(
+      "SELECT k % 2 AS v, v * 10 AS v10 FROM la_src GROUP BY 1, 2;",
+      """SELECT k % 2 AS v, src_v * 10 AS v10
+        |FROM (SELECT k, v AS src_v FROM la_src) x GROUP BY 1, 2""".stripMargin)
+  }
+
+  test("lateral aliases in a CTE that an unused CTE reads, with and without GROUP BY") {
+    // rebuilt from `91_External/Legal/IntraStat NL/IntraStat_v2.sql:106`:
+    // the CASE of `_final` reads two aliases, and `export` reads `period`
+    assertSameAsNested(
+      """WITH src AS (SELECT k, g, v FROM la_src),
+        |_final AS (
+        |  SELECT k, g AS period, v AS supplementary_unit,
+        |    CASE WHEN supplementary_unit > 4 THEN period ELSE 'n/a' END AS unit_period
+        |  FROM src
+        |),
+        |export AS (SELECT period, unit_period FROM _final WHERE period <> 'x')
+        |SELECT * FROM _final;""".stripMargin,
+      """SELECT k, period, supplementary_unit,
+        |  CASE WHEN supplementary_unit > 4 THEN period ELSE 'n/a' END AS unit_period
+        |FROM (SELECT k, g AS period, v AS supplementary_unit FROM la_src) x""".stripMargin)
+    assertSameAsNested(
+      """WITH src AS (SELECT k, g, v FROM la_src),
+        |_final AS (
+        |  SELECT g AS period, SUM(v) AS supplementary_unit,
+        |    CASE WHEN supplementary_unit > 5 THEN period ELSE 'n/a' END AS unit_period
+        |  FROM src GROUP BY g
+        |),
+        |export AS (SELECT period, unit_period FROM _final WHERE period <> 'x')
+        |SELECT * FROM _final;""".stripMargin,
+      """SELECT period, supplementary_unit,
+        |  CASE WHEN supplementary_unit > 5 THEN period ELSE 'n/a' END AS unit_period
+        |FROM (SELECT g AS period, SUM(v) AS supplementary_unit FROM la_src GROUP BY g) x""".stripMargin)
   }
 
   test("lateral aliases in WHERE leave qualified names, literals and ORDER BY alone") {

@@ -206,10 +206,6 @@ object Redshift {
     */
   def md5Key(parts: Column*): Column = md5(concat_ws("||", parts: _*))
 
-  /** BTRIM(s, chars). */
-  def btrim(s: Column, chars: String): Column =
-    rtrim(ltrim(s, chars), chars)
-
   /** TO_NUMBER locale money parse: '1.234,56 €' → 1234.56
     * (`1_ods_grover_card/01_grover_card_transactions.sql:30`).
     * Strips everything but digits, comma, dot, minus; then treats ',' as the

@@ -166,8 +166,4 @@ object Catalog {
     val in = fs.open(new org.apache.hadoop.fs.Path(path))
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
-
-  /** The reference's layer ordering (SURVEY §0): lower layers build first. */
-  val LayerOrder: Seq[String] =
-    Seq("ods_production", "master", "master_historical", "dwh", "dm_reporting")
 }

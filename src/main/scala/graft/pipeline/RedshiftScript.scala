@@ -47,10 +47,13 @@ import scala.collection.mutable
   */
 object RedshiftScript {
 
-  /** One statement's outcome. `repairs` names the error class of each
-    * failed analysis the Runner's repair loop answered with a rewrite and a
-    * retry; `attempts` counts the analyses of the statement's SQL, so it is
-    * 1 when no repair fired (and for verbs with no query body).
+  /** One statement's outcome. `repairs` names each rewrite the Runner's
+    * repair loop applied before a retry, by a fixed label per rewrite:
+    * `default-column`, `sort-qualifier`, `drop-top-sort`,
+    * `drop-inner-sort`, `star-group-by`, `scalar-subquery-first` or
+    * `correlated-limit-1`. `attempts` counts the analyses of the
+    * statement's SQL, so it is 1 when no repair fired (and for verbs with
+    * no query body).
     */
   final case class StatementReport(
       verb: String,
@@ -1600,35 +1603,6 @@ object RedshiftScript {
       sql.substring(0, selStart) + replacement + sql.substring(predEnd), n + 1)
   }
 
-  /** Position of the next occurrence of `kw` at or after `from` that sits
-    * outside strings/comments (at word boundaries) — -1 when none.
-    */
-  private def nextKeywordOutside(s: String, kw: String, from: Int): Int = {
-    def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    val upper = s.toUpperCase
-    val kwU = kw.toUpperCase
-    var i = 0; var inStr = false; var inLc = false; var inBc = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      val next = if (i + 1 < s.length) s.charAt(i + 1) else ' '
-      if (inLc) { if (c == '\n') inLc = false }
-      else if (inBc) { if (c == '*' && next == '/') { inBc = false; i += 1 } }
-      else if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '-' if next == '-' => inLc = true; i += 1
-        case '/' if next == '*' => inBc = true; i += 1
-        case _ =>
-          if (i >= from && upper.startsWith(kwU, i) &&
-              (i == 0 || !isWord(s.charAt(i - 1))) &&
-              (i + kwU.length >= s.length || !isWord(s.charAt(i + kwU.length))))
-            return i
-      }
-      i += 1
-    }
-    -1
-  }
-
   // the alias may be BACKTICKED — Redshift `as "period"` translates to
   // `` as `period` `` (`91_External/Legal/IntraStat NL/IntraStat_v2
   // .sql:45` reads the quoted alias back in its WHERE)
@@ -1844,178 +1818,6 @@ object RedshiftScript {
       }
     }
     out
-  }
-
-  /** Drop EXACT-duplicate select-list items (same expression, same alias,
-    * whitespace-insensitive) — the reference duplicates a whole line in
-    * `us_debt_collections/sql/last_payment_event.sql:79-80` and Redshift's
-    * lateral alias resolution shrugs; Spark raises
-    * AMBIGUOUS_LATERAL_COLUMN_ALIAS. Fallback-only (an intentional
-    * `SELECT a, a` keeps its arity on the normal path).
-    */
-  private[graft] def dedupeSelectItems(sql: String): String = {
-    val out = new StringBuilder(sql)
-    var searchFrom = 0
-    var guard = 0
-    while (guard < 256) {
-      guard += 1
-      val s = out.toString
-      val selPos = nextKeywordOutside(s, "SELECT", searchFrom)
-      if (selPos < 0) return out.toString
-      var listStart = selPos + 6
-      val afterSel = s.substring(listStart)
-      val trimmedUp = afterSel.stripLeading().toUpperCase
-      if (trimmedUp.startsWith("DISTINCT") &&
-          (trimmedUp.length == 8 || !Character.isLetterOrDigit(trimmedUp.charAt(8)) &&
-            trimmedUp.charAt(8) != '_'))
-        listStart += afterSel.length - afterSel.stripLeading().length + 8
-      // the list ends at FROM — or, for a FROM-less branch of a UNION
-      // chain (`rainforest_api_input_list_eu.sql` builds a literal table
-      // from three FROM-less SELECTs), at the next top-level set-op
-      // keyword: without that bound the "list" spans every later branch
-      // and cross-branch duplicates get dropped (NUM_COLUMNS_MISMATCH)
-      val rest = s.substring(listStart)
-      val listEnd = listStart + (
-        (Seq("FROM", "UNION", "INTERSECT", "EXCEPT", "MINUS")
-          .map(k => topKeywordIndex(rest, k)).filter(_ >= 0) :+ rest.length).min)
-      val items = splitTop(s.substring(listStart, listEnd))
-      val seen = mutable.Set.empty[String]
-      // only AS-aliased duplicates are dropped: `SELECT a, a` without an
-      // alias is an intentional arity choice, not the duplicated-line idiom
-      val kept = items.filter { i =>
-        val isAliased = SelectAliasRe.findFirstIn(i).isDefined
-        !isAliased || seen.add(i.replaceAll("\\s+", " ").toLowerCase)
-      }
-      if (kept.size < items.size) {
-        // leading-comma join: an item ending in a line comment must not
-        // swallow the separator
-        val rebuilt = "\n" + kept.mkString("\n, ") + "\n"
-        out.replace(listStart, listEnd, rebuilt)
-        searchFrom = listStart + rebuilt.length
-      } else searchFrom = listStart + 1
-    }
-    out.toString
-  }
-
-  /** Inline the definition of lateral alias `name` into LATER items of
-    * every select list that defines it, and into that select's GROUP BY
-    * span. Fallback for Spark's LATERAL_COLUMN_ALIAS_IN_GROUP_BY
-    * (`11_marketing_reporting/marketing.marketing_daily_asv_targets
-    * .sql:28-39`: `'B2B' || ' ' || country AS store … GROUP BY 1..6`
-    * where `country` is itself an alias of the same list): the repair
-    * loop's conf-off probe proved `name` resolves ONLY laterally — no
-    * real source column shadows it — so textual inlining matches both
-    * Spark's and Redshift's effective semantics, and unlike a session
-    * conf it yields self-contained text a stored VIEW can re-analyze.
-    */
-  private[graft] def inlineLateralAlias(sql: String, name: String): String = {
-    def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    val q = java.util.regex.Pattern.quote(name)
-    val bareRef = s"(?i)(?<![.\\w:`\"\\u0001])$q(?![\\w`\"])(?!\\s+from\\b)"
-    val DefRe = ("(?is)^(.*\\S)\\s+as\\s+\"?" + q + "\"?$").r
-    val upperAll = sql.toUpperCase
-    val sb = new StringBuilder
-    var last = 0
-    var search = 0
-    var changed = false
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val selIdx = nextKeywordOutside(sql, "SELECT", search)
-      if (selIdx < 0) {
-        if (!changed) return sql
-        sb.append(sql.substring(last)); return sb.toString
-      }
-      search = selIdx + 6
-      // the list span: relative depth 0 from just after SELECT until FROM,
-      // a scope-closing ')', or a top-level stop keyword (a FROM-less
-      // select). GROUP BY span: after that, same depth discipline.
-      var j = selIdx + 6
-      var d = 0; var inS = false; var lc = false; var bc = false
-      var listEnd = -1; var scopeEnd = sql.length
-      var groupStart = -1; var groupEnd = -1
-      val stops = Seq("ORDER", "LIMIT", "UNION", "INTERSECT", "EXCEPT",
-        "MINUS", "HAVING", "QUALIFY", "WINDOW")
-      while (j < sql.length && (listEnd < 0 || groupStart < 0 || groupEnd < 0)) {
-        val c = sql.charAt(j)
-        val next = if (j + 1 < sql.length) sql.charAt(j + 1) else ' '
-        if (lc) { if (c == '\n') lc = false }
-        else if (bc) { if (c == '*' && next == '/') { bc = false; j += 1 } }
-        else if (inS) { if (c == '\'') inS = false }
-        else c match {
-          case '\'' => inS = true
-          case '-' if next == '-' => lc = true; j += 1
-          case '/' if next == '*' => bc = true; j += 1
-          case '(' => d += 1
-          case ')' =>
-            if (d == 0) {
-              if (listEnd < 0) listEnd = j
-              if (groupStart >= 0 && groupEnd < 0) groupEnd = j
-              scopeEnd = j; j = sql.length
-            } else d -= 1
-          case _ if d == 0 && (j == 0 || !isWord(sql.charAt(j - 1))) =>
-            def kwAt(k: String) = upperAll.startsWith(k, j) &&
-              (j + k.length >= sql.length || !isWord(sql.charAt(j + k.length)))
-            if (listEnd < 0 && kwAt("FROM")) listEnd = j
-            else if (listEnd < 0 && (kwAt("GROUP") || stops.exists(kwAt))) {
-              listEnd = j
-              if (kwAt("GROUP")) groupStart = j
-            }
-            else if (listEnd >= 0 && groupStart < 0 && kwAt("GROUP")) groupStart = j
-            else if (listEnd >= 0 && groupStart >= 0 && groupEnd < 0 &&
-                stops.exists(kwAt)) groupEnd = j
-            else if (kwAt("SELECT") && listEnd >= 0) {
-              // a sibling UNION's select — this scope ends here
-              if (groupStart >= 0 && groupEnd < 0) groupEnd = j
-              scopeEnd = j; j = sql.length
-            }
-          case _ => ()
-        }
-        j += 1
-      }
-      if (listEnd < 0) listEnd = scopeEnd
-      if (groupStart >= 0 && groupEnd < 0) groupEnd = scopeEnd
-      val rawList = sql.substring(selIdx + 6, listEnd)
-      // a leading DISTINCT/ALL must not fold into item 1's expression —
-      // inlining `(DISTINCT CASE … END)` is unparseable
-      val prefix = "(?is)^(\\s*(?:DISTINCT|ALL)\\b)".r
-        .findFirstMatchIn(rawList).map(_.group(1)).getOrElse("")
-      val listText = rawList.substring(prefix.length)
-      val items = splitTop(listText)
-      val defIdx = items.indexWhere(it => DefRe.findFirstMatchIn(stripComments(it).trim).isDefined)
-      if (defIdx >= 0) {
-        val expr = DefRe.findFirstMatchIn(stripComments(items(defIdx)).trim).get.group(1)
-        val eOutsideStrings = expr.replaceAll("'[^']*'", "''")
-        // self-shadowed definitions can't inline (infinite regress)
-        if (bareRef.r.findFirstIn(eOutsideStrings).isEmpty) {
-          val repl = java.util.regex.Matcher.quoteReplacement(s"($expr)")
-          val newItems = items.zipWithIndex.map { case (it, i) =>
-            if (i <= defIdx) it else rewriteOutsideStrings(it, bareRef, repl)
-          }
-          // rejoin with the comma on a FRESH line: an item whose last
-          // line ends in a `--` comment would otherwise swallow the
-          // separator (and the next item) into the comment
-          val newList = newItems.mkString("\n, ")
-          if (newList != listText) {
-            changed = true
-            sb.append(sql.substring(last, selIdx + 6)).append(prefix)
-              .append(' ').append(newList).append('\n')
-            last = listEnd
-          }
-          if (groupStart >= 0) {
-            val g = sql.substring(groupStart, groupEnd)
-            val g2 = rewriteOutsideStrings(g, bareRef, repl)
-            if (g2 != g) {
-              changed = true
-              sb.append(sql.substring(last, groupStart)).append(g2).append('\n')
-              last = groupEnd
-            }
-          }
-        }
-      }
-    }
-    if (!changed) sql
-    else { sb.append(sql.substring(last)); sb.toString }
   }
 
   /** Redshift runs rank-family window functions with an OPTIONAL window
@@ -2627,7 +2429,7 @@ object RedshiftScript {
     private var inTxn = false
     private var txnAborted = false
     private var lastSelect: Option[DataFrame] = None
-    // error classes the repair loop retried on, for the running statement
+    // the repairs the repair loop applied, for the running statement
     private val repairs = mutable.ListBuffer.empty[String]
 
     private def tr(sql: String): String = resolveOverlays(translate(sql, currentDate))
@@ -2641,11 +2443,12 @@ object RedshiftScript {
     def queryDf(body: String): DataFrame = sqlBody(tr(body))
 
     /** Analysis-failure fallback LOOP: each pass applies the rewrite the
-      * error calls for (a duplicated alias line, correlated LIMIT 1) and
+      * error calls for (a default column name, correlated LIMIT 1, …) and
       * retries — a statement may need several. Native resolution stays
       * authoritative: rewrites only run after Spark rejects the text, and
-      * an unproductive pass rethrows. Lateral aliases inside windows and
-      * WHERE clauses and Redshift's implicit type coercions take no pass:
+      * an unproductive pass rethrows. Lateral aliases (in windows, WHERE
+      * clauses, GROUP BY keys and aggregate functions, and a duplicated
+      * alias line) and Redshift's implicit type coercions take no pass:
       * the analyzer resolves them ([[graft.expressions.MarkLateralAliases]],
       * [[graft.expressions.RedshiftCoercions]]).
       */
@@ -2655,16 +2458,16 @@ object RedshiftScript {
       * text — CREATE [MATERIALIZED] VIEW stores the *text*, so its body
       * must take the same repair chain as CTAS/INSERT bodies
       * (`4_dwh_core/v_weekly_cs_reporting.sql`'s `s.min` default column
-      * name, lateral aliases, …). `sortIsVoid` is false for a SELECT whose
-      * rows the script returns: its top-level ORDER BY is never dropped.
+      * name, …); the analyzer rules apply again whenever the stored text
+      * is read. `sortIsVoid` is false for a SELECT whose rows the script
+      * returns: its top-level ORDER BY is never dropped. Each repair that
+      * fires is recorded under its own label.
       */
     private def repaired(translated: String, sortIsVoid: Boolean = true): (DataFrame, String) = {
       var cur = translated
       var tries = 0
       var first: Throwable = null
       var out: DataFrame = null
-      var lateralsInlined = false
-      val LateralConf = "spark.sql.lateralColumnAlias.enableImplicitResolution"
       while (out == null) {
         try out = spark.sql(cur)
         catch {
@@ -2675,18 +2478,15 @@ object RedshiftScript {
               if tries > 0 && first != null =>
             first.addSuppressed(e)
             throw first
-          // cap high enough for one-alias-per-pass chains: a view with
-          // several lateral aliases across UNION branches needs a pass
-          // per (alias, branch) — `dm_marketing.v_marketing_runrates
-          // .sql` takes ~15; the unproductive-pass rethrow still
-          // terminates early when a rewrite stops helping
+          // the unproductive-pass rethrow terminates early when a rewrite
+          // stops helping; the cap bounds a rewrite that keeps changing
+          // the text without ever analyzing
           case e: org.apache.spark.sql.AnalysisException if tries < 48 =>
             if (first == null) first = e
             tries += 1
             val msg = Option(e.getMessage).getOrElse("")
-            var next =
-              if (msg.contains("UNRESOLVED_COLUMN") ||
-                msg.contains("AMBIGUOUS_LATERAL_COLUMN_ALIAS")) {
+            val (repair, next) =
+              if (msg.contains("UNRESOLVED_COLUMN")) {
                 val unresolved = "with name `([^`]+)`".r
                   .findAllMatchIn(msg).map(_.group(1).toLowerCase).toSet
                 // `q.f` unresolved where subquery `q` has an UNALIASED
@@ -2698,104 +2498,34 @@ object RedshiftScript {
                 val named = qual.map(m => RedshiftScript
                     .aliasDefaultFunctionColumn(cur, m.group(1), m.group(2)))
                   .getOrElse(cur)
+                val sort = msg.contains("'Sort")
                 // qualified ORDER BY above DISTINCT: Redshift resolved it
                 // to the output alias — strip the qualifier there
-                val sorted =
-                  if (named == cur && msg.contains("'Sort"))
-                    qual.map(m => RedshiftScript
-                        .stripSortQualifier(cur, m.group(1), m.group(2)))
-                      .getOrElse(cur)
+                lazy val sorted =
+                  if (sort) qual.map(m => RedshiftScript
+                      .stripSortQualifier(cur, m.group(1), m.group(2))).getOrElse(cur)
                   else cur
                 // a void top-level ORDER BY (CTAS/INSERT/VIEW body)
                 // referencing a pre-DISTINCT aggregate input — drop it
-                val unsorted =
-                  if (named == cur && sorted == cur && msg.contains("'Sort")) {
-                    val top =
-                      if (sortIsVoid) RedshiftScript.dropUnresolvableTopSort(cur, unresolved)
-                      else cur
-                    if (top != cur) top
-                    else RedshiftScript.dropUnresolvableInnerSort(cur, unresolved)
-                  }
+                lazy val top =
+                  if (sort && sortIsVoid) RedshiftScript.dropUnresolvableTopSort(cur, unresolved)
                   else cur
-                if (named != cur) named
-                else if (sorted != cur) sorted
-                else if (unsorted != cur) unsorted
-                else RedshiftScript.dedupeSelectItems(cur)
-              }
-              else if (msg.contains("LATERAL_COLUMN_ALIAS_IN_GROUP_BY") ||
-                  msg.contains("LATERAL_COLUMN_ALIAS_IN_AGGREGATE_FUNC")) {
-                // AGGREGATE_FUNC names the alias; GROUP_BY does not —
-                // diagnose the latter by probing with implicit lateral
-                // resolution off: the lateral-only name must surface as
-                // UNRESOLVED_COLUMN (a real source column of that name
-                // would have shadowed the alias and avoided this error
-                // entirely). Then inline that alias textually, which a
-                // stored VIEW body can re-analyze without confs.
-                val named =
-                  if (msg.contains("AGGREGATE_FUNC"))
-                    "`([^`]+)`".r.findFirstMatchIn(msg)
-                      .map(_.group(1).split("\\.").last.toLowerCase)
-                  else None
-                val probeName = named.orElse {
-                  val saved = spark.conf.get(LateralConf)
-                  spark.conf.set(LateralConf, "false")
-                  try { spark.sql(cur); None }
-                  catch {
-                    case pe: Exception =>
-                      // any error shape that names the lateral-only
-                      // identifier: UNRESOLVED ("with name `x`"),
-                      // AMBIGUOUS ("Reference `x` is ambiguous"), …
-                      val pm = Option(pe.getMessage).getOrElse("")
-                      "(?:with name|Reference) `([^`]+)`".r
-                        .findFirstMatchIn(pm)
-                        .orElse("`([\\w.]+)`".r.findFirstMatchIn(pm))
-                        .map(_.group(1).split("\\.").last.toLowerCase)
-                  } finally spark.conf.set(LateralConf, saved)
-                }
-                probeName
-                  .map(nm => RedshiftScript.inlineLateralAlias(cur, nm))
-                  .getOrElse(cur)
-              }
-              else if (msg.contains("MISSING_AGGREGATION")) {
-                // a lateral alias OVER AGGREGATES (`count(…) AS
-                // stock_on_hand, …, stock_on_hand + reserved_count AS
-                // available_count`, `4_dwh_catman/contentful_campaigns
-                // .sql:646-656`) — inline the named alias's defining
-                // aggregate
-                "non-aggregating expression \"(\\w+)\"".r
-                  .findFirstMatchIn(msg)
-                  .map(am => RedshiftScript.inlineLateralAlias(cur, am.group(1)))
-                  .getOrElse(cur)
+                if (named != cur) "default-column" -> named
+                else if (sorted != cur) "sort-qualifier" -> sorted
+                else if (top != cur) "drop-top-sort" -> top
+                else if (sort) "drop-inner-sort" -> RedshiftScript.dropUnresolvableInnerSort(cur, unresolved)
+                else throw e
               }
               else if (msg.contains("STAR_GROUP_BY_POS"))
-                RedshiftScript.rewriteStarGroupByOrdinal(cur)
+                "star-group-by" -> RedshiftScript.rewriteStarGroupByOrdinal(cur)
               else if (msg.contains("SCALAR_SUBQUERY_IS_IN_GROUP_BY"))
-                RedshiftScript.wrapScalarSubqueriesInFirst(cur)
+                "scalar-subquery-first" -> RedshiftScript.wrapScalarSubqueriesInFirst(cur)
               else if (msg.contains("UNSUPPORTED_SUBQUERY_EXPRESSION") ||
                 msg.contains("must be aggregated"))
-                RedshiftScript.rewriteCorrelatedLimit1(cur)
+                "correlated-limit-1" -> RedshiftScript.rewriteCorrelatedLimit1(cur)
               else throw e
-            if (next == cur && !lateralsInlined &&
-                msg.contains("UNRESOLVED_COLUMN")) {
-              // stuck on an unresolved column the textual repairs can't
-              // reach: lateral-alias references inside later select items
-              // can leave Spark's resolution wedged with the error
-              // attributed to an unrelated downstream CTE (`CASE WHEN
-              // supplementary_unit = 1 …` in _final makes Spark report
-              // `period` at the unused export CTE, `91_External/Legal/
-              // IntraStat NL/IntraStat_v2.sql:106`). Inline every
-              // later-referenced select alias once and retry — textual
-              // inlining is Redshift's effective semantics.
-              lateralsInlined = true
-              val aliasNames = "(?i)\\bas\\s+`?([a-z_]\\w*)`?".r
-                .findAllMatchIn(cur).map(_.group(1).toLowerCase).toSeq.distinct
-              val inlined = aliasNames.foldLeft(cur)(
-                (acc, a) => RedshiftScript.inlineLateralAlias(acc, a))
-              if (inlined != cur) next = inlined
-              else throw e
-            }
-            else if (next == cur) throw e
-            repairs += Option(e.getCondition).fold("AnalysisException")(_.takeWhile(_ != '.'))
+            if (next == cur) throw e
+            repairs += repair
             cur = next
         }
       }

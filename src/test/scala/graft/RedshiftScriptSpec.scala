@@ -1643,12 +1643,44 @@ class RedshiftScriptSpec extends SparkSpec {
     // the order of a table's rows is void: the repair drops the clause
     val ctas = new RedshiftScript.Runner(spark, root()).run(s"CREATE TABLE os_db.os_out AS $body;")
     assert(ctas.ok, ctas.reports.mkString("; "))
-    assert(ctas.reports.map(r => (r.attempts, r.repairs)) === Seq((2, Seq("UNRESOLVED_COLUMN"))))
+    assert(ctas.reports.map(r => (r.attempts, r.repairs)) === Seq((2, Seq("drop-top-sort"))))
     assert(spark.table("os_db.os_out").count() === 2)
     // a returned SELECT's order is its result: it fails instead
     val select = new RedshiftScript.Runner(spark, root()).run(s"$body;")
     assert(!select.ok)
     assert(select.reports.head.error.exists(_.contains("UNRESOLVED_COLUMN")), select.reports)
+  }
+
+  test("each repair the retry loop still applies is recorded under its own label") {
+    lateralFixtures()
+    def run(sql: String): (Int, Seq[String], Seq[String]) = {
+      val r = new RedshiftScript.Runner(spark, root()).run(sql)
+      assert(r.ok, r.reports.mkString("; "))
+      (r.reports.last.attempts, r.reports.last.repairs,
+        r.lastSelect.get.collect().toSeq.map(_.toSeq.mkString("|")).sorted)
+    }
+    assert(run("SELECT q.max FROM (SELECT MAX(v) FROM la_src) q;") ===
+      ((2, Seq("default-column"), Seq("9"))))
+    assert(run("SELECT DISTINCT s.g AS g FROM la_src s ORDER BY s.g;") ===
+      ((2, Seq("sort-qualifier"), Seq("a", "b", "c"))))
+    assert(run("SELECT * FROM (SELECT DISTINCT s.g FROM la_src s ORDER BY s.v DESC) x;") ===
+      ((3, Seq("sort-qualifier", "drop-inner-sort"), Seq("a", "b", "c"))))
+    assert(run("SELECT * FROM la_hist GROUP BY 1, 2;") ===
+      ((2, Seq("star-group-by"), Seq("1|3", "1|6", "2|8", "3|1", "4|10", "4|2"))))
+    // Spark 4.1 analyzes these natively, so the scalar-subquery-first and
+    // correlated-limit-1 repairs have no in-repo shape left
+    assert(run(
+      """SELECT k, (SELECT h.w FROM la_hist h WHERE h.k = o.k ORDER BY h.w DESC LIMIT 1) AS top
+        |FROM la_src o;""".stripMargin) ===
+      ((1, Nil, Seq("1|6", "2|8", "3|1", "4|10", "5|null", "6|null"))))
+    assert(run(
+      """SELECT o.g, (SELECT MAX(h.w) FROM la_hist h) AS top, COUNT(*)
+        |FROM la_src o GROUP BY 1, 2;""".stripMargin) ===
+      ((1, Nil, Seq("a|10|3", "b|10|2", "c|10|1"))))
+    assert(run(
+      """SELECT o.k, (SELECT MAX(h.w) FROM la_hist h WHERE h.k = o.k) AS top, COUNT(*)
+        |FROM la_src o GROUP BY 1, 2;""".stripMargin) ===
+      ((1, Nil, Seq("1|6|1", "2|8|1", "3|1|1", "4|10|1", "5|null|1", "6|null|1"))))
   }
 
   test("lateral alias in WHERE: a source column of that name wins") {
@@ -1700,16 +1732,16 @@ class RedshiftScriptSpec extends SparkSpec {
   }
 
   test("lateral aliases in a temp-table body and in a CREATE VIEW body read back") {
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       """CREATE TEMP TABLE la_tmp AS
         |SELECT k, g, v * 2 AS dd, RANK() OVER (PARTITION BY g ORDER BY dd DESC, k) AS rk
         |FROM la_src;
         |SELECT * FROM la_tmp;""".stripMargin,
       """SELECT k, g, dd, RANK() OVER (PARTITION BY g ORDER BY dd DESC, k) AS rk
-        |FROM (SELECT k, g, v * 2 AS dd FROM la_src) x""".stripMargin)
+        |FROM (SELECT k, g, v * 2 AS dd FROM la_src) x""".stripMargin))
     lateralFixtures()
     Catalog.replaceTable(spark.table("la_src"), "la_db", "src")
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       """CREATE VIEW la_db.la_view AS
         |SELECT k, g, v * 2 AS dd, SUM(dd) OVER (PARTITION BY g) AS gs
         |FROM la_db.src
@@ -1717,56 +1749,56 @@ class RedshiftScriptSpec extends SparkSpec {
         |SELECT * FROM la_db.la_view;""".stripMargin,
       """SELECT k, g, dd, SUM(dd) OVER (PARTITION BY g) AS gs
         |FROM (SELECT k, g, v * 2 AS dd FROM la_src) x
-        |WHERE dd > 3""".stripMargin)
+        |WHERE dd > 3""".stripMargin))
     // stored view text re-analyzes with no session setting: a view over a
     // temp view fails (INVALID_TEMP_OBJ_REFERENCE), so it reads the table
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       """CREATE VIEW la_db.la_grouped_view AS
         |SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
         |FROM la_db.src GROUP BY 1, 2;
         |SELECT * FROM la_db.la_grouped_view;""".stripMargin,
       """SELECT country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
-        |FROM (SELECT g AS country FROM la_src) x GROUP BY 1, 2""".stripMargin)
+        |FROM (SELECT g AS country FROM la_src) x GROUP BY 1, 2""".stripMargin))
   }
 
   test("no lateral alias, a plain select-list one, and an exact duplicated alias line") {
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       "SELECT k, g, v FROM la_src WHERE v > 2;",
-      "SELECT k, g, v FROM la_src WHERE v > 2")
-    assertSameAsNested(
+      "SELECT k, g, v FROM la_src WHERE v > 2"))
+    assertNoRepairs(assertSameAsNested(
       "SELECT k, v + 1 AS a, a * 2 AS b FROM la_src;",
-      "SELECT k, v + 1 AS a, (v + 1) * 2 AS b FROM la_src")
+      "SELECT k, v + 1 AS a, (v + 1) * 2 AS b FROM la_src"))
     // a whole line duplicated (`us_debt_collections/sql/last_payment_event
     // .sql:79-80`) makes the later reference ambiguous in Spark
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       "SELECT k, v + 1 AS a, v + 1 AS a, a * 2 AS b FROM la_src;",
-      "SELECT k, v + 1 AS a, (v + 1) * 2 AS b FROM la_src")
-    assertSameAsNested(
+      "SELECT k, v + 1 AS a, (v + 1) * 2 AS b FROM la_src"))
+    assertNoRepairs(assertSameAsNested(
       "SELECT g, SUM(v) AS s, SUM(v) AS s, s * 2 AS s2 FROM la_src GROUP BY g;",
-      "SELECT g, s, s * 2 AS s2 FROM (SELECT g, SUM(v) AS s FROM la_src GROUP BY g) x")
+      "SELECT g, s, s * 2 AS s2 FROM (SELECT g, SUM(v) AS s FROM la_src GROUP BY g) x"))
   }
 
   test("lateral alias in GROUP BY: an ordinal or a name picks an item reading one") {
     // `11_marketing_reporting/marketing.marketing_daily_asv_targets.sql:28-39`
     val nested = """SELECT country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
                    |FROM (SELECT g AS country FROM la_src) x GROUP BY 1, 2""".stripMargin
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       """SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
-        |FROM la_src GROUP BY 1, 2;""".stripMargin, nested)
-    assertSameAsNested(
+        |FROM la_src GROUP BY 1, 2;""".stripMargin, nested))
+    assertNoRepairs(assertSameAsNested(
       """SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
-        |FROM la_src GROUP BY country, store;""".stripMargin, nested)
+        |FROM la_src GROUP BY country, store;""".stripMargin, nested))
     // a four-alias chain, every item picked by an ordinal
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       """SELECT g AS a1, a1 || 'x' AS a2, a2 || 'y' AS a3, a3 || 'z' AS a4, COUNT(*)
         |FROM la_src GROUP BY 1, 2, 3, 4;""".stripMargin,
       """SELECT a1, a2, a3, a3 || 'z' AS a4, COUNT(*)
         |FROM (SELECT a1, a2, a2 || 'y' AS a3
         |  FROM (SELECT a1, a1 || 'x' AS a2
         |    FROM (SELECT g AS a1 FROM la_src) w) x) y
-        |GROUP BY 1, 2, 3, 4""".stripMargin)
+        |GROUP BY 1, 2, 3, 4""".stripMargin))
     // each UNION branch with its own aliases
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       """SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
         |FROM la_src GROUP BY 1, 2
         |UNION ALL
@@ -1776,52 +1808,61 @@ class RedshiftScriptSpec extends SparkSpec {
         |FROM (SELECT g AS country FROM la_src) x GROUP BY 1, 2
         |UNION ALL
         |SELECT region, 'B2C' || ' ' || region AS shop, SUM(v) AS n
-        |FROM (SELECT g AS region, v FROM la_src) y GROUP BY 1, 2""".stripMargin)
+        |FROM (SELECT g AS region, v FROM la_src) y GROUP BY 1, 2""".stripMargin))
   }
 
   test("lateral alias inside an aggregate function, alone and with a GROUP BY ordinal") {
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       "SELECT g, v * 2 AS dv, MAX(dv) AS mx FROM la_src GROUP BY g, v;",
       """SELECT g, v * 2 AS dv, MAX(dv2) AS mx
-        |FROM (SELECT g, v, v * 2 AS dv2 FROM la_src) x GROUP BY g, v""".stripMargin)
-    assertSameAsNested(
+        |FROM (SELECT g, v, v * 2 AS dv2 FROM la_src) x GROUP BY g, v""".stripMargin))
+    assertNoRepairs(assertSameAsNested(
       """SELECT g AS grp, grp || '!' AS loud, SUM(LENGTH(loud)) AS n
         |FROM la_src GROUP BY 1, 2;""".stripMargin,
       """SELECT grp, loud, SUM(LENGTH(loud)) AS n
         |FROM (SELECT grp, grp || '!' AS loud FROM (SELECT g AS grp FROM la_src) x) y
-        |GROUP BY 1, 2""".stripMargin)
+        |GROUP BY 1, 2""".stripMargin))
   }
 
   test("lateral alias in a grouped select over a same-named ungrouped source column") {
     // `count(…) AS stock_on_hand, …, stock_on_hand + reserved_count`
     // (`4_dwh_catman/contentful_campaigns.sql:646-656`): the alias wins
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       "SELECT g, COUNT(k) AS v, v + 1 AS v1 FROM la_src GROUP BY g;",
-      "SELECT g, v, v + 1 AS v1 FROM (SELECT g, COUNT(k) AS v FROM la_src GROUP BY g) x")
-    assertSameAsNested(
+      "SELECT g, v, v + 1 AS v1 FROM (SELECT g, COUNT(k) AS v FROM la_src GROUP BY g) x"))
+    assertNoRepairs(assertSameAsNested(
       """SELECT g, COUNT(k) AS v, CASE WHEN v > 1 THEN 'many' ELSE 'one' END AS v1
         |FROM la_src GROUP BY g;""".stripMargin,
       """SELECT g, v, CASE WHEN v > 1 THEN 'many' ELSE 'one' END AS v1
-        |FROM (SELECT g, COUNT(k) AS v FROM la_src GROUP BY g) x""".stripMargin)
+        |FROM (SELECT g, COUNT(k) AS v FROM la_src GROUP BY g) x""".stripMargin))
+    // self-shadowed: the `v` of `v + 1` is the alias, the one inside SUM the source
+    assertNoRepairs(assertSameAsNested(
+      "SELECT g, SUM(v) AS v, v + 1 AS v1 FROM la_src GROUP BY g;",
+      "SELECT g, v, v + 1 AS v1 FROM (SELECT g, SUM(v) AS v FROM la_src GROUP BY g) x"))
   }
 
   test("lateral alias in a grouped select: the source column wins where it is valid") {
     // inside an aggregate function: SUM reads the source `v`
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       "SELECT g, k * 100 AS v, SUM(v) AS sv FROM la_src GROUP BY g, k;",
       """SELECT g, k * 100 AS v, SUM(src_v) AS sv
-        |FROM (SELECT g, k, v AS src_v FROM la_src) x GROUP BY g, k""".stripMargin)
+        |FROM (SELECT g, k, v AS src_v FROM la_src) x GROUP BY g, k""".stripMargin))
     // in an item a GROUP BY ordinal picks: the key is the source `v * 10`
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       "SELECT k % 2 AS v, v * 10 AS v10 FROM la_src GROUP BY 1, 2;",
       """SELECT k % 2 AS v, src_v * 10 AS v10
-        |FROM (SELECT k, v AS src_v FROM la_src) x GROUP BY 1, 2""".stripMargin)
+        |FROM (SELECT k, v AS src_v FROM la_src) x GROUP BY 1, 2""".stripMargin))
+    // under GROUP BY ALL every item is a key
+    assertNoRepairs(assertSameAsNested(
+      "SELECT k % 2 AS v, v * 10 AS v10, COUNT(*) AS n FROM la_src GROUP BY ALL;",
+      """SELECT k % 2 AS v, src_v * 10 AS v10, COUNT(*) AS n
+        |FROM (SELECT k, v AS src_v FROM la_src) x GROUP BY ALL""".stripMargin))
   }
 
   test("lateral aliases in a CTE that an unused CTE reads, with and without GROUP BY") {
     // rebuilt from `91_External/Legal/IntraStat NL/IntraStat_v2.sql:106`:
     // the CASE of `_final` reads two aliases, and `export` reads `period`
-    assertSameAsNested(
+    assertNoRepairs(assertSameAsNested(
       """WITH src AS (SELECT k, g, v FROM la_src),
         |_final AS (
         |  SELECT k, g AS period, v AS supplementary_unit,
@@ -1832,8 +1873,8 @@ class RedshiftScriptSpec extends SparkSpec {
         |SELECT * FROM _final;""".stripMargin,
       """SELECT k, period, supplementary_unit,
         |  CASE WHEN supplementary_unit > 4 THEN period ELSE 'n/a' END AS unit_period
-        |FROM (SELECT k, g AS period, v AS supplementary_unit FROM la_src) x""".stripMargin)
-    assertSameAsNested(
+        |FROM (SELECT k, g AS period, v AS supplementary_unit FROM la_src) x""".stripMargin))
+    assertNoRepairs(assertSameAsNested(
       """WITH src AS (SELECT k, g, v FROM la_src),
         |_final AS (
         |  SELECT g AS period, SUM(v) AS supplementary_unit,
@@ -1844,7 +1885,7 @@ class RedshiftScriptSpec extends SparkSpec {
         |SELECT * FROM _final;""".stripMargin,
       """SELECT period, supplementary_unit,
         |  CASE WHEN supplementary_unit > 5 THEN period ELSE 'n/a' END AS unit_period
-        |FROM (SELECT g AS period, SUM(v) AS supplementary_unit FROM la_src GROUP BY g) x""".stripMargin)
+        |FROM (SELECT g AS period, SUM(v) AS supplementary_unit FROM la_src GROUP BY g) x""".stripMargin))
   }
 
   test("lateral aliases in WHERE leave qualified names, literals and ORDER BY alone") {

@@ -126,33 +126,6 @@ object RedshiftScript {
     * the verb from classification (the body keeps its comments; Spark's
     * parser handles them).
     */
-  /** Remove `--` and block comments anywhere outside string literals.
-    * Needed wherever extracted SQL text is re-spliced inline: a select
-    * item whose trailing commented-out lines contain `AS name`
-    * (`4_dwh_core/v_weekly_cs_reporting.sql:80-82`) must not leak the
-    * comment text into an alias definition.
-    */
-  private[graft] def stripComments(s: String): String = {
-    val out = new StringBuilder
-    var i = 0; var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      val next = if (i + 1 < s.length) s.charAt(i + 1) else ' '
-      if (inStr) { if (c == '\'') inStr = false; out.append(c); i += 1 }
-      else if (c == '-' && next == '-') {
-        while (i < s.length && s.charAt(i) != '\n') i += 1
-      } else if (c == '/' && next == '*') {
-        i += 2
-        while (i + 1 < s.length && !(s.charAt(i) == '*' && s.charAt(i + 1) == '/')) i += 1
-        i = math.min(i + 2, s.length)
-      } else {
-        if (c == '\'') inStr = true
-        out.append(c); i += 1
-      }
-    }
-    out.toString
-  }
-
   def stripLeadingComments(stmt: String): String = {
     var s = stmt
     var changed = true

@@ -1667,8 +1667,9 @@ class RedshiftScriptSpec extends SparkSpec {
       ((3, Seq("sort-qualifier", "drop-inner-sort"), Seq("a", "b", "c"))))
     assert(run("SELECT * FROM la_hist GROUP BY 1, 2;") ===
       ((2, Seq("star-group-by"), Seq("1|3", "1|6", "2|8", "3|1", "4|10", "4|2"))))
-    // Spark 4.1 analyzes these natively, so the scalar-subquery-first and
-    // correlated-limit-1 repairs have no in-repo shape left
+    // Spark 4.1 analyzes these natively; the scalar-subquery-first and
+    // correlated-limit-1 repairs serve the shapes pinned in the
+    // "Redshift shape: …" cases
     assert(run(
       """SELECT k, (SELECT h.w FROM la_hist h WHERE h.k = o.k ORDER BY h.w DESC LIMIT 1) AS top
         |FROM la_src o;""".stripMargin) ===
@@ -1681,6 +1682,155 @@ class RedshiftScriptSpec extends SparkSpec {
       """SELECT o.k, (SELECT MAX(h.w) FROM la_hist h WHERE h.k = o.k) AS top, COUNT(*)
         |FROM la_src o GROUP BY 1, 2;""".stripMargin) ===
       ((1, Nil, Seq("1|6|1", "2|8|1", "3|1|1", "4|10|1", "5|null|1", "6|null|1"))))
+  }
+
+  // The cl1 fixtures: allocations and a warehouse history, the
+  // `1_ods_core/00_allocation.sql:251-258` shape
+  private def limit1Fixtures(): Unit = {
+    spark.sql("SELECT * FROM VALUES (1, TIMESTAMP '2024-01-01 10:00:00'), " +
+      "(2, TIMESTAMP '2024-01-05 10:00:00'), (3, TIMESTAMP '2024-01-01 00:00:00') " +
+      "t(asset_id, allocated_at)").createOrReplaceTempView("cl1_a")
+    spark.sql("SELECT * FROM VALUES (1, 'wh_early', TIMESTAMP '2024-01-01 08:00:00'), " +
+      "(1, 'wh_late', TIMESTAMP '2024-01-01 09:30:00'), " +
+      "(2, 'wh_only', TIMESTAMP '2024-01-04 00:00:00') " +
+      "t(asset_id, warehouse, created_date)").createOrReplaceTempView("cl1_h")
+  }
+
+  // The latest (`DESC`) or earliest warehouse at or before the allocation,
+  // by a window over the join
+  private def nearestWarehouse(dir: String): String =
+    s"""SELECT asset_id, warehouse FROM (
+       |  SELECT a.asset_id, h.warehouse,
+       |    ROW_NUMBER() OVER (PARTITION BY a.asset_id ORDER BY h.created_date $dir) AS rn
+       |  FROM cl1_a a LEFT JOIN cl1_h h ON a.asset_id = h.asset_id
+       |    AND date_trunc('day', a.allocated_at) >= date_trunc('day', h.created_date)) x
+       |WHERE rn = 1""".stripMargin
+
+  test("Redshift shape: an unaliased function item of a derived table takes the function's name") {
+    // `4_dwh_core/v_weekly_cs_reporting.sql:8-11` reads `s.min`
+    assertSameAsNested(
+      "SELECT s.min FROM (SELECT g, min(created_at)::date FROM la_src GROUP BY g) AS s;",
+      "SELECT s.min FROM (SELECT g, CAST(min(created_at) AS DATE) AS min FROM la_src GROUP BY g) AS s")
+    assertSameAsNested(
+      "SELECT q.max FROM (SELECT MAX(v) FROM la_src) q;",
+      "SELECT q.max FROM (SELECT MAX(v) AS max FROM la_src) q")
+  }
+
+  test("Redshift shape: ORDER BY over a DISTINCT in a CTE, a derived table and a view") {
+    // the qualified key names the DISTINCT's output column
+    // (`2_ods_catman/00_waiting_list.sql:16`)
+    assertSameAsNested(
+      "WITH w AS (SELECT DISTINCT s.g AS g FROM la_src s ORDER BY s.g DESC) SELECT * FROM w;",
+      "SELECT DISTINCT g FROM la_src")
+    assertSameAsNested(
+      "SELECT DISTINCT s.g AS g FROM la_src s ORDER BY s.g;",
+      "SELECT DISTINCT g FROM la_src ORDER BY g", ordered = true)
+    // a void sort on an input column the DISTINCT does not output
+    // (`91_External/Braze/SQL/custom_subscription_attributes.sql:23`)
+    assertSameAsNested(
+      "WITH a AS (SELECT DISTINCT g FROM la_src ORDER BY v DESC) SELECT g FROM a;",
+      "SELECT DISTINCT g FROM la_src")
+    lateralFixtures()
+    Catalog.replaceTable(spark.table("la_src"), "la_db", "src")
+    assertSameAsNested(
+      """CREATE VIEW la_db.sh_inner AS
+        |SELECT * FROM (SELECT DISTINCT s.g FROM la_db.src s ORDER BY s.v DESC) x;
+        |SELECT * FROM la_db.sh_inner;""".stripMargin,
+      "SELECT DISTINCT g FROM la_src")
+    // `7_snowplow/1_page_view/10_url_mapping.sql:21`
+    assertSameAsNested(
+      """CREATE VIEW la_db.sh_top AS
+        |SELECT DISTINCT g FROM la_db.src GROUP BY g ORDER BY count(DISTINCT v) DESC;
+        |SELECT * FROM la_db.sh_top;""".stripMargin,
+      "SELECT g FROM la_src GROUP BY g")
+  }
+
+  test("Redshift shape: native sorts stay, a window ORDER BY and a LIMITed subquery sort") {
+    assertSameAsNested(
+      """WITH c AS (SELECT DISTINCT g, lag(v) OVER (PARTITION BY g ORDER BY k) AS pv FROM la_src)
+        |SELECT * FROM c;""".stripMargin,
+      "SELECT DISTINCT g, pv FROM (SELECT g, lag(v) OVER (PARTITION BY g ORDER BY k) AS pv FROM la_src) x")
+    assertSameAsNested(
+      "SELECT * FROM (SELECT g FROM la_src ORDER BY v LIMIT 2) q;",
+      "SELECT * FROM VALUES ('a'), ('b') AS t(g)")
+  }
+
+  test("Redshift shape: SELECT * with GROUP BY ordinals groups with an aggregate, else de-duplicates") {
+    // `4_dwh_catman/purchase_discount_report.sql:122-129`
+    assertSameAsNested(
+      "SELECT b.*, max(w) AS mw FROM la_hist b GROUP BY 1, 2;",
+      "SELECT k, w, max(w) AS mw FROM la_hist GROUP BY k, w")
+    assertSameAsNested(
+      "SELECT b.*, stddev_samp(w) AS sd FROM la_hist b GROUP BY 1, 2;",
+      "SELECT k, w, stddev_samp(w) AS sd FROM la_hist GROUP BY k, w")
+    assertSameAsNested(
+      "SELECT b.*, array_agg(w) AS ws FROM la_hist b GROUP BY 1, 2;",
+      "SELECT k, w, collect_list(w) AS ws FROM la_hist GROUP BY k, w")
+    // a varchar cast is no aggregate, and a window is not a plain one
+    // (`4_dwh_catman/widget_0_feed.sql:121-135`)
+    assertSameAsNested(
+      """SELECT b.*, cast(w as varchar(10)) AS s, row_number() over (order by w) AS rn
+        |FROM la_hist b GROUP BY 1, 2, 3;""".stripMargin,
+      """SELECT DISTINCT k, w, CAST(w AS STRING) AS s, row_number() OVER (ORDER BY w) AS rn
+        |FROM la_hist""".stripMargin)
+    // `2_ods_catman/00_product_live_feed.sql:99-102`
+    assertSameAsNested(
+      "SELECT * FROM la_hist GROUP BY 1, 2;",
+      "SELECT DISTINCT k, w FROM la_hist")
+  }
+
+  test("Redshift shape: a correlated scalar subquery in a grouped select, and one a GROUP BY ordinal picks") {
+    // `13_finance_reporting/dm_finance.v_asset_yield_report.sql:10-14`
+    val sub = "(SELECT MAX(h.w) FROM la_hist h WHERE h.k = o.k)"
+    assertSameAsNested(
+      s"SELECT o.k, $sub AS top, COUNT(*) AS n FROM la_src o GROUP BY o.k;",
+      s"""SELECT x.k, x.top, COUNT(*) AS n
+         |FROM (SELECT o.k, $sub AS top FROM la_src o) x GROUP BY x.k, x.top""".stripMargin)
+    assertSameAsNested(
+      s"SELECT o.k, $sub AS top, COUNT(*) AS n FROM la_src o GROUP BY o.k, o.g;",
+      s"""SELECT x.k, x.top, COUNT(*) AS n
+         |FROM (SELECT o.k, o.g, $sub AS top FROM la_src o) x GROUP BY x.k, x.g, x.top""".stripMargin)
+    assertSameAsNested(
+      s"SELECT o.k, $sub AS top, COUNT(*) AS n FROM la_src o GROUP BY 1, 2;",
+      s"""SELECT x.k, x.top, COUNT(*) AS n
+         |FROM (SELECT o.k, $sub AS top FROM la_src o) x GROUP BY x.k, x.top""".stripMargin)
+    assertSameAsNested(
+      "SELECT o.g, (SELECT MAX(h.w) FROM la_hist h) AS top, COUNT(*) AS n FROM la_src o GROUP BY 1, 2;",
+      "SELECT g, 10 AS top, COUNT(*) AS n FROM la_src GROUP BY g")
+  }
+
+  test("Redshift shape: a correlated ORDER BY … LIMIT 1 on an outer key, and on an inner key") {
+    limit1Fixtures()
+    // the `00_allocation.sql:251-258` shape: nearest by minute distance
+    assertSameAsNested(
+      """SELECT a.asset_id,
+        |  coalesce(null, (select warehouse from cl1_h h
+        |    where a.asset_id = h.asset_id
+        |    and date_trunc('day', a.allocated_at::timestamp) >= date_trunc('day', h.created_date::timestamp)
+        |    order by datediff('minute', h.created_date::timestamp, a.allocated_at::timestamp) asc
+        |    limit 1)) as warehouse
+        |FROM cl1_a a;""".stripMargin,
+      nearestWarehouse("DESC"))
+    // the outer argument first: ASC picks the earliest, DESC the latest
+    def byDistance(dir: String) =
+      s"""SELECT a.asset_id,
+         |  (select warehouse from cl1_h h
+         |    where a.asset_id = h.asset_id
+         |    and date_trunc('day', a.allocated_at) >= date_trunc('day', h.created_date)
+         |    order by datediff(minute, a.allocated_at, h.created_date) $dir
+         |    limit 1) as warehouse
+         |FROM cl1_a a;""".stripMargin
+    limit1Fixtures()
+    assertSameAsNested(byDistance("asc"), nearestWarehouse("ASC"))
+    limit1Fixtures()
+    assertSameAsNested(byDistance("desc"), nearestWarehouse("DESC"))
+    // an inner key and a subquery with no LIMIT analyze natively
+    assertSameAsNested(
+      "SELECT k, (SELECT h.w FROM la_hist h WHERE h.k = o.k ORDER BY h.w DESC LIMIT 1) AS top FROM la_src o;",
+      "SELECT k, (SELECT MAX(h.w) FROM la_hist h WHERE h.k = o.k) AS top FROM la_src o")
+    assertSameAsNested(
+      "SELECT k, (SELECT h.w FROM la_hist h WHERE h.k = o.k ORDER BY h.w LIMIT 1) AS low FROM la_src o;",
+      "SELECT k, (SELECT MIN(h.w) FROM la_hist h WHERE h.k = o.k) AS low FROM la_src o")
   }
 
   test("lateral alias in WHERE: a source column of that name wins") {

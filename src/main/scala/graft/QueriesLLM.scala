@@ -422,7 +422,7 @@ object QueriesLLM {
         |SELECT user_id, event_id, event_type, CAST(k AS INT) AS k, total_events,
         |  datediff(day, ts, current_date) AS days_since_last
         |FROM stg_user_events;""".stripMargin
-    val root = java.nio.file.Files.createTempDirectory("graft-q54").toString
+    val root = RedshiftScript.tempLayoutRoot(spark, "graft-q54")
     val res = new RedshiftScript.Runner(spark, root, Some("2024-06-01")).run(script)
     require(res.ok, res.reports.filterNot(_.ok).mkString("; "))
     spark.table("g54_ods.user_state")
@@ -462,7 +462,7 @@ object QueriesLLM {
         |WHERE o_orderdate < current_date;
         |
         |COMMIT;""".stripMargin
-    val root = java.nio.file.Files.createTempDirectory("graft-q55").toString
+    val root = RedshiftScript.tempLayoutRoot(spark, "graft-q55")
     (1 to 2).foreach { _ =>
       val res = new RedshiftScript.Runner(spark, root, Some("1998-12-01")).run(script)
       require(res.ok, res.reports.filterNot(_.ok).mkString("; "))
@@ -591,8 +591,8 @@ object QueriesLLM {
   def q62_lateral_window(spark: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.RedshiftScript
     t(spark, dir, "lineitem").createOrReplaceTempView("q62_lineitem")
-    val res = new RedshiftScript.Runner(spark,
-      java.nio.file.Files.createTempDirectory("graft-q62").toString).run(Q62Script)
+    val res = new RedshiftScript.Runner(spark, RedshiftScript.tempLayoutRoot(spark, "graft-q62"))
+      .run(Q62Script)
     require(res.ok, res.reports.filterNot(_.ok).mkString("; "))
     // a TEMP table stays a lazy view — the caller's sink forces ONE
     // execution instead of a CTAS parquet write plus a re-read

@@ -334,8 +334,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     RedshiftSqlFunctions.register(ext)
     // Redshift implicit coercions (see the rule)
     ext.injectResolutionRule(_ => RedshiftCoercions)
-    // Redshift lateral aliases in windows and WHERE clauses: marked before
+    // Redshift query shapes and lateral aliases: marked or rewritten before
     // Resolution, resolved once the select's input is (see the rules)
+    ext.injectHintResolutionRule(MarkRedshiftShapes)
+    ext.injectResolutionRule(_ => ResolveRedshiftShapes)
     ext.injectHintResolutionRule(_ => MarkLateralAliases)
     ext.injectResolutionRule(_ => ResolveLateralAliases)
   }

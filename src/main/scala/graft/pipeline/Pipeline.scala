@@ -84,8 +84,7 @@ object Pipeline {
         // file-stem view is the script's final SELECT (when present), so
         // later scripts chain off it exactly like the one-SELECT form
         Stage(name, s => {
-          val root = scriptLayoutRoot.getOrElse(
-            java.nio.file.Files.createTempDirectory("graft-script").toString)
+          val root = scriptLayoutRoot.getOrElse(RedshiftScript.tempLayoutRoot(s, "graft-script"))
           val res = new RedshiftScript.Runner(s, root, scriptCurrentDate).run(sql)
           res.reports.find(!_.ok).foreach { r =>
             throw new RuntimeException(

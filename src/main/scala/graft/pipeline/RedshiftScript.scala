@@ -47,22 +47,15 @@ import scala.collection.mutable
   */
 object RedshiftScript {
 
-  /** One statement's outcome. `repairs` names each rewrite the Runner's
-    * repair loop applied before a retry, by a fixed label per rewrite:
-    * `default-column`, `sort-qualifier`, `drop-top-sort`,
-    * `drop-inner-sort`, `star-group-by`, `scalar-subquery-first` or
-    * `correlated-limit-1`. `attempts` counts the analyses of the
-    * statement's SQL, so it is 1 when no repair fired (and for verbs with
-    * no query body).
+  /** One statement's outcome: its verb and target, whether it succeeded,
+    * its wall time and, on failure, the error message.
     */
   final case class StatementReport(
       verb: String,
       target: Option[String],
       ok: Boolean,
       seconds: Double,
-      error: Option[String],
-      attempts: Int = 1,
-      repairs: Seq[String] = Nil)
+      error: Option[String])
 
   final case class ScriptResult(
       reports: Seq[StatementReport],
@@ -433,9 +426,8 @@ object RedshiftScript {
     * scan can't bind, e.g. comma-list FROM items) are left untouched so
     * the failure surfaces instead. The reference's single use
     * (`2_ods_finance/03_debt_collection.sql:40`) is a base-relation
-    * alias — Spark has no composite-row count, and a literal star in
-    * the select list also trips STAR_GROUP_BY_POS under the script's
-    * ordinal GROUP BY.
+    * alias — Spark has no composite-row count, and rejects a star in
+    * the select list of the script's ordinal GROUP BY.
     */
   private[graft] def fixCountAliasStar(sql: String): String = {
     val Call = "(?i)\\bcount\\s*\\(\\s*(\\w+)\\s*\\.\\s*\\*\\s*\\)".r
@@ -922,160 +914,6 @@ object RedshiftScript {
       }
     }
     out
-  }
-
-  /** Correlated `(SELECT x FROM … WHERE … ORDER BY k [ASC|DESC] LIMIT 1)`
-    * — the reference's as-of idiom (`1_ods_core/00_allocation.sql:251-258`
-    * picks the latest warehouse code at-or-before the allocation). Spark
-    * forbids outer references outside a subquery's WHERE/HAVING, so the
-    * form rewrites to an AGGREGATED scalar subquery Spark decorrelates:
-    * `(SELECT min_by(x, k) FROM … WHERE …)` (DESC → max_by). An order key
-    * of the shape `datediff(u, A, B)` where exactly ONE argument belongs
-    * to the subquery's own FROM aliases is monotone in that inner
-    * argument once the outer one is fixed, so the key collapses to the
-    * inner argument with the direction flipped to match
-    * (`datediff(u, inner, outer) ASC` minimizes outer−inner ⇒ maximizes
-    * inner ⇒ max_by). Null keys: min_by/max_by skip them — Redshift's
-    * ASC NULLS LAST `LIMIT 1` behavior (Spark's own ORDER BY would have
-    * put nulls first). Applied as an analysis-failure FALLBACK only.
-    */
-  private[graft] def rewriteCorrelatedLimit1(sql: String): String = {
-    val Open = "(?i)\\(\\s*select\\b".r
-    var out = sql
-    var from = 0
-    var continue = true
-    while (continue) {
-      Open.findAllMatchIn(out).find(_.start >= from) match {
-        case None => continue = false
-        case Some(m) =>
-          val open = m.start
-          // balanced scan to the matching close paren
-          var i = open + 1; var depth = 1; var inStr = false
-          while (i < out.length && depth > 0) {
-            val c = out.charAt(i)
-            if (inStr) { if (c == '\'') inStr = false }
-            else c match {
-              case '\'' => inStr = true
-              case '(' => depth += 1
-              case ')' => depth -= 1
-              case _ => ()
-            }
-            i += 1
-          }
-          val close = i - 1
-          val inner = out.substring(open + 1, close)
-          val rewritten = rewriteLimit1Body(inner)
-          rewritten match {
-            case Some(r) =>
-              out = out.substring(0, open + 1) + r + out.substring(close)
-              from = open + 1 + r.length
-            case None => from = m.end
-          }
-      }
-    }
-    out
-  }
-
-  /** One subquery body: Some(rewritten) when it is a single-expression
-    * SELECT … ORDER BY k [dir] LIMIT 1 shape, else None.
-    */
-  private def rewriteLimit1Body(inner: String): Option[String] = {
-    val selIdx = "(?i)^\\s*select\\s".r.findFirstMatchIn(inner).map(_.end).getOrElse(-1)
-    if (selIdx < 0) return None
-    val fromIdx = topKeywordIndex(inner, "FROM")
-    val ordIdx = topKeywordIndex(inner, "ORDER")
-    val limIdx = topKeywordIndex(inner, "LIMIT")
-    if (fromIdx < 0 || ordIdx < 0 || limIdx < 0 || ordIdx < fromIdx || limIdx < ordIdx)
-      return None
-    if (!inner.substring(limIdx).trim.matches("(?is)^LIMIT\\s+1\\s*$")) return None
-    val sel = inner.substring(selIdx, fromIdx).trim
-    if (splitTop(sel).size != 1 || sel == "*") return None
-    val byM = "(?i)^\\s*order\\s+by\\s+".r
-      .findFirstMatchIn(inner.substring(ordIdx)).getOrElse(return None)
-    val keyRaw = inner.substring(ordIdx + byM.end, limIdx).trim
-    if (splitTop(keyRaw).size != 1) return None
-    val lower = keyRaw.toLowerCase
-    var (key, desc) =
-      if (lower.endsWith(" desc")) (keyRaw.dropRight(4).trim, true)
-      else if (lower.endsWith(" asc")) (keyRaw.dropRight(3).trim, false)
-      else (keyRaw, false)
-    // the subquery's own FROM aliases (explicit alias or table base name)
-    val fromPart = inner.substring(fromIdx, ordIdx)
-    val kw = Set("left", "right", "inner", "full", "cross", "join", "on",
-      "where", "and", "or", "using", "as", "group", "order")
-    val innerAliases = "(?i)\\b(?:from|join)\\s+([\\w.\"]+)(?:\\s+(?:as\\s+)?(\\w+))?".r
-      .findAllMatchIn(fromPart).flatMap { fm =>
-        val tbl = fm.group(1).replace("\"", "")
-        val al = Option(fm.group(2)).filterNot(a => kw(a.toLowerCase))
-        Seq(tbl.split("\\.").last.toLowerCase) ++ al.map(_.toLowerCase)
-      }.toSet
-    def isInner(e: String): Boolean = {
-      val quals = "(?i)\\b(\\w+)\\s*\\.".r.findAllMatchIn(e).map(_.group(1).toLowerCase).toSet
-      quals.nonEmpty && quals.forall(innerAliases)
-    }
-    // datediff key with exactly one inner argument → monotone collapse
-    val Dd = "(?is)^datediff(?:_rs)?\\s*\\(\\s*(?:'?\\w+'?\\s*,)?\\s*(.*)$".r
-    key match {
-      case Dd(rest) =>
-        val args = splitTop(rest.trim.stripSuffix(")"))
-        if (args.size == 2) {
-          val (a, b) = (args(0), args(1))
-          (isInner(a), isInner(b)) match {
-            case (true, false) => key = a; desc = !desc // minimize b−a ⇒ maximize a
-            case (false, true) => key = b // minimize b−a ⇒ minimize b
-            case _ => ()
-          }
-        }
-      case _ => ()
-    }
-    val agg = if (desc) "max_by" else "min_by"
-    Some(s"select $agg(($sel), ($key)) ${inner.substring(fromIdx, ordIdx).trim}")
-  }
-
-  /** Redshift derives an output column name from an UNALIASED function
-    * call — `(select …, min(created_date)::date from …) as s` exposes
-    * `s.min` (`4_dwh_core/v_weekly_cs_reporting.sql:8-11`); Spark names
-    * it `min(created_date)`. When the analyzer reports `alias`.`col`
-    * unresolved, rename the matching unaliased `col(...)` item of the
-    * subquery aliased `alias` by appending `AS col`. Fallback-only.
-    */
-  private[graft] def aliasDefaultFunctionColumn(
-      sql: String, alias: String, col: String): String = {
-    val CloseAlias = ("(?i)\\)\\s*(?:as\\s+)?" +
-      java.util.regex.Pattern.quote(alias) + "(?![\\w.])").r
-    for (m <- CloseAlias.findAllMatchIn(sql)) {
-      val close = m.start
-      // balance back to the matching '('
-      var i = close; var depth = 0; var open = -1
-      while (i >= 0 && open < 0) {
-        val c = sql.charAt(i)
-        if (c == ')') depth += 1
-        else if (c == '(') { depth -= 1; if (depth == 0) open = i }
-        i -= 1
-      }
-      if (open >= 0) {
-        val inner = sql.substring(open + 1, close)
-        val selM = "(?is)^\\s*select\\s".r.findFirstMatchIn(inner)
-        if (selM.isDefined) {
-          val listText = splitTopKeyword(inner.substring(selM.get.end), "FROM")._1
-          val items = splitTop(listText)
-          val FnHead = ("(?is)^" + java.util.regex.Pattern.quote(col) +
-            "\\s*\\(.*").r
-          items.zipWithIndex.find { case (it, _) =>
-            FnHead.pattern.matcher(it).matches() &&
-              !SelectAliasRe.pattern.matcher(it).matches()
-          } match {
-            case Some((it, _)) =>
-              val at = sql.indexOf(it, open)
-              if (at >= 0)
-                return sql.substring(0, at + it.length) + s" AS $col" +
-                  sql.substring(at + it.length)
-            case None => ()
-          }
-        }
-      }
-    }
-    sql
   }
 
   /** A GRANT glued to the previous statement by a missing semicolon
@@ -1576,223 +1414,6 @@ object RedshiftScript {
       sql.substring(0, selStart) + replacement + sql.substring(predEnd), n + 1)
   }
 
-  // the alias may be BACKTICKED — Redshift `as "period"` translates to
-  // `` as `period` `` (`91_External/Legal/IntraStat NL/IntraStat_v2
-  // .sql:45` reads the quoted alias back in its WHERE)
-  private val SelectAliasRe = "(?is)^(.*\\S)\\s+as\\s+`?(\\w+)`?\\s*$".r
-  /** Wrap select-list scalar subqueries of GROUPED queries in first(…):
-    * Redshift accepts a correlated scalar subquery in the select list of
-    * a query grouped by its correlation key; Spark demands the subquery
-    * appear in GROUP BY or inside an aggregate
-    * (SCALAR_SUBQUERY_IS_IN_GROUP_BY_OR_AGGREGATE_FUNCTION,
-    * `13_finance_reporting/dm_finance.v_asset_yield_report.sql:10-14`).
-    * Grouping by the correlation key makes the subquery value constant
-    * per group, so first() is exact. Only subqueries that are select-list
-    * ITEMS (preceded by `,` or SELECT) of a query with a same-depth
-    * GROUP BY are wrapped — bounded at the next same-depth set-op
-    * keyword so a later UNION branch's GROUP BY can't mark an ungrouped
-    * branch. KNOWN LIMIT (repair-path only): correlation on the grouping
-    * key is assumed, not verified — a subquery correlated on a
-    * non-grouped column would return an arbitrary per-group value where
-    * Redshift rejects the statement outright; the reference corpus has
-    * no such statement, and an unproductive wrap rethrows the original
-    * analyzer error.
-    */
-  private[graft] def wrapScalarSubqueriesInFirst(sql: String): String = {
-    val n = sql.length
-    // paren depth per position (string-aware)
-    val depth = new Array[Int](n)
-    var d = 0; var inStr = false
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ => ()
-      }
-      depth(i) = d
-      i += 1
-    }
-    val out = new StringBuilder
-    var last = 0
-    for (m <- "(?i)\\(\\s*select\\b".r.findAllMatchIn(sql)) {
-      val p = m.start
-      // select-list item: previous non-space char is ',' or the previous
-      // token is SELECT
-      var j = p - 1
-      while (j >= 0 && sql.charAt(j).isWhitespace) j -= 1
-      val isItem = j >= 0 && (sql.charAt(j) == ',' ||
-        (j >= 5 && sql.substring(j - 5, j + 1).equalsIgnoreCase("select")))
-      if (isItem && p >= last) {
-        // matching close
-        var q = p + 1; var dd = 1; var s2 = false
-        while (q < n && dd > 0) {
-          val c = sql.charAt(q)
-          if (s2) { if (c == '\'') s2 = false }
-          else c match {
-            case '\'' => s2 = true
-            case '(' => dd += 1
-            case ')' => dd -= 1
-            case _ => ()
-          }
-          q += 1
-        }
-        // grouped? a same-depth GROUP BY after the subquery, before the
-        // enclosing depth closes — and before the next same-depth set-op
-        // keyword (UNION/INTERSECT/EXCEPT/MINUS): a GROUP BY belonging
-        // to a LATER branch of the same-depth set operation must not
-        // mark an ungrouped branch's subquery as grouped
-        val enclosing = if (p > 0) depth(p - 1) else 0
-        var limit = q
-        while (limit < n && depth(limit) >= enclosing) limit += 1
-        val setOpBound = "(?i)\\b(union|intersect|except|minus)\\b".r
-          .findAllMatchIn(sql)
-          .collectFirst { case g if g.start >= q && g.start < limit &&
-            depth(g.start) == enclosing => g.start }
-          .getOrElse(limit)
-        val grouped = "(?i)\\bgroup\\s+by\\b".r.findAllMatchIn(sql)
-          .exists(g => g.start >= q && g.start < setOpBound && depth(g.start) == enclosing)
-        if (grouped && dd == 0) {
-          out.append(sql.substring(last, p)).append("first(")
-            .append(sql.substring(p, q)).append(")")
-          last = q
-        }
-      }
-    }
-    if (last == 0) sql else { out.append(sql.substring(last)); out.toString }
-  }
-
-  /** `SELECT * FROM t GROUP BY 1,2,…` (ordinal grouping under a star
-    * list — `2_ods_catman/00_product_live_feed.sql:99-102`): Spark
-    * rejects the combination (STAR_GROUP_BY_POS). A statement VALID in
-    * Redshift of this shape necessarily lists every output column in the
-    * GROUP BY (any omitted column would be an ungrouped-column error
-    * there), so grouping degenerates to row de-duplication — rewrite to
-    * `SELECT DISTINCT * FROM t`.
-    */
-  private[graft] def rewriteStarGroupByOrdinal(sql: String): String = {
-    // general form: any `SELECT * [, extras] … GROUP BY n[, n…]` — the
-    // statement is valid in Redshift only if the ordinals cover every
-    // starred column (an omitted one would be an ungrouped-column error
-    // there), so the grouping is row de-duplication: DISTINCT the select
-    // and drop the ordinal list. Extras beyond `*` are window/case items
-    // Redshift evaluates over the grouped rows
-    // (`4_dwh_catman/widget_0_feed.sql:121-135`) — with unique input
-    // rows (and grouped rows ARE unique) distinct-after-window agrees.
-    val GroupOrd = "(?i)\\bgroup\\s+by\\s+\\d+(?:\\s*,\\s*\\d+)*".r
-    // the SELECT owning `pos`: the latest SELECT seen at pos's own paren
-    // depth with no depth dip in between (CTE bodies sit at depth ≥ 1,
-    // which a depth-0 walk never reaches)
-    def scopeSelect(s: String, pos: Int): Int = {
-      val upper = s.toUpperCase
-      def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-      val lastSel = mutable.Map.empty[Int, Int]
-      var j = 0; var d = 0
-      var inS = false; var lc = false; var bc = false
-      while (j < pos) {
-        val c = s.charAt(j)
-        val next = if (j + 1 < s.length) s.charAt(j + 1) else ' '
-        if (lc) { if (c == '\n') lc = false }
-        else if (bc) { if (c == '*' && next == '/') { bc = false; j += 1 } }
-        else if (inS) { if (c == '\'') inS = false }
-        else c match {
-          case '\'' => inS = true
-          case '-' if next == '-' => lc = true; j += 1
-          case '/' if next == '*' => bc = true; j += 1
-          case '(' => d += 1
-          case ')' => lastSel.remove(d); d -= 1
-          case _ =>
-            if (upper.startsWith("SELECT", j) &&
-                (j == 0 || !isWord(s.charAt(j - 1))) &&
-                (j + 6 >= s.length || !isWord(s.charAt(j + 6))))
-              lastSel(d) = j
-        }
-        j += 1
-      }
-      lastSel.getOrElse(d, -1)
-    }
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 64) {
-      guard += 1
-      changed = false
-      val s = out
-      val hits = GroupOrd.findAllMatchIn(s).toSeq
-      def scanClose(str: String, open: Int): Int = {
-        var i = open + 1; var depth = 1; var inStr = false
-        while (i < str.length && depth > 0) {
-          val c = str.charAt(i)
-          if (inStr) { if (c == '\'') inStr = false }
-          else c match {
-            case '\'' => inStr = true
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ => ()
-          }
-          i += 1
-        }
-        if (depth == 0) i - 1 else -1
-      }
-      // an aggregate call NOT followed by OVER means the query genuinely
-      // groups: `SELECT b.*, max(…) GROUP BY 1,2,3` (the ordinals cover
-      // b.* — `4_dwh_catman/purchase_discount_report.sql:122-129`) maps
-      // to Spark's GROUP BY ALL; a windows-only list is row dedup
-      def hasPlainAgg(list: String): Boolean = {
-        // every aggregate head the reference (or Spark) could put in a
-        // SELECT-* + ordinal-GROUP-BY list — a miss here silently turns
-        // GROUP BY into DISTINCT. Explicit alternatives rather than
-        // stddev\w*/var\w* prefixes: `varchar(` / `varbyte(` in a cast
-        // must not count as an aggregate
-        val AggHead = ("(?i)\\b(sum|min|max|avg|count|count_if|median|" +
-          "listagg|string_agg|array_agg|collect_list|collect_set|" +
-          "stddev|stddev_samp|stddev_pop|variance|var_samp|var_pop|" +
-          "bool_or|bool_and|every|any_value|" +
-          "percentile_cont|percentile_disc|approx_percentile|" +
-          "approximate_percentile_disc|approx_count_distinct)\\s*\\(").r
-        AggHead.findAllMatchIn(list).exists { am =>
-          val close = scanClose(list, am.end - 1)
-          close >= 0 && {
-            var k = close + 1
-            while (k < list.length && list.charAt(k).isWhitespace) k += 1
-            !(k + 4 <= list.length &&
-              list.substring(k, k + 4).equalsIgnoreCase("over"))
-          }
-        }
-      }
-      hits.find { m =>
-        val sel = scopeSelect(s, m.start)
-        sel >= 0 && {
-          val head = s.substring(sel + 6, math.min(s.length, sel + 80))
-            .replaceAll("(?s)/\\*.*?\\*/", " ").trim
-            .replaceFirst("(?i)^distinct\\s+", "")
-          head.startsWith("*") || head.matches("(?is)^\\w+\\.\\*.*")
-        }
-      } match {
-        case Some(m) =>
-          val sel = scopeSelect(s, m.start)
-          val isDistinct = s.substring(sel + 6, math.min(s.length, sel + 80))
-            .trim.toLowerCase.startsWith("distinct")
-          val list = s.substring(sel + 6, m.start).replaceAll("'[^']*'", "''")
-          if (hasPlainAgg(list)) {
-            out = s.substring(0, m.start) + "group by all" + s.substring(m.end)
-          } else {
-            val cut = s.substring(0, m.start) + s.substring(m.end)
-            out =
-              if (isDistinct) cut
-              else cut.substring(0, sel + 6) + " distinct " +
-                cut.substring(sel + 6)
-          }
-          changed = true
-        case None => ()
-      }
-    }
-    out
-  }
-
   /** Redshift runs rank-family window functions with an OPTIONAL window
     * ORDER BY (`ROW_NUMBER() OVER (PARTITION BY customer_id)` numbers the
     * partition in arbitrary order — `4_dwh_risk/customer_datamart_v1.sql`,
@@ -1864,150 +1485,6 @@ object RedshiftScript {
             }
           }
       }
-    }
-    out.toString
-  }
-
-  /** `SELECT DISTINCT … GROUP BY … ORDER BY count(distinct user_id)`:
-    * Redshift resolves the ORDER BY aggregate against the pre-DISTINCT
-    * aggregate output; Spark cannot add attributes below a Distinct. A
-    * top-level ORDER BY with no LIMIT/OFFSET is semantically void for
-    * CTAS/INSERT/VIEW bodies (it only affected Redshift's physical
-    * layout), so drop the clause when it is what references the
-    * unresolved name (`7_snowplow/1_page_view/10_url_mapping.sql:21`).
-    */
-  private[graft] def dropUnresolvableTopSort(sql: String, unresolved: Set[String]): String = {
-    // locate the LAST depth-0 `ORDER BY` (the two-word form — a bare
-    // topKeywordIndex("ORDER") probe would hit the reference's
-    // `ods_production.order` TABLE NAME and truncate the FROM clause)
-    val OrderBy = "(?i)(?<![.\\w])order\\s+by\\b".r
-    var idx = -1
-    OrderBy.findAllMatchIn(sql).foreach { m =>
-      var d = 0; var inS = false; var i = 0
-      while (i < m.start) {
-        val c = sql.charAt(i)
-        if (inS) { if (c == '\'') inS = false }
-        else c match {
-          case '\'' => inS = true
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ => ()
-        }
-        i += 1
-      }
-      if (d == 0 && !inS) idx = m.start
-    }
-    if (idx < 0) return sql
-    val clause = sql.substring(idx).takeWhile(_ != ';')
-    if ("(?i)\\b(limit|offset)\\b".r.findFirstIn(clause).isDefined) return sql
-    val names = unresolved.map(_.split("\\.").last.toLowerCase)
-    val refs = "(?i)\\b(\\w+)\\b".r.findAllMatchIn(clause)
-      .map(_.group(1).toLowerCase).toSet
-    if (names.exists(refs)) sql.substring(0, idx).stripTrailing() else sql
-  }
-
-  /** Same void-sort rationale one level down: an ORDER BY inside a CTE /
-    * subquery (no LIMIT) cannot affect the result, but Redshift happily
-    * resolves its references against pre-DISTINCT inputs where Spark
-    * cannot (`91_External/Braze/SQL/custom_subscription_attributes
-    * .sql:23`: `SELECT DISTINCT … ORDER BY s.rank_subscriptions DESC )`
-    * — rank_subscriptions is not in the DISTINCT output). Drop every
-    * parenthesized ORDER BY clause that references an unresolved name
-    * and carries no LIMIT/OFFSET.
-    */
-  private[graft] def dropUnresolvableInnerSort(sql: String, unresolved: Set[String]): String = {
-    val names = unresolved.map(_.split("\\.").last.toLowerCase)
-    if (names.isEmpty) return sql
-    val OrderBy = "(?i)(?<![.\\w])order\\s+by\\b".r
-    var out = sql
-    OrderBy.findAllMatchIn(sql).toSeq.reverseIterator.foreach { m =>
-      // clause ends at the subquery's closing `)` (depth goes negative)
-      // or `;`; a clause at statement top level is TopSort's business
-      var j = m.end; var d = 0; var inS = false
-      var end = -1
-      while (j < sql.length && end < 0) {
-        val c = sql.charAt(j)
-        if (inS) { if (c == '\'') inS = false }
-        else c match {
-          case '\'' => inS = true
-          case '(' => d += 1
-          case ')' => if (d == 0) end = j else d -= 1
-          case ';' => end = j
-          case _ => ()
-        }
-        j += 1
-      }
-      if (end >= 0 && sql.charAt(end) == ')') {
-        // NEVER a window spec's ORDER BY (`lag(x) over (partition by …
-        // order by eom)`) — dropping it breaks the window function
-        // outright. The enclosing opener of an OVER clause is directly
-        // preceded by the OVER keyword.
-        var k = m.start - 1; var dd = 0; var opener = -1
-        while (k >= 0 && opener < 0) {
-          sql.charAt(k) match {
-            case ')' => dd += 1
-            case '(' => if (dd == 0) opener = k else dd -= 1
-            case _ => ()
-          }
-          k -= 1
-        }
-        val isWindow = opener >= 0 &&
-          "(?i)\\bover\\s*$".r.findFirstIn(sql.substring(0, opener)).isDefined
-        val clause = sql.substring(m.start, end)
-        val refs = "(?i)\\b(\\w+)\\b".r.findAllMatchIn(clause)
-          .map(_.group(1).toLowerCase).toSet
-        if (!isWindow && names.exists(refs) &&
-            "(?i)\\b(limit|offset)\\b".r.findFirstIn(clause).isEmpty)
-          out = out.substring(0, m.start).stripTrailing() + " " +
-            out.substring(end)
-      }
-    }
-    out
-  }
-
-  /** Redshift resolves `ORDER BY s.date` after `SELECT DISTINCT …
-    * s.date::date AS date` to the OUTPUT column `date`; Spark cannot add
-    * missing input attributes below a Distinct, so the qualified form
-    * fails analysis (`4_dwh_core/monthly_reporting_historical.sql:43`).
-    * Strip the qualifier from the failing reference inside the top-level
-    * ORDER BY clause — resolution then lands on the select-list alias,
-    * which is the column Redshift sorted by.
-    */
-  private[graft] def stripSortQualifier(sql: String, qual: String, col: String): String = {
-    val Ref = ("(?i)\\b" + java.util.regex.Pattern.quote(qual) +
-      "\\s*\\.\\s*[\"`]?" + java.util.regex.Pattern.quote(col) + "[\"`]?\\b").r
-    val idx = topKeywordIndex(sql, "ORDER")
-    if (idx >= 0)
-      return sql.substring(0, idx) + Ref.replaceAllIn(sql.substring(idx),
-        java.util.regex.Matcher.quoteReplacement(col))
-    // the DISTINCT+ORDER BY may sit inside a CTE (`2_ods_catman/
-    // 00_waiting_list.sql:16`: `select distinct … order by
-    // wle.created_at desc )`): strip the qualifier inside every
-    // ORDER BY clause (clause ends at an unbalanced `)` or `;`) — the
-    // reference is specific enough that a clause not containing it is
-    // untouched
-    val OrderBy = "(?i)\\border\\s+by\\b".r
-    val out = new StringBuilder(sql)
-    // right-to-left so earlier offsets stay valid
-    OrderBy.findAllMatchIn(sql).toSeq.reverseIterator.foreach { m =>
-      var j = m.end; var d = 0; var inS = false; var end = sql.length
-      var done = false
-      while (j < sql.length && !done) {
-        val c = sql.charAt(j)
-        if (inS) { if (c == '\'') inS = false }
-        else c match {
-          case '\'' => inS = true
-          case '(' => d += 1
-          case ')' => if (d == 0) { end = j; done = true } else d -= 1
-          case ';' => end = j; done = true
-          case _ => ()
-        }
-        j += 1
-      }
-      val clause = sql.substring(m.end, end)
-      val replaced = Ref.replaceAllIn(clause,
-        java.util.regex.Matcher.quoteReplacement(col))
-      if (replaced != clause) out.replace(m.end, end, replaced)
     }
     out.toString
   }
@@ -2373,7 +1850,23 @@ object RedshiftScript {
 
   // ------------------------------------------------------------ the runner
 
+  /** A new local directory for a Runner's `layoutRoot`. It is registered
+    * with Hadoop's `FileSystem.deleteOnExit`, which deletes it and
+    * everything under it when the JVM exits.
+    */
+  def tempLayoutRoot(spark: SparkSession, prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      .deleteOnExit(new org.apache.hadoop.fs.Path(dir))
+    dir
+  }
+
   /** One interpreter instance per script run (holds transaction state).
+    * Each statement's translated SQL is analyzed once, by one `spark.sql`;
+    * a statement Spark rejects fails, with no rewrite and no retry. The
+    * Redshift shapes Spark would reject are analyzer rules registered in
+    * [[graft.expressions.GraftExtensions]], so they apply wherever the
+    * SQL is analyzed, including a stored view body when it is read.
     *
     * @param layoutRoot  directory where `db.table` targets materialize
     *                    (`$layoutRoot/$db/$table`) when the table doesn't
@@ -2402,108 +1895,18 @@ object RedshiftScript {
     private var inTxn = false
     private var txnAborted = false
     private var lastSelect: Option[DataFrame] = None
-    // the repairs the repair loop applied, for the running statement
-    private val repairs = mutable.ListBuffer.empty[String]
 
     private def tr(sql: String): String = resolveOverlays(translate(sql, currentDate))
 
-    /** Translate + analyze a bare query body through the same repair
-      * chain the verbs use (correlated LIMIT-1, GROUP BY ordinals, …) — for
-      * callers that need a body's DataFrame outside a full script run
-      * (the test harness derives pre-existing INSERT targets from their
-      * body's schema).
-      */
-    def queryDf(body: String): DataFrame = sqlBody(tr(body))
-
-    /** Analysis-failure fallback LOOP: each pass applies the rewrite the
-      * error calls for (a default column name, correlated LIMIT 1, …) and
-      * retries — a statement may need several. Native resolution stays
-      * authoritative: rewrites only run after Spark rejects the text, and
-      * an unproductive pass rethrows. Lateral aliases (in windows, WHERE
-      * clauses, GROUP BY keys and aggregate functions, and a duplicated
-      * alias line) and Redshift's implicit type coercions take no pass:
-      * the analyzer resolves them ([[graft.expressions.MarkLateralAliases]],
+    /** Translate and analyze a bare query body, as the verbs do, for
+      * callers that need a body's DataFrame outside a full script run (the
+      * test harness derives pre-existing INSERT targets from their body's
+      * schema). One `spark.sql`: the Redshift shapes Spark rejects are
+      * analyzer rules ([[graft.expressions.MarkRedshiftShapes]],
+      * [[graft.expressions.MarkLateralAliases]],
       * [[graft.expressions.RedshiftCoercions]]).
       */
-    private def sqlBody(translated: String): DataFrame = repaired(translated)._1
-
-    /** The repair loop, also surfacing the final (possibly rewritten) SQL
-      * text — CREATE [MATERIALIZED] VIEW stores the *text*, so its body
-      * must take the same repair chain as CTAS/INSERT bodies
-      * (`4_dwh_core/v_weekly_cs_reporting.sql`'s `s.min` default column
-      * name, …); the analyzer rules apply again whenever the stored text
-      * is read. `sortIsVoid` is false for a SELECT whose rows the script
-      * returns: its top-level ORDER BY is never dropped. Each repair that
-      * fires is recorded under its own label.
-      */
-    private def repaired(translated: String, sortIsVoid: Boolean = true): (DataFrame, String) = {
-      var cur = translated
-      var tries = 0
-      var first: Throwable = null
-      var out: DataFrame = null
-      while (out == null) {
-        try out = spark.sql(cur)
-        catch {
-          // a rewrite must never yield unparseable text — if it does, the
-          // FIRST error is the true diagnosis; the parse error is the
-          // rewriter's own corruption and would mask it
-          case e: org.apache.spark.sql.catalyst.parser.ParseException
-              if tries > 0 && first != null =>
-            first.addSuppressed(e)
-            throw first
-          // the unproductive-pass rethrow terminates early when a rewrite
-          // stops helping; the cap bounds a rewrite that keeps changing
-          // the text without ever analyzing
-          case e: org.apache.spark.sql.AnalysisException if tries < 48 =>
-            if (first == null) first = e
-            tries += 1
-            val msg = Option(e.getMessage).getOrElse("")
-            val (repair, next) =
-              if (msg.contains("UNRESOLVED_COLUMN")) {
-                val unresolved = "with name `([^`]+)`".r
-                  .findAllMatchIn(msg).map(_.group(1).toLowerCase).toSet
-                // `q.f` unresolved where subquery `q` has an UNALIASED
-                // item `f(...)`: Redshift names that output column after
-                // the function — try that naming first, it is the more
-                // specific repair
-                val qual = "with name `([^`]+)`\\.`([^`]+)`".r
-                  .findFirstMatchIn(msg)
-                val named = qual.map(m => RedshiftScript
-                    .aliasDefaultFunctionColumn(cur, m.group(1), m.group(2)))
-                  .getOrElse(cur)
-                val sort = msg.contains("'Sort")
-                // qualified ORDER BY above DISTINCT: Redshift resolved it
-                // to the output alias — strip the qualifier there
-                lazy val sorted =
-                  if (sort) qual.map(m => RedshiftScript
-                      .stripSortQualifier(cur, m.group(1), m.group(2))).getOrElse(cur)
-                  else cur
-                // a void top-level ORDER BY (CTAS/INSERT/VIEW body)
-                // referencing a pre-DISTINCT aggregate input — drop it
-                lazy val top =
-                  if (sort && sortIsVoid) RedshiftScript.dropUnresolvableTopSort(cur, unresolved)
-                  else cur
-                if (named != cur) "default-column" -> named
-                else if (sorted != cur) "sort-qualifier" -> sorted
-                else if (top != cur) "drop-top-sort" -> top
-                else if (sort) "drop-inner-sort" -> RedshiftScript.dropUnresolvableInnerSort(cur, unresolved)
-                else throw e
-              }
-              else if (msg.contains("STAR_GROUP_BY_POS"))
-                "star-group-by" -> RedshiftScript.rewriteStarGroupByOrdinal(cur)
-              else if (msg.contains("SCALAR_SUBQUERY_IS_IN_GROUP_BY"))
-                "scalar-subquery-first" -> RedshiftScript.wrapScalarSubqueriesInFirst(cur)
-              else if (msg.contains("UNSUPPORTED_SUBQUERY_EXPRESSION") ||
-                msg.contains("must be aggregated"))
-                "correlated-limit-1" -> RedshiftScript.rewriteCorrelatedLimit1(cur)
-              else throw e
-            if (next == cur) throw e
-            repairs += repair
-            cur = next
-        }
-      }
-      (out, cur)
-    }
+    def queryDf(body: String): DataFrame = spark.sql(tr(body))
 
     /** Read-your-writes for raw SQL: rewrite references to overlaid
       * tables into overlay-backed temp views, so a SELECT / INSERT body /
@@ -2893,10 +2296,8 @@ object RedshiftScript {
       val stmt = RedshiftScript.rewriteOutsideStrings(
         stripLeadingComments(raw.trim), "(?i)\\b(\\w+)\\.\\1\\.(\\w+)", "$1.$2")
       val t0 = System.nanoTime()
-      repairs.clear()
       def report(verb: String, target: Option[String] = None) =
-        StatementReport(verb, target, ok = true, (System.nanoTime() - t0) / 1e9, None,
-          1 + repairs.size, repairs.toList)
+        StatementReport(verb, target, ok = true, (System.nanoTime() - t0) / 1e9, None)
       try {
         val upper = stmt.toUpperCase.replaceAll("\\s+", " ")
         // Redshift abort semantics: after a failed statement inside a
@@ -2948,7 +2349,7 @@ object RedshiftScript {
             report("DROP VIEW", Some(name))
           case CreateRe(temp, name, options, body) =>
             val (_, distkey) = stripTableOptions(options)
-            val df = sqlBody(tr(body))
+            val df = spark.sql(tr(body))
             if (temp != null && !norm(name).contains(".")) {
               // DISTKEY on a TEMP table is a storage-placement hint; the
               // runner keeps temps as LAZY VIEWS (no storage), so the
@@ -2971,7 +2372,7 @@ object RedshiftScript {
           case CteDeleteUsingRe(cte, name, srcName, aliasOpt, cond) =>
             // CTE-prefixed DELETE: the USING source is a CTE — build it
             // with the WITH list attached
-            val src = sqlBody(tr(s"$cte SELECT * FROM $srcName"))
+            val src = spark.sql(tr(s"$cte SELECT * FROM $srcName"))
             stage(name, deleteUsing(name, srcName, src, Option(aliasOpt), cond))
             report("DELETE USING", Some(name))
           case DeleteUsingRe(name, srcName, aliasOpt, cond) =>
@@ -2985,10 +2386,10 @@ object RedshiftScript {
             stage(name, df)
             report("DELETE", Some(name))
           case CreateViewRe(name, body) =>
-            Catalog.createOrReplaceView(spark, name, repaired(tr(body))._2)
+            Catalog.createOrReplaceView(spark, name, tr(body))
             report("CREATE VIEW", Some(name))
           case CreateMvRe(name, body) =>
-            Catalog.createMaterializedView(spark, name, repaired(tr(body))._2,
+            Catalog.createMaterializedView(spark, name, tr(body),
               s"$layoutRoot/__mv/${name.replace('.', '/')}")
             report("CREATE MATERIALIZED VIEW", Some(name))
           case CreateSchemaRe(name) =>
@@ -3010,7 +2411,7 @@ object RedshiftScript {
                 val (cols, body) = parseInsert(colList, bodyPart)
                 require(body.nonEmpty, s"unparseable INSERT body: ${bodyPart.take(60)}")
                 val cur = currentState(name)
-                val incoming = alignTo(cur, cols, sqlBody(tr(body)))
+                val incoming = alignTo(cur, cols, spark.sql(tr(body)))
                 val keys = keyList.split(",")
                   .map(_.trim.replaceAll("\"", "").toLowerCase).filter(_.nonEmpty).toSeq
                 val inserts = incoming.join(
@@ -3048,7 +2449,7 @@ object RedshiftScript {
               case _ =>
                 val (cols, body) = parseInsert(colList, rawBody)
                 require(body.nonEmpty, s"unparseable INSERT body: ${rawBody.take(60)}")
-                val incoming = alignTo(currentState(name), cols, sqlBody(tr(body)))
+                val incoming = alignTo(currentState(name), cols, spark.sql(tr(body)))
                 stage(name, currentState(name).unionByName(incoming))
                 report("INSERT", Some(name))
             }
@@ -3125,7 +2526,7 @@ object RedshiftScript {
             // script's otherwise-runnable CTAS chain.
             val toOpt = "(?is)\\bTO\\s+'([^']*)'".r.findFirstMatchIn(optsRaw)
               .map(m => remapPath(m.group(1)))
-            val df = sqlBody(tr(query.replaceAll("''", "'")))
+            val df = spark.sql(tr(query.replaceAll("''", "'")))
             toOpt match {
               case None =>
                 df.queryExecution.analyzed
@@ -3259,7 +2660,7 @@ object RedshiftScript {
             report("CREATE TABLE (DDL)", Some(name))
           case _ if upper.startsWith("SELECT") || upper.startsWith("WITH") ||
               upper.startsWith("(") =>
-            lastSelect = Some(repaired(tr(stmt), sortIsVoid = false)._1)
+            lastSelect = Some(spark.sql(tr(stmt)))
             report("SELECT")
           case other =>
             throw new IllegalArgumentException(
@@ -3274,8 +2675,7 @@ object RedshiftScript {
             // a null/blank message (e.g. a bare MatchError) leaves the
             // failure unclassifiable downstream — fall back to toString
             Some(Option(e.getMessage).filter(_.trim.nonEmpty)
-              .getOrElse(e.toString)),
-            1 + repairs.size, repairs.toList)
+              .getOrElse(e.toString)))
       }
     }
 

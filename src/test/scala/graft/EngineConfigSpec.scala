@@ -44,11 +44,14 @@ class EngineConfigSpec extends SparkSpec {
     assert(sets.isEmpty, sets)
   }
 
-  test("Redshift coercions and lateral aliases are analyzer rules, not text repairs") {
-    // RedshiftCoercions and the lateral-alias rules resolve them; the
-    // Runner's retry loop reads no type-mismatch or lateral-alias error class
+  test("Redshift shapes are analyzer rules; the Runner analyzes each statement once") {
+    // RedshiftCoercions, the lateral-alias rules and the Redshift shape
+    // rules resolve them; the Runner catches no analysis error and reads
+    // no error class to retry a statement
     val runner = Files.readString(Paths.get("src/main/scala/graft/pipeline/RedshiftScript.scala"))
-    val arms = Seq("UNEXPECTED_INPUT_TYPE", "BINARY_OP_DIFF_TYPES", "BINARY_OP_WRONG_TYPE",
+    val arms = Seq("AnalysisException", "UNRESOLVED_COLUMN", "STAR_GROUP_BY_POS",
+      "SCALAR_SUBQUERY_IS_IN_GROUP_BY", "UNSUPPORTED_SUBQUERY_EXPRESSION", "must be aggregated",
+      "UNEXPECTED_INPUT_TYPE", "BINARY_OP_DIFF_TYPES", "BINARY_OP_WRONG_TYPE",
       "LATERAL_COLUMN_ALIAS", "MISSING_AGGREGATION", "AMBIGUOUS_LATERAL_COLUMN_ALIAS")
       .filter(runner.contains)
     assert(arms.isEmpty, arms)

@@ -59,7 +59,6 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(df.schema("prev").dataType === org.apache.spark.sql.types.DateType)
     assert(df.collect().toSeq.map(_.mkString("|")) ===
       Seq("1|16|2024-06-30", "2|-5|2024-06-09", "3|null|null"))
-    assertNoRepairs(r)
   }
 
   test("Redshift date arithmetic: date - date is INT days, timestamp ± int moves whole days") {
@@ -107,7 +106,6 @@ class RedshiftScriptSpec extends SparkSpec {
     val df = r.lastSelect.get
     assert(df.schema.simpleString === schema)
     assert(df.collect().toSeq.map(_.mkString("|")) === rows)
-    assertNoRepairs(r)
   }
 
   test("Redshift coercion: `+` of two numeric-text varchar columns adds them") {
@@ -143,19 +141,6 @@ class RedshiftScriptSpec extends SparkSpec {
     assertCoercion("SELECT k FROM co_src WHERE is_last <> 0 ORDER BY k", "struct<k:int>", "1")
     assertCoercion("SELECT k FROM co_src WHERE is_last != 0 ORDER BY k", "struct<k:int>", "1")
     assertCoercion("SELECT k FROM co_src WHERE is_last = 0 ORDER BY k", "struct<k:int>", "2")
-  }
-
-  test("dropUnresolvableInnerSort removes void CTE sorts, never window ORDER BY") {
-    val cte = "with a as (select distinct c1 from t order by rank_col desc ) " +
-      "select c1 from a"
-    val dropped = RedshiftScript.dropUnresolvableInnerSort(cte, Set("rank_col"))
-    assert(!dropped.toLowerCase.contains("order by"))
-    // a window spec's ORDER BY must survive even when it names the column
-    val win = "select lag(v) over (partition by g order by rank_col) from t"
-    assert(RedshiftScript.dropUnresolvableInnerSort(win, Set("rank_col")) === win)
-    // a LIMITed subquery sort is semantically live — keep it
-    val lim = "select * from (select c from t order by rank_col limit 5) q"
-    assert(RedshiftScript.dropUnresolvableInnerSort(lim, Set("rank_col")) === lim)
   }
 
   test("UPDATE casts the SET value to the column type, not the untouched rows") {
@@ -1209,21 +1194,9 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(r2.ok, r2.reports.mkString("; "))
     assert(spark.table("adv8s.tgt").collect().head.getString(1) == "y")
 
-    // (2) SELECT-* + ordinal GROUP BY with a non-core aggregate head must
-    // map to GROUP BY ALL (grouping), not the windows-only DISTINCT path
-    val g = RedshiftScript.rewriteStarGroupByOrdinal(
-      "SELECT b.*, stddev_samp(x) AS sd FROM t b GROUP BY 1,2")
-    assert(g.toLowerCase.contains("group by all"), g)
-    val g2 = RedshiftScript.rewriteStarGroupByOrdinal(
-      "SELECT b.*, array_agg(x) AS xs FROM t b GROUP BY 1,2")
-    assert(g2.toLowerCase.contains("group by all"), g2)
-    // a varchar( cast is NOT an aggregate head (prefix regexes like
-    // var\w* would have matched it) — windows-only list stays the
-    // DISTINCT de-dup path
-    val g3 = RedshiftScript.rewriteStarGroupByOrdinal(
-      "SELECT b.*, cast(x as varchar(10)) AS s, row_number() over (order by x) AS rn " +
-        "FROM t b GROUP BY 1,2,3")
-    assert(!g3.toLowerCase.contains("group by all"), g3)
+    // (2) SELECT-* + ordinal GROUP BY: a non-core aggregate groups, a
+    // varchar cast does not (the "Redshift shape: SELECT * with GROUP BY
+    // ordinals …" case)
 
     // (3) json_serialize: identity ONLY over the already-stringified
     // SUPER navigation rewriteSuperPaths emits; a genuine variant operand
@@ -1255,36 +1228,24 @@ class RedshiftScriptSpec extends SparkSpec {
   test("correlated ORDER BY + LIMIT 1 rewrites to min_by/max_by and executes") {
     // the 00_allocation.sql:251-258 shape: latest warehouse code
     // at-or-before the allocation, nearest by minute distance
-    spark.sql("SELECT * FROM VALUES (1, TIMESTAMP '2024-01-01 10:00:00'), " +
-      "(2, TIMESTAMP '2024-01-05 10:00:00'), (3, TIMESTAMP '2024-01-01 00:00:00') " +
-      "t(asset_id, allocated_at)").createOrReplaceTempView("cl1_a")
-    spark.sql("SELECT * FROM VALUES (1, 'wh_early', TIMESTAMP '2024-01-01 08:00:00'), " +
-      "(1, 'wh_late', TIMESTAMP '2024-01-01 09:30:00'), " +
-      "(2, 'wh_only', TIMESTAMP '2024-01-04 00:00:00') " +
-      "t(asset_id, warehouse, created_date)").createOrReplaceTempView("cl1_h")
-    val sql = RedshiftScript.translate(
+    limit1Fixtures()
+    val df = spark.sql(RedshiftScript.translate(
       """SELECT a.asset_id,
         |  coalesce(null, (select warehouse from cl1_h h
         |    where a.asset_id = h.asset_id
         |    and date_trunc('day', a.allocated_at::timestamp) >= date_trunc('day', h.created_date::timestamp)
         |    order by datediff('minute', h.created_date::timestamp, a.allocated_at::timestamp) asc
         |    limit 1)) as warehouse
-        |FROM cl1_a a""".stripMargin)
-    val rw = RedshiftScript.rewriteCorrelatedLimit1(sql)
-    assert(rw.contains("max_by"), rw) // datediff(inner, outer) ASC ⇒ max_by inner
-    val rows = spark.sql(rw).collect()
-      .map(r => r.getInt(0) -> r.getString(1)).toMap
+        |FROM cl1_a a""".stripMargin))
+    // datediff(inner, outer) ASC ⇒ max_by inner
+    val picks = df.queryExecution.analyzed.collectWithSubqueries { case p =>
+      p.expressions.flatMap(_.collect {
+        case e: org.apache.spark.sql.catalyst.expressions.aggregate.MaxMinBy => e.prettyName
+      })
+    }.flatten
+    assert(picks === Seq("max_by"))
+    val rows = df.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(rows === Map(1 -> "wh_late", 2 -> "wh_only", 3 -> null))
-    // plain inner-only keys: ASC → min_by, DESC → max_by
-    val asc = RedshiftScript.rewriteCorrelatedLimit1(
-      "SELECT (select v from t h where h.k = o.k order by h.ts limit 1) FROM o")
-    assert(asc.contains("min_by((v), (h.ts))"), asc)
-    val desc = RedshiftScript.rewriteCorrelatedLimit1(
-      "SELECT (select v from t h where h.k = o.k order by h.ts desc limit 1) FROM o")
-    assert(desc.contains("max_by((v), (h.ts))"), desc)
-    // non-LIMIT-1 subqueries are untouched
-    val keep = "SELECT (select max(v) from t h where h.k = o.k) FROM o"
-    assert(RedshiftScript.rewriteCorrelatedLimit1(keep) === keep)
   }
 
   test("translate: 2-arg REGEXP_REPLACE gains the empty replacement") {
@@ -1477,10 +1438,6 @@ class RedshiftScriptSpec extends SparkSpec {
     r
   }
 
-  /** Every statement analyzed on its first attempt: no repair fired. */
-  private def assertNoRepairs(r: RedshiftScript.ScriptResult): Unit =
-    r.reports.foreach(s => assert((s.attempts, s.repairs) === ((1, Nil)), s))
-
   private def assertSameRows(
       got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame,
       ordered: Boolean = false): Unit = {
@@ -1515,7 +1472,6 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(q62.count() > 0)
     val q62Run = new RedshiftScript.Runner(spark, root()).run(QueriesLLM.Q62Script)
     assert(q62Run.ok && q62Run.reports.size === 2, q62Run.reports)
-    assertNoRepairs(q62Run)
     val mart = spark.sql(
       """SELECT user_id, lifetime_events, last_seen, last_day_events,
         |  CAST(lifetime_value AS DECIMAL(18,2)) AS value_dec,
@@ -1633,55 +1589,80 @@ class RedshiftScriptSpec extends SparkSpec {
         |FROM (SELECT *, CAST(lifetime_value AS DECIMAL(18,2)) AS value_dec
         |  FROM la_profile) x""".stripMargin)
     assert(r.reports.map(_.verb) === Seq("DROP", "CREATE TABLE", "SELECT"))
-    assertNoRepairs(r)
   }
 
-  test("an unresolvable top-level ORDER BY is dropped from a CTAS body, not from a returned SELECT") {
+  test("ORDER BY count(DISTINCT v) over a redundant DISTINCT sorts a CTAS body and a returned SELECT") {
     spark.sql("SELECT * FROM VALUES (1, 'a'), (1, 'b'), (2, 'a') AS t(k, v)")
       .createOrReplaceTempView("os_src")
     val body = "SELECT DISTINCT k FROM os_src GROUP BY k ORDER BY count(DISTINCT v) DESC"
-    // the order of a table's rows is void: the repair drops the clause
     val ctas = new RedshiftScript.Runner(spark, root()).run(s"CREATE TABLE os_db.os_out AS $body;")
     assert(ctas.ok, ctas.reports.mkString("; "))
-    assert(ctas.reports.map(r => (r.attempts, r.repairs)) === Seq((2, Seq("drop-top-sort"))))
     assert(spark.table("os_db.os_out").count() === 2)
-    // a returned SELECT's order is its result: it fails instead
+    // a returned SELECT gets Redshift's order: k = 1 has two distinct values
     val select = new RedshiftScript.Runner(spark, root()).run(s"$body;")
-    assert(!select.ok)
-    assert(select.reports.head.error.exists(_.contains("UNRESOLVED_COLUMN")), select.reports)
+    assert(select.ok, select.reports.mkString("; "))
+    assert(select.lastSelect.get.collect().toSeq.map(_.getInt(0)) === Seq(1, 2))
   }
 
-  test("each repair the retry loop still applies is recorded under its own label") {
+  test("each Redshift shape analyzes in one spark.sql") {
     lateralFixtures()
-    def run(sql: String): (Int, Seq[String], Seq[String]) = {
+    def rows(sql: String): Seq[String] = spark.sql(RedshiftScript.translate(sql))
+      .collect().toSeq.map(_.toSeq.mkString("|")).sorted
+    val abc = Seq("a", "b", "c")
+    assert(rows("SELECT s.min FROM (SELECT g, min(created_at)::date FROM la_src GROUP BY g) AS s") ===
+      Seq("2024-06-03", "2024-06-04", "2024-06-10"))
+    assert(rows("SELECT q.max FROM (SELECT MAX(v) FROM la_src) q") === Seq("9"))
+    assert(rows("WITH w AS (SELECT DISTINCT s.g AS g FROM la_src s ORDER BY s.g DESC) SELECT * FROM w") === abc)
+    assert(rows("SELECT DISTINCT s.g AS g FROM la_src s ORDER BY s.g") === abc)
+    assert(rows("SELECT * FROM (SELECT DISTINCT s.g FROM la_src s ORDER BY s.v DESC) x") === abc)
+    // a view stores its body as written; the rules apply where it is read
+    Catalog.replaceTable(spark.table("la_src"), "la_db", "src")
+    spark.sql("CREATE OR REPLACE VIEW la_db.one_inner AS " +
+      "SELECT * FROM (SELECT DISTINCT s.g FROM la_db.src s ORDER BY s.v DESC) x")
+    assert(rows("SELECT * FROM la_db.one_inner") === abc)
+    spark.sql("CREATE OR REPLACE VIEW la_db.one_top AS " +
+      "SELECT DISTINCT g FROM la_db.src GROUP BY g ORDER BY count(DISTINCT v) DESC")
+    assert(rows("SELECT * FROM la_db.one_top") === abc)
+    val kw = Seq("1|3", "1|6", "2|8", "3|1", "4|10", "4|2")
+    assert(rows("SELECT b.*, max(w) AS mw FROM la_hist b GROUP BY 1, 2") === kw.map(r => r + "|" + r.split('|')(1)))
+    assert(rows("SELECT b.*, stddev_samp(w) AS sd FROM la_hist b GROUP BY 1, 2") === kw.map(_ + "|null"))
+    assert(rows(
+      """SELECT b.*, cast(w as varchar(10)) AS s, row_number() over (order by w) AS rn
+        |FROM la_hist b GROUP BY 1, 2, 3""".stripMargin) ===
+      Seq("1|3|3|3", "1|6|6|4", "2|8|8|5", "3|1|1|1", "4|10|10|6", "4|2|2|2"))
+    assert(rows("SELECT * FROM la_hist GROUP BY 1, 2") === kw)
+    val perKey = Seq("1|6|1", "2|8|1", "3|1|1", "4|10|1", "5|null|1", "6|null|1")
+    val sub = "(SELECT MAX(h.w) FROM la_hist h WHERE h.k = o.k)"
+    assert(rows(s"SELECT o.k, $sub AS top, COUNT(*) AS n FROM la_src o GROUP BY o.k") === perKey)
+    assert(rows(s"SELECT o.k, $sub AS top, COUNT(*) AS n FROM la_src o GROUP BY o.k, o.g") === perKey)
+    // Spark 4.1 analyzes these natively
+    assert(rows(s"SELECT o.k, $sub AS top, COUNT(*) FROM la_src o GROUP BY 1, 2") === perKey)
+    assert(rows("SELECT o.g, (SELECT MAX(h.w) FROM la_hist h) AS top, COUNT(*) FROM la_src o GROUP BY 1, 2") ===
+      Seq("a|10|3", "b|10|2", "c|10|1"))
+    assert(rows("SELECT k, (SELECT h.w FROM la_hist h WHERE h.k = o.k ORDER BY h.w DESC LIMIT 1) FROM la_src o") ===
+      Seq("1|6", "2|8", "3|1", "4|10", "5|null", "6|null"))
+  }
+
+  test("Redshift shapes that Redshift rejects too still fail") {
+    lateralFixtures()
+    def error(sql: String): String = {
       val r = new RedshiftScript.Runner(spark, root()).run(sql)
-      assert(r.ok, r.reports.mkString("; "))
-      (r.reports.last.attempts, r.reports.last.repairs,
-        r.lastSelect.get.collect().toSeq.map(_.toSeq.mkString("|")).sorted)
+      assert(!r.ok, r.reports.mkString("; "))
+      r.reports.last.error.getOrElse("")
     }
-    assert(run("SELECT q.max FROM (SELECT MAX(v) FROM la_src) q;") ===
-      ((2, Seq("default-column"), Seq("9"))))
-    assert(run("SELECT DISTINCT s.g AS g FROM la_src s ORDER BY s.g;") ===
-      ((2, Seq("sort-qualifier"), Seq("a", "b", "c"))))
-    assert(run("SELECT * FROM (SELECT DISTINCT s.g FROM la_src s ORDER BY s.v DESC) x;") ===
-      ((3, Seq("sort-qualifier", "drop-inner-sort"), Seq("a", "b", "c"))))
-    assert(run("SELECT * FROM la_hist GROUP BY 1, 2;") ===
-      ((2, Seq("star-group-by"), Seq("1|3", "1|6", "2|8", "3|1", "4|10", "4|2"))))
-    // Spark 4.1 analyzes these natively; the scalar-subquery-first and
-    // correlated-limit-1 repairs serve the shapes pinned in the
-    // "Redshift shape: …" cases
-    assert(run(
-      """SELECT k, (SELECT h.w FROM la_hist h WHERE h.k = o.k ORDER BY h.w DESC LIMIT 1) AS top
-        |FROM la_src o;""".stripMargin) ===
-      ((1, Nil, Seq("1|6", "2|8", "3|1", "4|10", "5|null", "6|null"))))
-    assert(run(
-      """SELECT o.g, (SELECT MAX(h.w) FROM la_hist h) AS top, COUNT(*)
-        |FROM la_src o GROUP BY 1, 2;""".stripMargin) ===
-      ((1, Nil, Seq("a|10|3", "b|10|2", "c|10|1"))))
-    assert(run(
-      """SELECT o.k, (SELECT MAX(h.w) FROM la_hist h WHERE h.k = o.k) AS top, COUNT(*)
-        |FROM la_src o GROUP BY 1, 2;""".stripMargin) ===
-      ((1, Nil, Seq("1|6|1", "2|8|1", "3|1|1", "4|10|1", "5|null|1", "6|null|1"))))
+    // a body's top-level ORDER BY on an input column the DISTINCT drops
+    assert(error("CREATE TABLE sh_db.sh_out AS SELECT DISTINCT s.g FROM la_src s ORDER BY s.v;")
+      .contains("UNRESOLVED_COLUMN"))
+    // an inner ORDER BY on a column that exists nowhere
+    assert(error("SELECT * FROM (SELECT DISTINCT s.g FROM la_src s ORDER BY s.nope DESC) x;")
+      .contains("UNRESOLVED_COLUMN"))
+    assert(error("SELECT * FROM (SELECT s.g FROM la_src s ORDER BY s.nope DESC) x;")
+      .contains("UNRESOLVED_COLUMN"))
+    // a scalar subquery correlated on an ungrouped column
+    assert(error(
+      """SELECT o.g, (SELECT MAX(h.w) FROM la_hist h WHERE h.k = o.k) AS top, COUNT(*) AS n
+        |FROM la_src o GROUP BY o.g;""".stripMargin)
+      .contains("SCALAR_SUBQUERY_IS_IN_GROUP_BY"))
   }
 
   // The cl1 fixtures: allocations and a warehouse history, the
@@ -1882,16 +1863,16 @@ class RedshiftScriptSpec extends SparkSpec {
   }
 
   test("lateral aliases in a temp-table body and in a CREATE VIEW body read back") {
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       """CREATE TEMP TABLE la_tmp AS
         |SELECT k, g, v * 2 AS dd, RANK() OVER (PARTITION BY g ORDER BY dd DESC, k) AS rk
         |FROM la_src;
         |SELECT * FROM la_tmp;""".stripMargin,
       """SELECT k, g, dd, RANK() OVER (PARTITION BY g ORDER BY dd DESC, k) AS rk
-        |FROM (SELECT k, g, v * 2 AS dd FROM la_src) x""".stripMargin))
+        |FROM (SELECT k, g, v * 2 AS dd FROM la_src) x""".stripMargin)
     lateralFixtures()
     Catalog.replaceTable(spark.table("la_src"), "la_db", "src")
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       """CREATE VIEW la_db.la_view AS
         |SELECT k, g, v * 2 AS dd, SUM(dd) OVER (PARTITION BY g) AS gs
         |FROM la_db.src
@@ -1899,56 +1880,56 @@ class RedshiftScriptSpec extends SparkSpec {
         |SELECT * FROM la_db.la_view;""".stripMargin,
       """SELECT k, g, dd, SUM(dd) OVER (PARTITION BY g) AS gs
         |FROM (SELECT k, g, v * 2 AS dd FROM la_src) x
-        |WHERE dd > 3""".stripMargin))
+        |WHERE dd > 3""".stripMargin)
     // stored view text re-analyzes with no session setting: a view over a
     // temp view fails (INVALID_TEMP_OBJ_REFERENCE), so it reads the table
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       """CREATE VIEW la_db.la_grouped_view AS
         |SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
         |FROM la_db.src GROUP BY 1, 2;
         |SELECT * FROM la_db.la_grouped_view;""".stripMargin,
       """SELECT country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
-        |FROM (SELECT g AS country FROM la_src) x GROUP BY 1, 2""".stripMargin))
+        |FROM (SELECT g AS country FROM la_src) x GROUP BY 1, 2""".stripMargin)
   }
 
   test("no lateral alias, a plain select-list one, and an exact duplicated alias line") {
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       "SELECT k, g, v FROM la_src WHERE v > 2;",
-      "SELECT k, g, v FROM la_src WHERE v > 2"))
-    assertNoRepairs(assertSameAsNested(
+      "SELECT k, g, v FROM la_src WHERE v > 2")
+    assertSameAsNested(
       "SELECT k, v + 1 AS a, a * 2 AS b FROM la_src;",
-      "SELECT k, v + 1 AS a, (v + 1) * 2 AS b FROM la_src"))
+      "SELECT k, v + 1 AS a, (v + 1) * 2 AS b FROM la_src")
     // a whole line duplicated (`us_debt_collections/sql/last_payment_event
     // .sql:79-80`) makes the later reference ambiguous in Spark
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       "SELECT k, v + 1 AS a, v + 1 AS a, a * 2 AS b FROM la_src;",
-      "SELECT k, v + 1 AS a, (v + 1) * 2 AS b FROM la_src"))
-    assertNoRepairs(assertSameAsNested(
+      "SELECT k, v + 1 AS a, (v + 1) * 2 AS b FROM la_src")
+    assertSameAsNested(
       "SELECT g, SUM(v) AS s, SUM(v) AS s, s * 2 AS s2 FROM la_src GROUP BY g;",
-      "SELECT g, s, s * 2 AS s2 FROM (SELECT g, SUM(v) AS s FROM la_src GROUP BY g) x"))
+      "SELECT g, s, s * 2 AS s2 FROM (SELECT g, SUM(v) AS s FROM la_src GROUP BY g) x")
   }
 
   test("lateral alias in GROUP BY: an ordinal or a name picks an item reading one") {
     // `11_marketing_reporting/marketing.marketing_daily_asv_targets.sql:28-39`
     val nested = """SELECT country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
                    |FROM (SELECT g AS country FROM la_src) x GROUP BY 1, 2""".stripMargin
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       """SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
-        |FROM la_src GROUP BY 1, 2;""".stripMargin, nested))
-    assertNoRepairs(assertSameAsNested(
+        |FROM la_src GROUP BY 1, 2;""".stripMargin, nested)
+    assertSameAsNested(
       """SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
-        |FROM la_src GROUP BY country, store;""".stripMargin, nested))
+        |FROM la_src GROUP BY country, store;""".stripMargin, nested)
     // a four-alias chain, every item picked by an ordinal
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       """SELECT g AS a1, a1 || 'x' AS a2, a2 || 'y' AS a3, a3 || 'z' AS a4, COUNT(*)
         |FROM la_src GROUP BY 1, 2, 3, 4;""".stripMargin,
       """SELECT a1, a2, a3, a3 || 'z' AS a4, COUNT(*)
         |FROM (SELECT a1, a2, a2 || 'y' AS a3
         |  FROM (SELECT a1, a1 || 'x' AS a2
         |    FROM (SELECT g AS a1 FROM la_src) w) x) y
-        |GROUP BY 1, 2, 3, 4""".stripMargin))
+        |GROUP BY 1, 2, 3, 4""".stripMargin)
     // each UNION branch with its own aliases
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       """SELECT g AS country, 'B2B' || ' ' || country AS store, COUNT(*) AS n
         |FROM la_src GROUP BY 1, 2
         |UNION ALL
@@ -1958,61 +1939,61 @@ class RedshiftScriptSpec extends SparkSpec {
         |FROM (SELECT g AS country FROM la_src) x GROUP BY 1, 2
         |UNION ALL
         |SELECT region, 'B2C' || ' ' || region AS shop, SUM(v) AS n
-        |FROM (SELECT g AS region, v FROM la_src) y GROUP BY 1, 2""".stripMargin))
+        |FROM (SELECT g AS region, v FROM la_src) y GROUP BY 1, 2""".stripMargin)
   }
 
   test("lateral alias inside an aggregate function, alone and with a GROUP BY ordinal") {
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       "SELECT g, v * 2 AS dv, MAX(dv) AS mx FROM la_src GROUP BY g, v;",
       """SELECT g, v * 2 AS dv, MAX(dv2) AS mx
-        |FROM (SELECT g, v, v * 2 AS dv2 FROM la_src) x GROUP BY g, v""".stripMargin))
-    assertNoRepairs(assertSameAsNested(
+        |FROM (SELECT g, v, v * 2 AS dv2 FROM la_src) x GROUP BY g, v""".stripMargin)
+    assertSameAsNested(
       """SELECT g AS grp, grp || '!' AS loud, SUM(LENGTH(loud)) AS n
         |FROM la_src GROUP BY 1, 2;""".stripMargin,
       """SELECT grp, loud, SUM(LENGTH(loud)) AS n
         |FROM (SELECT grp, grp || '!' AS loud FROM (SELECT g AS grp FROM la_src) x) y
-        |GROUP BY 1, 2""".stripMargin))
+        |GROUP BY 1, 2""".stripMargin)
   }
 
   test("lateral alias in a grouped select over a same-named ungrouped source column") {
     // `count(…) AS stock_on_hand, …, stock_on_hand + reserved_count`
     // (`4_dwh_catman/contentful_campaigns.sql:646-656`): the alias wins
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       "SELECT g, COUNT(k) AS v, v + 1 AS v1 FROM la_src GROUP BY g;",
-      "SELECT g, v, v + 1 AS v1 FROM (SELECT g, COUNT(k) AS v FROM la_src GROUP BY g) x"))
-    assertNoRepairs(assertSameAsNested(
+      "SELECT g, v, v + 1 AS v1 FROM (SELECT g, COUNT(k) AS v FROM la_src GROUP BY g) x")
+    assertSameAsNested(
       """SELECT g, COUNT(k) AS v, CASE WHEN v > 1 THEN 'many' ELSE 'one' END AS v1
         |FROM la_src GROUP BY g;""".stripMargin,
       """SELECT g, v, CASE WHEN v > 1 THEN 'many' ELSE 'one' END AS v1
-        |FROM (SELECT g, COUNT(k) AS v FROM la_src GROUP BY g) x""".stripMargin))
+        |FROM (SELECT g, COUNT(k) AS v FROM la_src GROUP BY g) x""".stripMargin)
     // self-shadowed: the `v` of `v + 1` is the alias, the one inside SUM the source
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       "SELECT g, SUM(v) AS v, v + 1 AS v1 FROM la_src GROUP BY g;",
-      "SELECT g, v, v + 1 AS v1 FROM (SELECT g, SUM(v) AS v FROM la_src GROUP BY g) x"))
+      "SELECT g, v, v + 1 AS v1 FROM (SELECT g, SUM(v) AS v FROM la_src GROUP BY g) x")
   }
 
   test("lateral alias in a grouped select: the source column wins where it is valid") {
     // inside an aggregate function: SUM reads the source `v`
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       "SELECT g, k * 100 AS v, SUM(v) AS sv FROM la_src GROUP BY g, k;",
       """SELECT g, k * 100 AS v, SUM(src_v) AS sv
-        |FROM (SELECT g, k, v AS src_v FROM la_src) x GROUP BY g, k""".stripMargin))
+        |FROM (SELECT g, k, v AS src_v FROM la_src) x GROUP BY g, k""".stripMargin)
     // in an item a GROUP BY ordinal picks: the key is the source `v * 10`
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       "SELECT k % 2 AS v, v * 10 AS v10 FROM la_src GROUP BY 1, 2;",
       """SELECT k % 2 AS v, src_v * 10 AS v10
-        |FROM (SELECT k, v AS src_v FROM la_src) x GROUP BY 1, 2""".stripMargin))
+        |FROM (SELECT k, v AS src_v FROM la_src) x GROUP BY 1, 2""".stripMargin)
     // under GROUP BY ALL every item is a key
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       "SELECT k % 2 AS v, v * 10 AS v10, COUNT(*) AS n FROM la_src GROUP BY ALL;",
       """SELECT k % 2 AS v, src_v * 10 AS v10, COUNT(*) AS n
-        |FROM (SELECT k, v AS src_v FROM la_src) x GROUP BY ALL""".stripMargin))
+        |FROM (SELECT k, v AS src_v FROM la_src) x GROUP BY ALL""".stripMargin)
   }
 
   test("lateral aliases in a CTE that an unused CTE reads, with and without GROUP BY") {
     // rebuilt from `91_External/Legal/IntraStat NL/IntraStat_v2.sql:106`:
     // the CASE of `_final` reads two aliases, and `export` reads `period`
-    assertNoRepairs(assertSameAsNested(
+    assertSameAsNested(
       """WITH src AS (SELECT k, g, v FROM la_src),
         |_final AS (
         |  SELECT k, g AS period, v AS supplementary_unit,
@@ -2023,8 +2004,8 @@ class RedshiftScriptSpec extends SparkSpec {
         |SELECT * FROM _final;""".stripMargin,
       """SELECT k, period, supplementary_unit,
         |  CASE WHEN supplementary_unit > 4 THEN period ELSE 'n/a' END AS unit_period
-        |FROM (SELECT k, g AS period, v AS supplementary_unit FROM la_src) x""".stripMargin))
-    assertNoRepairs(assertSameAsNested(
+        |FROM (SELECT k, g AS period, v AS supplementary_unit FROM la_src) x""".stripMargin)
+    assertSameAsNested(
       """WITH src AS (SELECT k, g, v FROM la_src),
         |_final AS (
         |  SELECT g AS period, SUM(v) AS supplementary_unit,
@@ -2035,7 +2016,7 @@ class RedshiftScriptSpec extends SparkSpec {
         |SELECT * FROM _final;""".stripMargin,
       """SELECT period, supplementary_unit,
         |  CASE WHEN supplementary_unit > 5 THEN period ELSE 'n/a' END AS unit_period
-        |FROM (SELECT g AS period, SUM(v) AS supplementary_unit FROM la_src GROUP BY g) x""".stripMargin))
+        |FROM (SELECT g AS period, SUM(v) AS supplementary_unit FROM la_src GROUP BY g) x""".stripMargin)
   }
 
   test("lateral aliases in WHERE leave qualified names, literals and ORDER BY alone") {
@@ -2076,6 +2057,16 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(res.ok, res.reports.mkString("; "))
     assert(res.reports.head.verb === "DELETE USING")
     assert(spark.table("rs_cte.tgt").count() === before - doomed)
+  }
+
+  test("tempLayoutRoot makes a directory that is deleted at JVM exit") {
+    val root = RedshiftScript.tempLayoutRoot(spark, "graft-layout")
+    val path = new org.apache.hadoop.fs.Path(root)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    assert(fs.getFileStatus(path).isDirectory)
+    // cancelling finds the registration
+    assert(fs.cancelDeleteOnExit(path))
+    fs.delete(path, true)
   }
 
   test("runSqlDir routes a multi-statement file through the interpreter") {

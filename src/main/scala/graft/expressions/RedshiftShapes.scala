@@ -90,25 +90,28 @@ case class MarkRedshiftShapes(session: SparkSession) extends Rule[LogicalPlan] {
       case f: UnresolvedFunction => Some(f.nameParts.last.toLowerCase)
       case _ => None
     }
-    def name(alias: String, list: Seq[NamedExpression]): Seq[NamedExpression] =
-      if (list.exists(_.isInstanceOf[UnresolvedStar])) list
+    // the list with the default names `reads` asks for, if any
+    def named(alias: String, list: Seq[NamedExpression]): Option[Seq[NamedExpression]] =
+      if (list.exists(_.isInstanceOf[UnresolvedStar])) None
       else {
         val taken = collection.mutable.Set(list.collect {
           case Alias(_, n) => n.toLowerCase
           case u: UnresolvedAttribute => u.nameParts.last.toLowerCase
         }: _*)
-        list.map {
+        val out = list.map {
           case u @ UnresolvedAlias(e, _) => fnName(e)
             .filter(n => !taken(n) && reads.exists(r => conf.resolver(r._1, alias) && conf.resolver(r._2, n)))
             .fold[NamedExpression](u) { n => taken += n; Alias(e, n)() }
           case item => item
         }
+        Some(out).filter(_ != list)
       }
     plan.resolveOperatorsWithPruning(_.containsPattern(UNRESOLVED_ALIAS)) {
       case a @ SubqueryAlias(id, p: Project) =>
-        a.copy(child = p.copy(projectList = name(id.name, p.projectList)))
+        named(id.name, p.projectList).fold[LogicalPlan](a)(l => a.copy(child = p.copy(projectList = l)))
       case a @ SubqueryAlias(id, g: Aggregate) =>
-        a.copy(child = g.copy(aggregateExpressions = name(id.name, g.aggregateExpressions)))
+        named(id.name, g.aggregateExpressions)
+          .fold[LogicalPlan](a)(l => a.copy(child = g.copy(aggregateExpressions = l)))
     }
   }
 

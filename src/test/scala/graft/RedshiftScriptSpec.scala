@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class RedshiftScriptSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private def root(): String = Files.createTempDirectory("graft-script").toString
+  private def root(): String = RedshiftScript.tempLayoutRoot(spark, "graft-script")
 
   test("splitStatements respects strings, line comments and block comments") {
     val s =

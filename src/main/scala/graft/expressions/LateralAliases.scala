@@ -57,16 +57,23 @@ case class LateralAliasRef(name: String, definition: Expression, overSource: Boo
 object MarkLateralAliases extends Rule[LogicalPlan] {
   private type Defs = Vector[(String, Expression)]
 
+  // a node that marks nothing is returned as it is, not as an equal copy
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
     case p: Project if !p.resolved =>
       val (list, _, child) = mark(p.projectList, p.child, None)
-      p.copy(projectList = list, child = child)
+      if (same(list, p.projectList) && (child eq p.child)) p
+      else p.copy(projectList = list, child = child)
     case a: Aggregate if !a.resolved =>
       val (list, at, child) = mark(a.aggregateExpressions, a.child, Some(a.groupingExpressions))
-      a.copy(groupingExpressions = a.groupingExpressions.map(_.transform {
+      val groups = a.groupingExpressions.map(_.transform {
         case o @ UnresolvedOrdinal(i) => at.lift(i - 1).fold[Expression](o)(p => UnresolvedOrdinal(p + 1))
-      }), aggregateExpressions = list, child = child)
+      })
+      if (same(list, a.aggregateExpressions) && same(groups, a.groupingExpressions) && (child eq a.child)) a
+      else a.copy(groupingExpressions = groups, aggregateExpressions = list, child = child)
   }
+
+  private def same(a: Seq[Expression], b: Seq[Expression]): Boolean =
+    a.length == b.length && a.lazyZip(b).forall(_ eq _)
 
   /** The marked list, the new position of each original item (a dropped
     * duplicate takes its first copy's), and the marked child.
@@ -94,9 +101,8 @@ object MarkLateralAliases extends Rule[LogicalPlan] {
         case w: WindowExpression => refs(w, defs)
         case s: SubqueryExpression =>
           // the subquery's own aliases first: they shadow the outer ones
-          s.withNewPlan(apply(s.plan).resolveOperators {
-            case f: Filter => f.copy(condition = refs(f.condition, defs, plainOnly = true))
-          })
+          val plan = apply(s.plan).resolveOperators { case f: Filter => where(f, defs) }
+          if (plan eq s.plan) s else s.withNewPlan(plan)
       }
       val g =
         if (groups.isEmpty || defs.isEmpty) m
@@ -109,9 +115,15 @@ object MarkLateralAliases extends Rule[LogicalPlan] {
       g.asInstanceOf[NamedExpression]
     }
     (marked, copyOf.map(kept.indexOf), child match {
-      case f: Filter => f.copy(condition = refs(f.condition, defs, plainOnly = true))
+      case f: Filter => where(f, defs)
       case c => c
     })
+  }
+
+  /** A WHERE with its references to `defs` marked. */
+  private def where(f: Filter, defs: Defs): Filter = {
+    val condition = refs(f.condition, defs, plainOnly = true)
+    if (condition eq f.condition) f else f.copy(condition = condition)
   }
 
   /** The items a GROUP BY ordinal or alias name picks (all of them under

@@ -43,45 +43,20 @@ object Writers {
       path,
       Seq(dateCol))
 
-  /** MERGE-by-key into an existing Parquet table
-    * (`bi-airflow-prod/dags/us_debt_collections/sql/last_payment_event.sql:23`):
-    * updates win over existing rows; result fully rewritten (for a
-    * transactional table format this would be a native MERGE).
-    */
-  def mergeByKey(
-      spark: SparkSession,
-      updates: DataFrame,
-      path: String,
-      keys: Seq[String]): Unit = {
-    // a swap that crashed between rename-aside and rename-in left the
-    // data in the backup; restore BEFORE reading — falling through to the
-    // empty-table branch here would silently merge against nothing and
-    // then destroy the backup
-    recoverCrashedSwap(spark, path)
-    val existing =
-      try spark.read.parquet(path)
-      catch { case _: Exception => spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], updates.schema) }
-    val merged = existing.join(updates.select(keys.map(col): _*), keys, "left_anti")
-      .unionByName(updates)
-    // write-new-then-swap so a failed write never corrupts the target
-    // (reference "no ghost reads": business_logic/segment/parquet_rewriter.py:36-54)
-    val tmp = path + "__tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    atomicSwap(spark, tmp, path)
-  }
-
   /** Restore a swap that crashed between rename-aside and rename-in:
     * target absent + backup present ⇒ the backup holds the only copy.
+    * True when it restored one.
     */
-  private[graft] def recoverCrashedSwap(spark: SparkSession, path: String): Unit = {
+  private[graft] def recoverCrashedSwap(spark: SparkSession, path: String): Boolean = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val target = new org.apache.hadoop.fs.Path(path)
     val backup = new org.apache.hadoop.fs.Path(path + "__old")
-    if (!fs.exists(target) && fs.exists(backup)) {
+    val crashed = !fs.exists(target) && fs.exists(backup)
+    if (crashed)
       require(fs.rename(backup, target),
         s"crashed-swap recovery failed: could not rename $backup back to $path")
-    }
+    crashed
   }
 
   /** Swap a freshly-written directory into place via rename-aside:
@@ -123,27 +98,6 @@ object Writers {
       throw new IllegalStateException(s"could not rename $tmpDir into $path")
     }
     fs.delete(backup, true)
-  }
-
-  /** UPDATE … WHERE as read-modify-swap — the reference's post-hoc fix
-    * pattern (45 files; e.g. GDPR anonymization,
-    * `8_monitoring/gdpr/anonymize_gdpr_columns.sql`): rows matching the
-    * condition get the assignments applied; the table is rewritten behind
-    * an atomic rename so readers never see a partial update.
-    */
-  def updateWhere(
-      spark: SparkSession,
-      path: String,
-      condition: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column]): Unit = {
-    recoverCrashedSwap(spark, path) // see mergeByKey
-    val current = spark.read.parquet(path)
-    val updated = assignments.foldLeft(current) { case (df, (c, v)) =>
-      df.withColumn(c, when(condition, v).otherwise(col(c)))
-    }
-    val tmp = path + "__tmp"
-    updated.write.mode("overwrite").parquet(tmp)
-    atomicSwap(spark, tmp, path)
   }
 
   /** Bucketed + sorted catalog table — the DISTKEY/SORTKEY analogue

@@ -2,6 +2,11 @@ package graft.pipeline
 
 import graft.io.Writers
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Coalesce, Expression, If, IsNotNull, Literal, MonotonicallyIncreasingID, Not}
+import org.apache.spark.sql.catalyst.expressions.Literal.{FalseLiteral, TrueLiteral}
+import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftAnti, LeftOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, Filter, HintInfo, InsertAction, Join, JoinHint, LogicalPlan, MergeAction, MergeIntoTable, MergeRows, NO_BROADCAST_AND_REPLICATION, Project, SubqueryAlias, Union, UpdateAction, UpdateTable}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -17,9 +22,10 @@ import scala.collection.mutable
   *     becomes a `repartition` on that key — the co-location hint it is);
   *   - `CREATE TABLE db.t AS q` → parquet written behind
   *     [[Writers.atomicSwap]] + session-catalog registration;
-  *   - `DELETE FROM t WHERE p` / `INSERT INTO t q` / `UPDATE t SET …` /
-  *     `TRUNCATE t` → a transaction-local OVERLAY DataFrame per table
-  *     (anti-filter / unionByName / conditional rewrite / empty);
+  *   - `DELETE` / `INSERT INTO t q` / `UPDATE` / `MERGE` / `TRUNCATE t`
+  *     → a transaction-local OVERLAY DataFrame per table; DELETE, UPDATE
+  *     and MERGE (with UPDATE … FROM and DELETE … USING as MERGEs) are
+  *     built from Spark's resolved plan of the statement ([[newState]]);
   *   - `BEGIN … COMMIT` → overlays materialize once per table at COMMIT,
   *     each behind an atomic swap (+ REFRESH TABLE); statements outside a
   *     transaction auto-commit. `ROLLBACK` drops the overlays.
@@ -34,8 +40,8 @@ import scala.collection.mutable
   *
   * In-transaction reads are read-your-writes across BOTH statement
   * forms: DataFrame-level verbs resolve tables through the overlay
-  * directly, and raw SQL bodies parsed by `spark.sql` (SELECT, CREATE
-  * TABLE AS, the query of an INSERT/UPDATE…FROM) have their references
+  * directly, and raw SQL parsed by Spark (SELECT, CREATE TABLE AS, the
+  * query of an INSERT, a whole DML statement) has its references
   * to overlaid tables rewritten to overlay-backed temp views before
   * parsing — a statement reading a table mutated earlier in the same
   * transaction sees the staged mutation, as in Redshift. Failure follows
@@ -1533,48 +1539,81 @@ object RedshiftScript {
     s"(?is)^DROP\\s+(?:MATERIALIZED\\s+)?VIEW\\s+(?:IF\\s+EXISTS\\s+)?($Nm)\\s*(?:CASCADE\\s*)?$$".r
   private[graft] val CreateRe =
     s"(?is)^CREATE\\s+(TEMP|TEMPORARY\\s+)?\\s*TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?($Nm)(.*?)\\bAS\\b(.*)$$".r
-  // Redshift's FROM is OPTIONAL in DELETE (`upsert.sql`'s
-  // `DELETE stg_events.grover_button_impressions WHERE …`)
-  // the keyword lookahead keeps the reference's malformed
-  // `DELETE FROM WHERE …` from misparsing as a table named FROM
-  private[pipeline] val DeleteUsingRe =
-    s"(?is)^DELETE\\s+(?:FROM\\s+)?(?!WHERE\\b|USING\\b|FROM\\b)($Nm)\\s+USING\\s+($Nm)\\s*(?:AS\\s+)?(\\w+)?\\s+WHERE\\s+(.*)$$".r
-  // postgres-style CTE-prefixed DELETE (`WITH dups AS (…) DELETE FROM t
-  // USING dups src WHERE …`, `staging/intercom_deleted_conversations.sql`):
-  // the USING source resolves against the CTE list. The DELETE keyword is
-  // located with the comment/string-aware depth-0 scanner — a `WITH …
-  // SELECT` whose text merely MENTIONS "DELETE FROM x USING y" inside a
-  // string literal or comment must stay a SELECT, not become a
-  // destructive staged delete.
-  private[graft] object CteDeleteUsingRe {
-    def unapply(stmt: String): Option[(String, String, String, String, String)] = {
-      if (!stmt.trim.toUpperCase.startsWith("WITH")) return None
-      val di = topKeywordIndex(stmt, "DELETE")
-      if (di <= 0) return None
-      stmt.substring(di) match {
-        case DeleteUsingRe(name, srcName, alias, cond) =>
-          Some((stmt.substring(0, di), name, srcName, alias, cond))
-        case _ => None
-      }
-    }
-  }
-  private[pipeline] val DeleteRe =
-    s"(?is)^DELETE\\s+(?:FROM\\s+)?(?!WHERE\\b|USING\\b|FROM\\b)($Nm)(?:\\s+WHERE\\s+(.*))?$$".r
   private[graft] val InsertRe =
     s"(?is)^INSERT\\s+INTO\\s+($Nm)\\s*(\\([^)]*\\))?\\s*(.*)$$".r
-  // one head pattern for both UPDATE forms; the SET remainder is routed
-  // by a depth-and-string-aware scan for a top-level FROM (a scalar
-  // subquery's FROM inside the SET list must not trigger the join form)
-  // the alias may be AS-prefixed (`07_session_marketing_mapping.sql:163`:
-  // `UPDATE segment.session_marketing_mapping_web AS s SET …`)
-  private[pipeline] val UpdateHeadRe =
-    s"(?is)^UPDATE\\s+($Nm)(?:\\s+(?:AS\\s+)?(\\w+))?\\s+SET\\s+(.*)$$".r
   private[pipeline] val TruncateRe =
     s"(?is)^TRUNCATE\\s+(?:TABLE\\s+)?($Nm)\\s*$$".r
-  private[pipeline] val MergeRe =
-    (s"(?is)^MERGE\\s+INTO\\s+($Nm)\\s+USING\\s+($Nm)\\s*(?:AS\\s+)?(\\w+)?\\s+" +
-      "ON\\s+(.*?)\\s+WHEN\\s+MATCHED\\s+THEN\\s+UPDATE\\s+SET\\s+(.*?)\\s+" +
-      "WHEN\\s+NOT\\s+MATCHED\\s+THEN\\s+INSERT\\s+(?:VALUES\\s*)?\\((.*)\\)\\s*$").r
+  // the heads of the three DML verbs: the target, its alias, the rest.
+  // Redshift's FROM is optional in DELETE (`upsert.sql`'s `DELETE
+  // stg_events.grover_button_impressions WHERE …`); the keyword lookahead
+  // keeps the reference's malformed `DELETE FROM WHERE …` from parsing as
+  // a table named WHERE. The UPDATE alias may be AS-prefixed
+  // (`07_session_marketing_mapping.sql:163`).
+  private val UpdateHeadRe =
+    s"(?is)^UPDATE\\s+($Nm)(?:\\s+(?:AS\\s+)?(\\w+))?\\s+SET\\s+(.*)$$".r
+  private val DeleteHeadRe =
+    (s"(?is)^DELETE\\s+(?:FROM\\s+)?(?!WHERE\\b|USING\\b|FROM\\b)($Nm)" +
+      s"(?:\\s+(?:AS\\s+)?(?!WHERE\\b|USING\\b)(\\w+))?\\s*((?:USING|WHERE)\\b.*)?$$").r
+  private val MergeHeadRe = s"(?is)^MERGE\\s+INTO\\s+($Nm)\\s.*".r
+
+  /** A Redshift DML statement in Spark's grammar, with its verb label
+    * (`UPDATE`, `UPDATE FROM`, `DELETE`, `DELETE USING` or `MERGE`), or
+    * None. Spark parses plain UPDATE, DELETE FROM and MERGE as written;
+    * this rewrites only the heads it rejects:
+    *   - `UPDATE t [a] SET … FROM f [WHERE c]` becomes `MERGE INTO t [a]
+    *     USING f' ON c WHEN MATCHED THEN UPDATE SET …` (`ON true` with
+    *     no WHERE);
+    *   - `[WITH …] DELETE [FROM] t [a] USING f [WHERE c]` becomes `[WITH
+    *     …] MERGE INTO t [a] USING f' ON c WHEN MATCHED THEN DELETE`;
+    *   - DELETE gains its optional FROM;
+    *   - a MERGE `INSERT VALUES (…)` with no column list gains `columns`
+    *     of the target.
+    * `source(f, whereless)` makes `f'`, the MERGE source, from the FROM or
+    * USING list as written. Expressions, conditions and names stay as
+    * written; the Runner translates the whole statement afterwards.
+    */
+  private[graft] def dmlStatement(
+      stmt: String,
+      source: (String, Boolean) => String = (f, _) => f,
+      columns: String => Seq[String] = _ => Nil): Option[(String, String)] = {
+    // a CTE list ahead of the verb (`WITH dups AS (…) DELETE FROM t USING
+    // dups …`, `staging/intercom_deleted_conversations.sql`); the verb is
+    // found by the comment- and string-aware depth-0 scanner, so a `WITH
+    // … SELECT` that only mentions one inside a literal stays a SELECT
+    val at = if (!stmt.toUpperCase.startsWith("WITH")) 0 else {
+      val verbs = Seq("UPDATE", "DELETE", "MERGE").map(topKeywordIndex(stmt, _)).filter(_ > 0)
+      val select = topKeywordIndex(stmt, "SELECT")
+      if (verbs.isEmpty || (select >= 0 && select < verbs.min)) return None else verbs.min
+    }
+    val (cte, body) = stmt.splitAt(at)
+    def as(alias: String) = Option(alias).fold("")(" " + _)
+    def merge(name: String, alias: String, from: String, cond: Option[String], action: String) =
+      s"${cte}MERGE INTO $name${as(alias)} USING ${source(from, cond.isEmpty)} " +
+        s"ON ${cond.getOrElse("true")} WHEN MATCHED THEN $action"
+    body match {
+      case UpdateHeadRe(name, alias, rest) =>
+        // a top-level FROM only: a scalar subquery's FROM inside the SET
+        // list is not the join form
+        splitTopKeyword(rest, "FROM") match {
+          case (set, Some(fromRest)) =>
+            val (from, cond) = splitTopKeyword(fromRest, "WHERE")
+            Some("UPDATE FROM" -> merge(name, alias, from, cond, s"UPDATE SET $set"))
+          case _ => Some("UPDATE" -> stmt)
+        }
+      case DeleteHeadRe(name, alias, rest) if Option(rest).exists(_.toUpperCase.startsWith("USING")) =>
+        val (using, cond) = splitTopKeyword(rest.substring(5), "WHERE")
+        Some("DELETE USING" -> merge(name, alias, using, cond, "DELETE"))
+      case DeleteHeadRe(name, alias, rest) =>
+        Some("DELETE" -> s"${cte}DELETE FROM $name${as(alias)} ${Option(rest).getOrElse("")}")
+      case MergeHeadRe(name) =>
+        val cols = columns(name).map(c => s"`$c`").mkString(", ")
+        Some("MERGE" -> (if (cols.isEmpty) stmt else
+          rewriteOutsideStrings(stmt, "(?i)\\bINSERT\\s+VALUES\\s*\\(",
+            java.util.regex.Matcher.quoteReplacement(s"INSERT ($cols) VALUES ("))))
+      case _ => None
+    }
+  }
+
   // Redshift table move: `ALTER TABLE tgt APPEND FROM src [FILLTARGET]`
   // (`master_historical/*_on_failure.sql` recovery scripts)
   private[pipeline] val AlterAppendRe =
@@ -1638,34 +1677,11 @@ object RedshiftScript {
     * string literals AND comments, at an identifier boundary (`_` counts
     * as a word character — `valid_from` must never split at its `from`).
     */
-  private[graft] def splitTopKeyword(s: String, kw: String): (String, Option[String]) = {
-    def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    var depth = 0; var inStr = false; var inLc = false; var inBc = false
-    var i = 0
-    val upper = s.toUpperCase
-    val kwU = kw.toUpperCase
-    while (i < s.length) {
-      val c = s.charAt(i)
-      val next = if (i + 1 < s.length) s.charAt(i + 1) else ' '
-      if (inLc) { if (c == '\n') inLc = false }
-      else if (inBc) { if (c == '*' && next == '/') { inBc = false; i += 1 } }
-      else if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '-' if next == '-' => inLc = true; i += 1
-        case '/' if next == '*' => inBc = true; i += 1
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 && upper.startsWith(kwU, i) &&
-              (i == 0 || !isWord(s.charAt(i - 1))) &&
-              (i + kwU.length >= s.length || !isWord(s.charAt(i + kwU.length))))
-            return (s.substring(0, i).trim, Some(s.substring(i + kwU.length).trim))
-      }
-      i += 1
+  private[graft] def splitTopKeyword(s: String, kw: String): (String, Option[String]) =
+    topKeywordIndex(s, kw) match {
+      case -1 => (s.trim, None)
+      case i => (s.substring(0, i).trim, Some(s.substring(i + kw.length).trim))
     }
-    (s.trim, None)
-  }
 
   /** Apply regex rewrites only OUTSIDE single-quoted string literals and
     * comments — alias retargeting and dialect translation must never
@@ -1760,14 +1776,9 @@ object RedshiftScript {
       case AlterAppendRe(_, _, _) => "ALTER APPEND"
       case AlterLayoutRe() => "ALTER LAYOUT (no-op)"
       case CreateRe(t, _, _, _) => if (t != null) "CREATE TEMP TABLE" else "CREATE TABLE"
-      case CteDeleteUsingRe(_, _, _, _, _) => "DELETE USING"
-      case DeleteUsingRe(_, _, _, _) => "DELETE USING"
-      case DeleteRe(_, _) => "DELETE"
+      case _ if dmlStatement(stmt).isDefined => dmlStatement(stmt).get._1
       case InsertRe(_, cl, body) if parseInsert(cl, body)._2.nonEmpty => "INSERT"
-      case UpdateHeadRe(_, _, rest) =>
-        if (splitTopKeyword(rest, "FROM")._2.isDefined) "UPDATE FROM" else "UPDATE"
       case TruncateRe(_) => "TRUNCATE"
-      case MergeRe(_, _, _, _, _, _) => "MERGE"
       case AlterOwnerRe() => "ALTER OWNER (no-op)"
       case AlterConstraintRe(_, _) => "ALTER CONSTRAINT (no-op)"
       case AlterAddRe(_, _, _) => "ALTER ADD"
@@ -1847,6 +1858,82 @@ object RedshiftScript {
       .replaceAll("(?i)BACKUP\\s+(?:YES|NO)", " ")
     (cleaned, distkey)
   }
+
+  // ----------------------------------------------------- the DML evaluator
+
+  /** The new rows of a DML statement's target, from Spark's resolved plan
+    * of the statement (whose assignments Spark has already cast to their
+    * column types):
+    *   - DELETE keeps the rows its condition is not true for;
+    *   - UPDATE projects each assigned column under its condition;
+    *   - MERGE is the group-based plan of Spark's `RewriteMergeIntoTable`:
+    *     the target with a row id and a presence flag, joined (full outer
+    *     when a NOT MATCHED action inserts, else left outer) to the source
+    *     with its presence flag, and one `MergeRows` that keeps, updates,
+    *     inserts or discards each joined row and copies every other target
+    *     row. `MergeRows` fails a target row that two source rows match
+    *     unless there is no MATCHED action or the only one is an
+    *     unconditional DELETE (Spark's `shouldCheckCardinality`). A MERGE with only NOT MATCHED actions
+    *     appends the unmatched source rows to the target, as Spark does.
+    */
+  private[pipeline] def newState(plan: LogicalPlan): LogicalPlan = plan match {
+    case DeleteFromTable(table, cond) => Filter(Not(Coalesce(Seq(cond, FalseLiteral))), table)
+    case UpdateTable(table, set, cond) =>
+      val hit = cond.fold[Expression](TrueLiteral)(c => Coalesce(Seq(c, FalseLiteral)))
+      Project(table.output.zip(assigned(table.output, set, identity)).map {
+        case (a, v) if v eq a => a
+        case (a, v) => Alias(If(hit, v, a), a.name)()
+      }, table)
+    case m: MergeIntoTable =>
+      val out = m.targetTable.output
+      def instruction(action: MergeAction): MergeRows.Instruction = action match {
+        case DeleteAction(c) => MergeRows.Discard(c.getOrElse(TrueLiteral))
+        case UpdateAction(c, set, _) =>
+          MergeRows.Keep(MergeRows.Update, c.getOrElse(TrueLiteral), assigned(out, set, identity))
+        case InsertAction(c, set) => MergeRows.Keep(MergeRows.Insert, c.getOrElse(TrueLiteral),
+          assigned(out, set, a => Literal(null, a.dataType)))
+        case star => throw new IllegalStateException(s"unresolved MERGE action: $star")
+      }
+      val copy = MergeRows.Keep(MergeRows.Copy, TrueLiteral, out)
+      val (matched, notMatched, bySource) = (m.matchedActions.map(instruction),
+        m.notMatchedActions.map(instruction), m.notMatchedBySourceActions.map(instruction))
+      def rows(present: (Expression, Expression), instructions: Seq[Seq[MergeRows.Instruction]],
+          check: Boolean, join: LogicalPlan) = {
+        val outputs = instructions.flatten.flatMap(_.outputs)
+        val attrs = out.indices.map(i =>
+          AttributeReference(out(i).name, out(i).dataType, outputs.exists(_(i).nullable))())
+        MergeRows(present._1, present._2, instructions(0), instructions(1), instructions(2),
+          check, attrs, join)
+      }
+      if (matched.isEmpty && bySource.isEmpty)
+        Union(m.targetTable, rows((TrueLiteral, FalseLiteral), Seq(Nil, notMatched, Nil), check = false,
+          Join(m.sourceTable, m.targetTable, LeftAnti, Some(m.mergeCondition), JoinHint.NONE)))
+      else {
+        val check = m.matchedActions match {
+          case Nil | Seq(DeleteAction(None)) => false
+          case _ => true
+        }
+        val fromTarget = Alias(TrueLiteral, "__row_from_target")()
+        val fromSource = Alias(TrueLiteral, "__row_from_source")()
+        val rowId = Alias(MonotonicallyIncreasingID(), MergeRows.ROW_ID)()
+        // all matches of a target row must meet in one task for the check
+        val hint = if (!check) JoinHint.NONE
+          else JoinHint(Some(HintInfo(Some(NO_BROADCAST_AND_REPLICATION))), None)
+        val join = Join(
+          Project(out ++ Seq(fromTarget) ++ Option.when(check)(rowId), m.targetTable),
+          Project(m.sourceTable.output :+ fromSource, m.sourceTable),
+          if (notMatched.isEmpty) LeftOuter else FullOuter, Some(m.mergeCondition), hint)
+        def present(flag: Alias) = IsNotNull(join.output.find(_.exprId == flag.exprId).get)
+        rows((present(fromSource), present(fromTarget)),
+          Seq(matched :+ copy, notMatched, bySource :+ copy), check, join)
+      }
+  }
+
+  /** Each of `cols`' assigned value, or `default` of the column. */
+  private def assigned(cols: Seq[Attribute], set: Seq[Assignment], default: Attribute => Expression)
+      : Seq[Expression] =
+    cols.map(c => set.collectFirst { case Assignment(k: Attribute, v) if k.exprId == c.exprId => v }
+      .getOrElse(default(c)))
 
   // ------------------------------------------------------------ the runner
 
@@ -2002,7 +2089,19 @@ object RedshiftScript {
     }
 
     private def currentState(name: String): DataFrame =
-      overlay.getOrElse(norm(name).toLowerCase, spark.table(bq(name)))
+      overlay.getOrElse(norm(name).toLowerCase, { recover(name); spark.table(bq(name)) })
+
+    /** A swap that crashed between rename-aside and rename-in left a
+      * catalog table's only copy in its backup, and the table reads as
+      * empty: restore it before a statement reads the table, or the
+      * statement computes from no rows and its commit then swaps over the
+      * restored backup and deletes it.
+      */
+    private def recover(name: String): Unit =
+      if (!isTempView(name) && spark.catalog.tableExists(bq(name)) &&
+          spark.catalog.getTable(bq(name)).tableType != "VIEW" &&
+          Writers.recoverCrashedSwap(spark, tablePath(name)))
+        spark.catalog.refreshTable(bq(name))
 
     private def isTempView(name: String): Boolean =
       spark.sessionState.catalog.isTempView(norm(name).split("\\.").toIndexedSeq)
@@ -2019,7 +2118,7 @@ object RedshiftScript {
       if (ovKey.isEmpty && isTempView(name)) df.createOrReplaceTempView(norm(name))
       else {
         overlay(ovKey.getOrElse(norm(name).toLowerCase)) = df
-        // auto-commit failure (e.g. the MERGE uniqueness raise_error
+        // auto-commit failure (e.g. a MERGE cardinality violation
         // firing during the staged write) must not leave the poisoned
         // frame in the overlay — later statements would re-trigger it
         // through read-your-writes and every subsequent commit
@@ -2075,17 +2174,21 @@ object RedshiftScript {
       * Redshift COMMIT is the analogue of the swap phase here).
       */
     private def commit(): Unit = {
-      // phase 1 may fail mid-way (e.g. a deferred MERGE raise_error
-      // firing at materialization — note the failure then attributes to
-      // COMMIT in the report, with the originating statement named in
-      // the error message): staging dirs already written for OTHER
-      // overlays must not be left as orphans next to their tables
+      // phase 1 may fail mid-way (e.g. a MERGE cardinality violation
+      // firing at materialization — the failure then attributes to COMMIT
+      // in the report, with the failing table named in the error
+      // message): staging dirs already written for OTHER overlays must
+      // not be left as orphans next to their tables
       val staged = mutable.ListBuffer.empty[(String, String, String)]
       try {
         overlay.foreach { case (name, df) =>
           val path = tablePath(name)
           val tmp = path + "__txn"
-          df.write.mode("overwrite").parquet(tmp)
+          try df.write.mode("overwrite").parquet(tmp)
+          catch {
+            case e: Exception =>
+              throw new IllegalStateException(s"staged write of $name failed: ${e.getMessage}", e)
+          }
           staged += ((name, path, tmp))
         }
       } catch {
@@ -2268,24 +2371,6 @@ object RedshiftScript {
       alignTo(target, cols, incoming)
     }
 
-    /** Split `a = e1, b = e2` at top-level commas (parens/quotes aware). */
-    private def splitAssignments(s: String): Seq[(String, String)] = {
-      val parts = mutable.ListBuffer.empty[String]
-      var depth = 0; var inStr = false; val cur = new StringBuilder
-      s.foreach {
-        case '\'' => inStr = !inStr; cur.append('\'')
-        case '(' if !inStr => depth += 1; cur.append('(')
-        case ')' if !inStr => depth -= 1; cur.append(')')
-        case ',' if !inStr && depth == 0 => parts += cur.toString; cur.clear()
-        case c => cur.append(c)
-      }
-      parts += cur.toString
-      parts.toSeq.map { a =>
-        val Array(k, v) = a.split("=", 2)
-        (k.trim, v.trim)
-      }
-    }
-
     def runStatement(raw: String): StatementReport = {
       // doubled schema qualifier on a DDL target
       // (`CREATE VIEW dm_catman.dm_catman.v_add_on_US`,
@@ -2334,9 +2419,7 @@ object RedshiftScript {
                 // pin temps still reading the table before its files go
                 // (same lazy-temp hazard as commit()'s swap)
                 materializeTempsReading(Seq(path))
-                val fs = org.apache.hadoop.fs.FileSystem.get(
-                  new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-                fs.delete(new org.apache.hadoop.fs.Path(path), true)
+                deletePath(path)
               }
             } else spark.catalog.dropTempView(norm(name))
             overlay.remove(norm(name).toLowerCase)
@@ -2369,22 +2452,10 @@ object RedshiftScript {
             // single-part, and the script reads it back by the dotted
             // name; session scoping is the runner's lifetime either way
             report(if (temp != null) "CREATE TEMP TABLE" else "CREATE TABLE", Some(name))
-          case CteDeleteUsingRe(cte, name, srcName, aliasOpt, cond) =>
-            // CTE-prefixed DELETE: the USING source is a CTE — build it
-            // with the WITH list attached
-            val src = spark.sql(tr(s"$cte SELECT * FROM $srcName"))
-            stage(name, deleteUsing(name, srcName, src, Option(aliasOpt), cond))
-            report("DELETE USING", Some(name))
-          case DeleteUsingRe(name, srcName, aliasOpt, cond) =>
-            stage(name,
-              deleteUsing(name, srcName, currentState(srcName), Option(aliasOpt), cond))
-            report("DELETE USING", Some(name))
-          case DeleteRe(name, cond) =>
-            val df =
-              if (cond == null) currentState(name).limit(0)
-              else currentState(name).filter(!coalesce(expr(tr(cond)), lit(false)))
+          case Dml(verb, sql) =>
+            val (name, df) = dmlState(sql)
             stage(name, df)
-            report("DELETE", Some(name))
+            report(verb, Some(name))
           case CreateViewRe(name, body) =>
             Catalog.createOrReplaceView(spark, name, tr(body))
             report("CREATE VIEW", Some(name))
@@ -2410,41 +2481,20 @@ object RedshiftScript {
               case OnConflictRe(bodyPart, keyList, action) =>
                 val (cols, body) = parseInsert(colList, bodyPart)
                 require(body.nonEmpty, s"unparseable INSERT body: ${bodyPart.take(60)}")
-                val cur = currentState(name)
-                val incoming = alignTo(cur, cols, spark.sql(tr(body)))
-                val keys = keyList.split(",")
-                  .map(_.trim.replaceAll("\"", "").toLowerCase).filter(_.nonEmpty).toSeq
-                val inserts = incoming.join(
-                  cur.select(keys.map(col): _*), keys, "left_anti")
-                val existing =
-                  if (action.trim.equalsIgnoreCase("NOTHING")) cur
-                  else {
-                    val assigns = splitAssignments(
-                      action.replaceFirst("(?is)^UPDATE\\s+SET\\s+", ""))
-                      .map { case (c, v) =>
-                        c.replaceAll("\"", "").toLowerCase ->
-                          tr(v).replaceAll("(?i)\\bexcluded\\s*\\.", "e.")
-                      }.toMap
-                    val joined = cur.alias("t").join(
-                      incoming.withColumn("__graft_m", lit(1)).alias("e"),
-                      keys.map(k => col(s"t.$k") === col(s"e.$k")).reduce(_ && _),
-                      "left")
-                    val out = cur.schema.fields.map { f =>
-                      assigns.get(f.name.toLowerCase) match {
-                        case Some(v) =>
-                          // cast the assignment, not the merged branch —
-                          // see the plain-UPDATE case: coercing the ELSE
-                          // column to the expression's type breaks
-                          // untouched rows
-                          when(col("e.__graft_m").isNotNull,
-                              expr(v).cast(f.dataType))
-                            .otherwise(col(s"t.${f.name}")).as(f.name)
-                        case None => col(s"t.${f.name}").as(f.name)
-                      }
-                    }
-                    joined.select(out.toIndexedSeq: _*)
-                  }
-                stage(name, existing.unionByName(inserts))
+                // the incoming rows, aligned as a plain INSERT aligns them,
+                // are the source of a MERGE aliased EXCLUDED
+                alignTo(currentState(name), cols, spark.sql(tr(body)))
+                  .createOrReplaceTempView(ExcludedView)
+                val base = s"`${norm(name).split("\\.").last}`"
+                val on = keyList.split(",").map(_.trim).filter(_.nonEmpty)
+                  .map(k => s"$base.$k = excluded.$k").mkString(" AND ")
+                val matched =
+                  if (action.trim.equalsIgnoreCase("NOTHING")) "" else s"WHEN MATCHED THEN $action "
+                val (target, df) =
+                  try dmlState(s"MERGE INTO $name USING $ExcludedView excluded ON $on " +
+                    s"${matched}WHEN NOT MATCHED THEN INSERT *")
+                  finally spark.catalog.dropTempView(ExcludedView)
+                stage(target, df)
                 report("INSERT (on conflict)", Some(name))
               case _ =>
                 val (cols, body) = parseInsert(colList, rawBody)
@@ -2453,47 +2503,6 @@ object RedshiftScript {
                 stage(name, currentState(name).unionByName(incoming))
                 report("INSERT", Some(name))
             }
-          case UpdateHeadRe(name, tAliasOpt, rest) =>
-            splitTopKeyword(rest, "FROM") match {
-              case (setClause, Some(fromRest)) =>
-                val (fromSrc, cond) = splitTopKeyword(fromRest, "WHERE")
-                stage(name, updateFrom(name, Option(tAliasOpt), setClause, fromSrc, cond))
-                report("UPDATE FROM", Some(name))
-              case (setAndWhere, None) =>
-                val (assignments, cond) = splitTopKeyword(setAndWhere, "WHERE")
-                val where =
-                  cond.map(c => coalesce(expr(tr(c)), lit(false))).getOrElse(lit(true))
-                val cur = currentState(name)
-                val assigns = splitAssignments(assignments)
-                  .map { case (c, v) => c.replaceAll("\"", "").toLowerCase -> expr(tr(v)) }
-                  .toMap
-                // ALL assignments and the WHERE evaluate against the OLD
-                // row in one select — SQL UPDATE snapshot semantics (a
-                // sequential withColumn chain would let `SET a = b, b = a`
-                // read already-updated values)
-                val known = cur.schema.fieldNames.map(_.toLowerCase).toSet
-                val unknown = assigns.keySet.diff(known)
-                require(unknown.isEmpty,
-                  s"UPDATE $name SET references unknown column(s): ${unknown.mkString(", ")}")
-                val out = cur.schema.fields.map { f =>
-                  assigns.get(f.name.toLowerCase) match {
-                    case Some(e) =>
-                      // cast the SET value to the COLUMN's type before the
-                      // branch merges (Redshift assignment semantics). A
-                      // bare when/otherwise would coerce the ELSE column
-                      // to the expression's type instead — `SET valid_to =
-                      // current_timestamp …` over a string column casts
-                      // every untouched row's string to timestamp and
-                      // blows up at materialization (`91_External/SFTP/
-                      // saturn_price_data.sql:12`)
-                      when(where, e.cast(f.dataType)).otherwise(col(f.name))
-                        .as(f.name)
-                    case None => col(f.name)
-                  }
-                }
-                stage(name, cur.select(out.toIndexedSeq: _*))
-                report("UPDATE", Some(name))
-            }
           case TruncateRe(name) =>
             stage(name, currentState(name).limit(0))
             report("TRUNCATE", Some(name))
@@ -2501,10 +2510,6 @@ object RedshiftScript {
             stage(name, currentState(name).unionByName(
               copyInto(name, Option(colList), optsRaw)))
             report("COPY", Some(name))
-          case MergeRe(tgtName, srcName, aliasOpt, onCond, setClause, insertVals) =>
-            stage(tgtName, mergeInto(tgtName, srcName, Option(aliasOpt),
-              onCond, setClause, insertVals))
-            report("MERGE", Some(tgtName))
           case AlterAppendRe(tgt, src, fillTarget) =>
             // Redshift ALTER APPEND moves the source's rows to the target:
             // append + empty the source, both in one transaction overlay.
@@ -2679,263 +2684,65 @@ object RedshiftScript {
       }
     }
 
-    /** MERGE INTO t USING s ON t.k = a.k WHEN MATCHED THEN UPDATE SET …
-      * WHEN NOT MATCHED THEN INSERT [VALUES] (…) — the reference's one
-      * real MERGE (`us_debt_collections/sql/last_payment_event.sql:23-45`):
-      * a keyed upsert. Implemented as a full-outer join on the ON-clause
-      * equalities: matched rows apply the SET list, target-only rows pass
-      * through, source-only rows take the positional INSERT values.
-      * Scope: conjunctive equi-ON; `"quoted"` identifiers unquoted;
-      * source must be key-unique (the reference dedups first — enforced
-      * here by a runtime require, since a many-match MERGE is
-      * ill-defined).
-      */
-    private def mergeInto(
-        tgtName: String,
-        srcName: String,
-        aliasOpt: Option[String],
-        onCond: String,
-        setClause: String,
-        insertVals: String): DataFrame = {
-      val alias = aliasOpt.map(_.trim).filter(_.nonEmpty)
-        .getOrElse(norm(srcName).split("\\.").last)
-      val t = currentState(tgtName)
-      val s = currentState(srcName)
-      def unq(x: String) = x.replaceAll("\"", "").trim
-      // source references (alias.col / src.col, optionally "quoted") → __s_ cols
-      def rewriteSrcRefs(e: String): String =
-        RedshiftScript.rewriteOutsideStrings(e,
-          s"(?i)\\b(?:${java.util.regex.Pattern.quote(alias)}|${java.util.regex.Pattern.quote(srcName)})\\.\"?(\\w+)\"?", "__s_$1")
-      val tPref = t.withColumn("__t_present", lit(true))
-      val keyPairs = onCond.split("(?i)\\bAND\\b").toSeq.map { eq =>
-        val Array(l, r) = eq.split("=", 2).map(unq)
-        def base(x: String) = x.split("\\.").last.trim
-        val lIsSrc = l.toLowerCase.startsWith(alias.toLowerCase + ".") ||
-          l.toLowerCase.startsWith(srcName.toLowerCase + ".")
-        if (lIsSrc) (base(r), base(l)) else (base(l), base(r))
-      }
-      // source key-uniqueness guard folded into the join pass: a window
-      // count over the merge keys rides the same shuffle the join needs —
-      // no separate eager aggregation job over the source (a full extra
-      // pass per statement at scale). The raise_error fires during the
-      // commit write if any key matches more than once.
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keyPairs.map(p => col(s"__s_${p._2}")): _*)
-      val sPref = s
-        .select(s.columns.map(c => col(c).as(s"__s_$c")) :+ lit(true).as("__s_present"): _*)
-        .withColumn("__s_dupcnt", count(lit(1)).over(w))
-      val joinCond = keyPairs.map { case (tk, sk) => col(tk) === col(s"__s_$sk") }.reduce(_ && _)
-      val joined = tPref.join(sPref, joinCond, "full_outer")
-      val assigns = splitAssignments(setClause)
-        .map { case (k, v) => unq(k).toLowerCase -> expr(tr(rewriteSrcRefs(v))) }.toMap
-      val inserts = splitTop(insertVals).map(v => expr(tr(rewriteSrcRefs(v))))
-      require(inserts.size == t.schema.size,
-        s"MERGE INSERT arity ${inserts.size} != table arity ${t.schema.size}")
-      val dupMsg = s"MERGE source $srcName is not unique on ${keyPairs.map(_._2).mkString(",")}"
-      val out = t.schema.fields.zipWithIndex.map { case (f, i) =>
-        val merged = when(col("__t_present").isNotNull && col("__s_present").isNotNull,
-          assigns.getOrElse(f.name.toLowerCase, col(f.name)))
-          .when(col("__t_present").isNotNull, col(f.name))
-          .otherwise(inserts(i))
-          .cast(f.dataType)
-        // the guard rides EVERY kept output column — a guard on one
-        // column alone is pruned away with it by a narrower reader; the
-        // shared window count computes once
-        when(coalesce(col("__s_dupcnt"), lit(0L)) > 1L,
-          raise_error(lit(dupMsg)).cast(f.dataType)).otherwise(merged)
-          .as(f.name)
-      }
-      joined.select(out.toIndexedSeq: _*)
+    private val ExcludedView = "__graft_excluded"
+
+    /** The Runner's view of [[RedshiftScript.dmlStatement]]: the MERGE
+      * source of a FROM or USING list, and a target's columns. */
+    private object Dml {
+      def unapply(stmt: String): Option[(String, String)] =
+        dmlStatement(stmt, dmlSource, currentState(_).columns.toSeq)
     }
 
-    /** DELETE FROM t USING s WHERE t.k = s.k → anti-join: keep the target
-      * rows with NO matching source row.
+    /** A MERGE source for an UPDATE's FROM list or a DELETE's USING list.
+      * One relation or aliased subquery stays as written. Several (a JOIN
+      * or a comma list) become one derived table of one struct per
+      * relation, named by the relation's alias, so `x.col` in SET, ON and
+      * WHERE still reads relation `x`. The aliases come from Spark's parse
+      * of the list. With no WHERE, every target row takes the same source
+      * row, the first in the order of every orderable column, as
+      * Redshift takes an arbitrary one.
       */
-    private def deleteUsing(
-        name: String,
-        srcName: String,
-        src: DataFrame,
-        aliasOpt: Option[String],
-        cond: String): DataFrame = {
-      val alias = aliasOpt.map(_.trim).filter(_.nonEmpty)
-        .getOrElse(norm(srcName).split("\\.").last)
-      val tBase = norm(name).split("\\.").last
-      // full dotted names first, bare-table names LAST and guarded by a
-      // (?<![\w.]) lookbehind — `\b` alone matches after a dot, so the
-      // bare target name would mangle the TAIL of the source's qualified
-      // refs (`staging.voucherify_validation_rules.id` → `staging.__t.id`,
-      // `data-airflow-prod/dags/voucherify/sql/upsert_validation_rules.sql:6`)
-      val condRewritten = Seq(
-        (s"(?i)(?<![\\w.])${java.util.regex.Pattern.quote(name)}\\.", "__t."),
-        (s"(?i)(?<![\\w.])${java.util.regex.Pattern.quote(srcName)}\\.", s"$alias."),
-        (s"(?i)(?<![\\w.])${java.util.regex.Pattern.quote(tBase)}\\.", "__t."))
-        .foldLeft(tr(cond)) { case (acc, (pat, rep)) =>
-          RedshiftScript.rewriteOutsideStrings(acc, pat, rep)
-        }
-      currentState(name).alias("__t")
-        .join(src.alias(alias), expr(condRewritten), "left_anti")
+    private def dmlSource(from: String, whereless: Boolean): String = {
+      def aliases(p: LogicalPlan): Seq[String] = p match {
+        case j: Join => aliases(j.left) ++ aliases(j.right)
+        case a: SubqueryAlias => Seq(a.alias)
+        case r: UnresolvedRelation => Seq(r.multipartIdentifier.last)
+        case _ => Seq("")
+      }
+      val relations = aliases(spark.sessionState.sqlParser
+        .parsePlan(translate(s"SELECT * FROM $from", currentDate)).children.head)
+      val (select, alias) = relations match {
+        case Seq(a) => (s"SELECT * FROM $from", a)
+        case many => (many.map(a => s"struct($a.*) AS $a").mkString("SELECT ", ", ", s" FROM $from"), "__src")
+      }
+      if (!whereless) if (relations.size == 1) from else s"($select) $alias"
+      else {
+        val order = spark.sql(tr(select)).schema.fields.groupBy(_.name.toLowerCase).values
+          .collect { case Array(f) if org.apache.spark.sql.catalyst.expressions.RowOrdering
+            .isOrderable(f.dataType) => s"`${f.name}`" }.toSeq.sorted
+        s"($select${order.mkString(" ORDER BY ", ", ", "")} LIMIT 1) $alias"
+      }
     }
 
-    private var updSeq = 0
-
-    /** Redshift's join-update: `UPDATE t [a] SET c = s.x, … FROM source
-      * [s] WHERE join-cond` — rows of t with a matching source row take
-      * the SET expressions; others pass through. Built as SQL over temp
-      * views so the FROM source can be a table or an arbitrary subquery.
-      * Contract (as in the reference's usage, which joins deduped/
-      * aggregated subqueries): the source matches each target row at most
-      * once — enforced the way MERGE enforces source uniqueness: a window
-      * count over a synthetic target row id rides the join's own pass and
-      * raises at materialization, instead of an extra count()+count()
-      * action pair per statement (a full join re-execution at scale).
+    /** The target and new state of a DML statement in Spark's grammar: the
+      * statement is translated, parsed, and analyzed by Spark without
+      * running it, and [[RedshiftScript.newState]] builds the target's new
+      * rows from the resolved MergeIntoTable, UpdateTable or
+      * DeleteFromTable. A target left mid-swap by a crash is restored
+      * before it is read.
       */
-    private def updateFrom(
-        name: String,
-        tAliasOpt: Option[String],
-        setClause: String,
-        fromSrc: String,
-        cond: Option[String]): DataFrame = {
-      updSeq += 1
-      val tView = s"__upd_t_$updSeq"
-      val tBase = norm(name).split("\\.").last
-      val tAlias = tAliasOpt.map(_.trim).filter(_.nonEmpty).getOrElse(tBase)
-      // FROM source: `(subquery) alias` | `table [AS] alias` | `table` —
-      // the source text routes through tr() for dialect rewrites and
-      // read-your-writes against transaction overlays. The third tuple
-      // member maps secondary-join-alias references (`pii.x`) to their
-      // projected passthrough names in the wrapper (see the joined case).
-      val (srcSql, srcAlias, secondaryRefs) = {
-        val t = fromSrc.trim
-        val TableAlias = "(?s)^([\\w.]+)\\s+(?:(?i:AS)\\s+)?(\\w+)$".r
-        val SubqueryAlias = "(?s)^(\\(.*\\))\\s*(?:(?i:AS)\\s+)?(\\w+)?$".r
-        t match {
-          case TableAlias(tbl, a) => (s"SELECT * FROM ${tr(tbl)}", a, Nil)
-          case SubqueryAlias(sub, a) =>
-            (s"SELECT * FROM ${tr(sub)} __src", Option(a).getOrElse("__src"), Nil)
-          case multi if "(?is)\\bjoin\\b".r.findFirstIn(multi).isDefined =>
-            // a JOINed source (`FROM master.customer t INNER JOIN
-            // ods_data_sensitive.pii_deleted_users_delta pii ON …`,
-            // `8_monitoring/gdpr/anonymize_gdpr_columns.sql`): flattening
-            // it behind a fresh alias would strand the SET expressions'
-            // inner-alias references (`t.gender`) — project the FIRST
-            // relation's columns and keep ITS alias as the source alias,
-            // so those references resolve against the wrapper. SET/WHERE
-            // references to the OTHER join relations' aliases are
-            // projected through the wrapper under mangled passthrough
-            // names and rewritten to them at assignment build time.
-            "(?is)^([\\w.]+)\\s+(?:as\\s+)?(\\w+)\\s".r
-              .findFirstMatchIn(multi) match {
-              case Some(fm) if !Set("join", "inner", "left", "right", "full",
-                  "cross", "on", "where")(fm.group(2).toLowerCase) =>
-                val first = fm.group(2)
-                // simple-table join aliases beyond the first relation
-                val joinAliases =
-                  "(?is)\\bjoin\\s+[\\w.]+\\s+(?:as\\s+)?(\\w+)".r
-                    .findAllMatchIn(multi).map(_.group(1).toLowerCase)
-                    .filterNot(Set("on", "where", first.toLowerCase)).toSet
-                // alias.col references in SET / WHERE that resolve to a
-                // secondary join relation
-                val refText = setClause + " " + cond.getOrElse("")
-                val refs = "(?i)(?<![\\w.])(\\w+)\\s*\\.\\s*(\\w+)".r
-                  .findAllMatchIn(refText)
-                  .map(m => (m.group(1).toLowerCase, m.group(2).toLowerCase))
-                  .filter { case (a, _) => joinAliases(a) }
-                  .toSeq.distinct
-                val passthru = refs.map { case (a, c) =>
-                  ((a, c), s"__j_${a}_$c")
-                }
-                val extra = passthru
-                  .map { case ((a, c), p) => s", $a.$c AS $p" }.mkString
-                (s"SELECT $first.*$extra FROM ${tr(multi)}", first, passthru)
-              case _ => (s"SELECT * FROM ${tr(multi)}", "__src", Nil)
-            }
-          case tbl => (s"SELECT * FROM ${tr(tbl)}", tbl.split("\\.").last, Nil)
-        }
-      }
-      // (?<![\w.]) lookbehind: `\b` alone also matches after a dot, so a
-      // bare target name would mangle the tail of ANOTHER relation's
-      // qualified refs (see the DELETE USING cond rewrite above)
-      def retarget(e: String): String = Seq(
-        (s"(?i)(?<![\\w.])${java.util.regex.Pattern.quote(name)}\\.", s"$tView."),
-        (s"(?i)(?<![\\w.])${java.util.regex.Pattern.quote(tBase)}\\.", s"$tView."),
-        (s"(?i)(?<![\\w.])${java.util.regex.Pattern.quote(tAlias)}\\.", s"$tView."))
-        .foldLeft(e) { case (acc, (pat, rep)) =>
-          RedshiftScript.rewriteOutsideStrings(acc, pat, rep)
-        }
-      // secondary join-alias references (`pii.x`) resolve through their
-      // projected passthrough names on the wrapper
-      def resrc(e: String): String = secondaryRefs.foldLeft(e) {
-        case (acc, ((a, c), p)) =>
-          RedshiftScript.rewriteOutsideStrings(acc,
-            s"(?i)(?<![\\w.])${java.util.regex.Pattern.quote(a)}\\s*\\.\\s*" +
-              s"${java.util.regex.Pattern.quote(c)}\\b",
-            s"$srcAlias.$p")
-      }
-      // an UPDATE … FROM with NO WHERE joins every source row to every
-      // target row; Redshift updates each target row once with an
-      // arbitrary matching source row (`8_monitoring/gdpr/
-      // anonymize_gdpr_columns.sql` masks via an uncorrelated self-join)
-      // — pick ONE source row deterministically instead of raising the
-      // multiplicity guard. LIMIT 1 alone is plan-dependent in Spark;
-      // order by every unambiguous orderable column first so reruns pick
-      // the same row.
-      val srcSqlEff =
-        if (cond.isEmpty) {
-          val fields = spark.sql(srcSql).schema.fields
-          val ord = fields.groupBy(_.name.toLowerCase).values
-            .collect { case Array(f) if org.apache.spark.sql.catalyst
-              .expressions.RowOrdering.isOrderable(f.dataType) => f.name }
-            .toSeq.sorted.map(c => s"__one.`$c`")
-          val orderBy =
-            if (ord.isEmpty) "" else s" ORDER BY ${ord.mkString(", ")}"
-          s"SELECT * FROM ($srcSql) __one$orderBy LIMIT 1"
-        } else srcSql
-      val target = currentState(name)
-      target.withColumn("__rid", monotonically_increasing_id())
-        .createOrReplaceTempView(tView)
-      val assigns = splitAssignments(setClause)
-        .map { case (k, v) =>
-          k.replaceAll("\"", "").toLowerCase -> resrc(retarget(tr(v)))
-        }.toMap
-      val unknownSet = assigns.keySet.diff(target.schema.fieldNames.map(_.toLowerCase).toSet)
-      require(unknownSet.isEmpty,
-        s"UPDATE $name SET references unknown column(s): ${unknownSet.mkString(", ")}")
-      // single quotes doubled: a "quoted" identifier may legally contain
-      // one, and it must not break the spliced raise_error literal
-      val dupMsg =
-        s"UPDATE FROM source matches some rows of $name more than once"
-          .replace("'", "''")
-      // the multiplicity guard rides EVERY output column (a guard on one
-      // column alone would be pruned away with it by a narrower reader),
-      // like MERGE's uniqueness check it shares the join's own pass — the
-      // identical window collapses to one computation
-      val guard =
-        s"count(1) OVER (PARTITION BY $tView.__rid) > 1"
-      val outCols = target.schema.fields.map { f =>
-        val base = assigns.get(f.name.toLowerCase) match {
-          case Some(e) =>
-            // cast the SET value INSIDE the branch (assignment
-            // semantics): casting the merged CASE would first coerce the
-            // ELSE column to the expression's type and break untouched
-            // rows (string column + timestamp expression)
-            s"CASE WHEN $srcAlias.__match THEN CAST(($e) AS ${f.dataType.sql}) ELSE $tView.`${f.name}` END"
-          case None => s"$tView.`${f.name}`"
-        }
-        s"CASE WHEN $guard THEN CAST(raise_error('$dupMsg') AS ${f.dataType.sql}) ELSE $base END AS `${f.name}`"
-      }
-      val onCond = cond.map(c => resrc(retarget(tr(c)))).getOrElse("true")
-      val sql =
-        s"""SELECT ${outCols.mkString(", ")}
-           |FROM $tView
-           |LEFT JOIN (SELECT *, true AS __match FROM ($srcSqlEff)) $srcAlias
-           |  ON $onCond""".stripMargin
-      // ONE execution of the join+window plan: the eager checkpoint fires
-      // the guard at statement time and later in-transaction readers (and
-      // the commit write) reuse the materialized result instead of
-      // re-running the join per read
-      val joined = spark.sql(sql).localCheckpoint()
-      spark.catalog.dropTempView(tView) // plan captured; view no longer needed
-      joined
+    private def dmlState(sql: String): (String, DataFrame) = {
+      val parsed = spark.sessionState.sqlParser.parsePlan(tr(sql))
+      val name = parsed.collectFirst {
+        case m: MergeIntoTable => m.targetTable
+        case u: UpdateTable => u.table
+        case d: DeleteFromTable => d.table
+      }.flatMap(_.collectFirst { case r: UnresolvedRelation => r.multipartIdentifier.mkString(".") })
+        .getOrElse(throw new IllegalArgumentException(s"no DML target in: ${sql.take(60)}"))
+      recover(name)
+      val analyzed = spark.sessionState
+        .executePlan(parsed, org.apache.spark.sql.execution.CommandExecutionMode.SKIP).analyzed
+      (name, org.apache.spark.sql.graft.PlanBridge.ofRows(spark, newState(analyzed)))
     }
 
     def run(script: String): ScriptResult = {
@@ -2964,7 +2771,7 @@ object RedshiftScript {
       if (inTxn && !txnAborted) {
         // mirror the explicit-COMMIT error path: a deferred
         // materialization failure surfacing here (e.g. a MERGE
-        // uniqueness raise_error firing at the staged write) must not
+        // cardinality violation firing at the staged write) must not
         // escape run() — that would leave the overlay registered and
         // inTxn set, so a reused Runner's next script would commit this
         // script's failed staged mutations. Report it as a failed

@@ -46,7 +46,7 @@ class DimDatesSpec extends SparkSpec {
       .withColumn("datum", expr("date'1900-01-01'"))
     graft.pipeline.Catalog.replaceTable(seed, "public", "dim_dates")
 
-    val root = Files.createTempDirectory("graft-dim-dates").toString
+    val root = tempDir("graft-dim-dates")
     assert(layer.runAll(root) === Map.empty)
     assert(spark.table("public.dim_dates").count() === 366L)
 

@@ -56,4 +56,16 @@ class EngineConfigSpec extends SparkSpec {
       .filter(runner.contains)
     assert(arms.isEmpty, arms)
   }
+
+  test("DML runs from Spark's resolved plans") {
+    // MERGE, UPDATE and DELETE are evaluated from the analyzer's resolved
+    // MergeIntoTable / UpdateTable / DeleteFromTable: no statement body is
+    // split by regex or rebuilt with renamed columns, and Writers keeps no
+    // second upsert path
+    def read(f: String) = Files.readString(Paths.get(s"src/main/scala/graft/$f"))
+    val runner = Seq("MergeRe", "DeleteUsingRe", "splitAssignments", "__s_", "__j_", "__upd_t_")
+      .filter(read("pipeline/RedshiftScript.scala").contains)
+    val writers = Seq("mergeByKey", "updateWhere").filter(read("io/Writers.scala").contains)
+    assert(runner.isEmpty && writers.isEmpty, runner ++ writers)
+  }
 }

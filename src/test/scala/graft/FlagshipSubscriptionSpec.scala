@@ -21,7 +21,7 @@ import org.apache.spark.sql.Row
 class FlagshipSubscriptionSpec extends SparkSpec {
 
   private def root(): String =
-    java.nio.file.Files.createTempDirectory("graft-flagship").toString
+    tempDir("graft-flagship")
 
   // ---- kafka contract event payloads (reference-shaped, synthetic) ----
   private def bt(price: String, cur: String) =

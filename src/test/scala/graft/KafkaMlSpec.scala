@@ -22,7 +22,7 @@ class KafkaMlSpec extends SparkSpec {
       java.sql.Timestamp.valueOf("2024-01-01 12:00:00"), 0)
 
   test("kafka-shaped stream runs the same parse/dedup/merge-sink chain (S5 contract)") {
-    val base = Files.createTempDirectory("graft-kafka").toString
+    val base = tempDir("graft-kafka")
     val tgt = s"$base/tgt"; val chk = s"$base/chk"
     val schema = StructType(Seq(
       StructField("id", StringType), StructField("ts", TimestampType),
@@ -68,7 +68,7 @@ class KafkaMlSpec extends SparkSpec {
     val median = features.stat.approxQuantile("n_events", Array(0.5), 0.0)(0)
     val labels = features
       .select(col("user_id"), (col("n_events") < median).cast("double").as("label"))
-    val out = Files.createTempDirectory("graft-ml").toString + "/scores"
+    val out = tempDir("graft-ml") + "/scores"
     val scores = Scoring.churnScoresWriteback(events, labels, anchor, out)
     assert(scores.count() === 15)
     assert(scores.columns.toSeq ===

@@ -305,7 +305,7 @@ object LayerHarness {
         // matching/02_clean_up.sql` drops the RDS-loaded temps)
         layer.stageAll()
         layer.runAll(
-          java.nio.file.Files.createTempDirectory(s"graft-rerun").toString)
+          SparkSpec.tempDir(s"graft-rerun"))
       }
     (failures, rerun, layer.summaryJson(layerName, failures))
   }
@@ -2087,7 +2087,7 @@ object LayerHarness {
                 // event_id NOT IN (…)`, `1_ods_ops/91_shipcloud_incoming
                 // .sql:52,58`) — plain translate+sql under-resolves
                 val df0 = new RedshiftScript.Runner(spark,
-                  java.nio.file.Files.createTempDirectory("graft-arity").toString,
+                  SparkSpec.tempDir("graft-arity"),
                   pinned, stopOnError = false).queryDf(body).limit(0)
                 // a DUPLICATE select alias is valid Redshift positional
                 // (the Intercom parts INSERT aliases `type` twice) but
@@ -2283,7 +2283,7 @@ object LayerHarness {
                 try {
                   val (insCols, body) = RedshiftScript.parseInsert(cl, rawBody)
                   val src = new RedshiftScript.Runner(spark,
-                    java.nio.file.Files.createTempDirectory("graft-align").toString,
+                    SparkSpec.tempDir("graft-align"),
                     pinned, stopOnError = false).queryDf(body).limit(0)
                     .schema.fields
                   val tgt = spark.table(t).schema.fields
@@ -3319,7 +3319,7 @@ object LayerHarness {
       */
     def converge(maxRounds: Int = 60): Map[String, String] = {
       stageAll()
-      val root = java.nio.file.Files.createTempDirectory("graft-layer").toString
+      val root = SparkSpec.tempDir("graft-layer")
       bootstrap(root)
       var round = 0
       var lastErr = Map.empty[String, String]

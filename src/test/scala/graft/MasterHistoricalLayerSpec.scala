@@ -199,7 +199,7 @@ class MasterHistoricalLayerSpec extends SparkSpec {
     //    the `date` stamp, while the rebuild's `SELECT *, current_date as
     //    date` puts `date` last — the positional daily INSERT would
     //    misalign on Redshift exactly as it does here).
-    val root = Files.createTempDirectory("graft-layer").toString
+    val root = tempDir("graft-layer")
     def runPlans(ps: Seq[ScriptPlan], tag: String): Set[String] = {
       val results = ps.map { pl =>
         (pl.name, new RedshiftScript.Runner(spark, root, Some(Pinned)).run(pl.text))

@@ -350,7 +350,7 @@ class MasterLayerSpec extends SparkSpec {
     // INSERT select. UNCONDITIONAL replace — another spec on the shared
     // session may have left a same-named master.* table with a different
     // schema (the MasterHistoricalLayerSpec lesson).
-    val root = Files.createTempDirectory("graft-master-layer").toString
+    val root = tempDir("graft-master-layer")
     val runnable = scripts.filterNot(s => BrokenInReference(s._1))
     val bootErr = mutable.Map.empty[String, String]
     val created = mutable.Set.empty[String]

@@ -341,7 +341,7 @@ class OdsCoreLayerSpec extends SparkSpec {
         if (!FixtureCols.contains(t)) spark.sql(s"DROP TABLE IF EXISTS $t")
       }
     }
-    val root = Files.createTempDirectory("graft-ods-core").toString
+    val root = tempDir("graft-ods-core")
     val bootErr = mutable.Map.empty[String, String]
     val created = mutable.Set.empty[String]
     // run the whole layer per pass (a script's CTAS may be another's

@@ -42,9 +42,9 @@ class ParseCoverageSpec extends SparkSpec {
       val s = RedshiftScript.stripLeadingComments(stmt.trim)
       val up = s.toUpperCase
       s match {
-        // CTE-prefixed DELETE executes `cte SELECT * FROM src` — measure that
-        case RedshiftScript.CteDeleteUsingRe(cte, _, srcName, _, _) =>
-          Some(s"$cte SELECT * FROM $srcName")
+        // a CTE-prefixed DELETE USING executes as `cte MERGE …` — measure that
+        case _ if up.startsWith("WITH") && RedshiftScript.dmlStatement(s).isDefined =>
+          RedshiftScript.dmlStatement(s).map(_._2)
         case _ if up.startsWith("SELECT") || up.startsWith("WITH") => Some(s)
         case RedshiftScript.CreateRe(_, _, _, body) => Some(body)
         case RedshiftScript.CreateViewRe(_, body) => Some(body)

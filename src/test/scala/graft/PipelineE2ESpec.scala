@@ -17,7 +17,7 @@ class PipelineE2ESpec extends SparkSpec {
 
   test("ods → master → historical snapshot → mart, with invariants") {
     val dir = "/root/testdata/sf0.001"
-    val base = Files.createTempDirectory("graft-e2e").toString
+    val base = tempDir("graft-e2e")
     val snapPath = s"$base/master_user_historical"
 
     val reports = Pipeline.run(spark, Seq(
@@ -80,7 +80,7 @@ class PipelineE2ESpec extends SparkSpec {
   }
 
   test("runSqlDir executes numbered scripts in order with view chaining") {
-    val dir = Files.createTempDirectory("graft-sqldir")
+    val dir = java.nio.file.Paths.get(tempDir("graft-sqldir"))
     Tables.events(spark, "/root/testdata/sf0.001").createOrReplaceTempView("stg_events")
     val mart = dir.resolve("out_mart")
     Files.writeString(dir.resolve("00_ods.sql"),

@@ -6,7 +6,7 @@ import java.nio.file.Files
 class ReadersSpec extends SparkSpec {
 
   test("csv reader honors COPY-style options: delimiter, header, empty-as-null") {
-    val dir = Files.createTempDirectory("graft-csv")
+    val dir = java.nio.file.Paths.get(tempDir("graft-csv"))
     Files.writeString(dir.resolve("staging.csv"),
       "id;name;amount\n1;alpha;10.5\n2;;\n3;gamma;7.25\n")
     val df = Readers.csv(spark, dir.toString, delimiter = ";", header = true)
@@ -19,7 +19,7 @@ class ReadersSpec extends SparkSpec {
   }
 
   test("all-string staging load defers casts downstream (reference convention)") {
-    val dir = Files.createTempDirectory("graft-csv2")
+    val dir = java.nio.file.Paths.get(tempDir("graft-csv2"))
     Files.writeString(dir.resolve("s.csv"), "a;b\n1;2.5\n")
     val df = Readers.csv(spark, dir.toString, allString = true)
     assert(df.schema.fields.forall(_.dataType.typeName === "string"))

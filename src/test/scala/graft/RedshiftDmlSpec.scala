@@ -41,13 +41,13 @@ class RedshiftDmlSpec extends SparkSpec {
     r
   }
 
-  // the full-outer upsert of `dml.src` into `dml.tgt` on k, SET v (and w
-  // when `setW`), all three columns inserted
-  private def upsertHand(setW: Boolean = false): String =
-    s"""SELECT coalesce(x.k, s.k) AS k,
-       |  CASE WHEN x.k IS NULL OR s.k IS NOT NULL THEN s.v ELSE x.v END AS v,
-       |  CASE WHEN x.k IS NULL ${if (setW) "OR s.k IS NOT NULL " else ""}THEN s.w ELSE x.w END AS w
-       |FROM dml.tgt x FULL JOIN dml.src s ON x.k = s.k""".stripMargin
+  // the full-outer upsert of `dml.src` into `dml.tgt` on k: SET v, all
+  // three columns inserted
+  private def upsertHand(): String =
+    """SELECT coalesce(x.k, s.k) AS k,
+      |  CASE WHEN x.k IS NULL OR s.k IS NOT NULL THEN s.v ELSE x.v END AS v,
+      |  CASE WHEN x.k IS NULL THEN s.w ELSE x.w END AS w
+      |FROM dml.tgt x FULL JOIN dml.src s ON x.k = s.k""".stripMargin
 
   test("UPDATE FROM a join whose SET reads the second relation's alias") {
     // the `8_monitoring/gdpr/anonymize_gdpr_columns.sql` shape
@@ -141,28 +141,99 @@ class RedshiftDmlSpec extends SparkSpec {
     assert(out === Seq((1, "alice", "keep@x.com"), (2, "REDACTED", null)))
   }
 
-  test("join DML shapes the Runner does not run yet fail") {
-    def fails(script: String): Unit = {
-      fixtures()
-      val r = new RedshiftScript.Runner(spark, root()).run(script)
-      assert(!r.ok, script)
-      assert(rows(spark.table("dml.tgt")).size === 4) // target untouched
-    }
-    // an UPDATE FROM a comma list of two relations
-    fails("UPDATE dml.tgt SET v = s.v || p.note FROM dml.src s, dml.pii p WHERE tgt.k = s.k AND s.k = p.k;")
-    val insert = "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v, s.w);"
-    // a target alias
-    fails(s"MERGE INTO dml.tgt t USING dml.src s ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v $insert")
-    // WHEN MATCHED … THEN DELETE
-    fails("MERGE INTO dml.tgt USING dml.src s ON tgt.k = s.k " +
-      s"WHEN MATCHED AND s.v = 'B' THEN DELETE WHEN MATCHED THEN UPDATE SET v = s.v $insert")
-    // a non-equi ON term
-    fails("MERGE INTO dml.tgt USING dml.src s ON tgt.k = s.k AND s.w >= 300 " +
-      s"WHEN MATCHED THEN UPDATE SET v = s.v $insert")
-    // a subquery source, and a CTE source
-    fails("MERGE INTO dml.tgt USING (SELECT k, upper(v) AS v, w FROM dml.src WHERE k < 5) s " +
-      s"ON tgt.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v $insert")
-    fails("WITH d AS (SELECT k, upper(v) AS v, w FROM dml.src WHERE k < 5) " +
-      s"MERGE INTO dml.tgt USING d s ON tgt.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v $insert")
+  test("UPDATE FROM a comma list of two relations") {
+    assertDml(
+      "UPDATE dml.tgt SET v = s.v || p.note FROM dml.src s, dml.pii p WHERE tgt.k = s.k AND s.k = p.k;",
+      """SELECT x.k, CASE WHEN m.k IS NULL THEN x.v ELSE m.v END AS v, x.w
+        |FROM dml.tgt x LEFT JOIN (
+        |  SELECT s.k, s.v || p.note AS v FROM dml.src s JOIN dml.pii p ON s.k = p.k) m
+        |ON x.k = m.k""".stripMargin)
+  }
+
+  private val insert = "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v, s.w);"
+
+  test("MERGE with a target alias") {
+    assertDml(
+      s"MERGE INTO dml.tgt t USING dml.src s ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v, w = t.w + s.w $insert",
+      """SELECT coalesce(x.k, s.k) AS k, coalesce(s.v, x.v) AS v,
+        |  CASE WHEN x.k IS NULL THEN s.w WHEN s.k IS NULL THEN x.w ELSE x.w + s.w END AS w
+        |FROM dml.tgt x FULL JOIN dml.src s ON x.k = s.k""".stripMargin)
+  }
+
+  test("MERGE WHEN MATCHED AND … THEN DELETE") {
+    assertDml(
+      "MERGE INTO dml.tgt USING dml.src s ON tgt.k = s.k " +
+        s"WHEN MATCHED AND s.v = 'B' THEN DELETE WHEN MATCHED THEN UPDATE SET v = s.v $insert",
+      s"SELECT * FROM (${upsertHand()}) WHERE k <> 2")
+  }
+
+  test("MERGE with a non-equi ON term") {
+    // the source row the ON term rejects is inserted beside its key's target row
+    assertDml(
+      s"MERGE INTO dml.tgt USING dml.src s ON tgt.k = s.k AND s.w >= 300 WHEN MATCHED THEN UPDATE SET v = s.v $insert",
+      """SELECT coalesce(x.k, s.k) AS k, coalesce(s.v, x.v) AS v, coalesce(x.w, s.w) AS w
+        |FROM dml.tgt x FULL JOIN dml.src s ON x.k = s.k AND s.w >= 300""".stripMargin)
+  }
+
+  test("MERGE from a subquery source and from a CTE") {
+    val hand = """SELECT coalesce(x.k, s.k) AS k, coalesce(s.v, x.v) AS v, coalesce(x.w, s.w) AS w
+                 |FROM dml.tgt x FULL JOIN (SELECT k, upper(v) AS v, w FROM dml.src WHERE k < 5) s
+                 |ON x.k = s.k""".stripMargin
+    assertDml("MERGE INTO dml.tgt USING (SELECT k, upper(v) AS v, w FROM dml.src WHERE k < 5) s " +
+      s"ON tgt.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v $insert", hand)
+    val r = assertDml("WITH d AS (SELECT k, upper(v) AS v, w FROM dml.src WHERE k < 5) " +
+      s"MERGE INTO dml.tgt USING d s ON tgt.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v $insert", hand)
+    assert(r.reports.map(_.verb) === Seq("MERGE"))
+  }
+
+  test("MERGE inserts every source row of a key no target row matches") {
+    // Redshift inserts both; a target row two source rows match still fails
+    Catalog.replaceTable(spark.sql("SELECT * FROM VALUES (7, 'x', 1), (7, 'y', 2) AS t(k, v, w)"),
+      "dml", "twin")
+    assertDml(
+      s"MERGE INTO dml.tgt USING dml.twin s ON tgt.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v $insert",
+      "SELECT * FROM dml.tgt UNION ALL SELECT * FROM dml.twin")
+  }
+
+  test("a target row two source rows match fails the MERGE and names the table") {
+    fixtures()
+    val r = new RedshiftScript.Runner(spark, root()).run(
+      "MERGE INTO dml.tgt USING dml.dup d ON tgt.k = d.k WHEN MATCHED THEN UPDATE SET v = d.tag;")
+    assert(!r.ok)
+    val error = r.reports.head.error.get
+    assert(error.contains("MERGE_CARDINALITY_VIOLATION") && error.contains("dml.tgt"), error)
+    assert(rows(spark.table("dml.tgt")).size === 4) // target untouched
+  }
+
+  test("ON CONFLICT DO UPDATE with two incoming rows for one key fails") {
+    // PostgreSQL: "ON CONFLICT DO UPDATE command cannot affect row a second time"
+    fixtures()
+    val r = new RedshiftScript.Runner(spark, root()).run(
+      "INSERT INTO dml.tgt VALUES (2, 'p', 0), (2, 'q', 0) ON CONFLICT (k) DO UPDATE SET v = excluded.v;")
+    assert(!r.ok)
+    assert(r.reports.head.error.get.contains("MERGE_CARDINALITY_VIOLATION"), r.reports)
+    assert(rows(spark.table("dml.tgt")).size === 4)
+  }
+
+  test("a crashed swap's backup is restored before the Runner reads the table") {
+    import sqlImplicits._
+    Catalog.replaceTable(Seq((1, "v1"), (2, "v2")).toDF("k", "v"), "dml", "crash")
+    Catalog.replaceTable(Seq((2, "v2b"), (3, "v3")).toDF("k", "v"), "dml", "crash_upd")
+    val path = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("crash", Some("dml"))).location
+    val fs = org.apache.hadoop.fs.FileSystem.get(path, spark.sparkContext.hadoopConfiguration)
+    val (dir, backup) = (new org.apache.hadoop.fs.Path(path), new org.apache.hadoop.fs.Path(s"${path}__old"))
+    // a crash between rename-aside and rename-in leaves the only copy in
+    // the backup; a fresh process sees the table directory missing
+    fs.rename(dir, backup)
+    spark.catalog.refreshTable("dml.crash")
+    val r = new RedshiftScript.Runner(spark, root()).run(
+      """MERGE INTO dml.crash USING dml.crash_upd u ON crash.k = u.k
+        |WHEN MATCHED THEN UPDATE SET v = u.v
+        |WHEN NOT MATCHED THEN INSERT VALUES (u.k, u.v);""".stripMargin)
+    assert(r.ok, r.reports.mkString("; "))
+    val out = spark.table("dml.crash").collect().map(x => (x.getInt(0), x.getString(1))).sorted.toSeq
+    assert(out === Seq((1, "v1"), (2, "v2b"), (3, "v3")))
+    assert(!fs.exists(backup))
   }
 }

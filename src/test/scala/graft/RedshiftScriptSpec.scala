@@ -145,7 +145,7 @@ class RedshiftScriptSpec extends SparkSpec {
 
   test("UPDATE casts the SET value to the column type, not the untouched rows") {
     import org.apache.spark.sql.functions._
-    val p = java.nio.file.Files.createTempDirectory("upd-cast").toString
+    val p = tempDir("upd-cast")
     // valid_to staged as STRING with non-timestamp contents; the SET
     // expression is a TIMESTAMP — untouched rows must survive verbatim
     Catalog.replaceTable(
@@ -603,7 +603,9 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(!r.ok)
     val commitRep = r.reports.find(_.verb == "COMMIT").get
     assert(!commitRep.ok)
-    assert(commitRep.error.get.contains("not unique")) // origin named
+    // origin named: the failing table and Spark's error class
+    assert(commitRep.error.get.contains("rs_c1.b") &&
+      commitRep.error.get.contains("MERGE_CARDINALITY_VIOLATION"), commitRep.error.get)
     assert(!new java.io.File(loc("a") + "__txn").exists())
     assert(!new java.io.File(loc("b") + "__txn").exists())
     assert(spark.table("rs_c1.a").count() === 2) // untouched
@@ -811,7 +813,7 @@ class RedshiftScriptSpec extends SparkSpec {
       "/root/reference/Datawarehouse-ETL/11_marketing_reporting/Affiliate_Automation/affiliate_everflow_staging.sql")
     assume(java.nio.file.Files.exists(path))
     val script = java.nio.file.Files.readString(path)
-    val csv = Files.createTempDirectory("graft-copy").resolve("everflow.csv")
+    val csv = java.nio.file.Paths.get(tempDir("graft-copy")).resolve("everflow.csv")
     Files.writeString(csv,
       """conversion_id;conversion_unix_timestamp;sub1;status;revenue;country;device_type;event;transaction_id;click_unix_timestamp;sale_amount;coupon_code;order_id;url;currency_id
         |c1;1717200000;s1;approved;12.5;DE;mobile;sale;t1;1717100000;100.0;CODE1;o1;https://x.example/a;EUR
@@ -864,7 +866,7 @@ class RedshiftScriptSpec extends SparkSpec {
         .getOrElse(fail(s"no DDL statement in $p"))
       val n = arity(ddl)
       assert(n >= 5, s"$table arity $n") // cj_orders is the smallest at 5
-      val csv = Files.createTempDirectory("graft-copy-all").resolve("data.csv")
+      val csv = java.nio.file.Paths.get(tempDir("graft-copy-all")).resolve("data.csv")
       val header = (1 to n).map(i => s"c$i").mkString(";")
       val rows = (1 to 3).map(r => (1 to n).map(i => s"v${r}_$i").mkString(";"))
       Files.writeString(csv, (header +: rows).mkString("", "\n", "\n"))
@@ -883,7 +885,7 @@ class RedshiftScriptSpec extends SparkSpec {
     import sqlImplicits._
     Catalog.replaceTable(
       Seq((1L, "a"), (2L, "b")).toDF("id", "s").limit(0), "rs_copy", "pq")
-    val dir = Files.createTempDirectory("graft-copy-pq").toString
+    val dir = tempDir("graft-copy-pq")
     Seq((10L, "x"), (11L, "y")).toDF("id", "s").write.mode("overwrite").parquet(dir)
     // shape of catman/sql/copy_pricing_data.sql:5-8 (s3:// path remapped)
     val r = new RedshiftScript.Runner(spark, root(),
@@ -927,7 +929,7 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(app(1).isNullAt(2)) // filled
     assert(spark.table("rs_app.old").count() === 0) // source emptied
     // UNLOAD (sku_market_valuation.sql shape, TO injected)
-    val out = Files.createTempDirectory("graft-unload").toString + "/export"
+    val out = tempDir("graft-unload") + "/export"
     // the query ends in an ''-escaped literal — the UNLOAD capture must
     // not truncate at the escaped quote before the closing paren
     val r3 = new RedshiftScript.Runner(spark, root()).run(
@@ -950,7 +952,7 @@ class RedshiftScriptSpec extends SparkSpec {
         |WHEN MATCHED THEN UPDATE SET v = s.v
         |WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v);""".stripMargin)
     assert(!r.ok)
-    assert(r.reports.head.error.get.contains("not unique"))
+    assert(r.reports.head.error.get.contains("MERGE_CARDINALITY_VIOLATION"))
     assert(spark.table("rs_mdup.tgt").count() === 1) // target untouched
   }
 
@@ -963,7 +965,7 @@ class RedshiftScriptSpec extends SparkSpec {
     val r = new RedshiftScript.Runner(spark, root())
       .run("UPDATE rs_updg.tgt SET v = s.nv FROM updg_src s WHERE rs_updg.tgt.k = s.k;")
     assert(!r.ok)
-    assert(r.reports.exists(_.error.exists(_.contains("more than once"))),
+    assert(r.reports.exists(_.error.exists(_.contains("MERGE_CARDINALITY_VIOLATION"))),
       r.reports.mkString("; "))
     // the auto-commit failure cleared the overlay — target untouched
     assert(spark.table("rs_updg.tgt").count() === 2)
@@ -1005,7 +1007,8 @@ class RedshiftScriptSpec extends SparkSpec {
     val r4 = new RedshiftScript.Runner(spark, root()).run(
       "UPDATE rs_edge.t SET no_such_col = 1;")
     assert(!r4.ok)
-    assert(r4.reports.head.error.get.contains("unknown column"))
+    assert(r4.reports.head.error.get.contains("UNRESOLVED_COLUMN") &&
+      r4.reports.head.error.get.contains("no_such_col"), r4.reports.head.error.get)
     // ALTER ... ADD CONSTRAINT is a recorded no-op, not a failure
     val r5 = new RedshiftScript.Runner(spark, root()).run(
       "ALTER TABLE rs_edge.t ADD CONSTRAINT pk PRIMARY KEY (id);")
@@ -1388,13 +1391,13 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(spark.sql("SELECT v * 2 AS doubled FROM aw_src WHERE doubled > 10")
       .collect().map(_.getInt(0)).toSeq === Seq(18))
     val r = new RedshiftScript.Runner(spark,
-      java.nio.file.Files.createTempDirectory("graft-aw").toString)
+      tempDir("graft-aw"))
       .run("SELECT v * 2 AS doubled FROM aw_src WHERE doubled > 10;")
     assert(r.ok, r.reports.mkString("; "))
     assert(r.lastSelect.get.collect().map(_.getInt(0)).toSeq === Seq(18))
     // …and inside a window spec
     val rw = new RedshiftScript.Runner(spark,
-      java.nio.file.Files.createTempDirectory("graft-aw2").toString)
+      tempDir("graft-aw2"))
       .run("SELECT k, v * 2 AS dd, ROW_NUMBER() OVER (PARTITION BY dd ORDER BY k) AS rn FROM aw_src;")
     assert(rw.ok, rw.reports.mkString("; "))
     assert(rw.lastSelect.get.count() === 2)
@@ -2071,7 +2074,7 @@ class RedshiftScriptSpec extends SparkSpec {
 
   test("runSqlDir routes a multi-statement file through the interpreter") {
     Catalog.replaceTable(Tables.read(spark, sfDir, "orders"), "rs_dir", "orders_src")
-    val dir = Files.createTempDirectory("graft-sqldir").toString
+    val dir = tempDir("graft-sqldir")
     Files.writeString(java.nio.file.Paths.get(s"$dir/01_build.sql"),
       """DROP TABLE IF EXISTS rs_dir.big_orders;
         |CREATE TABLE rs_dir.big_orders AS

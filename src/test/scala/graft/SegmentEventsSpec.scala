@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 class SegmentEventsSpec extends SparkSpec {
 
   private def root(): String =
-    java.nio.file.Files.createTempDirectory("graft-segment").toString
+    tempDir("graft-segment")
 
   private val layerDir =
     java.nio.file.Paths.get("/root/reference/Datawarehouse-ETL/30_segment_events")

@@ -206,7 +206,7 @@ class SegmentSessionsLayerSpec extends SparkSpec {
       "layer roster drifted")
 
     FixtureCols.foreach { case (t, cols) => stage(t, cols) }
-    val root = Files.createTempDirectory("graft-segment-layer").toString
+    val root = tempDir("graft-segment-layer")
 
     // an earlier layer suite in this shared session may have staged a
     // narrow fixture under the pre-existing target's name (harness

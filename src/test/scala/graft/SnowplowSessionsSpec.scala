@@ -80,7 +80,7 @@ class SnowplowSessionsSpec extends SparkSpec {
           "marketing_source", "marketing_campaign", "marketing_term", "referer_url"),
       "web", "session_marketing_mapping_snowplow")
 
-    val root = Files.createTempDirectory("graft-snowplow").toString
+    val root = tempDir("graft-snowplow")
     val res = new RedshiftScript.Runner(spark, root, Some("2024-06-15")).run(script)
     assert(res.ok, res.reports.filterNot(_.ok).mkString("; "))
 

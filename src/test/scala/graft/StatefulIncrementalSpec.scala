@@ -17,7 +17,7 @@ class StatefulIncrementalSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     val input = MemoryStream[Stateful.EntityEvent]
     val q = Stateful.entityStateQuery(
-      input.toDS(), Files.createTempDirectory("graft-state").toString, "entity_state_test")
+      input.toDS(), tempDir("graft-state"), "entity_state_test")
       .start()
     try {
       input.addData(
@@ -49,7 +49,7 @@ class StatefulIncrementalSpec extends SparkSpec {
   test("incremental window reload end-to-end: dedup + partition overwrite, idempotent") {
     // the reference's 01_track_events_incremental pattern: reprocess a
     // 2-day window, dedup on message id, DELETE+INSERT the window only
-    val target = Files.createTempDirectory("graft-incr").toString + "/t"
+    val target = tempDir("graft-incr") + "/t"
     val day1 = Seq((1L, "2024-01-01", "a"), (2L, "2024-01-01", "b")).toDF("mid", "d", "v")
     Writers.overwritePartitions(day1, target, Seq("d"))
 

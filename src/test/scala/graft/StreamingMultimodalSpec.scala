@@ -14,7 +14,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 class StreamingMultimodalSpec extends SparkSpec {
 
   test("jsonLinesToPartitionedParquet ingests, dedups, partitions (AvailableNow e2e)") {
-    val base = Files.createTempDirectory("graft-stream").toString
+    val base = tempDir("graft-stream")
     val src = s"$base/src"; val tgt = s"$base/tgt"; val chk = s"$base/chk"
     new java.io.File(src).mkdirs()
     Files.writeString(java.nio.file.Paths.get(s"$src/batch1.json"),
@@ -34,7 +34,7 @@ class StreamingMultimodalSpec extends SparkSpec {
   }
 
   test("late events for an already-written hour merge instead of clobbering it") {
-    val base = Files.createTempDirectory("graft-stream-late").toString
+    val base = tempDir("graft-stream-late")
     val src = s"$base/src"; val tgt = s"$base/tgt"; val chk = s"$base/chk"
     new java.io.File(src).mkdirs()
     val schema = StructType(Seq(
@@ -100,7 +100,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     try for (aqe <- Seq("false", "true")) {
       spark.conf.set(aqeKey, aqe)
       shuffles.clear()
-      val tgt = Files.createTempDirectory("graft-merge-replay").toString + "/tgt"
+      val tgt = tempDir("graft-merge-replay") + "/tgt"
       def rows() = spark.read.parquet(tgt).orderBy("id", "ts").collect().map(_.toString).toSeq
       Ingest.mergeBatchIntoPartitions(batch, tgt, Seq("id", "ts"))
       val first = rows()
@@ -123,7 +123,7 @@ class StreamingMultimodalSpec extends SparkSpec {
   }
 
   test("null-timestamp rows land in the null partition and survive later merges") {
-    val base = Files.createTempDirectory("graft-stream-nullts").toString
+    val base = tempDir("graft-stream-nullts")
     val src = s"$base/src"; val tgt = s"$base/tgt"; val chk = s"$base/chk"
     new java.io.File(src).mkdirs()
     val schema = StructType(Seq(

@@ -57,7 +57,7 @@ class TablesSpec extends SparkSpec {
 
   test("NTZ and LTZ copies of events keep their flavor") {
     for ((flavor, typ) <- Seq("timestamp_ntz" -> TimestampNTZType, "timestamp_ltz" -> TimestampType)) {
-      val dir = Files.createTempDirectory(s"graft-tables-$flavor").toString
+      val dir = tempDir(s"graft-tables-$flavor")
       Tables.events(spark, sf).withColumn("ts", col("ts").cast(flavor))
         .coalesce(1).write.parquet(s"$dir/events.parquet")
       val schema = Tables.events(spark, dir).schema
@@ -67,7 +67,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("TIMESTAMP(NANOS) columns read as microsecond timestamps") {
-    val dir = Files.createTempDirectory("graft-tables-nanos").toString
+    val dir = tempDir("graft-tables-nanos")
     writeParquet(s"$dir/t.parquet",
       "message m { required int64 id; required int64 ts (TIMESTAMP(NANOS,true)); }")(
       Seq(Seq("id" -> 1L, "ts" -> 1704067200123456789L)))
@@ -78,7 +78,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a fixture rewritten in place is read with its new schema") {
-    val dir = Files.createTempDirectory("graft-tables-rewrite").toString
+    val dir = tempDir("graft-tables-rewrite")
     val file = s"$dir/t.parquet"
     writeParquet(file, "message m { required int32 a; }")(Seq(Seq("a" -> 1)))
     assert(Tables.read(spark, dir, "t").schema.fieldNames.toSeq === Seq("a"))

@@ -6,7 +6,7 @@ import graft.pipeline.{Catalog, RedshiftScript, Templates}
 class TemplatesSpec extends SparkSpec {
 
   private def root(): String =
-    java.nio.file.Files.createTempDirectory("graft-templates").toString
+    tempDir("graft-templates")
 
   test("renders all three template dialects deterministically") {
     // Jinja params + xcom (quotes around the slot live in the source)

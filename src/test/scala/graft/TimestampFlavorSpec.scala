@@ -24,7 +24,7 @@ class TimestampFlavorSpec extends SparkSpec {
     * table is symlinked from sf0.001 unchanged.
     */
   private def flavorDir(flavor: String): String = {
-    val dir = Files.createTempDirectory(s"graft-ts-$flavor")
+    val dir = java.nio.file.Paths.get(tempDir(s"graft-ts-$flavor"))
     val src = Paths.get(srcDir)
     Files.list(src).forEach { p: Path =>
       if (p.getFileName.toString != "events.parquet")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class VerbatimScriptsSpec extends SparkSpec {
 
   private def root(): String =
-    java.nio.file.Files.createTempDirectory("graft-verbatim").toString
+    tempDir("graft-verbatim")
 
   test("gdpr_personal_info.sql: DELETE + INSERT..WITH, listagg DISTINCT, window over aliases") {
     val path = java.nio.file.Paths.get(

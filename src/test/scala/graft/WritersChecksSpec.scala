@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class WritersChecksSpec extends SparkSpec {
   import sqlImplicits._
 
-  private def tmp(): String = Files.createTempDirectory("graft-test").toString
+  private def tmp(): String = tempDir("graft-test")
 
   test("overwritePartitions replaces only the partitions present (idempotent rerun)") {
     val path = tmp() + "/t"
@@ -39,25 +39,6 @@ class WritersChecksSpec extends SparkSpec {
     assert(Checks.unique(df, Seq("id", "snapshot_date")).passed)
   }
 
-  test("mergeByKey upserts without duplicating") {
-    val path = tmp() + "/m"
-    Seq((1, "old"), (2, "keep")).toDF("k", "v").write.parquet(path)
-    Writers.mergeByKey(spark, Seq((1, "new"), (3, "ins")).toDF("k", "v"), path, Seq("k"))
-    val out = spark.read.parquet(path).collect().map(r => (r.getInt(0), r.getString(1))).sorted.toSeq
-    assert(out === Seq((1, "new"), (2, "keep"), (3, "ins")))
-  }
-
-  test("updateWhere applies targeted assignments atomically (GDPR anonymize shape)") {
-    val path = tmp() + "/u"
-    Seq((1, "alice", "keep@x.com"), (2, "bob", "gone@x.com"))
-      .toDF("id", "name", "email").write.parquet(path)
-    Writers.updateWhere(spark, path, col("id") === 2,
-      Map("name" -> lit("REDACTED"), "email" -> lit(null).cast("string")))
-    val out = spark.read.parquet(path).orderBy("id")
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
-    assert(out === Seq((1, "alice", "keep@x.com"), (2, "REDACTED", null)))
-  }
-
   test("atomicSwap: data always present in target-or-backup; failed swap rolls back; no leftovers") {
     val base = tmp()
     val path = base + "/t"
@@ -81,22 +62,6 @@ class WritersChecksSpec extends SparkSpec {
     Seq((3, "v3")).toDF("k", "v").write.parquet(tmpDir)
     Writers.atomicSwap(spark, tmpDir, path)
     assert(spark.read.parquet(path).collect().map(_.getString(1)).toSeq === Seq("v3"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__old")))
-  }
-
-  test("crashed swap recovers from the backup instead of merging against an empty table") {
-    val path = tmp() + "/crash"
-    Seq((1, "v1"), (2, "v2")).toDF("k", "v").write.parquet(path)
-    // simulate a crash between rename-aside and rename-in: the table dir
-    // is gone, the only copy sits in the backup
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(path), new org.apache.hadoop.fs.Path(path + "__old"))
-    // pre-fix, mergeByKey read "empty table", merged only the updates,
-    // and the subsequent swap deleted the backup — silent data loss
-    Writers.mergeByKey(spark, Seq((2, "v2b"), (3, "v3")).toDF("k", "v"), path, Seq("k"))
-    val out = spark.read.parquet(path).collect().map(r => (r.getInt(0), r.getString(1))).sorted.toSeq
-    assert(out === Seq((1, "v1"), (2, "v2b"), (3, "v3")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__old")))
   }
 

@@ -53,7 +53,7 @@ class ScoringSpec extends SparkSpec {
 
   /** The engine's loop over the same events and labels: its scores by user_id. */
   private def engine(ev: DataFrame, df: DataFrame): Map[Long, (Double, Int)] = {
-    val out = Files.createTempDirectory("graft-scoring").toString + "/scores"
+    val out = tempDir("graft-scoring") + "/scores"
     Scoring.churnScoresWriteback(ev, df.select("user_id", "label"), anchor, out)
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getInt(2))).toMap
   }
@@ -122,7 +122,7 @@ class ScoringSpec extends SparkSpec {
     val ev = events("sf0.01")
     val labels = ev.select("user_id").distinct()
       .withColumn("label", (col("user_id") % 4 === 0).cast("double"))
-    val out = Files.createTempDirectory("graft-scoring").toString + "/scores"
+    val out = tempDir("graft-scoring") + "/scores"
     val sc = spark.sparkContext
     val jobs = new AtomicInteger()
     val jobListener = new SparkListener {

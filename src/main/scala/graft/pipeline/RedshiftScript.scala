@@ -1764,6 +1764,7 @@ object RedshiftScript {
       .replaceAll("\\{\\{[^}]*\\}\\}|\\{[^{}]*\\}", "__tpl__")
       .replaceAll("^[\\p{Z}\\p{C}\\s]+", "")
     val upper = stmt.toUpperCase.replaceAll("\\s+", " ")
+    lazy val dml = dmlStatement(stmt)
     stmt match {
       case _ if upper.startsWith("BEGIN") || upper.startsWith("START TRANSACTION") => "BEGIN"
       case _ if upper.startsWith("COMMIT") || upper.startsWith("END") => "COMMIT"
@@ -1776,7 +1777,7 @@ object RedshiftScript {
       case AlterAppendRe(_, _, _) => "ALTER APPEND"
       case AlterLayoutRe() => "ALTER LAYOUT (no-op)"
       case CreateRe(t, _, _, _) => if (t != null) "CREATE TEMP TABLE" else "CREATE TABLE"
-      case _ if dmlStatement(stmt).isDefined => dmlStatement(stmt).get._1
+      case _ if dml.isDefined => dml.get._1
       case InsertRe(_, cl, body) if parseInsert(cl, body)._2.nonEmpty => "INSERT"
       case TruncateRe(_) => "TRUNCATE"
       case AlterOwnerRe() => "ALTER OWNER (no-op)"
@@ -1873,8 +1874,9 @@ object RedshiftScript {
     *     inserts or discards each joined row and copies every other target
     *     row. `MergeRows` fails a target row that two source rows match
     *     unless there is no MATCHED action or the only one is an
-    *     unconditional DELETE (Spark's `shouldCheckCardinality`). A MERGE with only NOT MATCHED actions
-    *     appends the unmatched source rows to the target, as Spark does.
+    *     unconditional DELETE (Spark's `shouldCheckCardinality`). A MERGE
+    *     with only NOT MATCHED actions appends the unmatched source rows
+    *     to the target, as Spark does.
     */
   private[pipeline] def newState(plan: LogicalPlan): LogicalPlan = plan match {
     case DeleteFromTable(table, cond) => Filter(Not(Coalesce(Seq(cond, FalseLiteral))), table)
@@ -2715,13 +2717,13 @@ object RedshiftScript {
         case Seq(a) => (s"SELECT * FROM $from", a)
         case many => (many.map(a => s"struct($a.*) AS $a").mkString("SELECT ", ", ", s" FROM $from"), "__src")
       }
-      if (!whereless) if (relations.size == 1) from else s"($select) $alias"
-      else {
+      if (whereless) {
         val order = spark.sql(tr(select)).schema.fields.groupBy(_.name.toLowerCase).values
           .collect { case Array(f) if org.apache.spark.sql.catalyst.expressions.RowOrdering
             .isOrderable(f.dataType) => s"`${f.name}`" }.toSeq.sorted
         s"($select${order.mkString(" ORDER BY ", ", ", "")} LIMIT 1) $alias"
-      }
+      } else if (relations.size == 1) from
+      else s"($select) $alias"
     }
 
     /** The target and new state of a DML statement in Spark's grammar: the

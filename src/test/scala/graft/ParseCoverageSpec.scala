@@ -43,9 +43,8 @@ class ParseCoverageSpec extends SparkSpec {
       val up = s.toUpperCase
       s match {
         // a CTE-prefixed DELETE USING executes as `cte MERGE …` — measure that
-        case _ if up.startsWith("WITH") && RedshiftScript.dmlStatement(s).isDefined =>
-          RedshiftScript.dmlStatement(s).map(_._2)
-        case _ if up.startsWith("SELECT") || up.startsWith("WITH") => Some(s)
+        case _ if up.startsWith("WITH") => RedshiftScript.dmlStatement(s).map(_._2).orElse(Some(s))
+        case _ if up.startsWith("SELECT") => Some(s)
         case RedshiftScript.CreateRe(_, _, _, body) => Some(body)
         case RedshiftScript.CreateViewRe(_, body) => Some(body)
         case RedshiftScript.CreateMvRe(_, body) => Some(body)

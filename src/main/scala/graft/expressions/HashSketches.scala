@@ -332,6 +332,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         WordShingles(children.head, n)
       }))
     RedshiftSqlFunctions.register(ext)
+    // Redshift type names Spark's visitor rejects (see the parser)
+    ext.injectParser((_, _) => new GraftParser)
     // Redshift implicit coercions (see the rule)
     ext.injectResolutionRule(_ => RedshiftCoercions)
     // Redshift query shapes and lateral aliases: marked or rewritten before

@@ -3,9 +3,10 @@ package graft.expressions
 import graft.functions.{Redshift => R}
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{BooleanType, DateType, StringType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL-text entry points for the Redshift-dialect shims (SURVEY §4.3's
@@ -13,9 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * `spark.sql` / the pipeline runner without rewriting to the Column API.
   *
   * Functions Spark already provides under the same name+semantics (NVL,
-  * DECODE, SPLIT_PART, CONVERT_TIMEZONE, JSON_ARRAY_LENGTH, …) are not
-  * re-registered. DATEDIFF/DATEADD get the Redshift 3-argument forms —
-  * 2-argument calls fall through to Spark's own semantics.
+  * DECODE, SPLIT_PART, CONVERT_TIMEZONE, …) are not re-registered; a
+  * builtin whose argument check rejects a Redshift form is wrapped, for
+  * that argument count only (end of [[register]]). DATEDIFF/DATEADD get
+  * the Redshift 3-argument forms — 2-argument calls fall through to
+  * Spark's own semantics.
   */
 object RedshiftSqlFunctions {
 
@@ -32,13 +35,13 @@ object RedshiftSqlFunctions {
     // builtin-registry registration too — session-injected functions are
     // TEMPORARY objects, which persistent views refuse to reference
     // (see GraftExtensions)
-    def inject(name: String)(builder: Seq[Expression] => Expression): Unit = {
-      val id = FunctionIdentifier(name)
-      val info = new ExpressionInfo(RedshiftSqlFunctions.getClass.getName, name)
-      org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
-        .registerFunction(id, info, builder)
+    def injectAs(info: ExpressionInfo, builder: Seq[Expression] => Expression): Unit = {
+      val id = FunctionIdentifier(info.getName)
+      FunctionRegistry.builtin.registerFunction(id, info, builder)
       ext.injectFunction((id, info, builder))
     }
+    def inject(name: String)(builder: Seq[Expression] => Expression): Unit =
+      injectAs(new ExpressionInfo(RedshiftSqlFunctions.getClass.getName, name), builder)
 
     inject("json_extract_path_text") { children =>
       require(children.size >= 2, "json_extract_path_text(json, key, ...)")
@@ -161,7 +164,7 @@ object RedshiftSqlFunctions {
     // parameters]]]) — Spark's builtin stops at 2 args
     // (`91_External/Gmail/partner_online_order_tracking.sql:9` pulls
     // the Nth tracking link). Non-match yields '' like Redshift.
-    inject("regexp_substr_rs") { children =>
+    val regexpSubstrRs: Seq[Expression] => Expression = { children =>
       require(children.size >= 2 && children.size <= 5,
         "regexp_substr_rs(str, pat[, pos[, occurrence[, params]]])")
       val F = org.apache.spark.sql.functions
@@ -180,6 +183,7 @@ object RedshiftSqlFunctions {
         F.try_element_at(F.regexp_extract_all(base, pat, F.lit(0)), occ),
         F.lit("")))
     }
+    inject("regexp_substr_rs")(regexpSubstrRs)
     // Redshift CHARINDEX(substring, string) — Spark's instr with the
     // argument order swapped (`91_External/Gmail/
     // partner_online_order_tracking.sql`)
@@ -218,5 +222,49 @@ object RedshiftSqlFunctions {
       ex(org.apache.spark.sql.functions.repeat(col(children.head),
         col(children(1)).cast("int")))
     }
+
+    // Redshift argument counts Spark's builtins reject. Every count Spark
+    // accepts calls Spark's own builder unchanged, so Spark SQL keeps its
+    // meaning. The builder comes from the static `FunctionRegistry
+    // .expressions`, not from the builtin registry written here, so a
+    // second session does not wrap a wrapper.
+    def wrap(name: String)(
+        redshift: (Seq[Expression], Seq[Expression] => Expression) => Expression): Unit = {
+      val (info, spark) = FunctionRegistry.expressions(name)
+      injectAs(info, redshift(_, spark))
+    }
+    // 1-arg GREATEST/LEAST is the argument
+    // (`13_finance_reporting/Luxco_Reporting/…/spv_historical.sql`)
+    Seq("greatest", "least").foreach(f => wrap(f) {
+      case (Seq(x), _) => x
+      case (args, spark) => spark(args)
+    })
+    // 2-arg REGEXP_REPLACE deletes the matches
+    // (`31_segment_page_view_and_sessions/06_01_url_store_mapping.sql:8`)
+    wrap("regexp_replace") {
+      case (Seq(s, p), spark) => spark(Seq(s, p, Literal("")))
+      case (args, spark) => spark(args)
+    }
+    // JSON_ARRAY_LENGTH(json, null_if_invalid): Spark's already returns
+    // NULL on invalid input (`1_ods_core/00_order_item.sql:28`)
+    wrap("json_array_length") {
+      case (Seq(j, Literal(_, BooleanType)), spark) => spark(Seq(j))
+      case (args, spark) => spark(args)
+    }
+    // 1-arg TRUNC of a date or timestamp is its date
+    // (`91_External/Catman/0_commercial_targets_daily_store_country.sql`)
+    wrap("trunc") {
+      case (Seq(t), _) if t.resolved &&
+          Seq(DateType, TimestampType, TimestampNTZType).contains(t.dataType) => Cast(t, DateType)
+      case (args, spark) => spark(args)
+    }
+    wrap("regexp_substr") {
+      case (args, _) if args.size >= 3 => regexpSubstrRs(args)
+      case (args, spark) => spark(args)
+    }
+    // the warehouse's UDF over SHA1 used by the snowplow user decode
+    // (`7_snowplow/1_page_view/14_decoding_user.sql:14`)
+    val (sha1, sha1Builder) = FunctionRegistry.expressions("sha1")
+    injectAs(new ExpressionInfo(sha1.getClassName, "func_sha1"), sha1Builder)
   }
 }

@@ -326,85 +326,6 @@ object RedshiftScript {
     implicitNamed.replaceAll("(?i)\\bjson_parse\\s*\\(", "try_parse_json(")
   }
 
-  /** Redshift's 2-arg `REGEXP_REPLACE(str, pattern)` deletes the matches
-    * (`31_segment_page_view_and_sessions/06_01_url_store_mapping.sql:8`);
-    * Spark requires the replacement — append `, ''`. A balanced
-    * string-aware paren scan counts top-level commas, so nested calls in
-    * either argument don't fool it.
-    */
-  private[graft] def fixTwoArgRegexpReplace(sql: String): String = {
-    val Call = "(?i)\\bregexp_replace\\s*\\(".r
-    var out = sql
-    var from = 0
-    var continue = true
-    while (continue) {
-      Call.findAllMatchIn(out).find(_.start >= from) match {
-        case None => continue = false
-        case Some(m) =>
-          val open = m.end - 1
-          var i = open + 1; var depth = 1; var inStr = false; var commas = 0
-          while (i < out.length && depth > 0) {
-            val c = out.charAt(i)
-            if (inStr) { if (c == '\'') inStr = false }
-            else c match {
-              case '\'' => inStr = true
-              case '(' => depth += 1
-              case ')' => depth -= 1
-              case ',' if depth == 1 => commas += 1
-              case _ => ()
-            }
-            i += 1
-          }
-          if (depth == 0 && commas == 1)
-            out = out.substring(0, i - 1) + ", ''" + out.substring(i - 1)
-          from = open + 1
-      }
-    }
-    out
-  }
-
-  /** Redshift's 2-arg `JSON_ARRAY_LENGTH(json, null_if_invalid)` — Spark's
-    * builtin takes 1 arg and already returns NULL on invalid input, so
-    * the boolean flag drops (`1_ods_core/00_order_item.sql:28`).
-    */
-  private[graft] def fixJsonArrayLengthFlag(sql: String): String = {
-    val Call = "(?i)\\bjson_array_length\\s*\\(".r
-    var out = sql
-    var from = 0
-    var continue = true
-    while (continue) {
-      Call.findAllMatchIn(out).find(_.start >= from) match {
-        case None => continue = false
-        case Some(m) =>
-          val open = m.end - 1
-          var i = open + 1; var depth = 1; var inStr = false
-          var lastComma = -1
-          while (i < out.length && depth > 0) {
-            val c = out.charAt(i)
-            if (inStr) { if (c == '\'') inStr = false }
-            else c match {
-              case '\'' => inStr = true
-              case '(' => depth += 1
-              case ')' => depth -= 1
-              case ',' if depth == 1 => lastComma = i
-              case _ => ()
-            }
-            i += 1
-          }
-          if (depth == 0 && lastComma > 0 &&
-              out.substring(lastComma + 1, i - 1).trim.matches("(?i)true|false"))
-            out = out.substring(0, lastComma) + out.substring(i - 1)
-          from = open + 1
-      }
-    }
-    out
-  }
-
-  /** Redshift accepts single-argument GREATEST/LEAST (identity);
-    * Spark demands ≥ 2 args (`13_finance_reporting/Luxco_Reporting/
-    * Luxco Reporting June-2023/New Logic/spv_historical.sql`). Unwrap
-    * the call to its lone argument.
-    */
   /** `JSON_SERIALIZE(col[n])` — Redshift SUPER array indexing under a
     * serialize (`1_ods_finance/00_payment_refund.sql:217` reads element
     * 0's JSON text out of `payment_group_tax_breakdown`). The element's
@@ -461,7 +382,7 @@ object RedshiftScript {
     }
     Call.replaceAllIn(sql, m => {
       val a = m.group(1).toLowerCase
-      if (inner(a) && !outer(a)) "count(*)"
+      if (inner(a) && !outer(a) && !inStringLiteral(sql, m.start)) "count(*)"
       else java.util.regex.Matcher.quoteReplacement(m.matched)
     })
   }
@@ -530,41 +451,6 @@ object RedshiftScript {
     }
     if (last == 0) sql
     else { out.append(sql.substring(last, sql.length)); out.toString }
-  }
-
-  private[graft] def fixSingleArgGreatest(sql: String): String = {
-    val Call = "(?i)\\b(greatest|least)\\s*\\(".r
-    var out = sql
-    var from = 0
-    var guard = 0
-    while (guard < 256) {
-      guard += 1
-      Call.findAllMatchIn(out).find(_.start >= from) match {
-        case None => return out
-        case Some(m) =>
-          val open = m.end - 1
-          var i = open + 1; var depth = 1; var inStr = false
-          var topCommas = 0
-          while (i < out.length && depth > 0) {
-            val c = out.charAt(i)
-            if (inStr) { if (c == '\'') inStr = false }
-            else c match {
-              case '\'' => inStr = true
-              case '(' => depth += 1
-              case ')' => depth -= 1
-              case ',' if depth == 1 => topCommas += 1
-              case _ => ()
-            }
-            i += 1
-          }
-          if (depth == 0 && topCommas == 0) {
-            out = out.substring(0, m.start) + "(" +
-              out.substring(open + 1, i - 1) + ")" + out.substring(i)
-            from = m.start + 1
-          } else from = open + 1
-      }
-    }
-    out
   }
 
   /** Athena federated passthrough `TABLE(redshift.system.query('<sql>'))`
@@ -670,7 +556,7 @@ object RedshiftScript {
     var guard = 0
     while (guard < 256) {
       guard += 1
-      Call.findAllMatchIn(out).find(_.start >= from) match {
+      Call.findAllMatchIn(out).find(m => m.start >= from && !inStringLiteral(out, m.start)) match {
         case None => return out
         case Some(m) =>
           val open = m.end - 1
@@ -698,6 +584,31 @@ object RedshiftScript {
       }
     }
     out
+  }
+
+  /** Whether `pos` lies inside a single-quoted string literal of `sql`
+    * (`''` is an escaped quote; comments and double-quoted identifiers
+    * hold no literal).
+    */
+  private def inStringLiteral(sql: String, pos: Int): Boolean = {
+    var i = 0; var inStr = false; var inLc = false; var inBc = false; var inDq = false
+    while (i < pos) {
+      val c = sql.charAt(i)
+      val next = if (i + 1 < sql.length) sql.charAt(i + 1) else ' '
+      if (inStr) { if (c == '\'') inStr = false }
+      else if (inLc) { if (c == '\n') inLc = false }
+      else if (inBc) { if (c == '*' && next == '/') { inBc = false; i += 1 } }
+      else if (inDq) { if (c == '"') inDq = false }
+      else c match {
+        case '\'' => inStr = true
+        case '"' => inDq = true
+        case '-' if next == '-' => inLc = true; i += 1
+        case '/' if next == '*' => inBc = true; i += 1
+        case _ => ()
+      }
+      i += 1
+    }
+    inStr
   }
 
   /** Presto/Athena array-of-JSON surface (intercom conversation exports
@@ -1085,12 +996,9 @@ object RedshiftScript {
       .replaceAll("'(\\d+(?:\\.\\d+)?)'\\s*\\+", "$1 +")
       .replaceAll("\\+\\s*'(\\d+(?:\\.\\d+)?)'", "+ $1")
     val preListagg = rewriteSuperPaths(rewriteListaggDistinct(
-      stripGluedGrantTail(fixTimestampParseFormats(
-        fixJsonArrayLengthFlag(fixTwoArgRegexpReplace(
-          fixTwoArgTrim(fixSingleArgGreatest(aliasBareNullifItems(
-            fixCountAliasStar(fixSerializedArrayIndex(rewriteArrayAggOrderBy(
-              rewritePostgresJson(rewritePrestoArrays(
-                unwrapFederatedQuery(pre0)))))))))))))))
+      stripGluedGrantTail(fixTimestampParseFormats(fixTwoArgTrim(aliasBareNullifItems(
+        fixCountAliasStar(fixSerializedArrayIndex(rewriteArrayAggOrderBy(
+          rewritePostgresJson(rewritePrestoArrays(unwrapFederatedQuery(pre0))))))))))))
     // SQL regex match: `x [NOT] SIMILAR TO 'p'` → anchored rlike. SQL
     // wildcards map (% → .*, _ → .); characters that are regex-meta but
     // SIMILAR-TO-literal (. ^ $) are escaped first — SIMILAR TO's own
@@ -1108,34 +1016,19 @@ object RedshiftScript {
     val pre = pre1.replaceAll(
       "(?i)\\b(?:timestamptz|timestamp)\\s+'epoch'", "timestamp '1970-01-01 00:00:00'")
     val rules = Seq(
-      // Redshift type spellings Spark's parser rejects
+      // Redshift type spellings Spark's grammar rejects (the names its
+      // type visitor rejects map in graft.expressions.GraftParser)
       "(?i)\\bdouble\\s+precision\\b" -> "double",
       "(?i)\\bcharacter\\s+varying\\s*\\(" -> "varchar(",
       "(?i)\\bcharacter\\s+varying\\b" -> "string",
-      "(?i)::\\s*text\\b" -> "::string",
-      "(?i)::\\s*varchar\\b(?!\\s*\\()" -> "::string",
       "(?i)\\bvarchar\\s*\\(\\s*max\\s*\\)" -> "string",
-      "(?i)::\\s*bpchar\\b" -> "::string",
-      // `::character(255)` / `::char(255)` result casts — Redshift trims
-      // the blank padding on retrieval, so plain string matches semantics
-      "(?i)::\\s*character\\s*\\(\\s*\\d+\\s*\\)" -> "::string",
-      "(?i)::\\s*char\\s*\\(\\s*\\d+\\s*\\)" -> "::string",
-      "(?i)::\\s*int8\\b" -> "::bigint",
-      "(?i)::\\s*int4\\b" -> "::int",
-      "(?i)::\\s*int2\\b" -> "::smallint",
-      "(?i)::\\s*float8\\b" -> "::double",
-      "(?i)::\\s*float4\\b" -> "::float",
-      "(?i)::\\s*bool\\b(?!ean)" -> "::boolean",
-      "(?i)::\\s*datetime\\b" -> "::timestamp",
-      "(?i)(\\bas\\s+)text(\\s*\\))" -> "$1string$2",
-      "(?i)(\\bas\\s+)varchar(\\s*\\))" -> "$1string$2",
-      "(?i)(\\bas\\s+)datetime(\\s*\\))" -> "$1timestamp$2",
-      "(?i)(\\bas\\s+)bool(\\s*\\))" -> "$1boolean$2",
-      // cast precision/timezone decorations Spark's types don't carry
-      "(?i)::\\s*timestamp\\s*\\(\\s*\\d+\\s*\\)" -> "::timestamp",
-      "(?i)(\\bas\\s+)timestamp\\s*\\(\\s*\\d+\\s*\\)" -> "$1timestamp",
       "(?i)\\btimestamp\\s+with(?:out)?\\s+time\\s+zone\\b" -> "timestamp",
-      "(?i)\\btimestamptz\\b" -> "timestamp",
+      // Redshift spellings Spark reads with another meaning: FLOAT is
+      // FLOAT8 and a bare NUMERIC/DECIMAL is (18,0), as in Runner DDL
+      "(?i)::\\s*float\\b" -> "::double",
+      "(?i)(\\bas\\s+)float(\\s*\\))" -> "$1double$2",
+      "(?i)::\\s*(?:numeric|decimal)\\b(?!\\s*\\()" -> "::decimal(18,0)",
+      "(?i)(\\bas\\s+)(?:numeric|decimal)(\\s*\\))" -> "$1decimal(18,0)$2",
       // postgres postfix null tests (`x isnull`) — never the function form
       "(?i)\\bisnull\\b(?!\\s*\\()" -> " is null ",
       "(?i)\\bnotnull\\b(?!\\s*\\()" -> " is not null ",
@@ -1205,10 +1098,6 @@ object RedshiftScript {
       // `atomic.levenshtein(...)`) — Spark has the builtin; drop the
       // schema qualifier
       "(?i)[\"`]?\\batomic[\"`]?\\.(levenshtein)\\s*\\(" -> "$1(",
-      // Redshift UDF wrapper over SHA1 used by the snowplow user decode
-      // (`7_snowplow/1_page_view/14_decoding_user.sql:14`) — Spark has
-      // the builtin
-      "(?i)\\bfunc_sha1\\s*\\(" -> "sha1(",
       // Redshift REGEXP_SUBSTR takes position/occurrence/params args
       // Spark's builtin lacks — route every call through the dialect
       // form (2-arg behavior is identical)
@@ -1216,8 +1105,9 @@ object RedshiftScript {
       // `timestamptz(x)` type-constructor ≡ a timestamp read of x
       // (TIMEZONE('tz', …) itself splits by operand type in the pre0
       // whole-text pass — its tz literal is invisible to this
-      // segment-aware rewriter)
-      "(?i)\\btimestamptz\\s*\\(" -> "to_timestamp(",
+      // segment-aware rewriter), and the typed literal `timestamptz '…'`
+      // (a segment ends where a literal starts)
+      "(?i)\\btimestamptz(?=\\s*(?:\\(|$))" -> "timestamp",
       // JSON_SERIALIZE over an already-stringified SUPER navigation
       // (rewriteSuperPaths emits CAST(variant_get … AS STRING)) is the
       // identity (`4_dwh_catman/contentful_campaigns.sql:50`); any OTHER
@@ -1235,54 +1125,8 @@ object RedshiftScript {
       "\"([^\"]+)\"" -> "`$1`") ++
       // the pin runs LAST so the DATE '…' it splices in is never re-matched
       currentDate.map(d => "(?i)\\bcurrent_date\\b" -> s"DATE '$d'").toSeq
-    addMissingWindowOrder(rewriteSingleArgTrunc(
-      rewriteOutsideStrings(rewriteQualify(dropDanglingCommas(pre)), rules)))
-  }
-
-  /** Redshift 1-arg TRUNC(timestamp) → DATE (`trunc(datum)`,
-    * `91_External/Catman/0_commercial_targets_daily_store_country.sql`);
-    * Spark's trunc is the 2-arg format form. Every 1-arg use in the
-    * corpus is temporal, so rewrite to a date cast. Paren-aware: only
-    * calls whose argument list has no top-level comma.
-    */
-  private[graft] def rewriteSingleArgTrunc(sql: String): String = {
-    val M = "(?i)(?<![\\w.])trunc\\s*\\(".r
-    var out = sql
-    var guard = 0
-    while (guard < 256) {
-      guard += 1
-      val hit = M.findAllMatchIn(out).find { m =>
-        val open = out.indexOf('(', m.start)
-        val close = scanCloseAt(out, open)
-        close > 0 && splitTop(out.substring(open + 1, close)).size == 1
-      }
-      hit match {
-        case Some(m) =>
-          val open = out.indexOf('(', m.start)
-          val close = scanCloseAt(out, open)
-          out = out.substring(0, m.start) + "cast(" +
-            out.substring(open + 1, close) + " as date)" +
-            out.substring(close + 1)
-        case None => return out
-      }
-    }
-    out
-  }
-
-  private def scanCloseAt(s: CharSequence, open: Int): Int = {
-    var i = open + 1; var depth = 1; var inStr = false
-    while (i < s.length && depth > 0) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    if (depth == 0) i - 1 else -1
+    addMissingWindowOrder(
+      rewriteOutsideStrings(rewriteQualify(dropDanglingCommas(pre)), rules))
   }
 
   /** Rewrite `QUALIFY <pred>` (Redshift/Snowflake window filter — Spark's
@@ -2131,7 +1975,11 @@ object RedshiftScript {
       }
     }
 
-    /** Redshift DDL type → Spark type (ADD COLUMN / CREATE TABLE (cols)). */
+    /** Redshift DDL type → Spark type (ADD COLUMN / CREATE TABLE (cols)):
+      * Redshift's own defaults and the names Spark's grammar lacks map
+      * here, every other name through the session's parser (which also
+      * reads Redshift's `int8`, `bool`, … — see GraftParser).
+      */
     private def redshiftType(t: String): org.apache.spark.sql.types.DataType = {
       import org.apache.spark.sql.types._
       // `identity(seed, step)` is an auto-increment decoration on the base
@@ -2139,23 +1987,13 @@ object RedshiftScript {
       // the sequence itself has no analogue here (inserts supply values)
       val base = t.trim.toLowerCase.replaceAll(
         "\\s+(encode|not\\s+null|null|default|sortkey|distkey|identity\\s*\\([^)]*\\)|primary\\s+key|unique|references).*$", "").trim
-      val Dec = "(?:numeric|decimal)\\s*\\(\\s*(\\d+)\\s*,\\s*(\\d+)\\s*\\)".r
-      val DecP = "(?:numeric|decimal)\\s*\\(\\s*(\\d+)\\s*\\)".r
       base match {
-        case Dec(p, s) => DecimalType(p.toInt, s.toInt)
-        case DecP(p) => DecimalType(p.toInt, 0)
         case "numeric" | "decimal" => DecimalType(18, 0)
+        case "double precision" | "float" => DoubleType
         case b if b.startsWith("varchar") || b.startsWith("character") ||
           b.startsWith("char") || b == "text" || b.startsWith("nvarchar") => StringType
-        case "smallint" | "int2" => ShortType
-        case "integer" | "int" | "int4" => IntegerType
-        case "bigint" | "int8" => LongType
-        case "real" | "float4" => FloatType
-        case "double precision" | "float8" | "float" => DoubleType
-        case "boolean" | "bool" => BooleanType
-        case "date" => DateType
         case b if b.startsWith("timestamp") => TimestampType
-        case other => throw new IllegalArgumentException(s"unmapped Redshift type: $other")
+        case other => spark.sessionState.sqlParser.parseDataType(other)
       }
     }
 

@@ -68,4 +68,22 @@ class EngineConfigSpec extends SparkSpec {
     val writers = Seq("mergeByKey", "updateWhere").filter(read("io/Writers.scala").contains)
     assert(runner.isEmpty && writers.isEmpty, runner ++ writers)
   }
+
+  test("Redshift spellings Spark rejects map in the session's parser and builders") {
+    // GraftParser maps the type names Spark's visitor rejects, and
+    // RedshiftSqlFunctions wraps the builtins' builders for the argument
+    // counts Spark rejects; translate holds no rule and no paren scanner
+    // for them, so it cannot rewrite inside a string literal
+    assert(spark.sessionState.sqlParser.isInstanceOf[graft.expressions.GraftParser])
+    val runner = Files.readString(Paths.get("src/main/scala/graft/pipeline/RedshiftScript.scala"))
+    val helpers = Seq("fixTwoArgRegexpReplace", "fixJsonArrayLengthFlag", "fixSingleArgGreatest",
+      "rewriteSingleArgTrunc", "scanCloseAt").filter(runner.contains)
+    assert(helpers.isEmpty, helpers)
+    val types = Seq("int8", "int4", "int2", "float8", "float4", "text", "varchar", "bpchar",
+      "char(5)", "character(5)", "bool", "datetime", "timestamptz", "timestamp(3)")
+    val spellings = types.flatMap(t => Seq(s"k::$t", s"CAST(k AS $t)")) ++ Seq("greatest(k)",
+      "least(k)", "trunc(k)", "regexp_replace(k, 'x')", "json_array_length(k, true)", "func_sha1(k)")
+    val sql = spellings.mkString("SELECT ", ", ", " FROM t")
+    assert(graft.pipeline.RedshiftScript.translate(sql) === sql)
+  }
 }

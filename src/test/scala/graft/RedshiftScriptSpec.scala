@@ -678,7 +678,8 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(neg.contains("rlike '^(?:a\\^b)$'"), neg)
     assert(t.matches("(?s).*\\brlike\\s+'\\^\\[0-9]\\+\\$'.*"), t) // ~ operator
     assert(t.matches("(?s).*\\blike\\s+'%z%'.*"), t)          // ~~ operator
-    assert(t.contains("b::string") && t.contains("c::string"), t)
+    // `::text` is left to the session's parser (graft.expressions.GraftParser)
+    assert(t.contains("b::text = c::string"), t)
     assert(t.contains("date_add(d, 7)"), t)                 // 2-arg Spark form untouched
     assert(t.contains("datediff_rs('day', f, g)"), t)       // quoted Presto form mapped
     assert(t.contains("last_value(v) ignore nulls"), t)
@@ -1110,9 +1111,9 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(naive.contains("to_utc_timestamp(created_at::timestamp, 'CET')"), naive)
     assert(naive.contains("to_utc_timestamp(ts, 'MST')"))
     assert(t.contains("avg(x) over"))
-    assert(t.contains("a::boolean"))
-    assert(t.contains("b::string"))
-    assert(t.contains("c::timestamp,"))
+    // the type names Spark's visitor rejects are left to the session's
+    // parser (graft.expressions.GraftParser; RedshiftSpellingSpec runs them)
+    assert(t.contains("a::bool, b::bpchar, c::timestamp(0),"), t)
     // postgres current-date idiom: Spark's CAST('now' AS TIMESTAMP) is
     // NULL, so the literal form maps to the function
     assert(t.contains("current_timestamp,"))
@@ -1134,7 +1135,7 @@ class RedshiftScriptSpec extends SparkSpec {
     // a multiline cast beyond the lookbehind bound is saved by the
     // type-name check: cast targets are always types, Tableau aliases never
     val ml = RedshiftScript.translate("SELECT CAST\n            (order_id AS varchar) FROM t")
-    assert(ml.toLowerCase.contains("as string)"), ml) // type spelling mapped, cast kept
+    assert(ml.toLowerCase.contains("(order_id as varchar)"), ml) // cast kept
     // dangling comma before FROM — also across a comment line
     val d = RedshiftScript.translate(
       "SELECT a, b, --total revenue net due\nFROM t")
@@ -1251,17 +1252,6 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(rows === Map(1 -> "wh_late", 2 -> "wh_only", 3 -> null))
   }
 
-  test("translate: 2-arg REGEXP_REPLACE gains the empty replacement") {
-    val t = RedshiftScript.translate(
-      "SELECT REGEXP_REPLACE(replace(x,'-','_'), '_.[0-9]{3}') FROM t")
-    assert(t.toLowerCase.contains("'_.[0-9]{3}', '')"), t)
-    // 3-arg form untouched; a comma inside a pattern literal doesn't count
-    val u = RedshiftScript.translate(
-      "SELECT regexp_replace(a, '-', ' '), regexp_replace(b, '[,;]') FROM t")
-    assert(u.contains("regexp_replace(a, '-', ' ')"), u)
-    assert(u.contains("regexp_replace(b, '[,;]', '')"), u)
-  }
-
   test("translate: double-quoted identifiers containing -- are not comments") {
     val t = RedshiftScript.translate("""SELECT x AS "1-->2", y AS "a--b" FROM t""")
     assert(t.contains("`1-->2`"))
@@ -1297,7 +1287,7 @@ class RedshiftScriptSpec extends SparkSpec {
         |  CASE WHEN IS_VALID_JSON(props) THEN JSON_PARSE(NULLIF(props,'nan')) ELSE NULL END AS p,
         |  JSON_PARSE(arrcol) AS t2, JSON_PARSE(os) AS m
         |FROM raw)""".stripMargin)
-    assert(t.contains("CAST(variant_get(c, '$.app.build') AS STRING)::string"))
+    assert(t.contains("CAST(variant_get(c, '$.app.build') AS STRING)::VARCHAR"))
     assert(t.contains("coalesce") || t.contains("COALESCE"))
     assert(t.contains("variant_get(p, '$.path')"))
     assert(t.contains("variant_get(t2, '$.arr[0]')"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.RedshiftScript
+import graft.pipeline.{Catalog, RedshiftScript}
 
 /** Redshift spellings that Spark's parser or a builtin's argument check
   * rejects, run through the Runner. Each case checks the rows, the
@@ -57,6 +57,75 @@ class RedshiftSpellingSpec extends SparkSpec {
     }
   }
 
+  Seq(
+    ("int8", "bigint", Seq("7", "12")),
+    ("int4", "int", Seq("7", "12")),
+    ("int2", "smallint", Seq("7", "12")),
+    ("float8", "double", Seq("7.0", "12.0")),
+    ("float4", "float", Seq("7.0", "12.0")),
+    ("bpchar", "string", Seq("12", "7")),
+    ("varchar", "string", Seq("12", "7")),
+    ("text", "string", Seq("12", "7"))
+  ).foreach { case (name, spark, rows) =>
+    test(s"Runner: CAST(k AS $name) casts to $spark") {
+      assertRunner(s"CAST(k AS $name)", s"struct<k:$spark>", rows: _*)
+    }
+  }
+
+  test("Runner: FLOAT is FLOAT8 and a bare NUMERIC or DECIMAL is DECIMAL(18,0), as in Redshift") {
+    fixture()
+    val r = new RedshiftScript.Runner(spark, root()).run(
+      """SELECT n::float AS a, CAST(n AS float) AS b, n::numeric AS c, CAST(n AS numeric) AS d,
+        |  n::decimal AS e, CAST(n AS DECIMAL) AS f, n::numeric(13,2) AS g, n::float4 AS h
+        |FROM (SELECT 12345678901 AS n);""".stripMargin)
+    assert(r.ok, r.reports.mkString("; "))
+    val df = r.lastSelect.get
+    assert(df.schema.simpleString === "struct<a:double,b:double,c:decimal(18,0)," +
+      "d:decimal(18,0),e:decimal(18,0),f:decimal(18,0),g:decimal(13,2),h:float>")
+    assert(df.collect().toSeq.map(_.mkString("|")) === Seq(
+      "1.2345678901E10|1.2345678901E10|12345678901|12345678901|12345678901|12345678901|" +
+        "12345678901.00|1.23456788E10"))
+  }
+
+  test("Runner: string literals that spell a rewritten call come back verbatim") {
+    val calls = Seq("greatest(x)", "least(x)", "trunc(x)", "regexp_replace(a, b)",
+      "json_array_length(x, true)", "rtrim(a, b)", "ltrim(a, b)", "count(t.*)")
+    fixture()
+    val r = new RedshiftScript.Runner(spark, root()).run(
+      calls.zipWithIndex.map { case (c, i) => s"'$c' AS c$i" }
+        .mkString("SELECT ", ", ", ", count(t.*) AS n FROM sp_src t;"))
+    assert(r.ok, r.reports.mkString("; "))
+    assert(r.lastSelect.get.collect().head.toSeq === calls :+ 2L)
+  }
+
+  test("a persistent view over Redshift spellings reads back from DataFrame code") {
+    fixture()
+    Catalog.replaceTable(spark.table("sp_src"), "sp_db", "src")
+    // written as Spark SQL: the session's parser and builders take the
+    // spellings, so the stored view text needs no translation
+    spark.sql("CREATE OR REPLACE VIEW sp_db.v_sql AS " +
+      "SELECT k::int8 AS k8, greatest(k) AS g, CAST(ds AS timestamptz) AS t FROM sp_db.src")
+    assert(spark.table("sp_db.v_sql").orderBy("k8").collect().map(_.mkString("|")).toSeq ===
+      Seq("7|7|2023-12-31 23:59:59.0", "12|12|2024-03-05 10:11:12.0"))
+    assert(spark.table("sp_db.v_sql").schema.simpleString ===
+      "struct<k8:bigint,g:int,t:timestamp>")
+    // created by a Runner statement
+    val r = new RedshiftScript.Runner(spark, root()).run(
+      "CREATE VIEW sp_db.v_runner AS SELECT k::int8 AS k8, greatest(k) AS g FROM sp_db.src;")
+    assert(r.ok, r.reports.mkString("; "))
+    assert(spark.table("sp_db.v_runner").orderBy("k8").collect().map(_.mkString("|")).toSeq ===
+      Seq("7|7", "12|12"))
+  }
+
+  test("1-arg TRUNC of another type is Spark's error, and Spark's own argument counts are unchanged") {
+    fixture()
+    val r = new RedshiftScript.Runner(spark, root()).run("SELECT trunc(s) FROM sp_src;")
+    assert(!r.ok && r.reports.head.error.exists(_.contains("WRONG_NUM_ARGS")), r.reports)
+    assert(spark.sql("SELECT trunc(DATE'2024-03-05', 'MM'), greatest(1, 3), " +
+      "regexp_replace('a-b', '-', '+'), json_array_length('[1]')").head().toSeq ===
+      Seq(java.sql.Date.valueOf("2024-03-01"), 3, "a+b", 1))
+  }
+
   test("Runner: 1-arg GREATEST and LEAST return the argument") {
     assertRunner("greatest(k)", "struct<k:int>", "7", "12")
     assertRunner("least(s)", "struct<s:string>", "x-y", "a-b-c")
@@ -69,9 +138,12 @@ class RedshiftSpellingSpec extends SparkSpec {
 
   test("Runner: 2-arg REGEXP_REPLACE deletes the matches") {
     assertRunner("regexp_replace(s, '-')", "struct<regexp_replace(s, -, , 1):string>", "xy", "abc")
-    // a comma inside the pattern literal is not an argument separator
+    // a comma inside the pattern literal is not an argument separator,
+    // and a nested call is one argument
     assertRunner("regexp_replace(s, '[,-]')", "struct<regexp_replace(s, [,-], , 1):string>",
       "xy", "abc")
+    assertRunner("REGEXP_REPLACE(replace(s, '-', '_'), '_.')",
+      "struct<regexp_replace(replace(s, -, _), _., , 1):string>", "x", "a")
     assertRunner("regexp_replace(s, '-', '+')", "struct<regexp_replace(s, -, +, 1):string>",
       "x+y", "a+b+c")
   }

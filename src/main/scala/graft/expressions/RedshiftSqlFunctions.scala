@@ -223,45 +223,32 @@ object RedshiftSqlFunctions {
         col(children(1)).cast("int")))
     }
 
-    // Redshift argument counts Spark's builtins reject. Every count Spark
-    // accepts calls Spark's own builder unchanged, so Spark SQL keeps its
+    // Redshift argument counts Spark's builtins reject. Every other call
+    // goes to Spark's own builder unchanged, so Spark SQL keeps its
     // meaning. The builder comes from the static `FunctionRegistry
     // .expressions`, not from the builtin registry written here, so a
     // second session does not wrap a wrapper.
     def wrap(name: String)(
-        redshift: (Seq[Expression], Seq[Expression] => Expression) => Expression): Unit = {
+        redshift: (Seq[Expression] => Expression) => PartialFunction[Seq[Expression], Expression]): Unit = {
       val (info, spark) = FunctionRegistry.expressions(name)
-      injectAs(info, redshift(_, spark))
+      injectAs(info, args => redshift(spark).applyOrElse(args, spark))
     }
     // 1-arg GREATEST/LEAST is the argument
     // (`13_finance_reporting/Luxco_Reporting/…/spv_historical.sql`)
-    Seq("greatest", "least").foreach(f => wrap(f) {
-      case (Seq(x), _) => x
-      case (args, spark) => spark(args)
-    })
+    Seq("greatest", "least").foreach(wrap(_)(_ => { case Seq(x) => x }))
     // 2-arg REGEXP_REPLACE deletes the matches
     // (`31_segment_page_view_and_sessions/06_01_url_store_mapping.sql:8`)
-    wrap("regexp_replace") {
-      case (Seq(s, p), spark) => spark(Seq(s, p, Literal("")))
-      case (args, spark) => spark(args)
-    }
+    wrap("regexp_replace")(spark => { case Seq(s, p) => spark(Seq(s, p, Literal(""))) })
     // JSON_ARRAY_LENGTH(json, null_if_invalid): Spark's already returns
     // NULL on invalid input (`1_ods_core/00_order_item.sql:28`)
-    wrap("json_array_length") {
-      case (Seq(j, Literal(_, BooleanType)), spark) => spark(Seq(j))
-      case (args, spark) => spark(args)
-    }
+    wrap("json_array_length")(spark => { case Seq(j, Literal(_, BooleanType)) => spark(Seq(j)) })
     // 1-arg TRUNC of a date or timestamp is its date
     // (`91_External/Catman/0_commercial_targets_daily_store_country.sql`)
-    wrap("trunc") {
-      case (Seq(t), _) if t.resolved &&
+    wrap("trunc")(_ => {
+      case Seq(t) if t.resolved &&
           Seq(DateType, TimestampType, TimestampNTZType).contains(t.dataType) => Cast(t, DateType)
-      case (args, spark) => spark(args)
-    }
-    wrap("regexp_substr") {
-      case (args, _) if args.size >= 3 => regexpSubstrRs(args)
-      case (args, spark) => spark(args)
-    }
+    })
+    wrap("regexp_substr")(_ => { case args if args.size >= 3 => regexpSubstrRs(args) })
     // the warehouse's UDF over SHA1 used by the snowplow user decode
     // (`7_snowplow/1_page_view/14_decoding_user.sql:14`)
     val (sha1, sha1Builder) = FunctionRegistry.expressions("sha1")

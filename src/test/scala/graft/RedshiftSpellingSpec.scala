@@ -104,11 +104,12 @@ class RedshiftSpellingSpec extends SparkSpec {
     // written as Spark SQL: the session's parser and builders take the
     // spellings, so the stored view text needs no translation
     spark.sql("CREATE OR REPLACE VIEW sp_db.v_sql AS " +
-      "SELECT k::int8 AS k8, greatest(k) AS g, CAST(ds AS timestamptz) AS t FROM sp_db.src")
+      "SELECT k::int8 AS k8, greatest(k) AS g, CAST(ds AS timestamptz) AS t, " +
+      "regexp_substr(s, '[a-z]', 1, 2) AS r, func_sha1(s) = sha1(s) AS h FROM sp_db.src")
     assert(spark.table("sp_db.v_sql").orderBy("k8").collect().map(_.mkString("|")).toSeq ===
-      Seq("7|7|2023-12-31 23:59:59.0", "12|12|2024-03-05 10:11:12.0"))
+      Seq("7|7|2023-12-31 23:59:59.0|y|true", "12|12|2024-03-05 10:11:12.0|b|true"))
     assert(spark.table("sp_db.v_sql").schema.simpleString ===
-      "struct<k8:bigint,g:int,t:timestamp>")
+      "struct<k8:bigint,g:int,t:timestamp,r:string,h:boolean>")
     // created by a Runner statement
     val r = new RedshiftScript.Runner(spark, root()).run(
       "CREATE VIEW sp_db.v_runner AS SELECT k::int8 AS k8, greatest(k) AS g FROM sp_db.src;")

@@ -30,7 +30,7 @@ object GraftParser {
   /** The Spark type of a Redshift type name Spark's visitor rejects
     * (`name` is the type's tokens, lower case, without spaces).
     */
-  def redshiftType(name: String): Option[DataType] = name match {
+  private def redshiftType(name: String): Option[DataType] = name match {
     case "int8" => Some(LongType)
     case "int4" => Some(IntegerType)
     case "int2" => Some(ShortType)

@@ -73,7 +73,6 @@ class RedshiftSpellingSpec extends SparkSpec {
   }
 
   test("Runner: FLOAT is FLOAT8 and a bare NUMERIC or DECIMAL is DECIMAL(18,0), as in Redshift") {
-    fixture()
     val r = new RedshiftScript.Runner(spark, root()).run(
       """SELECT n::float AS a, CAST(n AS float) AS b, n::numeric AS c, CAST(n AS numeric) AS d,
         |  n::decimal AS e, CAST(n AS DECIMAL) AS f, n::numeric(13,2) AS g, n::float4 AS h

@@ -4,9 +4,9 @@ import graft.functions.{Redshift => R}
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Ceil, Expression, ExpressionInfo, Floor, If, LessThan, Literal, Remainder, Subtract}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BooleanType, DateType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL-text entry points for the Redshift-dialect shims (SURVEY §4.3's
@@ -163,7 +163,8 @@ object RedshiftSqlFunctions {
     // Redshift REGEXP_SUBSTR(str, pat[, position[, occurrence[,
     // parameters]]]) — Spark's builtin stops at 2 args
     // (`91_External/Gmail/partner_online_order_tracking.sql:9` pulls
-    // the Nth tracking link). Non-match yields '' like Redshift.
+    // the Nth tracking link). Non-match of a non-NULL source yields ''
+    // like Redshift; a NULL source yields NULL.
     val regexpSubstrRs: Seq[Expression] => Expression = { children =>
       require(children.size >= 2 && children.size <= 5,
         "regexp_substr_rs(str, pat[, pos[, occurrence[, params]]])")
@@ -179,9 +180,9 @@ object RedshiftSqlFunctions {
         if (children.size >= 3) str0.substr(col(children(2)), F.lit(Int.MaxValue))
         else str0
       val occ = if (children.size >= 4) col(children(3)) else F.lit(1)
-      ex(F.coalesce(
+      ex(F.when(str0.isNotNull, F.coalesce(
         F.try_element_at(F.regexp_extract_all(base, pat, F.lit(0)), occ),
-        F.lit("")))
+        F.lit(""))))
     }
     inject("regexp_substr_rs")(regexpSubstrRs)
     // Redshift CHARINDEX(substring, string) — Spark's instr with the
@@ -243,10 +244,17 @@ object RedshiftSqlFunctions {
     // NULL on invalid input (`1_ods_core/00_order_item.sql:28`)
     wrap("json_array_length")(spark => { case Seq(j, Literal(_, BooleanType)) => spark(Seq(j)) })
     // 1-arg TRUNC of a date or timestamp is its date
-    // (`91_External/Catman/0_commercial_targets_daily_store_country.sql`)
+    // (`91_External/Catman/0_commercial_targets_daily_store_country.sql`),
+    // of a number the number truncated toward zero: a DECIMAL(p, s) gives
+    // DECIMAL(p - s + 1, 0), a FLOAT or DOUBLE its own type
     wrap("trunc")(_ => {
       case Seq(t) if t.resolved &&
           Seq(DateType, TimestampType, TimestampNTZType).contains(t.dataType) => Cast(t, DateType)
+      case Seq(n) if n.resolved && Seq(ByteType, ShortType, IntegerType, LongType).contains(n.dataType) => n
+      case Seq(n) if n.resolved && n.dataType.isInstanceOf[DecimalType] =>
+        If(LessThan(n, Literal(0)), Ceil(n), Floor(n))
+      case Seq(n) if n.resolved && Seq(FloatType, DoubleType).contains(n.dataType) =>
+        Subtract(n, Remainder(n, Cast(Literal(1), n.dataType)))
     })
     wrap("regexp_substr")(_ => { case args if args.size >= 3 => regexpSubstrRs(args) })
     // the warehouse's UDF over SHA1 used by the snowplow user decode

@@ -117,17 +117,20 @@ object Catalog {
     * Spark has no native MV): the defining SQL is stored beside the data
     * so [[refreshMaterializedView]] can re-run it — each refresh writes
     * new data and swaps it in atomically ([[graft.io.Writers.atomicSwap]]),
-    * so readers always see a complete snapshot.
+    * so readers always see a complete snapshot. The first materialization
+    * writes `rows` when given (a transaction's staged state), else the
+    * definition's rows.
     */
   def createMaterializedView(
       spark: SparkSession,
       name: String,
       viewSql: String,
-      path: String): Unit = {
+      path: String,
+      rows: Option[DataFrame] = None): Unit = {
     val parts = name.split("\\.")
     if (parts.length > 1) ensureDatabase(spark, parts.head)
     writeText(spark, defPath(path), viewSql)
-    spark.sql(viewSql).write.mode("overwrite").parquet(path)
+    rows.getOrElse(spark.sql(viewSql)).write.mode("overwrite").parquet(path)
     spark.sql(s"DROP TABLE IF EXISTS $name")
     spark.sql(s"CREATE TABLE $name USING parquet LOCATION '$path'")
   }

@@ -3,11 +3,12 @@ package graft.pipeline
 import graft.io.Writers
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Coalesce, Expression, If, IsNotNull, Literal, MonotonicallyIncreasingID, Not}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Coalesce, Expression, If, IsNotNull, Literal, MonotonicallyIncreasingID, Not, SubqueryExpression}
 import org.apache.spark.sql.catalyst.expressions.Literal.{FalseLiteral, TrueLiteral}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftAnti, LeftOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, Filter, HintInfo, InsertAction, Join, JoinHint, LogicalPlan, MergeAction, MergeIntoTable, MergeRows, NO_BROADCAST_AND_REPLICATION, Project, SubqueryAlias, Union, UpdateAction, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, Filter, HintInfo, InsertAction, Join, JoinHint, LogicalPlan, MergeAction, MergeIntoTable, MergeRows, NO_BROADCAST_AND_REPLICATION, Project, SubqueryAlias, Union, UnresolvedWith, UpdateAction, UpdateTable}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import scala.collection.mutable
 
 /** Multi-statement Redshift-script interpreter — the reference's unit of
@@ -40,11 +41,11 @@ import scala.collection.mutable
   *
   * In-transaction reads are read-your-writes across BOTH statement
   * forms: DataFrame-level verbs resolve tables through the overlay
-  * directly, and raw SQL parsed by Spark (SELECT, CREATE TABLE AS, the
-  * query of an INSERT, a whole DML statement) has its references
-  * to overlaid tables rewritten to overlay-backed temp views before
-  * parsing — a statement reading a table mutated earlier in the same
-  * transaction sees the staged mutation, as in Redshift. Failure follows
+  * directly, and in SQL parsed by Spark (SELECT, CREATE TABLE AS, the
+  * query of an INSERT, a whole DML statement) each relation that names
+  * an overlaid table is replaced by the overlay in Spark's parsed plan —
+  * a statement reading a table mutated earlier in the same transaction
+  * sees the staged mutation, as in Redshift. Failure follows
   * Redshift abort semantics: a failed statement inside BEGIN…COMMIT
   * aborts the transaction — subsequent statements fail until
   * COMMIT/ROLLBACK, and COMMIT of an aborted transaction rolls back and
@@ -1829,90 +1830,65 @@ object RedshiftScript {
     private var txnAborted = false
     private var lastSelect: Option[DataFrame] = None
 
-    private def tr(sql: String): String = resolveOverlays(translate(sql, currentDate))
+    private def parse(sql: String): LogicalPlan =
+      spark.sessionState.sqlParser.parsePlan(translate(sql, currentDate))
 
-    /** Translate and analyze a bare query body, as the verbs do, for
-      * callers that need a body's DataFrame outside a full script run (the
-      * test harness derives pre-existing INSERT targets from their body's
-      * schema). One `spark.sql`: the Redshift shapes Spark rejects are
-      * analyzer rules ([[graft.expressions.MarkRedshiftShapes]],
+    /** A query body's DataFrame, built as every verb builds one: the body
+      * is translated, parsed by Spark, and read through the transaction's
+      * staged tables ([[withStaged]]), then analyzed once. The Redshift
+      * shapes Spark rejects are analyzer rules
+      * ([[graft.expressions.MarkRedshiftShapes]],
       * [[graft.expressions.MarkLateralAliases]],
-      * [[graft.expressions.RedshiftCoercions]]).
+      * [[graft.expressions.RedshiftCoercions]]). The test harness also
+      * derives pre-existing INSERT targets from a body's schema with it.
       */
-    def queryDf(body: String): DataFrame = spark.sql(tr(body))
+    def queryDf(body: String): DataFrame = PlanBridge.ofRows(spark, withStaged(parse(body)))
 
-    /** Read-your-writes for raw SQL: rewrite references to overlaid
-      * tables into overlay-backed temp views, so a SELECT / INSERT body /
-      * CTAS reading a table mutated earlier in the SAME transaction sees
-      * the staged mutation (Redshift semantics), not the pre-transaction
-      * files. The view is registered under the table's BASE name, so
-      * base-qualified column references (`FROM db.t … t.x`) and existing
-      * `FROM db.t alias` forms keep resolving after the rewrite, and bare
-      * `FROM t` references are shadowed by the temp view with no rewrite
-      * at all. When the base name is unusable (already a user temp view,
-      * shared by two overlaid tables, or a reserved word the view API
-      * rejects) that table falls back to a `__ov_db_t` view — qualified
-      * refs to it then fail analysis loudly rather than read stale data.
-      * Views are dropped when the overlay clears at COMMIT/ROLLBACK.
+    /** Read-your-writes: `plan` with each relation that names a table
+      * staged in this transaction replaced by the staged rows, so a
+      * statement sees the mutations made earlier in the same transaction,
+      * as in Redshift. The rows take the catalog-qualified name Spark's own
+      * relation carries (`spark_catalog.db.t`), so `t.k`, `db.t.k` and an
+      * alias resolve as they do outside a transaction. Subquery
+      * expressions are included. A one-part name that a WITH in scope
+      * binds or that names a temp view keeps its meaning, as Spark
+      * resolves both before a table. `bound` names further one-part
+      * relations (the EXCLUDED rows of an INSERT … ON CONFLICT).
       */
-    private val ovViews = mutable.LinkedHashMap[String, String]() // overlay key -> view
-    private def fallbackView(key: String): String = "__ov_" + key.replace('.', '_')
-
-    private def resolveOverlays(sql: String): String =
-      overlay.foldLeft(sql) { case (s, (key, df)) =>
-        val view = ovViews.getOrElseUpdate(key, {
-          val base = key.split("\\.").last
-          // the base name must shadow only the OVERLAID table: a
-          // different same-base temp view or catalog table in the
-          // current database would be silently shadowed for bare
-          // references — those cases (and two overlaid tables sharing a
-          // base) fall back to the unreachable __ov_ name
-          val sameTable = key == base ||
-            key.equalsIgnoreCase(s"${spark.catalog.currentDatabase}.$base")
-          val clash =
-            overlay.keys.count(_.split("\\.").last == base) > 1 ||
-              (isTempView(base) && !ovViews.valuesIterator.contains(base)) ||
-              (!sameTable && spark.catalog.tableExists(base))
-          if (clash) fallbackView(key) else base
-        })
-        val registered =
-          try { df.createOrReplaceTempView(view); view }
-          catch {
-            case _: Exception => // e.g. reserved-word base name
-              val fb = fallbackView(key)
-              ovViews(key) = fb
-              df.createOrReplaceTempView(fb)
-              fb
+    private def withStaged(plan: LogicalPlan, bound: Map[String, DataFrame] = Map.empty): LogicalPlan = {
+      val (cat, db) = (spark.catalog.currentCatalog(), spark.catalog.currentDatabase)
+      def qualified(parts: Seq[String]): Seq[String] = parts.map(_.toLowerCase) match {
+        case Seq(t) => Seq(cat, db.toLowerCase, t)
+        case Seq(d, t) => Seq(cat, d, t)
+        case ps => ps
+      }
+      val tables = overlay.map { case (key, df) => qualified(key.split("\\.").toSeq) -> df }
+      def rows(name: Seq[String], ctes: Set[String]): Option[LogicalPlan] = name match {
+        case Seq(n) if bound.contains(n.toLowerCase) =>
+          Some(SubqueryAlias(n, bound(n.toLowerCase).queryExecution.analyzed))
+        case Seq(n) if ctes(n.toLowerCase) || isTempView(n) => None
+        case _ =>
+          val q = qualified(name)
+          tables.get(q).map(df =>
+            SubqueryAlias(q, df.queryExecution.analyzed))
+      }
+      def sub(p: LogicalPlan, ctes: Set[String]): LogicalPlan = p match {
+        case r: UnresolvedRelation => rows(r.multipartIdentifier, ctes).getOrElse(r)
+        case w: UnresolvedWith =>
+          // a definition sees the names defined before it (and its own,
+          // when recursive); the body sees them all
+          val names = w.cteRelations.map(_._1.toLowerCase)
+          val defs = w.cteRelations.zipWithIndex.map { case ((n, d, depth), i) =>
+            val seen = names.take(if (w.allowRecursion) i + 1 else i)
+            (n, sub(d, ctes ++ seen).asInstanceOf[SubqueryAlias], depth)
           }
-        // the overlay key is quote-stripped (`master.order`) but the
-        // post-translate SQL may spell any part backticked (Redshift
-        // `"order"` became `` `order` ``) — match every quoting mix of
-        // each name part, or quoted-identifier tables silently miss the
-        // overlay and read the pre-transaction snapshot
-        val keyPat = key.split("\\.").map { p =>
-          val q = java.util.regex.Pattern.quote(p)
-          s"(?:$q|`$q`)"
-        }.mkString("\\.")
-        RedshiftScript.rewriteOutsideStrings(
-          s, s"(?i)(?<![\\w.`])$keyPat(?![\\w.`])", registered)
+          w.copy(child = sub(w.child, ctes ++ names), cteRelations = defs)
+        case _ =>
+          p.withNewChildren(p.children.map(sub(_, ctes))).transformExpressions {
+            case e: SubqueryExpression => e.withNewPlan(sub(e.plan, ctes))
+          }
       }
-
-    /** A CREATE TEMP TABLE (or temp-table DML) claiming a name an overlay
-      * view currently holds wins it: the overlay remaps to its __ov_
-      * fallback so the user's temp table is neither clobbered on the next
-      * resolution nor dropped at COMMIT.
-      */
-    private def reclaimViewName(base: String): Unit =
-      ovViews.find(_._2.equalsIgnoreCase(base)).foreach { case (key, _) =>
-        val fb = fallbackView(key)
-        overlay.get(key).foreach(_.createOrReplaceTempView(fb))
-        ovViews(key) = fb
-      }
-
-    private def clearOverlay(): Unit = {
-      ovViews.values.foreach(spark.catalog.dropTempView)
-      ovViews.clear()
-      overlay.clear()
+      if (overlay.isEmpty && bound.isEmpty) plan else sub(plan, Set.empty)
     }
 
     /** Strip Redshift `"identifier"` quoting from a table name. */
@@ -1953,24 +1929,20 @@ object RedshiftScript {
       spark.sessionState.catalog.isTempView(norm(name).split("\\.").toIndexedSeq)
 
     private def stage(name: String, df: DataFrame): Unit = {
-      // a bare-name target that currently resolves to an overlay view is
-      // DML on the OVERLAID table — route it to that table's overlay key
-      // (writing the view would lose the mutation at COMMIT)
-      val ovKey = ovViews.find(_._2.equalsIgnoreCase(norm(name))).map(_._1)
       // DML/DDL on a TEMP table (the reference ALTERs and INSERTs into its
       // staging temps) just re-registers the view — `df` captured the old
       // view's resolved plan, so self-reference is safe; temp tables are
       // session-local and outside transaction semantics
-      if (ovKey.isEmpty && isTempView(name)) df.createOrReplaceTempView(norm(name))
+      if (isTempView(name)) df.createOrReplaceTempView(norm(name))
       else {
-        overlay(ovKey.getOrElse(norm(name).toLowerCase)) = df
+        overlay(norm(name).toLowerCase) = df
         // auto-commit failure (e.g. a MERGE cardinality violation
         // firing during the staged write) must not leave the poisoned
         // frame in the overlay — later statements would re-trigger it
         // through read-your-writes and every subsequent commit
         if (!inTxn) {
           try commit()
-          catch { case e: Throwable => clearOverlay(); throw e }
+          catch { case e: Throwable => overlay.clear(); throw e }
         }
       }
     }
@@ -2048,14 +2020,15 @@ object RedshiftScript {
       // deletes them (`91_External/Intercom/intercom_conversation_parts
       // .sql`: temps over the target, then bare DELETEs auto-commit —
       // each a swap — before the INSERT evaluates the temps). Pin such
-      // temps NOW, while the pre-swap files still exist.
-      materializeTempsReading(staged.map(_._2).toSeq)
+      // temps, and the last SELECT, NOW, while the pre-swap files still
+      // exist.
+      materializeReaders(staged.map(_._2).toSeq)
       staged.foreach { case (name, path, tmp) =>
         Writers.atomicSwap(spark, tmp, path)
         if (spark.catalog.tableExists(bq(name))) spark.sql(s"REFRESH TABLE ${bq(name)}")
         else registerExternal(name, path)
       }
-      clearOverlay()
+      overlay.clear()
     }
 
     /** read-paths per temp view, keyed by (name, raw-view identity) —
@@ -2066,48 +2039,53 @@ object RedshiftScript {
       * cost in long multi-temp scripts). */
     private val tempReadPaths = mutable.Map.empty[String, (Int, Set[String])]
 
-    /** Materialize (localCheckpoint) every live temp view whose analyzed
-      * plan reads files under one of `paths` — called before those paths
-      * are rewritten/deleted. Overlay-backed views are skipped (they are
-      * dropped at COMMIT anyway). A temp whose own evaluation fails is
-      * left as-is: it would have failed at its next read regardless.
+    /** HadoopFsRelation rootPaths are scheme-qualified (file:/…) while
+      * call sites pass raw filesystem paths — compare the URI path
+      * component on both sides (as the ALTER TABLE RENAME branch does)
+      * or the pin silently no-ops.
       */
-    private def materializeTempsReading(paths: Seq[String]): Unit = {
+    private def canon(p: String): String =
+      new org.apache.hadoop.fs.Path(p).toUri.getPath.stripSuffix("/")
+
+    /** The file roots `df`'s analyzed plan reads, subqueries included. */
+    private def readRoots(df: DataFrame): Set[String] =
+      df.queryExecution.analyzed.collectWithSubqueries {
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr.relation match {
+          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            fs.location.rootPaths.map(rp => canon(rp.toString))
+          case _ => Nil
+        }
+      }.flatten.toSet
+
+    /** Materialize (localCheckpoint) every live temp view and the last
+      * SELECT whose analyzed plan reads files under one of `paths` —
+      * called before those paths are rewritten/deleted, so each keeps the
+      * rows it had when its statement ran. A reader whose own evaluation
+      * fails is left as-is: it would have failed at its next read
+      * regardless.
+      */
+    private def materializeReaders(paths: Seq[String]): Unit = {
       if (paths.isEmpty) return
-      // HadoopFsRelation rootPaths are scheme-qualified (file:/…) while
-      // call sites pass raw filesystem paths — compare the URI path
-      // component on both sides (as the ALTER TABLE RENAME branch does)
-      // or the pin silently no-ops.
-      def canon(p: String): String =
-        new org.apache.hadoop.fs.Path(p).toUri.getPath.stripSuffix("/")
       val roots = paths.map(canon).toSet
-      val ovNames = ovViews.values.map(_.toLowerCase).toSet
+      lastSelect = lastSelect.map { df =>
+        try if (readRoots(df).exists(roots)) df.localCheckpoint(true) else df
+        catch { case _: Exception => df }
+      }
       val temps =
-        try spark.catalog.listTables().collect()
-          .filter(t => t.isTemporary && !ovNames(t.name.toLowerCase))
+        try spark.catalog.listTables().collect().filter(_.isTemporary)
         catch { case _: Exception => Array.empty[org.apache.spark.sql.catalog.Table] }
       temps.foreach { t =>
         try {
           val rawId = spark.sessionState.catalog.getRawTempView(t.name)
             .map(System.identityHashCode).getOrElse(0)
-          val readRoots = tempReadPaths.get(t.name.toLowerCase) match {
+          val read = tempReadPaths.get(t.name.toLowerCase) match {
             case Some((id, cached)) if id == rawId => cached
             case _ =>
-              val fresh = spark.table(s"`${t.name}`")
-                .queryExecution.analyzed.collectLeaves()
-                .flatMap {
-                  case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-                    lr.relation match {
-                      case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                        fs.location.rootPaths.map(rp => canon(rp.toString))
-                      case _ => Nil
-                    }
-                  case _ => Nil
-                }.toSet
+              val fresh = readRoots(spark.table(s"`${t.name}`"))
               tempReadPaths(t.name.toLowerCase) = (rawId, fresh)
               fresh
           }
-          if (readRoots.exists(roots))
+          if (read.exists(roots))
             spark.table(s"`${t.name}`").localCheckpoint(true)
               .createOrReplaceTempView(t.name)
         } catch { case _: Exception => () }
@@ -2240,13 +2218,13 @@ object RedshiftScript {
               // surfaces the failure — committing the partial overlay here
               // would silently corrupt the target (e.g. doubled snapshot
               // rows when the DELETE of a DELETE+INSERT pair failed)
-              clearOverlay(); inTxn = false; txnAborted = false
+              overlay.clear(); inTxn = false; txnAborted = false
               StatementReport("COMMIT", None, ok = false,
                 (System.nanoTime() - t0) / 1e9,
                 Some("transaction aborted by an earlier failed statement — rolled back"))
             } else { commit(); inTxn = false; report("COMMIT") }
           case _ if upper.startsWith("ROLLBACK") =>
-            clearOverlay(); inTxn = false; txnAborted = false; report("ROLLBACK")
+            overlay.clear(); inTxn = false; txnAborted = false; report("ROLLBACK")
           case DropCreateRe(dropPart, createPart) =>
             // missing semicolon between DROP and CREATE — two statements
             val r1 = runStatement(dropPart)
@@ -2258,21 +2236,18 @@ object RedshiftScript {
               if (path.startsWith(layoutRoot)) {
                 // pin temps still reading the table before its files go
                 // (same lazy-temp hazard as commit()'s swap)
-                materializeTempsReading(Seq(path))
+                materializeReaders(Seq(path))
                 deletePath(path)
               }
             } else spark.catalog.dropTempView(norm(name))
             overlay.remove(norm(name).toLowerCase)
-            // the dropped table's overlay view must go with it — a stale
-            // base-name view would keep the table readable after DROP
-            ovViews.remove(norm(name).toLowerCase).foreach(spark.catalog.dropTempView)
             report("DROP", Some(name))
           case DropViewRe(name) =>
             spark.sql(s"DROP VIEW IF EXISTS ${bq(name)}")
             report("DROP VIEW", Some(name))
           case CreateRe(temp, name, options, body) =>
             val (_, distkey) = stripTableOptions(options)
-            val df = spark.sql(tr(body))
+            val df = queryDf(body)
             if (temp != null && !norm(name).contains(".")) {
               // DISTKEY on a TEMP table is a storage-placement hint; the
               // runner keeps temps as LAZY VIEWS (no storage), so the
@@ -2283,7 +2258,6 @@ object RedshiftScript {
               // (guide §2.4). Real tables below keep it: there the
               // repartition sets the written file layout, which IS
               // Redshift's distkey semantics.
-              reclaimViewName(norm(name)) // a temp table wins its name
               df.createOrReplaceTempView(norm(name))
             } else stage(name, distkey.foldLeft(df)((d, k) => d.repartition(col(k))))
             // a schema-QUALIFIED temp table (`CREATE TEMP TABLE
@@ -2297,11 +2271,13 @@ object RedshiftScript {
             stage(name, df)
             report(verb, Some(name))
           case CreateViewRe(name, body) =>
-            Catalog.createOrReplaceView(spark, name, tr(body))
+            Catalog.createOrReplaceView(spark, name, translate(body, currentDate))
             report("CREATE VIEW", Some(name))
           case CreateMvRe(name, body) =>
-            Catalog.createMaterializedView(spark, name, tr(body),
-              s"$layoutRoot/__mv/${name.replace('.', '/')}")
+            // the stored definition reads the tables; the first
+            // materialization reads this transaction's staged rows
+            Catalog.createMaterializedView(spark, name, translate(body, currentDate),
+              s"$layoutRoot/__mv/${name.replace('.', '/')}", Some(queryDf(body)))
             report("CREATE MATERIALIZED VIEW", Some(name))
           case CreateSchemaRe(name) =>
             Catalog.ensureDatabase(spark, name)
@@ -2323,23 +2299,20 @@ object RedshiftScript {
                 require(body.nonEmpty, s"unparseable INSERT body: ${bodyPart.take(60)}")
                 // the incoming rows, aligned as a plain INSERT aligns them,
                 // are the source of a MERGE aliased EXCLUDED
-                alignTo(currentState(name), cols, spark.sql(tr(body)))
-                  .createOrReplaceTempView(ExcludedView)
+                val excluded = alignTo(currentState(name), cols, queryDf(body))
                 val base = s"`${norm(name).split("\\.").last}`"
                 val on = keyList.split(",").map(_.trim).filter(_.nonEmpty)
                   .map(k => s"$base.$k = excluded.$k").mkString(" AND ")
                 val matched =
                   if (action.trim.equalsIgnoreCase("NOTHING")) "" else s"WHEN MATCHED THEN $action "
-                val (target, df) =
-                  try dmlState(s"MERGE INTO $name USING $ExcludedView excluded ON $on " +
-                    s"${matched}WHEN NOT MATCHED THEN INSERT *")
-                  finally spark.catalog.dropTempView(ExcludedView)
+                val (target, df) = dmlState(s"MERGE INTO $name USING excluded ON $on " +
+                  s"${matched}WHEN NOT MATCHED THEN INSERT *", Map("excluded" -> excluded))
                 stage(target, df)
                 report("INSERT (on conflict)", Some(name))
               case _ =>
                 val (cols, body) = parseInsert(colList, rawBody)
                 require(body.nonEmpty, s"unparseable INSERT body: ${rawBody.take(60)}")
-                val incoming = alignTo(currentState(name), cols, spark.sql(tr(body)))
+                val incoming = alignTo(currentState(name), cols, queryDf(body))
                 stage(name, currentState(name).unionByName(incoming))
                 report("INSERT", Some(name))
             }
@@ -2371,7 +2344,7 @@ object RedshiftScript {
             // script's otherwise-runnable CTAS chain.
             val toOpt = "(?is)\\bTO\\s+'([^']*)'".r.findFirstMatchIn(optsRaw)
               .map(m => remapPath(m.group(1)))
-            val df = spark.sql(tr(query.replaceAll("''", "'")))
+            val df = queryDf(query.replaceAll("''", "'"))
             toOpt match {
               case None =>
                 df.queryExecution.analyzed
@@ -2496,16 +2469,13 @@ object RedshiftScript {
                   spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
                   org.apache.spark.sql.types.StructType(fields))
             }
-            if (temp != null) {
-              reclaimViewName(norm(name))
-              empty.createOrReplaceTempView(norm(name))
-            }
+            if (temp != null) empty.createOrReplaceTempView(norm(name))
             else if (ifNotExists != null && spark.catalog.tableExists(name)) ()
             else stage(name, empty)
             report("CREATE TABLE (DDL)", Some(name))
           case _ if upper.startsWith("SELECT") || upper.startsWith("WITH") ||
               upper.startsWith("(") =>
-            lastSelect = Some(spark.sql(tr(stmt)))
+            lastSelect = Some(queryDf(stmt))
             report("SELECT")
           case other =>
             throw new IllegalArgumentException(
@@ -2523,8 +2493,6 @@ object RedshiftScript {
               .getOrElse(e.toString)))
       }
     }
-
-    private val ExcludedView = "__graft_excluded"
 
     /** The Runner's view of [[RedshiftScript.dmlStatement]]: the MERGE
       * source of a FROM or USING list, and a target's columns. */
@@ -2549,14 +2517,13 @@ object RedshiftScript {
         case r: UnresolvedRelation => Seq(r.multipartIdentifier.last)
         case _ => Seq("")
       }
-      val relations = aliases(spark.sessionState.sqlParser
-        .parsePlan(translate(s"SELECT * FROM $from", currentDate)).children.head)
+      val relations = aliases(parse(s"SELECT * FROM $from").children.head)
       val (select, alias) = relations match {
         case Seq(a) => (s"SELECT * FROM $from", a)
         case many => (many.map(a => s"struct($a.*) AS $a").mkString("SELECT ", ", ", s" FROM $from"), "__src")
       }
       if (whereless) {
-        val order = spark.sql(tr(select)).schema.fields.groupBy(_.name.toLowerCase).values
+        val order = queryDf(select).schema.fields.groupBy(_.name.toLowerCase).values
           .collect { case Array(f) if org.apache.spark.sql.catalyst.expressions.RowOrdering
             .isOrderable(f.dataType) => s"`${f.name}`" }.toSeq.sorted
         s"($select${order.mkString(" ORDER BY ", ", ", "")} LIMIT 1) $alias"
@@ -2565,14 +2532,17 @@ object RedshiftScript {
     }
 
     /** The target and new state of a DML statement in Spark's grammar: the
-      * statement is translated, parsed, and analyzed by Spark without
-      * running it, and [[RedshiftScript.newState]] builds the target's new
+      * statement is translated and parsed, the target's name is read from
+      * the parse, the relations are read through the staged tables
+      * ([[withStaged]], with `bound`), and Spark analyzes it without
+      * running it. [[RedshiftScript.newState]] builds the target's new
       * rows from the resolved MergeIntoTable, UpdateTable or
       * DeleteFromTable. A target left mid-swap by a crash is restored
       * before it is read.
       */
-    private def dmlState(sql: String): (String, DataFrame) = {
-      val parsed = spark.sessionState.sqlParser.parsePlan(tr(sql))
+    private def dmlState(sql: String, bound: Map[String, DataFrame] = Map.empty)
+        : (String, DataFrame) = {
+      val parsed = parse(sql)
       val name = parsed.collectFirst {
         case m: MergeIntoTable => m.targetTable
         case u: UpdateTable => u.table
@@ -2580,9 +2550,9 @@ object RedshiftScript {
       }.flatMap(_.collectFirst { case r: UnresolvedRelation => r.multipartIdentifier.mkString(".") })
         .getOrElse(throw new IllegalArgumentException(s"no DML target in: ${sql.take(60)}"))
       recover(name)
-      val analyzed = spark.sessionState
-        .executePlan(parsed, org.apache.spark.sql.execution.CommandExecutionMode.SKIP).analyzed
-      (name, org.apache.spark.sql.graft.PlanBridge.ofRows(spark, newState(analyzed)))
+      val analyzed = spark.sessionState.executePlan(withStaged(parsed, bound),
+        org.apache.spark.sql.execution.CommandExecutionMode.SKIP).analyzed
+      (name, PlanBridge.ofRows(spark, newState(analyzed)))
     }
 
     def run(script: String): ScriptResult = {
@@ -2602,12 +2572,10 @@ object RedshiftScript {
       // auto-commits a clean session end). The gate is the TRANSACTION's
       // own state — an unrelated earlier failure outside it (reachable
       // with stopOnError=false) must not discard a clean open overlay.
-      // An ABORTED open transaction instead rolls back on exit: leaving
-      // the overlay registered would let its base-name temp views shadow
-      // the real tables for later queries on the shared session, and a
-      // reused Runner's next BEGIN resets txnAborted but not the overlay
-      // — a subsequent COMMIT would then commit this script's aborted
-      // staged mutations.
+      // An ABORTED open transaction instead rolls back on exit: a reused
+      // Runner's next BEGIN resets txnAborted but not the overlay — a
+      // subsequent COMMIT would then commit this script's aborted staged
+      // mutations.
       if (inTxn && !txnAborted) {
         // mirror the explicit-COMMIT error path: a deferred
         // materialization failure surfacing here (e.g. a MERGE
@@ -2623,13 +2591,13 @@ object RedshiftScript {
         try { commit(); inTxn = false }
         catch {
           case e: Exception =>
-            clearOverlay(); inTxn = false; txnAborted = false
+            overlay.clear(); inTxn = false; txnAborted = false
             reports += StatementReport("COMMIT", None, ok = false,
               (System.nanoTime() - t0) / 1e9,
               Some(s"end-of-script auto-commit failed: ${e.getMessage}"))
         }
       }
-      else if (inTxn) { clearOverlay(); inTxn = false; txnAborted = false }
+      else if (inTxn) { overlay.clear(); inTxn = false; txnAborted = false }
       ScriptResult(reports.toSeq, lastSelect)
     }
   }

@@ -430,12 +430,12 @@ class RedshiftScriptSpec extends SparkSpec {
     Catalog.replaceTable(Seq((1, "keep"), (2, "drop")).toDF("id", "s"), "rs_txn", "a")
     Catalog.replaceTable(Seq((99, "old")).toDF("id", "s"), "rs_txn", "b")
     // b's INSERT reads table a, which the same transaction already
-    // mutated: the raw-SQL body resolves a through its overlay view
-    // (read-your-writes, as Redshift), while the two-phase commit still
-    // writes b against a's pre-commit FILES (swapping a first would yank
-    // b's input files mid-commit)
-    // the SELECT base-qualifies columns (`a.id`) — the overlay view is
-    // registered under the BASE name so such references keep resolving
+    // mutated: the raw-SQL body reads a's staged rows (read-your-writes,
+    // as Redshift), while the two-phase commit still writes b against
+    // a's pre-commit FILES (swapping a first would yank b's input files
+    // mid-commit)
+    // the SELECT base-qualifies columns (`a.id`) — the staged rows carry
+    // the table's qualified name, so such references keep resolving
     val r = new RedshiftScript.Runner(spark, root()).run(
       """BEGIN;
         |DELETE FROM rs_txn.a WHERE s = 'drop';
@@ -459,14 +459,14 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(spark.table("rs_txn.b").count() === 2)           // rolled back on disk
   }
 
-  test("a temp table claiming an overlay view's base name wins it (reclaim)") {
+  test("a temp table taking a staged table's base name is read by that name") {
     import sqlImplicits._
     Catalog.replaceTable(Seq((1, "keep"), (2, "drop")).toDF("id", "s"), "rs_rc", "t")
-    // the DELETE registers overlay view 't' (a later same-txn statement
-    // resolves it); the CREATE TEMP TABLE then claims that name — the
-    // INSERT's bare `FROM t` must read the USER's temp table, and COMMIT
-    // must not drop it. The INSERT's target goes through the overlay, so
-    // the final table proves both the reclaim and read-your-writes.
+    // the DELETE stages rs_rc.t; the CREATE TEMP TABLE then takes its base
+    // name — the INSERT's bare `FROM t` must read the USER's temp table,
+    // and COMMIT must not drop it. The INSERT's target goes through the
+    // overlay, so the final table proves both the temp read and
+    // read-your-writes.
     val r = new RedshiftScript.Runner(spark, root()).run(
       """BEGIN;
         |DELETE FROM rs_rc.t WHERE s = 'drop';
@@ -482,19 +482,17 @@ class RedshiftScriptSpec extends SparkSpec {
     spark.catalog.dropTempView("t")
   }
 
-  test("DROP of an overlaid table also removes its base-name overlay view") {
+  test("DROP of a staged table leaves it unreadable in the transaction") {
     import sqlImplicits._
     Catalog.replaceTable(Seq((1, "x"), (2, "y")).toDF("id", "s"), "rs_dv", "t2")
     val runner = new RedshiftScript.Runner(spark, root(), stopOnError = false)
     assert(runner.runStatement("BEGIN").ok)
     assert(runner.runStatement("DELETE FROM rs_dv.t2 WHERE id = 1").ok)
-    // a later statement's resolution registers the base-name view …
     assert(runner.runStatement("SELECT COUNT(*) AS n FROM rs_dv.t2").ok)
-    assert(spark.sessionState.catalog.isTempView(Seq("t2")))
-    // … and DROP removes it with the table (a stale view would keep the
-    // dropped table readable)
+    // DROP removes the staged rows with the table (stale staged rows
+    // would keep the dropped table readable)
     assert(runner.runStatement("DROP TABLE rs_dv.t2").ok)
-    assert(!spark.sessionState.catalog.isTempView(Seq("t2")))
+    assert(!runner.runStatement("SELECT COUNT(*) AS n FROM rs_dv.t2").ok)
     assert(runner.runStatement("ROLLBACK").ok)
   }
 
@@ -540,21 +538,20 @@ class RedshiftScriptSpec extends SparkSpec {
     assert(spark.table("rs_tail.t").collect().map(_.getInt(0)).toSeq === Seq(1))
   }
 
-  test("an aborted OPEN transaction at script end rolls back and clears overlay views") {
+  test("an aborted OPEN transaction at script end rolls back, no temp view left") {
     import sqlImplicits._
     Catalog.replaceTable(Seq((1, "x"), (2, "y")).toDF("id", "s"), "rs_ab2", "t")
     val runner = new RedshiftScript.Runner(spark, root(), stopOnError = false)
-    // DELETE stages an overlay, the SELECT registers its base-name view,
-    // then a failure aborts the txn and the script ENDS without
-    // COMMIT/ROLLBACK
+    // DELETE stages an overlay, the SELECT reads it, then a failure
+    // aborts the txn and the script ENDS without COMMIT/ROLLBACK
     val r = runner.run(
       """BEGIN;
         |DELETE FROM rs_ab2.t WHERE id = 1;
         |SELECT COUNT(*) AS n FROM rs_ab2.t;
         |UPDATE rs_ab2.t SET no_such = 1;""".stripMargin)
     assert(!r.ok)
-    // the overlay's base-name temp view must NOT survive the script: it
-    // would shadow the real table for later queries on the shared session
+    // no temp view may survive the script: it would shadow the real
+    // table for later queries on the shared session
     assert(!spark.sessionState.catalog.isTempView(Seq("t")))
     assert(spark.table("rs_ab2.t").count() === 2) // rolled back
     // a REUSED runner starts clean: its next transaction must not
@@ -569,8 +566,8 @@ class RedshiftScriptSpec extends SparkSpec {
     import sqlImplicits._
     Catalog.replaceTable(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), "rs_byw", "order")
     // post-translate the reference's `rs_byw."order"` spells as
-    // rs_byw.`order` — the overlay rewrite must match that spelling or
-    // the in-transaction read silently sees the pre-transaction snapshot
+    // rs_byw.`order` — the staged read must match that spelling or the
+    // in-transaction read silently sees the pre-transaction snapshot
     val r = new RedshiftScript.Runner(spark, root()).run(
       """BEGIN;
         |DELETE FROM rs_byw."order" WHERE id = 1;

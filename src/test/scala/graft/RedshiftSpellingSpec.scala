@@ -155,11 +155,33 @@ class RedshiftSpellingSpec extends SparkSpec {
 
   test("Runner: REGEXP_SUBSTR with position and occurrence, and Redshift's '' on no match") {
     assertRunner("regexp_substr(s, '[a-z]', 1, 2)",
-      "struct<coalesce(try_element_at(regexp_extract_all(substr(s, 1, 2147483647), [a-z], 0), 2), ):string>",
+      "struct<CASE WHEN (s IS NOT NULL) THEN coalesce(try_element_at(regexp_extract_all(" +
+        "substr(s, 1, 2147483647), [a-z], 0), 2), ) END:string>",
       "y", "b")
     assertRunner("regexp_substr(s, 'b|y')",
-      "struct<coalesce(try_element_at(regexp_extract_all(s, b|y, 0), 1), ):string>", "y", "b")
+      "struct<CASE WHEN (s IS NOT NULL) THEN coalesce(try_element_at(regexp_extract_all(s, b|y, 0), 1), ) END:string>",
+      "y", "b")
     assertRunner("regexp_substr(s, 'q') AS none", "struct<none:string>", "", "")
+    assertRunner("regexp_substr(s, 'q', 1, 2) AS none", "struct<none:string>", "", "")
+  }
+
+  test("Runner: REGEXP_SUBSTR of a NULL source is NULL") {
+    val r = new RedshiftScript.Runner(spark, root()).run(
+      "SELECT regexp_substr(CAST(NULL AS VARCHAR), 'a') IS NULL AS n, " +
+        "regexp_substr(CAST(NULL AS VARCHAR), 'a', 1, 2) IS NULL AS n4;")
+    assert(r.ok, r.reports.mkString("; "))
+    assert(r.lastSelect.get.collect().toSeq.map(_.mkString("|")) === Seq("true|true"))
+  }
+
+  test("Runner: 1-arg TRUNC of a number truncates toward zero") {
+    val r = new RedshiftScript.Runner(spark, root()).run(
+      """SELECT trunc(111.86) AS a, trunc(-12.7) AS b, trunc(CAST(111.86 AS DOUBLE)) AS c,
+        |  trunc(-12.7::float8) AS d, trunc(k) AS e
+        |FROM (SELECT 7 AS k);""".stripMargin)
+    assert(r.ok, r.reports.mkString("; "))
+    val df = r.lastSelect.get
+    assert(df.schema.simpleString === "struct<a:decimal(4,0),b:decimal(3,0),c:double,d:double,e:int>")
+    assert(df.collect().toSeq.map(_.mkString("|")) === Seq("111|-12|111.0|-12.0|7"))
   }
 
   test("Runner: FUNC_SHA1 is SHA1") {

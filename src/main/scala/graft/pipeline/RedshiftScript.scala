@@ -1856,6 +1856,7 @@ object RedshiftScript {
       * relations (the EXCLUDED rows of an INSERT … ON CONFLICT).
       */
     private def withStaged(plan: LogicalPlan, bound: Map[String, DataFrame] = Map.empty): LogicalPlan = {
+      if (overlay.isEmpty && bound.isEmpty) return plan
       val (cat, db) = (spark.catalog.currentCatalog(), spark.catalog.currentDatabase)
       def qualified(parts: Seq[String]): Seq[String] = parts.map(_.toLowerCase) match {
         case Seq(t) => Seq(cat, db.toLowerCase, t)
@@ -1869,8 +1870,7 @@ object RedshiftScript {
         case Seq(n) if ctes(n.toLowerCase) || isTempView(n) => None
         case _ =>
           val q = qualified(name)
-          tables.get(q).map(df =>
-            SubqueryAlias(q, df.queryExecution.analyzed))
+          tables.get(q).map(df => SubqueryAlias(q, df.queryExecution.analyzed))
       }
       def sub(p: LogicalPlan, ctes: Set[String]): LogicalPlan = p match {
         case r: UnresolvedRelation => rows(r.multipartIdentifier, ctes).getOrElse(r)
@@ -1888,7 +1888,7 @@ object RedshiftScript {
             case e: SubqueryExpression => e.withNewPlan(sub(e.plan, ctes))
           }
       }
-      if (overlay.isEmpty && bound.isEmpty) plan else sub(plan, Set.empty)
+      sub(plan, Set.empty)
     }
 
     /** Strip Redshift `"identifier"` quoting from a table name. */

@@ -118,19 +118,19 @@ object Catalog {
     * so [[refreshMaterializedView]] can re-run it — each refresh writes
     * new data and swaps it in atomically ([[graft.io.Writers.atomicSwap]]),
     * so readers always see a complete snapshot. The first materialization
-    * writes `rows` when given (a transaction's staged state), else the
-    * definition's rows.
+    * writes `rows`, the definition's rows as the caller reads them (the
+    * Runner reads a transaction's staged tables).
     */
   def createMaterializedView(
       spark: SparkSession,
       name: String,
       viewSql: String,
-      path: String,
-      rows: Option[DataFrame] = None): Unit = {
+      rows: DataFrame,
+      path: String): Unit = {
     val parts = name.split("\\.")
     if (parts.length > 1) ensureDatabase(spark, parts.head)
     writeText(spark, defPath(path), viewSql)
-    rows.getOrElse(spark.sql(viewSql)).write.mode("overwrite").parquet(path)
+    rows.write.mode("overwrite").parquet(path)
     spark.sql(s"DROP TABLE IF EXISTS $name")
     spark.sql(s"CREATE TABLE $name USING parquet LOCATION '$path'")
   }

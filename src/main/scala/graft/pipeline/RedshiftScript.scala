@@ -2276,8 +2276,8 @@ object RedshiftScript {
           case CreateMvRe(name, body) =>
             // the stored definition reads the tables; the first
             // materialization reads this transaction's staged rows
-            Catalog.createMaterializedView(spark, name, translate(body, currentDate),
-              s"$layoutRoot/__mv/${name.replace('.', '/')}", Some(queryDf(body)))
+            Catalog.createMaterializedView(spark, name, translate(body, currentDate), queryDf(body),
+              s"$layoutRoot/__mv/${name.replace('.', '/')}")
             report("CREATE MATERIALIZED VIEW", Some(name))
           case CreateSchemaRe(name) =>
             Catalog.ensureDatabase(spark, name)

@@ -75,8 +75,8 @@ class WritersChecksSpec extends SparkSpec {
     assert(spark.table("rs_mv.v_sum").collect()(0).getDouble(0) === 30.0)
     // materialized view is frozen until refreshed
     val mvPath = tmp() + "/mv_sum"
-    Catalog.createMaterializedView(spark, "rs_mv.mv_sum",
-      "SELECT CAST(SUM(v) AS DOUBLE) AS total FROM rs_mv.src", mvPath)
+    val mvSql = "SELECT CAST(SUM(v) AS DOUBLE) AS total FROM rs_mv.src"
+    Catalog.createMaterializedView(spark, "rs_mv.mv_sum", mvSql, spark.sql(mvSql), mvPath)
     assert(spark.table("rs_mv.mv_sum").collect()(0).getDouble(0) === 30.0)
     Catalog.replaceTable(
       Seq((1, 10.0), (2, 20.0), (3, 30.0)).toDF("id", "v"), "rs_mv", "src")
